@@ -19,7 +19,7 @@ object Bench {
     }.min
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions)
@@ -30,7 +30,7 @@ object Bench {
     // Warm up the JVM/scheduler/codegen/parquet paths so the first measured
     // query isn't charged several seconds of one-time init (measured; skews
     // per-query comparisons otherwise). Touches a real scan + md5 codegen.
-    spark.range(0, 1000000, 1, cpus.toInt).selectExpr("sum(id)").collect()
+    spark.range(0, 1000000, 1, cpus).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/documents.parquet")
       .selectExpr("count(md5(text))").collect()
     catch { case _: Throwable => }
@@ -40,7 +40,7 @@ object Bench {
     // (round-7: the round-6 d28 spelling re-measured 9.7-14.3 s against
     // its recorded 7.4 s), so absolute totals are only comparable after
     // normalizing by this number: canary_sec up = the box, not the code.
-    def canary(): Double = cpuCanary(spark, cpus.toInt)
+    def canary(): Double = cpuCanary(spark, cpus)
     val canaryPre = canary()
     // Interleaved canary samples (round-7 verdict item 1): the r07 artifact
     // recorded a 2.2x-loaded START that decayed mid-run, and with only
@@ -151,7 +151,7 @@ object Bench {
     // two were indistinguishable). The archive is the 32-core
     // round-over-round record: stamp "cpus" into every JSON (above) and
     // only refresh the tracked copy from a default-core run.
-    if (only.isEmpty && sfDir.endsWith("sf0.1") && cpus == "32") {
+    if (only.isEmpty && sfDir.endsWith("sf0.1") && cpus == 32) {
       val archive = sys.env.get("SPARK_GRAFT_REPO_ROOT")
         .map(r => java.nio.file.Paths.get(r, "BENCH_full_latest.json"))
         .getOrElse(java.nio.file.Paths.get("BENCH_full_latest.json"))

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 
 /** Typed UDAF: MinHash signature of a *group* of documents — the signature
   * of the union of the documents' shingle sets (min commutes with union, so

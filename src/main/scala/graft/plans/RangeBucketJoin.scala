@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, And, AttributeReference, BinaryComparison, Cast, Divide, EqualTo,
+  Alias, And, AttributeReference, Cast, Divide, EqualTo,
   Explode, Expression, Floor, Greatest, GreaterThan, GreaterThanOrEqual, If,
   Least, LessThan, LessThanOrEqual, Literal, PredicateHelper, Sequence}
 import org.apache.spark.sql.catalyst.plans.Inner

@@ -990,14 +990,13 @@ object Dedup {
   private[graft] def d32Retracted(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = c % 7 === 3
 
-  /** The retraction fold over arbitrary (docs, pairs, base clusters) — the
+  /** The retraction fold over arbitrary (pairs, base clusters) — the
     * d32 core, factored so DedupSpec can pin the SPLIT and the survivor
     * re-election on directed synthetic graphs (a chain glued through the
     * retracted doc, a cluster whose min label retracts) independent of
     * what the corpus happens to contain.
     */
-  private[graft] def retractionFold(docs: DataFrame, pairs: DataFrame,
-      baseClusters: DataFrame,
+  private[graft] def retractionFold(pairs: DataFrame, baseClusters: DataFrame,
       retracted: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : DataFrame = {
     // clusters that LOSE a member are the only ones whose labels can move
@@ -1042,9 +1041,8 @@ object Dedup {
     * ADDITIONS to member REMOVALS).
     */
   val d32ClusterRetraction: Q = (s, d) => {
-    val docs = Tables.documents(s, d).select(col("doc_id"))
     val base = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
-    retractionFold(docs, pairsTable(s, d), base, d32Retracted)
+    retractionFold(pairsTable(s, d), base, d32Retracted)
       .orderBy("doc_id")
   }
 

@@ -1422,7 +1422,6 @@ object StreamOps {
     */
   def s36DirectedEdges(spark: org.apache.spark.sql.SparkSession,
                        dir0: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
     val dir = resolveAsOfDir(spark, dir0, asOf)
     maskDeleted(
       s36LatestEdges(spark, dir, asOf).withColumnRenamed("dst", "vec_id"),
@@ -2110,7 +2109,6 @@ object StreamOps {
                    batchId: Long, cents: DataFrame,
                    cbook: DataFrame,
                    writerId: String = null): Unit = {
-    import org.apache.spark.sql.functions._
     val spark = docs.sparkSession
     val owner = Option(writerId).getOrElse(
       s"writer-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -2934,7 +2932,6 @@ object StreamOps {
 
   def s47StoreStats(spark: org.apache.spark.sql.SparkSession,
                     dir: String, family: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val tables = familyTables(spark, dir, family)
     val stamp = readCompactionStamp(spark, dir)
     val nTomb = deletedIds(spark, dir).count()

@@ -115,7 +115,6 @@ class DedupSpec extends SparkSpec {
 
   test("d12 SNM tie-break: tied and prefix names rank by (nm, id), stable under partitioning") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // Names with genuine ties ("ann" x3), a prefix relation ("ann" vs
     // "anna" — where a bare name+id concat without a separator would
     // mis-order), and ids deliberately out of name order.
@@ -169,7 +168,6 @@ class DedupSpec extends SparkSpec {
     val dir = docsDir(Seq(base, base, nearDup, distinct1))
     val once = Dedup.q32DedupExact(spark, dir).count()
     // re-materialize the dedup'd corpus and dedup again
-    import spark.implicits._
     val dir2 = Files.createTempDirectory("docs_fixture2").toString
     Dedup.q32DedupExact(spark, dir)
       .join(Tables.documents(spark, dir), "doc_id")
@@ -284,13 +282,13 @@ class DedupSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L,
         10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L))
     val got = graft.queries.Dedup
-      .retractionFold(docs, pairs, base, c => c.isin(2L, 5L, 11L))
+      .retractionFold(pairs, base, c => c.isin(2L, 5L, 11L))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got === Map(1L -> 1L, 3L -> 3L, 6L -> 6L, 7L -> 7L,
       10L -> 10L, 12L -> 12L, 13L -> 10L))
     // retracting nothing is the identity on the base table
     val idem = graft.queries.Dedup
-      .retractionFold(docs, pairs, base, _ => org.apache.spark.sql.functions.lit(false))
+      .retractionFold(pairs, base, _ => org.apache.spark.sql.functions.lit(false))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(idem === base.collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
   }
@@ -311,7 +309,7 @@ class DedupSpec extends SparkSpec {
       val docs = docsSeq.toDF("doc_id")
       val pairs = pairsSeq.toDF("d1", "d2")
       val base = Dd.clusterTableOf(docs, pairs).localCheckpoint()
-      val got = Dd.retractionFold(docs, pairs, base, c => c % mod === rem)
+      val got = Dd.retractionFold(pairs, base, c => c % mod === rem)
       val want = Dd.clusterTableOf(
         docsSeq.filter(_ % mod != rem).toDF("doc_id"),
         pairsSeq.filter(p => p._1 % mod != rem && p._2 % mod != rem)
@@ -404,7 +402,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("t17 line dedup: matches a naive reference model and is a fixed point") {
-    import spark.implicits._
     // corpus with planted cross-doc duplicate lines: each "line" is a
     // 10-token chunk (TextOps.LineTokens), so docs are built from 10-token
     // blocks, some shared across docs

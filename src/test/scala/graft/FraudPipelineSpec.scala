@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
 import graft.operators.FraudPipeline
 
 /** Reference-fidelity golden tests (SURVEY §5): a 34-row PaySim-shaped

@@ -129,7 +129,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("m13 real resize: 2x box filter is scale-invariant on the cell grid (resized hash == original aHash)") {
-    import org.apache.spark.sql.functions.col
     val rows = Multimodal.m13ResizeReal(spark, sf)
       .select("media_id", "rhash").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

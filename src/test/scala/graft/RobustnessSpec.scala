@@ -264,7 +264,7 @@ class RobustnessSpec extends SparkSpec {
 
   test("s46 family fsck: every maintained store audits clean when healthy; planted per-store corruption is named and loud-fails") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val StreamOps = graft.streaming.StreamOps
     def auditMap(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
       df.collect().map(r => (r.getString(0), r.getLong(1))).toMap

@@ -1011,7 +1011,7 @@ class StreamingSpec extends SparkSpec {
   test("s32 streaming index maintenance equals the batch-built index; batch replay is idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, expr, min}
+    import org.apache.spark.sql.functions.{expr, min}
     val dir = tmp("s32_idx")
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1)))
@@ -1387,7 +1387,7 @@ class StreamingSpec extends SparkSpec {
 
   test("s39/s40 s34 chunk-store lifecycle: delete re-elects owners and GCs orphan chunks; compaction folds") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, min}
+    import org.apache.spark.sql.functions.min
     val dir = tmp("s39_s34")
     val media = graft.operators.Multimodal.fixtureFromDocuments(spark, sf)
       .toDF().select("media_id", "payload")
@@ -1802,7 +1802,7 @@ class StreamingSpec extends SparkSpec {
 
   test("p14 takedown executor: one idempotent operation purges every store, fscks green, reports per-store counts; re-run is a no-op") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, min}
+    import org.apache.spark.sql.functions.{expr, min}
     val Sim = graft.queries.Similarity
     // build all six store families from the fixtures
     val docs = graft.Tables.documents(spark, sf)
@@ -1976,7 +1976,7 @@ class StreamingSpec extends SparkSpec {
 
   test("s50 coordinated ingest: one batch lands in every store with a commit manifest; crash-lag is named and heals by replay") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, min}
+    import org.apache.spark.sql.functions.{expr, min}
     val Sim = graft.queries.Similarity
     val docs = graft.Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
