@@ -177,13 +177,9 @@ object Bench {
     var shown = entries.size
     while (shown > 0 && line(shown).length > budget) shown -= 1
     val compact = line(shown)
-    // Teardown: drop the memoized localCheckpointed pair/cluster tables
-    // (shared-index realism keeps them alive ACROSS queries by design;
-    // the run boundary is where they are released — round-5 verdict
-    // item 5).
-    graft.queries.Dedup.clearClusterMemo()
-    graft.queries.Similarity.clearGraphAnnMemo()
-    graft.queries.TextOps.releasePrefixSumCaches()
+    // Teardown: the run boundary is where the memoized tables are
+    // released (round-5 verdict item 5).
+    SparkEntry.releaseMemos(spark)
     spark.stop()
     // Print LAST, after Spark's shutdown chatter, so the JSON is the final
     // stdout line wherever possible.

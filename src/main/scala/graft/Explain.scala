@@ -1,12 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Plan inspector: prints `explain("formatted")` for the named queries (or
-  * a representative set) so partitioning/pushdown/codegen claims can be
-  * audited. Usage: scripts/run.sh Explain [sfDir] [nameRegex]
+/** Plan inspector: prints every physical plan the named queries (or a
+  * representative set) execute, so partitioning/pushdown/codegen claims
+  * can be audited. Usage: scripts/run.sh Explain [sfDir] [nameRegex]
   */
 object Explain {
+
+  /** The physical plans of one query: each eager step `build` runs while
+    * it constructs the query (`localCheckpoint`, `count`, `isEmpty`, write
+    * commands — every action Spark runs through `withAction`), as
+    * (action name, executed plan) in completion order, followed by
+    * ("final", the built query's executedPlan). A query that materializes
+    * an intermediate keeps only an RDD scan of it in its final plan; the
+    * joins, aggregates and windows that built it are in the eager plans,
+    * cached sub-plans included.
+    */
+  def plansOf(spark: SparkSession)(build: => DataFrame): Seq[(String, String)] = {
+    val eager = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        eager.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = build
+      GraftSqlBridge.drainListeners(spark)
+      eager.asScala.toSeq :+ ("final" -> df.queryExecution.executedPlan.toString)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val pattern = args.lift(1).getOrElse(
@@ -19,24 +50,16 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // The materialize-then-release queries (d15/d16/d28/x15/...) truncate
-    // their public plans at a localCheckpoint; print their lazy twins
-    // instead — the same substitution PlanSpec's global audit makes — so
-    // the explain output shows the real sub-plans, not an RDD scan.
-    val lazyTwins = graft.queries.Dedup.lazyPlans ++
-      graft.queries.Extended.lazyPlans ++
-      graft.queries.Extras.lazyPlans
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => pattern.findFirstIn(name).isDefined }
-      .foreach { case (name, fn0) =>
-        val fn = lazyTwins.getOrElse(name, fn0)
-        println(s"\n========== $name ==========" +
-          (if (lazyTwins.contains(name)) " (lazy twin)" else ""))
-        fn(spark, sfDir).explain("formatted")
-        // twins .cache() their indexes at construction; drop the
-        // registrations so a later twin sharing an index plan is not
-        // compiled to an InMemoryTableScan that hides the sub-plan
-        if (lazyTwins.contains(name)) spark.catalog.clearCache()
+      .foreach { case (name, fn) =>
+        println(s"\n========== $name ==========")
+        plansOf(spark)(fn(spark, sfDir)).foreach { case (step, plan) =>
+          println(s"---------- $step ----------\n$plan")
+        }
+        // memoized tables would otherwise show up as cache scans in a
+        // later query's plans
+        SparkEntry.releaseMemos(spark)
       }
     spark.stop()
   }

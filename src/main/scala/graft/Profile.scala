@@ -65,9 +65,7 @@ object Profile {
         }
         spark.catalog.clearCache()
       }
-    graft.queries.Dedup.clearClusterMemo()
-    graft.queries.Similarity.clearGraphAnnMemo()
-    graft.queries.TextOps.releasePrefixSumCaches()
+    SparkEntry.releaseMemos(spark)
     spark.stop()
   }
 }

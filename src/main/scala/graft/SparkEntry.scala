@@ -144,6 +144,17 @@ object SparkEntry {
        |ORDER BY media_id""".stripMargin
   }
 
+  /** Run-boundary release: drops the memoized pair/cluster, graph-ANN and
+    * prefix-sum tables (shared-index realism keeps them alive ACROSS
+    * queries by design) and every cached relation.
+    */
+  def releaseMemos(spark: SparkSession): Unit = {
+    Dedup.clearClusterMemo()
+    Similarity.clearGraphAnnMemo()
+    TextOps.releasePrefixSumCaches()
+    spark.catalog.clearCache()
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check.
     */

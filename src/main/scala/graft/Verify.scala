@@ -96,10 +96,8 @@ object Verify {
       // accumulate across the run.
       spark.catalog.clearCache()
     }
-    // Run-boundary teardown for the memoized pair/cluster index tables
-    // (see Bench — the memo deliberately survives clearCache within a run).
-    graft.queries.Dedup.clearClusterMemo()
-    graft.queries.Similarity.clearGraphAnnMemo()
-    graft.queries.TextOps.releasePrefixSumCaches()
+    // Run-boundary teardown (the memo deliberately survives clearCache
+    // within a run).
+    SparkEntry.releaseMemos(spark)
   }
 }

@@ -1243,10 +1243,10 @@ object Dedup {
     * windows, no corpus-scale shuffle beyond the dedup keys the component
     * operators already pay.
     */
-  /** p15's per-row gate table — the one corpus scan (see scale note). */
-  private def p15Gates(s: SparkSession, d: String): DataFrame = {
+  val p15CurationFunnel: Q = (s, d) => {
     val T = graft.queries.TextOps
-    T.qualityCols(T.langPredicted(Tables.documents(s, d)))
+    // the per-row gate table — the one corpus scan (see scale note)
+    val g = T.qualityCols(T.langPredicted(Tables.documents(s, d)))
       .select(col("doc_id"), col("source"), col("text"),
         col("n_tokens").cast("long").as("n_tokens"),
         col("predicted"), col("quality"))
@@ -1254,11 +1254,8 @@ object Dedup {
       .withColumn("g2", col("g1") && col("quality") >= FunnelQualityMin)
       .withColumn("eh", md5(col("text").cast("binary")))
       .select("doc_id", "source", "n_tokens", "g1", "g2", "eh")
-  }
-
-  /** The survivor elections + rollup over a (materialized) gate table. */
-  private def p15FunnelOf(s: SparkSession, d: String,
-                          g: DataFrame): DataFrame = {
+      .localCheckpoint()
+    // the survivor elections + rollup over the materialized gate table
     val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
     val exactMin = g.filter(col("g2"))
       .groupBy("eh").agg(min("doc_id").as("e_min"))
@@ -1281,9 +1278,6 @@ object Dedup {
         expr("n_neardup * 10000 div n_ingested"))
       .orderBy("source")
   }
-
-  val p15CurationFunnel: Q = (s, d) =>
-    p15FunnelOf(s, d, p15Gates(s, d).localCheckpoint())
 
   /** d10: edit-distance-1 pair discovery via deletion-neighborhood blocking
     * (the SymSpell index): each name emits itself + its single-char
@@ -1726,10 +1720,9 @@ object Dedup {
     * equi self-join + metadata counts; truth is built once and
     * checkpoint-shared.
     */
-  /** d22's lazy report over a signature table and a truth pair set (see
-    * [[d15Pairs]] for why the lazy plan is factored out).
-    */
-  private def d22Report(sigs: DataFrame, truth: DataFrame): DataFrame = {
+  val d22BandingSweep: Q = (s, d) => {
+    val sigs = minhashSignatures(Tables.documents(s, d)).cache()
+    val truth = d03NgramJaccard(s, d).select("d1", "d2").localCheckpoint()
     val reports = BandSweepConfigs.map { case (nb, rpb) =>
       val cand = candidatePairsPlan(bandsOfSignatures(sigs, nb, rpb))
       val tp = cand.join(truth, Seq("d1", "d2"), "left_semi")
@@ -1741,16 +1734,10 @@ object Dedup {
           expr("n_tp * 10000 div greatest(n_candidates, 1)").as("precision_bp"),
           expr("n_tp * 10000 div greatest(n_truth, 1)").as("recall_bp"))
     }
-    reports.reduce(_.unionByName(_)).orderBy("bands")
-  }
-
-  val d22BandingSweep: Q = (s, d) => {
-    val sigs = minhashSignatures(Tables.documents(s, d)).cache()
-    val truth = d03NgramJaccard(s, d).select("d1", "d2").localCheckpoint()
     // materialize the ≤3-row report, then release the signature cache
     // (d15/d16/d28's materialize-then-release discipline; d03's internal
     // inverted-index cache has its own documented harness lifecycle)
-    val out = d22Report(sigs, truth).localCheckpoint()
+    val out = reports.reduce(_.unionByName(_)).orderBy("bands").localCheckpoint()
     sigs.unpersist()
     out
   }
@@ -1972,9 +1959,8 @@ object Dedup {
       .cache()
   }
 
-  /** d15's full lazy plan over a prefix index — factored out so PlanSpec
-    * can audit the physical plan, which the public query's materializing
-    * localCheckpoint truncates to a bare RDD scan.
+  /** d15's τ-pair plan over a prefix index — shared by d15, d28's legs,
+    * d37 and the s51 rebuild oracle.
     *
     * Candidate generation applies the two standard EXACT prefix-join
     * prunes (PPJoin, Xiao et al. 2008) on top of the basic prefix filter
@@ -2101,27 +2087,16 @@ object Dedup {
     * ride a one-row broadcast cross join.
     */
   val d37TauCalibration: Q = (s, d) => {
+    import org.apache.spark.sql.functions.{broadcast => bcast}
     val idx = prefixIndex(s, d, PrefixTauPct)
     val pairs = d15Pairs(idx).localCheckpoint()
     idx.unpersist()
-    d37ReportOf(pairs, eagerCells = true)
-  }
-
-  /** d37's report over a caller-supplied pair frame — factored so the
-    * lazy twin ([[lazyPlans]]) exposes the full plan to PlanSpec's global
-    * audit and the Explain tool (the public query's two localCheckpoints
-    * truncate it). `eagerCells = false` trades the ≤15-row cells
-    * materialization for a lazy plan that recomputes the cells subtree
-    * per consumer — plan inspection only, never benched.
-    */
-  private def d37ReportOf(pairs: DataFrame, eagerCells: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast => bcast}
     val j = pairs.select(
       expr("(cast(inter as bigint) * 100) div (na + nb - inter)").as("j_pct"))
-    val cells0 = j
+    val cells = j
       .select(expr("(j_pct div 5) * 5").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
-    val cells = if (eagerCells) cells0.localCheckpoint() else cells0
+      .localCheckpoint()
     val total = cells.agg(sum("n_pairs").as("total"))
     val above = cells.select(col("bucket").as("b2"), col("n_pairs").as("n2"))
     cells
@@ -2158,9 +2133,7 @@ object Dedup {
     * run once per corpus revision and write its 3-row table; it is not a
     * per-query cost.
     */
-  /** One sweep leg's lazy 1-row report over a per-k prefix index (see
-    * [[d15Pairs]] for why it is factored out).
-    */
+  /** One sweep leg's lazy 1-row report over a per-k prefix index. */
   private[graft] def d28Leg(idx: DataFrame, k: Int): DataFrame = {
     // the leg's pair count IS d15's machinery over this k's index — one
     // definition, so the sweep can never desynchronize from the query it
@@ -2209,34 +2182,6 @@ object Dedup {
     out
   }
 
-  /** Lazy (un-checkpointed) twins of the materialize-then-release queries,
-    * for PlanSpec's global audit and named pins: the public queries
-    * truncate their physical plans to an RDD scan at the localCheckpoint
-    * boundary, which would otherwise hide exactly the sub-plans the audit
-    * exists to inspect. Never benched or verified — plan inspection only.
-    */
-  private[graft] val lazyPlans: Map[String, Q] = Map(
-    "d15_prefix_filter_join" -> ((s, d) =>
-      d15Pairs(prefixIndex(s, d, PrefixTauPct)).orderBy("d1", "d2")),
-    "d16_containment_join" -> ((s, d) =>
-      d16Pairs(prefixIndex(s, d, ContainTauPct)).orderBy("d1", "d2")),
-    "d28_shingle_sweep" -> ((s, d) => {
-      val toks = tokenizedDocs(s, d)
-      ShingleSweep.map(k => d28Leg(prefixIndexOf(toks, PrefixTauPct, k), k))
-        .reduce(_.unionByName(_)).orderBy("shingle_k")
-    }),
-    "d22_banding_sweep" -> ((s, d) => d22Report(
-      minhashSignatures(Tables.documents(s, d)),
-      d03NgramJaccard(s, d).select("d1", "d2"))),
-    "d37_tau_calibration" -> ((s, d) => d37ReportOf(
-      d15Pairs(prefixIndexOf(tokenizedDocs(s, d), PrefixTauPct,
-        PrefixShingleK)),
-      eagerCells = false)),
-    "p15_curation_funnel" -> ((s, d) =>
-      // the un-checkpointed twin: the gate scan's HOF sub-plan stays
-      // under the global plan audit
-      p15FunnelOf(s, d, p15Gates(s, d))))
-
   /** d31: LSH band-table LOAD profile — the operational health check of
     * the d01 index: bucket-size distribution of the band table (per
     * bucket-size-log2 class: how many buckets, how many candidate PAIRS
@@ -2277,8 +2222,8 @@ object Dedup {
     * Oracle is the brute-force directed τ-join: completeness checked
     * against ground truth.
     */
-  /** d16's full lazy plan (see [[d15Pairs]] for why it is factored out). */
-  private def d16Pairs(idx: DataFrame): DataFrame = {
+  val d16ContainmentJoin: Q = (s, d) => {
+    val idx = prefixIndex(s, d, ContainTauPct)
     val prefix = idx
       .select(col("doc_id").as("d1"),
         explode(expr("slice(tarr, 1, cast(plen as int))")).as("h"))
@@ -2292,7 +2237,7 @@ object Dedup {
     // d15Pairs's discipline: verify occurrences in the pipeline
     // (broadcast index fetch + merge-count), dedupe only the qualifying
     // survivors — the candidate stream never shuffles
-    cand
+    val pairs = cand
       .join(broadcast(idx.select(col("doc_id").as("d1"), col("varr").as("va"), col("sz").as("na"))), Seq("d1"))
       .join(broadcast(idx.select(col("doc_id").as("d2"), col("varr").as("vb"))), Seq("d2"))
       // threshold-aware merge (d15's r14 discipline): C ≥ τ ⟺ inter ≥
@@ -2303,12 +2248,8 @@ object Dedup {
       .filter(col("inter") * 100 >= col("na") * ContainTauPct)
       .select(col("d1"), col("d2"), col("inter"), col("na").cast("long").as("na"))
       .distinct()
-  }
-
-  val d16ContainmentJoin: Q = (s, d) => {
-    val idx = prefixIndex(s, d, ContainTauPct)
-    // materialize-then-release, as in d15: the query owns its cache
-    val pairs = d16Pairs(idx).localCheckpoint()
+      // materialize-then-release, as in d15: the query owns its cache
+      .localCheckpoint()
     idx.unpersist()
     pairs.orderBy("d1", "d2")
   }

@@ -223,11 +223,17 @@ object Extended {
     * coarsest setting under the hard oracle via the x01/x02
     * bounded-property discipline.
     */
-  /** x15's full lazy plan over the (cached) value + cum tables — factored
-    * out so PlanSpec's audit sees the real plan, which the public query's
-    * materializing localCheckpoint truncates.
-    */
-  private def x15Legs(v: DataFrame, cum: DataFrame): DataFrame = {
+  val x15AccuracySweep: Q = (s, d) => {
+    // Private cache owner: prefixSum's internal shard cache registers
+    // HERE, so the release below drops exactly this query's caches — not
+    // the global registry, whose mid-run release would take every other
+    // query's shard cache with it.
+    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val v = Tables.lineitem(s, d).select(col("l_extendedprice").as("v"))
+    val g = v.groupBy("v").agg(count(lit(1)).as("c"))
+    val cum = TextOps.prefixSum(g, "v", "c", "cum", includeCurrent = true,
+      owner = mine)
+    v.cache(); cum.cache()
     val n = v.agg(count(lit(1)).as("n"))
     val legs = Seq(10, 100, 10000).map { a =>
       val bands = cum.crossJoin(broadcast(n)).agg(
@@ -244,43 +250,15 @@ object Extended {
           (col("p95a") >= col("lo95") &&
             col("p95a") <= coalesce(col("hi95"), col("p95a"))).as("p95_in_band"))
     }
-    legs.reduce(_.unionByName(_)).orderBy("accuracy")
-  }
-
-  private def x15Inputs(s: SparkSession, d: String,
-      owner: scala.collection.mutable.Buffer[DataFrame] =
-        scala.collection.mutable.ArrayBuffer.empty): (DataFrame, DataFrame) = {
-    val v = Tables.lineitem(s, d).select(col("l_extendedprice").as("v"))
-    val g = v.groupBy("v").agg(count(lit(1)).as("c"))
-    (v, TextOps.prefixSum(g, "v", "c", "cum", includeCurrent = true,
-      owner = owner))
-  }
-
-  val x15AccuracySweep: Q = (s, d) => {
-    // Private cache owner: prefixSum's internal shard cache registers
-    // HERE, so the release below drops exactly this query's caches — not
-    // the global registry, whose mid-run release would take every other
-    // query's shard cache with it.
-    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val (v0, cum0) = x15Inputs(s, d, mine)
-    val v = v0.cache()
-    val cum = cum0.cache()
     // Materialize the 3-row report while the shared value/cum caches are
     // alive, then release them — the query owns its cache lifecycle
     // (round-6 advice: x15's cum table pinned executor memory for the
     // rest of a 300-query run).
-    val out = x15Legs(v, cum).localCheckpoint()
+    val out = legs.reduce(_.unionByName(_)).orderBy("accuracy").localCheckpoint()
     cum.unpersist(); v.unpersist()
     TextOps.release(mine)
     out
   }
-
-  /** Lazy (un-checkpointed) twin for PlanSpec's audit — see Dedup.lazyPlans. */
-  private[graft] val lazyPlans: Map[String, Q] = Map(
-    "x15_accuracy_sweep" -> ((s, d) => {
-      val (v, cum) = x15Inputs(s, d)
-      x15Legs(v, cum)
-    }))
 
   /** q44: full outer join — the one join type the core suite lacked.
     * Null-completing both sides; total order pins null rows.

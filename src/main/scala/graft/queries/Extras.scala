@@ -3286,10 +3286,7 @@ object Extras {
     * class-keyed groupBy over O(users) narrow rows, and a 3-row sweep
     * over the O(classes) table — integer math end to end, no windows.
     */
-  /** q198's QI equivalence-class table — lazy, so the audit twin can
-    * inspect the un-checkpointed plan.
-    */
-  private def q198Classes(s: SparkSession, d: String): DataFrame = {
+  val q198KAnonymity: Q = (s, d) => {
     // FLOOR division (pmod-adjusted), not `div`: Spark's div truncates
     // toward zero while the DuckDB oracle's `//` floors, so a pre-1970
     // timestamp would bucket one day apart between the engines. pmod is
@@ -3306,12 +3303,12 @@ object Extras {
       .groupBy("user_id")
       .agg(min_by(col("event_type"),
         struct(negate(col("cnt")), col("event_type"))).as("modal_type"))
-    base.join(modal, "user_id")
+    // one materialized class table feeds all three k rows (at 100 TB this
+    // is a written table the sweep re-reads, not three corpus scans)
+    val classes = base.join(modal, "user_id")
       .groupBy("first_day", "nbits", "modal_type")
       .agg(count(lit(1)).as("class_size"))
-  }
-
-  private def q198Sweep(classes: DataFrame): DataFrame =
+      .localCheckpoint()
     KAnonThresholds.map { k =>
       classes.agg(
         lit(k).as("k"),
@@ -3323,11 +3320,7 @@ object Extras {
         expr(s"sum(IF(class_size < $k, class_size, 0L)) * 10000" +
           " div sum(class_size)").as("risk_bp"))
     }.reduce(_.unionByName(_)).orderBy("k")
-
-  val q198KAnonymity: Q = (s, d) =>
-    // one materialized class table feeds all three k rows (at 100 TB this
-    // is a written table the sweep re-reads, not three corpus scans)
-    q198Sweep(q198Classes(s, d).localCheckpoint())
+  }
 
   /** q199: RETENTION-PLAN report — the capacity/compliance answer before
     * a time-based delete (m15 plans the chunk-store GC; this plans the
@@ -3366,12 +3359,6 @@ object Extras {
         max(when(col("us") < col("cutoff_us"), col("us"))).as("latest_us"))
       .orderBy("event_type")
   }
-
-  /** Lazy (un-checkpointed) twin for PlanSpec's audit — see
-    * Dedup.lazyPlans.
-    */
-  private[graft] val lazyPlans: Map[String, Q] = Map(
-    "q198_k_anonymity" -> ((s, d) => q198Sweep(q198Classes(s, d))))
 
   val queries: Map[String, Q] = Map(
     "q198_k_anonymity"       -> q198KAnonymity,

@@ -3,8 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import org.apache.spark.SparkTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftSqlBridge
 import graft.operators.EtlStatus
 
 /** A13 status-envelope fidelity: 200/500 + body, exactly the reference's
@@ -84,11 +84,11 @@ class EtlStatusSpec extends SparkSpec {
     var before = Option.empty[Int]
     try {
       val st = EtlStatus.run(spark, in) { df =>
-        SparkTestBridge.drainListeners(sc)
+        GraftSqlBridge.drainListeners(spark)
         before = Some(probe.jobs.get)
         sink(df)
       }
-      SparkTestBridge.drainListeners(sc)
+      GraftSqlBridge.drainListeners(spark)
       (st, before, probe)
     } finally {
       sc.setLocalProperty("scanProbe", null)

@@ -87,11 +87,9 @@ class ParallelismSpec extends SparkSpec {
     "t48_source_novelty", "d35_dedup_bias", "n33_cos_histogram")
 
   private def runClean(name: String): Seq[Seq[String]] = {
-    // the dedup + graph-ANN suites memoize their index tables — clear so
-    // each run genuinely recomputes under the active parallelism
-    graft.queries.Dedup.clearClusterMemo()
-    graft.queries.Similarity.clearGraphAnnMemo()
-    spark.catalog.clearCache()
+    // the dedup, graph-ANN and prefix-sum paths memoize their tables —
+    // clear so each run genuinely recomputes under the active parallelism
+    SparkEntry.releaseMemos(spark)
     SparkEntry.queries(name)(spark, sf)
       .collect().map(_.toSeq.map(String.valueOf).toSeq).toSeq
   }

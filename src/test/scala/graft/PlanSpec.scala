@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.queries.{Dedup, Relational}
 
 /** Physical-plan quality gates — the properties that decide whether these
@@ -8,8 +11,23 @@ import graft.queries.{Dedup, Relational}
   */
 class PlanSpec extends SparkSpec {
 
-  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+  private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Root paths of every file scan in a query's final plan — read off the
+    * scan nodes, because the plan string truncates a long location.
+    */
+  private def scanRoots(df: DataFrame): Seq[String] = {
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+      .flatMap(_.relation.location.rootPaths.map(_.toString))
+  }
+
+  /** d15's captured plans: its localCheckpoint truncates the final plan to
+    * an RDD scan, so the verify join is visible only in the eager plans.
+    */
+  private lazy val d15Plans =
+    Explain.plansOf(spark)(Dedup.d15PrefixFilterJoin(spark, sf))
 
   test("q01: filter reaches the scan; unused columns pruned from ReadSchema") {
     val plan = planOf(Relational.q01FraudRuleFilter(spark, sf))
@@ -280,14 +298,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d15: verify stage is per-pair merge-count over broadcast index fetches, never a re-explode + agg") {
-    // the lazy twin: the public query's localCheckpoint truncates the plan.
-    // Its .cache() registers the index plan in the CacheManager at call
-    // time; drop it afterwards or a LATER twin compile with the same
-    // (tau, k) index canonically matches and compiles to an
-    // InMemoryTableScan — hiding the very sub-plan being audited.
-    val plan =
-      try planOf(graft.queries.Dedup.lazyPlans("d15_prefix_filter_join")(spark, sf))
-      finally spark.catalog.clearCache()
+    val plan = d15Plans.map(_._2).mkString("\n")
     assert(plan.contains("sorted_inter_size"),
       s"exact verification must merge-count the h-sorted twins (the codegen " +
         s"expression), not hash-set array_intersect:\n$plan")
@@ -297,6 +308,16 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct") &&
            !plan.contains("BroadcastNestedLoopJoin"),
       s"prefix-filter candidates degenerated to all-pairs:\n$plan")
+  }
+
+  test("plansOf: a materializing query's eager plans are captured before its truncated final plan") {
+    val steps = d15Plans.map(_._1)
+    assert(steps.last === "final", s"the final plan must come last: $steps")
+    assert(steps.contains("localCheckpoint"),
+      s"d15's materializing localCheckpoint was not captured: $steps")
+    val eager = d15Plans.init.map(_._2).mkString("\n")
+    assert(eager.contains("sorted_inter_size") && eager.contains("BroadcastHashJoin"),
+      s"the verify join must be in the captured eager plans:\n$eager")
   }
 
   test("x07: KMV sketches build as two-phase distinct + bounded top-k, no full sort") {
@@ -564,11 +585,13 @@ class PlanSpec extends SparkSpec {
     // n25: the serve half reads ONLY the written index tables — the plan
     // must scan ann_index_store parquet, broadcast the 2-row probe list,
     // and never re-derive the assignment from the embeddings table
-    val p25 = planOf(graft.queries.Similarity.n25IndexPersist(spark, sf))
-    assert(p25.contains("ann_index_store"),
-      s"served search must read the persisted index:\n$p25")
-    assert(!p25.contains("embeddings.parquet"),
-      s"served search must not fall back to the source embeddings:\n$p25")
+    val n25 = graft.queries.Similarity.n25IndexPersist(spark, sf)
+    val p25 = planOf(n25)
+    val roots25 = scanRoots(n25)
+    assert(roots25.exists(_.contains("ann_index_store")),
+      s"served search must read the persisted index: $roots25")
+    assert(!roots25.exists(_.contains("embeddings.parquet")),
+      s"served search must not fall back to the source embeddings: $roots25")
     assert(p25.contains("BroadcastHashJoin"),
       s"the probed-list restriction must broadcast:\n$p25")
   }
@@ -577,11 +600,13 @@ class PlanSpec extends SparkSpec {
     // same contract as n25's: the serve half must scan the pq_index_store
     // parquet, broadcast the probe/shortlist restrictions, and never fall
     // back to re-deriving anything from the source embeddings
-    val p29 = planOf(graft.queries.Similarity.n29PqPersist(spark, sf))
-    assert(p29.contains("pq_index_store"),
-      s"served PQ search must read the persisted index:\n$p29")
-    assert(!p29.contains("embeddings.parquet"),
-      s"served PQ search must not fall back to the source embeddings:\n$p29")
+    val n29 = graft.queries.Similarity.n29PqPersist(spark, sf)
+    val p29 = planOf(n29)
+    val roots29 = scanRoots(n29)
+    assert(roots29.exists(_.contains("pq_index_store")),
+      s"served PQ search must read the persisted index: $roots29")
+    assert(!roots29.exists(_.contains("embeddings.parquet")),
+      s"served PQ search must not fall back to the source embeddings: $roots29")
     assert(p29.contains("BroadcastHashJoin"),
       s"the probed-list and shortlist restrictions must broadcast:\n$p29")
   }
@@ -916,26 +941,32 @@ class PlanSpec extends SparkSpec {
     // broadcast-scalar cross join (query vectors, corpus counts, grand
     // totals), asserted individually by the targeted tests above.
     val windowArgs = "windowspecdefinition\\(([^)]*)\\)".r
-    // The materialize-then-release queries (d15/d16/d28/x15) truncate
-    // their public plans at a localCheckpoint; audit their lazy twins so
-    // the heavy sub-plans stay under this gate. The twins must be real:
-    // an override for a key with no queries entry would audit dead code.
-    val lazyTwins = graft.queries.Dedup.lazyPlans ++
-      graft.queries.Extended.lazyPlans ++
-      graft.queries.Extras.lazyPlans
-    assert((lazyTwins.keySet -- SparkEntry.queries.keySet).isEmpty,
-      "lazyPlans carries keys that are not queries")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn0) =>
-      val fn = lazyTwins.getOrElse(name, fn0)
-      val plan =
-        try fn(spark, sf).queryExecution.executedPlan.toString
+    // Every plan a query executes is audited: each eager step it runs while
+    // it is built (a materializing localCheckpoint truncates the final plan
+    // to an RDD scan, so the heavy sub-plans live in these), then the final
+    // plan. Memos are released around the loop, so each memoized table is
+    // built — and its plans audited — by the first query that reads it, and
+    // none leaks into later suites. Releasing per query would only rebuild
+    // and re-audit the same memo plans for every later reader.
+    SparkEntry.releaseMemos(spark)
+    val captured = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val plans =
+        try Explain.plansOf(spark)(fn(spark, sf))
         catch { case e: Throwable => fail(s"$name failed to plan: $e") }
-        finally if (lazyTwins.contains(name))
-          // twins .cache() their indexes at construction; drop the
-          // registrations so a later twin sharing an index plan (d15's
-          // k=3 == d28's k=3 leg) is not silently compiled to an
-          // InMemoryTableScan that hides the audited sub-plan
-          spark.catalog.clearCache()
+      name -> plans
+    }
+    SparkEntry.releaseMemos(spark)
+    // these queries materialize their heavy sub-plans while they are built;
+    // without their eager plans the gate would audit only RDD scans
+    val materializing = Seq("d15_prefix_filter_join", "d16_containment_join",
+      "d22_banding_sweep", "d28_shingle_sweep", "d37_tau_calibration",
+      "p15_curation_funnel", "x15_accuracy_sweep", "q198_k_anonymity")
+    val byName = captured.toMap
+    materializing.foreach { name =>
+      assert(byName(name).exists(_._1 != "final"),
+        s"$name: no eager plan captured (steps ${byName(name).map(_._1)})")
+    }
+    def check(name: String, plan: String): Seq[String] = {
       val cart =
         if (plan.contains("CartesianProduct")) Seq(s"$name: CartesianProduct") else Nil
       // windowspecdefinition lists partition columns first, then "col ASC/
@@ -974,8 +1005,13 @@ class PlanSpec extends SparkSpec {
         .toSeq.distinct
       cart ++ globalWin ++ constWin
     }
+    val offenders = captured.flatMap { case (query, plans) =>
+      plans.flatMap { case (step, plan) => check(s"$query ($step)", plan) }
+    }
     assert(offenders.isEmpty,
       s"scale-killer shapes found:\n${offenders.mkString("\n")}")
+    info(s"${captured.map(_._2.size).sum} plans audited over ${captured.size} " +
+      s"queries, ${captured.count(_._2.size > 1)} of which ran eager steps")
   }
 
   test("whole-stage codegen covers the fraud filter pipeline (py_round inside)") {

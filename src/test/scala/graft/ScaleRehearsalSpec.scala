@@ -124,13 +124,6 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     java.nio.file.Files.createFile(marker)
   }
 
-  private def releaseMemos(spark: SparkSession): Unit = {
-    graft.queries.Dedup.clearClusterMemo()
-    graft.queries.Similarity.clearGraphAnnMemo()
-    graft.queries.TextOps.releasePrefixSumCaches()
-    spark.catalog.clearCache()
-  }
-
   test("scale rehearsal: the 15 heaviest queries grow at most ~linearly from 1x to 10x of sf0.1") {
     assume(sys.env.contains("SPARK_GRAFT_SCALE_REHEARSAL"),
       "opt-in heavy run: SPARK_GRAFT_SCALE_REHEARSAL=1 " +
@@ -176,7 +169,7 @@ class ScaleRehearsalSpec extends AnyFunSuite {
         val t0 = System.nanoTime()
         fn(spark, dir).count()
         val t = (System.nanoTime() - t0) / 1e9
-        releaseMemos(spark)
+        SparkEntry.releaseMemos(spark)
         System.gc()
         t
       }.min
