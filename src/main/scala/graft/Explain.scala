@@ -1,14 +1,18 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan inspector: prints every physical plan the named queries (or a
   * representative set) execute, so partitioning/pushdown/codegen claims
-  * can be audited. Usage: scripts/run.sh Explain [sfDir] [nameRegex]
+  * can be audited, and each query's Spark job count (its eager build steps
+  * plus one `count()` of the result). Usage:
+  * scripts/run.sh Explain [sfDir] [nameRegex]
   */
 object Explain {
 
@@ -38,6 +42,35 @@ object Explain {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** The number of Spark jobs `body` starts. Jobs are counted through a
+    * local property set on the calling thread (Spark hands it on to the
+    * broadcast and subquery threads a query starts), so work submitted by
+    * other threads of the same session stays out of the count.
+    */
+  def jobsOf(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobsOf-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(JobsProperty) == tag)
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    val outer = sc.getLocalProperty(JobsProperty)
+    sc.setLocalProperty(JobsProperty, tag)
+    try {
+      body
+      GraftSqlBridge.drainListeners(spark)
+      jobs.get
+    } finally {
+      sc.setLocalProperty(JobsProperty, outer)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val JobsProperty = "graft.explain.jobs"
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val pattern = args.lift(1).getOrElse(
@@ -54,9 +87,16 @@ object Explain {
       .filter { case (name, _) => pattern.findFirstIn(name).isDefined }
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
-        plansOf(spark)(fn(spark, sfDir)).foreach { case (step, plan) =>
+        var plans = Seq.empty[(String, String)]
+        val jobs = jobsOf(spark) {
+          var df: DataFrame = null
+          plans = plansOf(spark) { df = fn(spark, sfDir); df }
+          df.count(): Unit
+        }
+        plans.foreach { case (step, plan) =>
           println(s"---------- $step ----------\n$plan")
         }
+        println(s"---------- jobs: $jobs ----------")
         // memoized tables would otherwise show up as cache scans in a
         // later query's plans
         SparkEntry.releaseMemos(spark)

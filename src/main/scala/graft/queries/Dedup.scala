@@ -1960,7 +1960,8 @@ object Dedup {
   }
 
   /** d15's τ-pair plan over a prefix index — shared by d15, d28's legs,
-    * d37 and the s51 rebuild oracle.
+    * d37 and the s51 rebuild oracle. `tauPct` must be the τ the index was
+    * built at: the probe side slices the index's own τ-prefix (`plen`).
     *
     * Candidate generation applies the two standard EXACT prefix-join
     * prunes (PPJoin, Xiao et al. 2008) on top of the basic prefix filter
@@ -1979,7 +1980,8 @@ object Dedup {
     *    be over-pruned, which only removes duplicates.
     *    J ≥ τ ⟺ inter·(100+τ) ≥ τ·(na+nb) gives the integer spelling.
     */
-  private[graft] def d15Pairs(idx: DataFrame): DataFrame = {
+  private[graft] def d15Pairs(idx: DataFrame,
+                              tauPct: Int = PrefixTauPct): DataFrame = {
     // ASYMMETRIC (indexing) PREFIX (PPJoin, Xiao et al. 2008 §3 — the
     // r15 candidate-count optimization): orient every unordered pair by
     // (sz, doc_id) and join the larger/probing side's FULL τ-prefix
@@ -2003,17 +2005,17 @@ object Dedup {
     val index = idx
       .select(col("doc_id").as("di"), col("sz").as("si"),
         posexplode(expr("slice(tarr, 1, cast(sz - ((sz * " +
-          s"${2 * PrefixTauPct} + ${100 + PrefixTauPct - 1}) div " +
-          s"${100 + PrefixTauPct}) + 1 as int))")).as(Seq("pi", "h")))
+          s"${2 * tauPct} + ${100 + tauPct - 1}) div " +
+          s"${100 + tauPct}) + 1 as int))")).as(Seq("pi", "h")))
     val cand = index.join(probe, Seq("h"))
       // pair orientation: index side strictly smaller by (sz, doc_id) —
       // also what makes the pair generation self-pair-free
       .filter(col("si") < col("sp") ||
         (col("si") === col("sp") && col("di") < col("dp")))
       // length filter (si = least, sp = greatest by construction)
-      .filter(col("si") * 100 >= col("sp") * PrefixTauPct)
+      .filter(col("si") * 100 >= col("sp") * tauPct)
       .filter((lit(1) + least(col("si") - col("pi") - 1, col("sp") - col("pp") - 1)) *
-        (100 + PrefixTauPct) >= (col("si") + col("sp")) * PrefixTauPct)
+        (100 + tauPct) >= (col("si") + col("sp")) * tauPct)
       .select("di", "dp")
     // exact verification: merge-count over the h-sorted twins — one
     // codegen'd primitive pass per candidate (sorted_inter_size), no
@@ -2041,8 +2043,8 @@ object Dedup {
       // value < the bound, so the surviving rows and their exact `inter`
       // are bit-identical to the exact merge (see SortedInterSizeBounded).
       .withColumn("inter", expr("sorted_inter_size(va, vb, " +
-        s"((na + nb) * $PrefixTauPct + ${100 + PrefixTauPct - 1}) div ${100 + PrefixTauPct})"))
-      .filter(col("inter") * 100 >= (col("na") + col("nb") - col("inter")) * PrefixTauPct)
+        s"((na + nb) * $tauPct + ${100 + tauPct - 1}) div ${100 + tauPct})"))
+      .filter(col("inter") * 100 >= (col("na") + col("nb") - col("inter")) * tauPct)
       // relabel the size-oriented pair back to doc-id order — inter is
       // symmetric, na/nb follow their documents; the output multiset is
       // exactly the symmetric spelling's (then the same distinct)

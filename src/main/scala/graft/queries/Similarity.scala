@@ -179,10 +179,14 @@ object Similarity {
     * broadcast-join pass, the probe reads ~1/NumCentroids of the corpus.
     */
   /** IVF assignment pass, shared by n02 (probe) and n03 (list stats):
-    * every vector → its max-cosine centroid, ccos retained.
+    * every vector → its max-cosine centroid, ccos retained. The prepared
+    * vectors are materialised once, eagerly, and leave no cached relation
+    * behind: a cache() would still be empty when the caller plans, so
+    * each of the plan's reads of it scanned the embeddings again. Each
+    * call materialises its own copy; every caller calls it once.
     */
   private[queries] def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    ivfAssignedFrom(prepared(s, d).select("vec_id", "q", "nrm").cache())
+    ivfAssignedFrom(prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint())
 
   /** Quantize + self-norm a raw (vec_id, embedding) frame — the public
     * seam s35's streaming maintainer shares with every batch query (an
@@ -953,10 +957,10 @@ object Similarity {
     * work is O(seeds + hops·beam·degree) scored candidates, the
     * serving-path property that makes graph ANN the high-recall default
     * (the scored fraction shrinks with corpus size; the hop budget
-    * doesn't grow with it). The eval scores via one cached full pass
-    * (exact truth needs it anyway for the recall denominator); a serving
-    * deployment scores candidates on demand. The walk itself is the
-    * SEQUENTIAL part (hop h needs hop h-1 — inherent to the algorithm);
+    * doesn't grow with it). The eval scores via one checkpointed full
+    * pass (exact truth needs it anyway for the recall denominator); a
+    * serving deployment scores candidates on demand. The walk itself is
+    * the SEQUENTIAL part (hop h needs hop h-1 — inherent to the algorithm);
     * at 100 TB you run MANY queries' walks as independent rows, not one
     * walk distributed.
     */
@@ -967,12 +971,15 @@ object Similarity {
     * MEMOIZED across queries (the r09 verdict's one efficiency finding:
     * n22 + n23 each rebuilt this from scratch — the top two bench
     * entries). Same discipline as Dedup's cluster table: every member is
-    * localCheckpointed so the triple survives the harness's per-query
-    * `clearCache()`; n22 (the index BUILD query) always recomputes and
-    * overwrites — its bench cost stays the honest full build — while n23
-    * (the entry-mode comparison CONSUMER) reads the memo and builds only
-    * when run standalone. At 100 TB the memo is the written graph-index
-    * tables (adjacency + scored pass) a serving deployment reads.
+    * localCheckpointed so the memo survives the harness's per-query
+    * `clearCache()`, and the build reads its quantised vectors from one
+    * localCheckpoint too, so it leaves no cached relation behind and
+    * scans the embeddings once; n22 (the index BUILD query) always
+    * recomputes and overwrites — its bench cost stays the honest full
+    * build — while n23 (the entry-mode comparison CONSUMER) reads the
+    * memo and builds only when run standalone. At 100 TB the memo is the
+    * written graph-index tables (adjacency + scored pass) a serving
+    * deployment reads.
     */
   private case class GraphAnnParts(adj: DataFrame, allsc: DataFrame,
                                    truth: DataFrame, hubReport: DataFrame)
@@ -1054,7 +1061,10 @@ object Similarity {
   }
 
   private def buildGraphAnnParts(s: SparkSession, d: String): GraphAnnParts = {
-    val v = prepared(s, d).select("vec_id", "q", "nrm").cache()
+    // Materialised once, eagerly: a cache() here is still empty when the
+    // build plans its joins, so the plan's many reads of `v` each ran their
+    // own scan of the embeddings (most of the build's jobs).
+    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
     val cents = v.filter(col("vec_id") < NumCentroids)
       .select(col("vec_id").as("cid"), col("q").as("cq"),
               col("nrm").as("cnrm"))
@@ -1079,7 +1089,6 @@ object Similarity {
     // n23's side-by-side report reuses these exact rows (r09 verdict item
     // 1 — re-walking them measured ~2 s of pure duplication at sf0.1).
     val hub = beamWalk(partial, hubSeeds(partial)).localCheckpoint()
-    v.unpersist()
     partial.copy(hubReport = hub)
   }
 
@@ -1093,34 +1102,59 @@ object Similarity {
   /** The bounded beam walk from `seeds`, one report row per hop
     * (0..[[BeamHops]]): cumulative scored count, best cosine, recall@10
     * vs the exact truth.
+    *
+    * Every side the walk joins against the graph or the score table —
+    * seeds, beam, the beam's neighbours, the scored id set — holds at most
+    * BeamSeeds + BeamHops·BeamWidth·2·[[KnnJoinK]] rows whatever the corpus
+    * size, so each is broadcast: the planner cannot size the checkpointed
+    * hop state and would otherwise plan sort-merge joins that AQE only
+    * demotes after a shuffle stage.
     */
   private def beamWalk(parts: GraphAnnParts, seeds: DataFrame): DataFrame = {
-    def hopReport(hop: Int, scored: DataFrame): DataFrame = {
-      val top = scored.orderBy(col("cos").desc, col("vec_id").asc).limit(TopK)
-      val hits = top.join(broadcast(parts.truth), col("vec_id") === col("tid"))
-        .agg(count(lit(1)).as("hits10"))
-      scored.agg(count(lit(1)).as("n_scored"), max("cos").as("best_cos"))
-        .crossJoin(broadcast(hits))
-        .select(lit(hop).as("hop"), lit(BeamWidth).as("beam_width"),
-                col("n_scored"), col("best_cos"), col("hits10"),
-                expr(s"hits10 * 10000 div $TopK").as("recall_bp"))
-    }
-    var scored = seeds.join(parts.allsc, "vec_id").select("vec_id", "cos")
+    var scored = parts.allsc.join(broadcast(seeds), Seq("vec_id"), "left_semi")
+      .select(col("vec_id"), col("cos"), lit(0).as("first"))
       .localCheckpoint()
-    val reports = scala.collection.mutable.Buffer(hopReport(0, scored))
     for (h <- 1 to BeamHops) {
       val beam = scored.orderBy(col("cos").desc, col("vec_id").asc)
         .limit(BeamWidth).select(col("vec_id").as("src"))
-      val fresh = beam.join(parts.adj, "src")
-        .select(col("dst").as("vec_id")).distinct()
-        .filter(col("vec_id") =!= 0)
-        .join(scored, Seq("vec_id"), "left_anti")
+      val nbrs = broadcast(beam).join(parts.adj, "src")
+        .select(col("dst").as("vec_id"))
+      // allsc holds each vec_id != 0 exactly once: the semi-join is the
+      // distinct neighbour set, already scored
+      val fresh = parts.allsc.join(broadcast(nbrs), Seq("vec_id"), "left_semi")
+        .join(broadcast(scored.select("vec_id")), Seq("vec_id"), "left_anti")
       scored = scored
-        .unionByName(fresh.join(parts.allsc, "vec_id").select("vec_id", "cos"))
+        .unionByName(fresh.select(col("vec_id"), col("cos"), lit(h).as("first")))
         .localCheckpoint()
-      reports += hopReport(h, scored)
     }
-    reports.reduce(_.unionByName(_))
+    hopReports(scored, Nil, parts.truth.select(col("tid").as("vec_id")))
+      .select(col("hop"), lit(BeamWidth).as("beam_width"), col("n_scored"),
+              col("best_cos"), col("hits10"), col("recall_bp"))
+  }
+
+  /** Every hop's report over a walk's scored rows in one pass. `scored`
+    * carries (keys…, vec_id, cos, first), `first` being the hop that first
+    * scored the row, so the scored set after hop h is the rows with
+    * first <= h: each row is exploded into hops first..[[BeamHops]], and
+    * one bounded heap and one aggregate keyed by (keys…, hop) give the
+    * cumulative count, best cosine and recall@10 against `truth`
+    * (keys…, vec_id) of every hop at once.
+    */
+  private def hopReports(scored: DataFrame, keys: Seq[String],
+                         truth: DataFrame): DataFrame = {
+    val hopKeys = keys :+ "hop"
+    val perHop = scored.select((keys ++ Seq("vec_id", "cos")).map(col) :+
+      explode(sequence(col("first"), lit(BeamHops))).as("hop"): _*)
+    val hits = graft.plans.TopKPerKey(perHop, hopKeys,
+        Seq(("cos", false), ("vec_id", true)), TopK)
+      .join(broadcast(truth), keys :+ "vec_id", "left_semi")
+      .select((hopKeys :+ "vec_id").map(col) :+ lit(1).as("hit"): _*)
+    perHop.join(broadcast(hits), hopKeys :+ "vec_id", "left")
+      .groupBy(hopKeys.map(col): _*)
+      .agg(count(lit(1)).as("n_scored"), max("cos").as("best_cos"),
+           count(col("hit")).as("hits10"))
+      .select((hopKeys.map(col) ++ Seq(col("n_scored"), col("best_cos"),
+        col("hits10"), expr(s"hits10 * 10000 div $TopK").as("recall_bp"))): _*)
   }
 
   /** The built (memoized) adjacency — the s36 StreamingSpec equality pin
@@ -1235,6 +1269,12 @@ object Similarity {
     * of the serving path — a production deployment runs the walk without
     * it. Both modes compute the identical IEEE doubles, so the reports
     * are row-for-row equal (SimilaritySpec pins n28 == n24).
+    *
+    * Each hop broadcasts the walk's bounded sides — the beam, its
+    * neighbour pairs, the scored pair set — as [[beamWalk]] does: at most
+    * BatchQueries·(BeamSeeds + BeamHops·BeamWidth·2·[[KnnJoinK]]) rows
+    * whatever the corpus size. Every hop's report comes from one pass
+    * over the final scored set ([[hopReports]]).
     */
   private def batchedBeamWalk(s: SparkSession, d: String,
                               adjacency: DataFrame,
@@ -1264,14 +1304,17 @@ object Similarity {
     // future edit could silently re-route the serving path through it
     val scall: Option[DataFrame] =
       if (onDemand) None else Some(fullPass.localCheckpoint())
-    /** (query_id, vec_id) pairs → (query_id, vec_id, cos): the lookup
-      * join in full-pass mode, the broadcast point fetch on demand.
+    val pairKeys = Seq("query_id", "vec_id")
+    /** (query_id, vec_id) pairs → (query_id, vec_id, cos), one row per
+      * distinct pair with vec_id != query_id: the lookup semi-join in
+      * full-pass mode (the table holds each such pair once), the
+      * broadcast point fetch on demand.
       */
     def score(pairs: DataFrame): DataFrame = scall match {
-      case Some(table) => pairs.join(table, Seq("query_id", "vec_id"))
-        .select("query_id", "vec_id", "cos")
+      case Some(table) => table.join(broadcast(pairs), pairKeys, "left_semi")
       case None =>
-        v.join(broadcast(pairs), Seq("vec_id"))
+        v.join(broadcast(pairs.filter(col("vec_id") =!= col("query_id"))
+            .distinct()), Seq("vec_id"))
           .join(broadcast(qset), Seq("query_id"))
           .withColumn("cos", expr(
             s"cast(${dot("qa", "q")} as double) / sqrt(cast(na as double) * cast(nrm as double))"))
@@ -1292,35 +1335,19 @@ object Similarity {
           .filter(col("src") =!= col("query_id")),
         Seq("query_id"), Seq(("deg", false), ("src", true)), BeamSeeds)
       .select(col("query_id"), col("src").as("vec_id"))
-    def hopReport(hop: Int, scored: DataFrame): DataFrame = {
-      val top = graft.plans.TopKPerKey(scored, Seq("query_id"),
-          Seq(("cos", false), ("vec_id", true)), TopK)
-        .select("query_id", "vec_id")
-      val hits = top.join(truthQ, Seq("query_id", "vec_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("h10"))
-      scored.groupBy("query_id")
-        .agg(count(lit(1)).as("n_scored"), max("cos").as("best_cos"))
-        .join(hits, Seq("query_id"), "left")
-        .withColumn("hits10", coalesce(col("h10"), lit(0L)))
-        .select(col("query_id"), lit(hop).as("hop"), col("n_scored"),
-          col("best_cos"), col("hits10"),
-          expr(s"hits10 * 10000 div $TopK").as("recall_bp"))
-    }
-    var scored = score(seeds).localCheckpoint()
-    val reports = scala.collection.mutable.Buffer(hopReport(0, scored))
+    var scored = score(seeds).withColumn("first", lit(0)).localCheckpoint()
     for (h <- 1 to BeamHops) {
       val beam = graft.plans.TopKPerKey(scored, Seq("query_id"),
           Seq(("cos", false), ("vec_id", true)), BeamWidth)
         .select(col("query_id"), col("vec_id").as("src"))
       // THE batched hop: one equi-join advances every query's frontier
-      val fresh = beam.join(adjacency, "src")
-        .select(col("query_id"), col("dst").as("vec_id")).distinct()
-        .filter(col("vec_id") =!= col("query_id"))
-        .join(scored, Seq("query_id", "vec_id"), "left_anti")
-      scored = scored.unionByName(score(fresh)).localCheckpoint()
-      reports += hopReport(h, scored)
+      val fresh = broadcast(beam).join(adjacency, "src")
+        .select(col("query_id"), col("dst").as("vec_id"))
+        .join(broadcast(scored.select(pairKeys.map(col): _*)), pairKeys, "left_anti")
+      scored = scored.unionByName(score(fresh).withColumn("first", lit(h)))
+        .localCheckpoint()
     }
-    reports.reduce(_.unionByName(_)).orderBy("query_id", "hop")
+    hopReports(scored, Seq("query_id"), truthQ).orderBy("query_id", "hop")
   }
 
   /** n25: PERSISTED ANN-index round trip — the missing production shape

@@ -573,23 +573,30 @@ class DedupSpec extends SparkSpec {
       s"got $stages")
   }
 
-  test("d15 prefix-filter join: complete vs brute force, thresholds honored") {
+  /** Ground truth for the d15 joins: brute-force exact Jaccard ≥ τ pairs
+    * (d1 < d2) over the same shingle sets.
+    */
+  private def bruteJaccardPairs(tauPct: Int): Set[(Long, Long)] = {
     import org.apache.spark.sql.functions._
     import graft.queries.Dedup
-    // ground truth: brute-force exact Jaccard join on the same shingle sets
     val tok = Tables.documents(spark, sf)
       .withColumn("tokens", split(col("text"), " "))
       .select(col("doc_id"), explode(expr(
         s"array_distinct(shingles(tokens, ${Dedup.PrefixShingleK}))")).as("t"))
     val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val brute = tok.select(col("doc_id").as("d1"), col("t"))
+    tok.select(col("doc_id").as("d1"), col("t"))
       .join(tok.select(col("doc_id").as("d2"), col("t")), Seq("t"))
       .filter(col("d1") < col("d2"))
       .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
       .join(sizes.select(col("doc_id").as("d1"), col("sz").as("na")), Seq("d1"))
       .join(sizes.select(col("doc_id").as("d2"), col("sz").as("nb")), Seq("d2"))
-      .filter(col("inter") * 100 >= (col("na") + col("nb") - col("inter")) * Dedup.PrefixTauPct)
+      .filter(col("inter") * 100 >= (col("na") + col("nb") - col("inter")) * tauPct)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
+  test("d15 prefix-filter join: complete vs brute force, thresholds honored") {
+    import graft.queries.Dedup
+    val brute = bruteJaccardPairs(Dedup.PrefixTauPct)
     val got = Dedup.d15PrefixFilterJoin(spark, sf).collect()
     assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet === brute)
     // every emitted pair genuinely clears the threshold
@@ -597,6 +604,24 @@ class DedupSpec extends SparkSpec {
       val (i, na, nb) = (r.getLong(2), r.getLong(3), r.getLong(4))
       assert(i * 100 >= (na + nb - i) * Dedup.PrefixTauPct)
     }
+  }
+
+  test("d15Pairs over an index built at τ = 95 gives exactly the Jaccard ≥ 95% pairs") {
+    import org.apache.spark.sql.functions._
+    import graft.queries.Dedup
+    // the fixture's τ = 30 pairs all score Jaccard near 90% or above, so
+    // τ = 50 would select the same set; τ = 95 separates them, and a join
+    // that slices or verifies at the default τ returns extra pairs
+    val tauPct = 95
+    val brute = bruteJaccardPairs(tauPct)
+    assert(brute.nonEmpty && brute != bruteJaccardPairs(Dedup.PrefixTauPct))
+    val idx = Dedup.prefixIndexOf(Tables.documents(spark, sf)
+        .select(col("doc_id"), split(col("text"), " ").as("tokens")),
+      tauPct, Dedup.PrefixShingleK)
+    val got = try Dedup.d15Pairs(idx, tauPct).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    finally idx.unpersist()
+    assert(got === brute)
   }
 
   test("p06 refresh: statuses partition the delta, bins only on accepted, consistent with p04/t20") {

@@ -579,7 +579,7 @@ class PlanSpec extends SparkSpec {
     assert(!p24.contains("CartesianProduct"),
       s"batched walk must stay equi-joined:\n$p24")
     // hop state is localCheckpointed (lineage truncated), so the heap
-    // shows in the LAST hop's report aggregation
+    // shows in the report, which ranks every hop's scored set at once
     assert(p24.contains("TopKPerKeyPartial") || p24.contains("TopKPerKeyFinal"),
       s"per-query rankings must use the bounded heap:\n$p24")
     // n25: the serve half reads ONLY the written index tables — the plan

@@ -240,6 +240,32 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** Spark jobs one standalone run of `q` takes: its build (the graph
+    * memo released first, so the index build is part of every count) plus
+    * collecting the result.
+    */
+  private def jobsOfRun(q: Similarity.Q): Int = {
+    Similarity.clearGraphAnnMemo()
+    Explain.jobsOf(spark)(q(spark, sf).collect(): Unit)
+  }
+
+  // Jobs one standalone run took at sf0.001 while the walk joined its
+  // bounded sides unbroadcast, reported each hop in its own sub-plan and
+  // the index build read its vectors through a still-empty cache. The
+  // graph-ANN queries are held to two thirds of that scheduling cost.
+  private val N22JobsBefore = 96
+  private val N24JobsBefore = 179
+
+  test("job budget: one n22 run takes at most two thirds of its former jobs") {
+    val jobs = jobsOfRun(Similarity.n22GraphAnn)
+    assert(jobs <= N22JobsBefore * 2 / 3, s"n22 took $jobs jobs")
+  }
+
+  test("job budget: one n24 run takes at most two thirds of its former jobs") {
+    val jobs = jobsOfRun(Similarity.n24BatchedBeam)
+    assert(jobs <= N24JobsBefore * 2 / 3, s"n24 took $jobs jobs")
+  }
+
   test("n26 persisted-graph serving equals n24's in-session batched walk row-for-row") {
     val served = Similarity.n26GraphServe(spark, sf).collect()
       .map(_.toSeq.map(String.valueOf))
