@@ -1,12 +1,14 @@
 package graft.operators
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, Types}
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 
-/** The reference's sink contract (SURVEY §2 A10–A12), Spark-first.
+/** The reference's sink contract (SURVEY §2 A9–A12), Spark-first.
   *
   * Reference behavior (`Lambda Function/lambda_function_aws.py`):
+  *  - A9 `py:55-60`: a file with no fraud rows never opens the DB.
   *  - A10 `py:70-87`: `CREATE TABLE IF NOT EXISTS fraud_transactions
   *    (id SERIAL PRIMARY KEY, … 11 cols)` executed every invocation.
   *  - A11 `py:96`: rows pivoted to positional tuples.
@@ -14,17 +16,24 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *    at-least-once across retries (no idempotence key).
   *
   * Spark design:
-  *  - The SERIAL/IDENTITY primary key cannot be emitted by Spark's JDBC
-  *    writer, so the table is pre-created over plain JDBC with the exact
-  *    DDL (dialect-parameterized: Postgres spelling mirrors the reference;
-  *    the Derby spelling exists so the sink is integration-TESTED in this
-  *    repo with the embedded Derby that ships in Spark's jars).
-  *  - The append itself is `df.write.jdbc` — name-aligned (strictly safer
-  *    than the reference's positional tuples), executor-parallel with
-  *    bounded connections (`numPartitions`) and batched statements
-  *    (`batchsize`), i.e. the scale-out version of `executemany`.
-  *  - `appendBatch` is the `foreachBatch` body for the streaming flagship:
-  *    empty-batch guard (A9) + idempotent DDL (A10) + append (A12).
+  *  - One executor-side `foreachPartition` pass does all of it. A
+  *    partition opens its JDBC connection only when it holds a row, so an
+  *    empty batch opens no connection and creates no table (A9) without a
+  *    separate emptiness job; the writer opens no driver-side connection.
+  *  - For [[appendBatch]] the partition runs the exact DDL on that
+  *    connection with autocommit on (A10), treating table-exists as
+  *    success. The DDL is explicit because Spark's JDBC writer cannot
+  *    emit the SERIAL/IDENTITY key, and dialect-parameterized: the Postgres
+  *    spelling mirrors the reference, the Derby spelling exists so the
+  *    sink is integration-TESTED in this repo with the embedded Derby that
+  *    ships in Spark's jars.
+  *  - It then inserts its rows in one transaction: a prepared `INSERT`
+  *    naming the DataFrame's columns (strictly safer than the reference's
+  *    positional tuples), `executeBatch` every `batchSize` rows, one
+  *    commit, rollback on failure (A12). One commit per partition, at most
+  *    `numPartitions` connections: the scale-out version of `executemany`,
+  *    at-least-once like the reference (a failed batch may have committed
+  *    some partitions).
   */
 object FraudSink {
 
@@ -53,40 +62,104 @@ object FraudSink {
   def derbyDdl(table: String = "fraud_transactions"): String =
     ddl(table, "id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY")
 
-  /** A10: idempotent create — "IF NOT EXISTS" portably, by swallowing the
-    * dialect's table-exists error (Derby: X0Y32; Postgres: duplicate_table).
+  private val TableExists = Set("X0Y32", "42P07", "23505")
+
+  /** A10: idempotent create on an open connection — "IF NOT EXISTS"
+    * portably, by swallowing the dialect's table-exists error (Derby:
+    * X0Y32; Postgres: 42P07 duplicate_table). Postgres raises 23505
+    * unique_violation instead when two sessions create the same table at
+    * once (the catalog race between concurrent partitions); on this one
+    * DDL statement that also means the table exists. Run it with
+    * autocommit on, so a swallowed error leaves no aborted transaction.
     */
-  def ensureTable(url: String, props: Properties, createSql: String): Unit = {
-    val conn: Connection = DriverManager.getConnection(url, props)
-    try {
-      val st = conn.createStatement()
-      try st.execute(createSql)
-      catch {
-        case e: java.sql.SQLException
-            if e.getSQLState == "X0Y32" || e.getSQLState == "42P07" => // exists
-      }
-      finally st.close()
-    } finally conn.close()
+  def ensureTable(conn: Connection, createSql: String): Unit = {
+    val st = conn.createStatement()
+    try st.execute(createSql)
+    catch {
+      case e: java.sql.SQLException
+          if TableExists(e.getSQLState) => // exists
+    }
+    finally st.close()
   }
 
-  /** A12: batched, executor-parallel append. */
+  /** [[ensureTable]] over a fresh driver-side connection. */
+  def ensureTable(url: String, props: Properties, createSql: String): Unit = {
+    val conn = DriverManager.getConnection(url, props)
+    try ensureTable(conn, createSql) finally conn.close()
+  }
+
+  /** A12: batched, executor-parallel append into an existing table. */
   def append(df: DataFrame, url: String, table: String, props: Properties,
-             batchSize: Int = 1000, numPartitions: Int = 8): Unit =
-    df.coalesce(numPartitions)
-      .write.mode(SaveMode.Append)
-      .option("batchsize", batchSize)
-      .jdbc(url, table, props)
+             batchSize: Int = BatchSize, numPartitions: Int = NumPartitions): Unit =
+    write(df, url, table, props, None, batchSize, numPartitions)
+
+  private val BatchSize = 1000
+  private val NumPartitions = 8
 
   /** foreachBatch body for the streaming flagship: A9 empty guard + A10 DDL
-    * + A12 append. At-least-once, exactly like the reference (replaying a
-    * batch re-inserts); see appendBatchIdempotent for the upgrade.
+    * + A12 append in one Spark job. At-least-once, exactly like the
+    * reference (replaying a batch re-inserts); see appendBatchIdempotent
+    * for the upgrade.
     */
   def appendBatch(url: String, table: String, props: Properties,
-                  createSql: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      ensureTable(url, props, createSql)
-      append(batch, url, table, props)
+                  createSql: String)(batch: DataFrame, batchId: Long): Unit =
+    write(batch, url, table, props, Some(createSql), BatchSize, NumPartitions)
+
+  /** The one writer behind [[append]] and [[appendBatch]]: each non-empty
+    * partition opens one connection, runs `createSql` if given, and inserts
+    * its rows in one transaction.
+    */
+  private def write(df: DataFrame, url: String, table: String,
+                    props: Properties, createSql: Option[String],
+                    batchSize: Int, numPartitions: Int): Unit = {
+    val cols = df.schema.fields
+    val nullTypes = cols.map(f => jdbcType(f.dataType))
+    val insertSql = s"INSERT INTO $table (${cols.map(_.name).mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+    df.coalesce(numPartitions).foreachPartition { rows: Iterator[Row] =>
+      if (rows.hasNext) {
+        val conn = DriverManager.getConnection(url, props)
+        try {
+          createSql.foreach(ensureTable(conn, _))
+          conn.setAutoCommit(false)
+          try {
+            val st = conn.prepareStatement(insertSql)
+            try {
+              var pending = 0
+              rows.foreach { r =>
+                var i = 0
+                while (i < nullTypes.length) {
+                  if (r.isNullAt(i)) st.setNull(i + 1, nullTypes(i))
+                  else st.setObject(i + 1, r.get(i))
+                  i += 1
+                }
+                st.addBatch()
+                pending += 1
+                if (pending == batchSize) { st.executeBatch(); pending = 0 }
+              }
+              if (pending > 0) st.executeBatch()
+            } finally st.close()
+            conn.commit()
+          } catch {
+            case t: Throwable => conn.rollback(); throw t
+          }
+        } finally conn.close()
+      }
     }
+  }
+
+  /** The JDBC type [[write]] binds a null of this column type as. */
+  private def jdbcType(dt: DataType): Int = dt match {
+    case IntegerType => Types.INTEGER
+    case LongType => Types.BIGINT
+    case DoubleType => Types.DOUBLE
+    case FloatType => Types.REAL
+    case StringType => Types.VARCHAR
+    case BooleanType => Types.BOOLEAN
+    case _: DecimalType => Types.DECIMAL
+    case DateType => Types.DATE
+    case TimestampType => Types.TIMESTAMP
+    case other => throw new IllegalArgumentException(s"FraudSink: no JDBC binding for $other")
   }
 
   /** Effectively-once upgrade over the reference's at-least-once (A12),
@@ -102,8 +175,8 @@ object FraudSink {
     *  - claim exists as `done` → the batch fully landed; skip (no dupes).
     *  - claim exists as `pending` → a previous attempt failed BETWEEN claim
     *    and finalize (transient JDBC error, executor loss, partial
-    *    per-partition commit — Spark's JDBC writer commits per partition,
-    *    so partial batches are real). Delete the failed attempt's partial
+    *    per-partition commit — the writer commits per partition, so
+    *    partial batches are real). Delete the failed attempt's partial
     *    rows (`id > watermark` — ids are sink-generated SERIAL, strictly
     *    increasing) and re-append. This is the common failure path; a
     *    claim-first-skip-on-conflict ledger would silently DROP the batch
@@ -111,22 +184,27 @@ object FraudSink {
     *
     * Production systems put claim + rows in one transaction; the two-phase
     * ledger is the portable approximation when the writer can't.
+    *
+    * Unlike [[appendBatch]], this keeps a `batch.isEmpty` probe (one extra
+    * Spark job per batch): the claim records the MAX(id) watermark on the
+    * driver before any row lands, so it needs a driver connection, and A9
+    * forbids opening one for an empty batch. Emptiness must be known first.
     */
   def appendBatchIdempotent(url: String, table: String, props: Properties,
                             createSql: String)
                            (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    ensureTable(url, props, createSql)
-    ensureTable(url, props,
-      s"""CREATE TABLE ${table}_ledger (
-         |  sink_table VARCHAR(128) NOT NULL,
-         |  batch_id BIGINT NOT NULL,
-         |  status VARCHAR(8) NOT NULL,
-         |  start_id BIGINT NOT NULL,
-         |  PRIMARY KEY (sink_table, batch_id)
-         |)""".stripMargin)
     val conn = DriverManager.getConnection(url, props)
     try {
+      ensureTable(conn, createSql)
+      ensureTable(conn,
+        s"""CREATE TABLE ${table}_ledger (
+           |  sink_table VARCHAR(128) NOT NULL,
+           |  batch_id BIGINT NOT NULL,
+           |  status VARCHAR(8) NOT NULL,
+           |  start_id BIGINT NOT NULL,
+           |  PRIMARY KEY (sink_table, batch_id)
+           |)""".stripMargin)
       val maxId = {
         val st = conn.createStatement()
         try {

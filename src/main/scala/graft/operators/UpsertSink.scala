@@ -44,22 +44,27 @@ object UpsertSink {
     s"""INSERT INTO $table (k, v, updated_ts) VALUES (?, ?, ?)
        |ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v, updated_ts = EXCLUDED.updated_ts""".stripMargin
 
-  /** Upsert one compacted micro-batch. Expects columns (k, v, ts). */
+  /** Upsert one compacted micro-batch. Expects columns (k, v, ts). No
+    * separate emptiness job: each non-empty partition opens its own
+    * connection, ensures the table on it (A10, autocommit on), then upserts
+    * in one transaction; an empty batch opens no connection and creates no
+    * table (A9).
+    */
   def upsertBatch(url: String, props: Properties, table: String,
                   createSql: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      FraudSink.ensureTable(url, props, createSql)
-      // last-wins compaction within the batch: one row per key, ordered by
-      // (ts, v) so replays are deterministic even on event-time ties
-      val latest = batch
-        .groupBy("k")
-        .agg(max_by(struct(col("v"), col("ts")), struct(col("ts"), col("v"))).as("b"))
-        .select(col("k"), col("b.v").as("v"), col("b.ts").as("ts"))
-      latest.coalesce(4).foreachPartition { rows: Iterator[Row] =>
-        if (rows.hasNext) {
-          val conn = DriverManager.getConnection(url, props)
+    // last-wins compaction within the batch: one row per key, ordered by
+    // (ts, v) so replays are deterministic even on event-time ties
+    val latest = batch
+      .groupBy("k")
+      .agg(max_by(struct(col("v"), col("ts")), struct(col("ts"), col("v"))).as("b"))
+      .select(col("k"), col("b.v").as("v"), col("b.ts").as("ts"))
+    latest.coalesce(4).foreachPartition { rows: Iterator[Row] =>
+      if (rows.hasNext) {
+        val conn = DriverManager.getConnection(url, props)
+        try {
+          FraudSink.ensureTable(conn, createSql)
+          conn.setAutoCommit(false)
           try {
-            conn.setAutoCommit(false)
             val upd = conn.prepareStatement(
               s"UPDATE $table SET v = ?, updated_ts = ? WHERE k = ?")
             val ins = conn.prepareStatement(
@@ -78,8 +83,8 @@ object UpsertSink {
             conn.commit()
           } catch {
             case t: Throwable => conn.rollback(); throw t
-          } finally conn.close()
-        }
+          }
+        } finally conn.close()
       }
     }
   }

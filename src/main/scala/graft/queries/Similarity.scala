@@ -632,7 +632,7 @@ object Similarity {
     */
   val n17IvfRebalance: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val v = prepared(s, d).select("vec_id", "q", "nrm").cache()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
     val cents = v.filter(col("vec_id") < NumCentroids)
       .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cnrm"))
     val scored = v.crossJoin(broadcast(cents))
@@ -641,7 +641,7 @@ object Similarity {
       .select("vec_id", "cid", "ccos")
     val wv = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid").asc)
     val ranked = scored.withColumn("rn", row_number().over(wv))
-      .filter(col("rn") <= 2).cache()
+      .filter(col("rn") <= 2).localCheckpoint()
     val best = ranked.filter(col("rn") === 1).select("vec_id", "cid", "ccos")
     val second = ranked.filter(col("rn") === 2)
       .select(col("vec_id"), col("cid").as("cid2"))

@@ -48,9 +48,9 @@ object StreamOps {
 
   /** s01 query: filters are the SAME batch functions (A7+A8) — Structured
     * Streaming runs the identical logical plan incrementally. The sink is a
-    * parquet append per non-empty batch (JDBC in production: swap the
-    * writer inside foreachBatch; the empty-guard mirrors the reference's
-    * A9 short-circuit that skips opening the DB connection).
+    * parquet append per non-empty batch, the local stand-in for the JDBC
+    * sink of [[s01FraudStreamJdbc]]. Unlike that sink, parquet keeps an
+    * explicit empty guard (A9): see the comment in the body.
     */
   def s01FraudStream(spark: SparkSession, inDir: String, outDir: String,
                      checkpoint: String): StreamingQuery =
@@ -58,9 +58,11 @@ object StreamOps {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // A9 empty-branch + A10 DDL hook would go here for a JDBC sink;
-        // parquet append is the local stand-in. Checkpointed batchId makes
-        // replays idempotent (an upgrade over the reference's re-insert).
+        // A9: Spark 4.1.2's parquet append of a batch whose partitions are
+        // all empty still writes one zero-row part file (task 0 keeps the
+        // schema), so without this probe every fraud-free file would leave
+        // an empty file behind. Checkpointed batchId makes replays
+        // idempotent (an upgrade over the reference's re-insert).
         if (!batch.isEmpty) {
           batch.write.mode("append").parquet(outDir)
         }
@@ -70,8 +72,11 @@ object StreamOps {
       .start()
 
   /** s01 JDBC variant — full reference fidelity end-to-end: file-per-
-    * trigger stream → A7+A8 filters → foreachBatch with A9 empty guard +
-    * A10 idempotent DDL + A12 batched JDBC append (FraudSink).
+    * trigger stream → A7+A8 filters → foreachBatch into
+    * [[graft.operators.FraudSink.appendBatch]], one Spark job per file:
+    * each non-empty partition opens its connection, runs the idempotent
+    * DDL (A10) and its batched insert (A12), so an empty batch opens no
+    * connection (A9) without a probe job.
     */
   def s01FraudStreamJdbc(spark: SparkSession, inDir: String,
                          url: String, table: String,

@@ -180,6 +180,71 @@ class JdbcSinkSpec extends SparkSpec {
     assert(spark.read.jdbc(url, table, props).count() === 2)
   }
 
+  private def tableExists(table: String): Boolean = {
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try conn.getMetaData.getTables(null, null, table.toUpperCase, null).next()
+    finally conn.close()
+  }
+
+  test("appendBatch writes a non-empty batch in exactly one Spark job") {
+    val table = "fraud_one_job"
+    val fraud = FraudPipeline(FraudPipeline.readCsv(spark, fixtureDir()))
+    val jobs = Explain.jobsOf(spark) {
+      FraudSink.appendBatch(url, table, props, FraudSink.derbyDdl(table))(fraud, 0L)
+    }
+    assert(jobs === 1, s"expected the probe folded into the write, got $jobs jobs")
+    assert(spark.read.jdbc(url, table, props).count() === 2)
+  }
+
+  test("appendBatch on an empty batch runs at most one job and creates no table (A9)") {
+    val table = "fraud_empty_one_job"
+    val empty = FraudPipeline(FraudPipeline.readCsv(spark, fixtureDir()))
+      .filter("amount < 0")
+    val jobs = Explain.jobsOf(spark) {
+      FraudSink.appendBatch(url, table, props, FraudSink.derbyDdl(table))(empty, 0L)
+    }
+    assert(jobs <= 1, s"got $jobs jobs")
+    assert(!tableExists(table), "an empty batch must not open the DB")
+  }
+
+  test("appendBatch from four non-empty partitions into a missing table lands every row once") {
+    // Four partitions each open a connection and race on the DDL; every
+    // partition but one must take table-exists as success.
+    val table = "fraud_concurrent_ddl"
+    val dir = Files.createTempDirectory("sink_wide")
+    val lines = (1 to 40).map(i => s"1,TRANSFER,$i.0,C$i,$i.0,0.0,M$i,0.0,0.0,1,0")
+    Files.writeString(dir.resolve("t.csv"), (header +: lines).mkString("", "\n", "\n"))
+    val batch = FraudPipeline(FraudPipeline.readCsv(spark, dir.toString))
+      .repartition(4).localCheckpoint()
+    val sizes = batch.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    assert(sizes.length === 4 && sizes.forall(_ > 0), s"partition sizes $sizes")
+    assert(!tableExists(table))
+    FraudSink.appendBatch(url, table, props, FraudSink.derbyDdl(table))(batch, 0L)
+    val landed = spark.read.jdbc(url, table, props)
+      .select("NAMEORIG").collect().map(_.getString(0)).sorted.toSeq
+    assert(landed === (1 to 40).map(i => s"C$i").sorted)
+  }
+
+  test("append stores SQL NULLs for a null string and a null double") {
+    val table = "fraud_nulls"
+    FraudSink.ensureTable(url, props, FraudSink.derbyDdl(table))
+    val row = org.apache.spark.sql.Row(
+      1, "TRANSFER", null, null, 181.0, 0.0, "M1", 0.0, 0.0, 1, 0)
+    val df = spark.createDataFrame(java.util.List.of(row), FraudPipeline.schema)
+    FraudSink.append(df, url, table, props)
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        s"SELECT amount, nameOrig, nameDest FROM $table")
+      assert(rs.next())
+      rs.getDouble(1)
+      assert(rs.wasNull(), "amount must be SQL NULL")
+      assert(rs.getString(2) === null)
+      assert(rs.getString(3) === "M1")
+      assert(!rs.next())
+    } finally conn.close()
+  }
+
   test("upsert sink: postgres and derby DDLs declare identical columns; ON CONFLICT targets the key") {
     import graft.operators.UpsertSink
     def cols(ddl: String): Seq[String] = {

@@ -266,6 +266,13 @@ class SimilaritySpec extends SparkSpec {
     assert(jobs <= N24JobsBefore * 2 / 3, s"n24 took $jobs jobs")
   }
 
+  test("n17 leaves no cached relation behind") {
+    SparkEntry.releaseMemos(spark)
+    assert(Similarity.n17IvfRebalance(spark, sf).collect().nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "n17 left cached plans behind after its result was materialized")
+  }
+
   test("n26 persisted-graph serving equals n24's in-session batched walk row-for-row") {
     val served = Similarity.n26GraphServe(spark, sf).collect()
       .map(_.toSeq.map(String.valueOf))
