@@ -1453,8 +1453,6 @@ object Extras {
     * rule leaves q172's equi-join plan untouched.
     */
   val q172Scd2Join: Q = (s, d) => {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("us").asc, col("event_id").asc)
     val dim = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("d_user"), col("event_id").as("version_id"),

@@ -477,12 +477,14 @@ object Similarity {
     * distance per point is a map-side fold over that broadcast + one
     * partial-agg groupBy; the argmax is `max_by` over a metadata-scale
     * table (never a global sort); the next seed's vector comes back via a
-    * broadcast point-lookup join. k rounds = k linear scans of the cached
-    * corpus — the textbook cost of farthest-first — with per-round
-    * localCheckpoint keeping the 4-row chosen table's lineage flat.
+    * broadcast point-lookup join. k rounds = k linear scans of the
+    * checkpointed corpus (materialised once with localCheckpoint, so no
+    * cached relation outlives the query) — the textbook cost of
+    * farthest-first — with per-round localCheckpoint keeping the 4-row
+    * chosen table's lineage flat.
     */
   val n16KcenterSeed: Q = (s, d) => {
-    val v = prepared(s, d).select("vec_id", "q", "nrm").cache()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
     var chosen = v.filter(col("vec_id") === 0)
       .select(lit(1).as("seed_rank"), col("vec_id"), col("q"), col("nrm"),
         lit(0L).as("dist2"))
@@ -802,7 +804,7 @@ object Similarity {
     * update is ONE partial-agg (cid, dim) groupBy whose shuffle carries
     * k·Dim partial rows per partition (n05's shape); the moved count is
     * an equi-join of two vec_id-keyed assignment tables. R rounds = R
-    * linear scans of the cached corpus — the textbook Lloyd cost.
+    * linear scans of the checkpointed corpus — the textbook Lloyd cost.
     */
   /** The unrolled Lloyd loop over a prepared (vec_id, q, nrm) corpus —
     * n27's body, factored to also return the RETRAINED centroids so the
@@ -863,7 +865,7 @@ object Similarity {
   }
 
   val n27KmeansIter: Q = (s, d) => {
-    val v = prepared(s, d).select("vec_id", "q", "nrm").cache()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
     kmeansLoop(v)._2.orderBy("round")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.FraudPipeline
+import graft.sources.ReadGuard
 
 /** Structured Streaming suite (SURVEY §2 Part B s01–s04).
   *
@@ -22,9 +23,12 @@ import graft.operators.FraudPipeline
   * them deterministically with `Trigger.AvailableNow` and assert
   * stream-equals-batch.
   *
-  * s32–s49 are the MAINTAINED-STORE family: five persisted index stores
-  * (dedup hash/band, media chunks, IVF assignment, graph ANN, PQ codes —
-  * plus the s43 cluster store composed on top) with the full lifecycle —
+  * s32–s51 are the MAINTAINED-STORE family: eight persisted index stores
+  * (dedup hash/band, media chunks, IVF assignment, graph ANN, PQ codes,
+  * the s43 cluster and s48 golden stores composed on top, and the s51
+  * prefix-filter index), all built on one spine — the family registry
+  * ([[storeFamily]]) plus one served read, one run write and one upsert
+  * skeleton — with the full lifecycle —
   * per-batch partition-overwrite upserts, BATCH-ORDERED tombstone
   * deletes with re-admission (s39: an upsert at a later batch supersedes
   * a delete), generalized compaction (s40), a replay fence enforcing the
@@ -298,67 +302,32 @@ object StreamOps {
     * read ([[s32HashIndex]]/[[s32BandIndex]] fold runs by key;
     * [[s32CompactStore]] is the same fold run offline).
     */
-  def s32UpsertIndexBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    // persist across the probe + two writes: foreachBatch hands over an
-    // UN-persisted frame, and the isEmpty probe, the hash write and the
-    // band write (a full minhash explode/16-min-agg pipeline) would each
-    // re-read the source otherwise — 3x the per-trigger input cost
-    // (buildPairs' cache discipline, applied at the sink).
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        val spark = cached.sparkSession
-        requireFreshBatch(spark, dir, batchId, Seq("hash56", "bands"))
-        // ALL (th, doc_id) rows, not the per-batch min survivor: exact
-        // deletability needs the non-collapsed run — electing min at
-        // write time would lose the runner-up a later delete of the
-        // survivor must promote. The serving view ([[s32HashIndex]])
-        // still folds to one min-doc_id row per hash; the run is one row
-        // per ingested doc either way (the band table's own asymptotics).
-        val hashes = cached
-          .withColumn("th", expr(graft.functions.TextHash.sparkHash56("text")))
-          .select("th", "doc_id").distinct()
-          .withColumn("batch_id", lit(batchId))
-        hashes.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/hash56")
-        val bands = graft.queries.Dedup.bandTableOf(cached)
-          .distinct()
-          .withColumn("batch_id", lit(batchId))
-        bands.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/bands")
-        spark.catalog.refreshByPath(s"$dir/hash56")
-        spark.catalog.refreshByPath(s"$dir/bands")
-      }
-    } finally cached.unpersist()
-  }
+  def s32UpsertIndexBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    upsertFold("hash", dir, batch, batchId) { cached =>
+      // ALL (th, doc_id) rows, not the per-batch min survivor: exact
+      // deletability needs the non-collapsed run — electing min at
+      // write time would lose the runner-up a later delete of the
+      // survivor must promote. The serving view ([[s32HashIndex]])
+      // still folds to one min-doc_id row per hash; the run is one row
+      // per ingested doc either way (the band table's own asymptotics).
+      writeRun(cached
+        .withColumn("th", expr(graft.functions.TextHash.sparkHash56("text")))
+        .select("th", "doc_id").distinct(), s"$dir/hash56", batchId)
+      writeRun(graft.queries.Dedup.bandTableOf(cached).distinct(),
+        s"$dir/bands", batchId)
+    }
 
   def s32IndexMaintain(docs: DataFrame, dir: String,
                        checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s32UpsertIndexBatch(dir) _)
-      .start()
+    maintain(docs, checkpoint)(s32UpsertIndexBatch(dir))
 
   /** The stored (th, doc_id) relation post-tombstones — the deletable
     * base [[s32HashIndex]] folds and [[s32CompactStore]] rewrites.
     */
-  private[graft] def s32HashRows(spark: org.apache.spark.sql.SparkSession,
-                                 dir0: String,
-                                 asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "hash56", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp, "th", "doc_id"),
-        spark, dir, asOf)
-        .select(col("th"), col("doc_id"), col("batch_id")),
-      spark, dir, "doc_id", asOf)
-      .select("th", "doc_id").distinct()
-  }
+  private[graft] def s32HashRows(spark: SparkSession, dir: String,
+                                 asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "hash56", asOf, Seq("doc_id"), "th", "doc_id")
+      .drop("batch_id").distinct()
 
   /** Compacted read of the s32-maintained hash index: tombstone-filter,
     * then fold the per-batch runs by key with the min-survivor policy —
@@ -366,30 +335,18 @@ object StreamOps {
     * Equals the batch-built index over the live corpus — pinned in
     * StreamingSpec for both the insert-only and the post-delete store.
     */
-  def s32HashIndex(spark: org.apache.spark.sql.SparkSession,
-                   dir: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s32HashIndex(spark: SparkSession,
+                   dir: String, asOf: Option[Long] = None): DataFrame =
     s32HashRows(spark, dir, asOf).groupBy("th").agg(min("doc_id").as("doc_id"))
-  }
 
   /** Compacted read of the s32-maintained band index (distinct folds a
     * replayed doc's identical band rows across runs; tombstoned docs'
     * band rows are filtered out).
     */
-  def s32BandIndex(spark: org.apache.spark.sql.SparkSession,
-                   dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "bands", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "doc_id", "band_key"),
-        spark, dir, asOf)
-        .select(col("doc_id"), col("band_key"), col("batch_id")),
-      spark, dir, "doc_id", asOf)
-      .select("doc_id", "band_key").distinct()
-  }
+  def s32BandIndex(spark: SparkSession,
+                   dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "bands", asOf, Seq("doc_id"), "doc_id", "band_key")
+      .drop("batch_id").distinct()
 
   /** s34: streaming maintenance of the content-addressed media CHUNK
     * store — s32's sibling for the m03/m05/m07/m08 chunk tables (those
@@ -412,69 +369,41 @@ object StreamOps {
     * StreamingSpec pins stream-built == batch-built over the same
     * replay, plus replay idempotence.
     */
-  def s34UpsertChunkBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        val spark = cached.sparkSession
-        requireFreshBatch(spark, dir, batchId, Seq("chunks"))
-        // ALL (h, media_id, nb) reference rows, not the per-batch min
-        // owner: exact deletability needs every referrer — deleting the
-        // elected owner must promote the next media id, and a chunk whose
-        // referrers are ALL deleted must vanish (GC), neither of which a
-        // collapsed run can answer. The serving view ([[s34ChunkStore]])
-        // still folds to one min-owner row per hash; the run is one row
-        // per (chunk, referrer) — the CAS reference table's own size.
-        graft.operators.Multimodal.chunkTableOf(cached)
-          .select("h", "media_id", "nb").distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/chunks")
-        spark.catalog.refreshByPath(s"$dir/chunks")
-      }
-    } finally cached.unpersist()
-  }
+  def s34UpsertChunkBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    upsertFold("chunk", dir, batch, batchId) { cached =>
+      // ALL (h, media_id, nb) reference rows, not the per-batch min
+      // owner: exact deletability needs every referrer — deleting the
+      // elected owner must promote the next media id, and a chunk whose
+      // referrers are ALL deleted must vanish (GC), neither of which a
+      // collapsed run can answer. The serving view ([[s34ChunkStore]])
+      // still folds to one min-owner row per hash; the run is one row
+      // per (chunk, referrer) — the CAS reference table's own size.
+      writeRun(graft.operators.Multimodal.chunkTableOf(cached)
+        .select("h", "media_id", "nb").distinct(), s"$dir/chunks", batchId)
+    }
 
   def s34ChunkMaintain(media: DataFrame, dir: String,
                        checkpoint: String): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s34UpsertChunkBatch(dir) _)
-      .start()
+    maintain(media, checkpoint)(s34UpsertChunkBatch(dir))
 
   /** The stored (h, media_id, nb) reference relation post-tombstones —
     * the deletable base [[s34ChunkStore]] folds and [[s34CompactStore]]
     * rewrites.
     */
-  private[graft] def s34ChunkRows(spark: org.apache.spark.sql.SparkSession,
-                                  dir0: String,
-                                  asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "chunks", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "h", "media_id", "nb"),
-        spark, dir, asOf)
-        .select(col("h"), col("media_id"), col("nb"), col("batch_id")),
-      spark, dir, "media_id", asOf)
-      .select("h", "media_id", "nb").distinct()
-  }
+  private[graft] def s34ChunkRows(spark: SparkSession, dir: String,
+                                  asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "chunks", asOf, Seq("media_id"),
+      "h", "media_id", "nb").drop("batch_id").distinct()
 
   /** Compacted read of the s34-maintained chunk store: tombstone-filter
     * the reference rows, then fold by content hash with the min-owner
     * policy — deleting an owner re-elects the next referrer, and a chunk
     * with no live referrer disappears (the CAS garbage-collection rule).
     */
-  def s34ChunkStore(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s34ChunkStore(spark: SparkSession,
+                    dir: String, asOf: Option[Long] = None): DataFrame =
     s34ChunkRows(spark, dir, asOf)
       .groupBy("h").agg(min("media_id").as("owner"), min("nb").as("nb"))
-  }
 
   /** s35: streaming maintenance of the IVF ASSIGNMENT table — the
     * vector-ingest side of the n-family index (n25 persists it, n02/n12/
@@ -490,57 +419,115 @@ object StreamOps {
     * `ivfAssigned` over the same replay + replay idempotence.
     */
   def s35UpsertIvfBatch(cents: DataFrame, dir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        val spark = cached.sparkSession
-        requireFreshBatch(spark, dir, batchId, Seq("assigned"))
-        graft.queries.Similarity
-          .assignToCentroids(
-            graft.queries.Similarity.prepareVectors(cached), cents)
-          .select("vec_id", "cid", "ccos")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/assigned")
-        spark.catalog.refreshByPath(s"$dir/assigned")
-      }
-    } finally cached.unpersist()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    upsertFold("assign", dir, batch, batchId) { cached =>
+      writeRun(graft.queries.Similarity
+        .assignToCentroids(graft.queries.Similarity.prepareVectors(cached), cents)
+        .select("vec_id", "cid", "ccos"), s"$dir/assigned", batchId)
+    }
 
   def s35IvfMaintain(vectors: DataFrame, cents: DataFrame, dir: String,
                      checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s35UpsertIvfBatch(cents, dir) _)
-      .start()
+    maintain(vectors, checkpoint)(s35UpsertIvfBatch(cents, dir))
 
   /** Compacted read of the s35-maintained assignment: each vector's row
     * is a pure function of (vector, codebook), so identical rows from a
     * replayed batch fold under distinct.
     */
-  def s35Assignment(spark: org.apache.spark.sql.SparkSession,
-                    dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "assigned", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "vec_id", "cid", "ccos"),
-        spark, dir, asOf)
-        .select(col("vec_id"), col("cid"), col("ccos"), col("batch_id")),
-      spark, dir, "vec_id", asOf)
-      .select("vec_id", "cid", "ccos").distinct()
-  }
+  def s35Assignment(spark: SparkSession,
+                    dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "assigned", asOf, Seq("vec_id"),
+      "vec_id", "cid", "ccos").drop("batch_id").distinct()
 
   private def pathExists(spark: org.apache.spark.sql.SparkSession,
                          path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
+
+  // ===== the maintained-store spine: one served read, one latest-per-key
+  // ===== fold, one run write, one upsert skeleton and one maintain
+  // ===== wrapper, shared by every store family in [[storeFamily]].
+
+  /** The served-read spine every store reader starts from: resolve the
+    * as-of generation ([[resolveAsOfDir]]), read `table`'s runs through
+    * the flip pointer ([[tablePath]]), refuse a schema-drifted table,
+    * bound the runs to `asOf` ([[asOfRuns]]), keep `cols` plus a long
+    * `batch_id`, then apply the batch-ordered tombstone mask
+    * ([[maskDeleted]]) on the id columns of `maskBy` — none for the
+    * label-keyed golden table and the immutable token order, both sides
+    * for the s51 pair table. Each reader applies its own fold on top
+    * (distinct, dropDuplicates, min, [[latestPerKey]]).
+    */
+  private def servedRuns(spark: SparkSession, dir0: String, table: String,
+      asOf: Option[Long], maskBy: Seq[String], cols: String*): DataFrame = {
+    val dir = resolveAsOfDir(spark, dir0, asOf)
+    val tp = tablePath(spark, dir, table, asOf)
+    val runs = asOfRuns(
+        ReadGuard.requireColumns(
+          ReadGuard.readRuns(spark, tp), tp, cols :+ "batch_id": _*),
+        spark, dir, asOf)
+      .select(cols.map(col) :+ col("batch_id").cast("long").as("batch_id"): _*)
+    maskDeleted(runs, spark, dir, maskBy, asOf)
+  }
+
+  /** True when a store table has no directory yet (a store that never
+    * wrote it): its reader serves an empty frame instead of failing.
+    */
+  private def absent(spark: SparkSession, dir: String, table: String,
+                     asOf: Option[Long]): Boolean =
+    !pathExists(spark,
+      tablePath(spark, resolveAsOfDir(spark, dir, asOf), table, asOf))
+
+  /** Latest-per-key fold: each key keeps the rows of its highest
+    * `batch_id` run — the "newest run wins" rule of the edge, label,
+    * attribute and golden tables (a later batch rewrites a key's whole
+    * state). Keeps `df`'s columns, `batch_id` included.
+    */
+  private def latestPerKey(df: DataFrame, key: String): DataFrame = {
+    val latest = df.groupBy(key).agg(max("batch_id").as("__mb"))
+      .withColumnRenamed(key, "__key")
+    df.join(latest, df(key) === col("__key") && df("batch_id") === col("__mb"))
+      .select(df.columns.map(df(_)).toSeq: _*)
+  }
+
+  /** The run-write spine: `rows` become the `batch_id=batchId` run of the
+    * table at `path` under dynamic partition overwrite — a redelivered
+    * batch rewrites its own run instead of appending a duplicate (the LSM
+    * idempotence model every store shares) — then plans cached over the
+    * table are refreshed.
+    */
+  private def writeRun(rows: DataFrame, path: String, batchId: Long): Unit = {
+    rows.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(path)
+    rows.sparkSession.catalog.refreshByPath(path)
+  }
+
+  /** The upsert skeleton every store's batch fold runs in: persist the
+    * foreachBatch frame (it arrives UN-persisted, and the empty probe plus
+    * each table write would re-read the source otherwise), skip an empty
+    * batch, fence it against the family's tables ([[requireFreshBatch]]),
+    * run `body`, unpersist.
+    */
+  private def upsertFold(family: String, dir: String, batch: DataFrame,
+                         batchId: Long)(body: DataFrame => Unit): Unit = {
+    val cached = batch.persist()
+    try {
+      if (!cached.isEmpty) {
+        requireFreshBatch(cached.sparkSession, dir, batchId, tableNames(family))
+        body(cached)
+      }
+    } finally cached.unpersist()
+  }
+
+  /** The maintain wrapper: run a store's batch fold over a stream. */
+  private def maintain(input: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(fold)
+      .start()
 
   // ===== maintained-store lifecycle plumbing (s39 deletes, s40 compaction,
   // ===== s41 replay fencing) — shared by the s32/s34/s35/s36/s38 stores.
@@ -839,25 +826,31 @@ object StreamOps {
           s"$batchId would resurrect a folded run — restart the maintainer " +
           "from a checkpoint past the compaction boundary")
     }
-    (tables :+ "deleted")
-      .flatMap(t => maxBatchIn(spark, s"$dir/$t"))
-      .reduceOption(_ max _)
-      .foreach { m =>
-        require(batchId >= m,
-          s"store $dir already holds batch $m; batch ids must form one " +
-            s"monotone sequence across upserts and deletes (got $batchId — " +
-            "foreachBatch redelivers only the LAST batch)")
-        if (batchId == m) {
-          val hadTombstone =
-            pathExists(spark, s"${deletedPath(dir)}/batch_id=$batchId")
-          require(hadTombstone == isDelete,
-            s"store $dir: batch $batchId was originally " +
-              s"${if (hadTombstone) "a delete" else "an upsert"} — a " +
-              s"${if (isDelete) "delete" else "an upsert"} may not reuse " +
-              "its id (only an identical redelivery may repeat a batch id)")
-        }
+    maxRun(spark, dir, tables).foreach { m =>
+      require(batchId >= m,
+        s"store $dir already holds batch $m; batch ids must form one " +
+          s"monotone sequence across upserts and deletes (got $batchId — " +
+          "foreachBatch redelivers only the LAST batch)")
+      if (batchId == m) {
+        val hadTombstone =
+          pathExists(spark, s"${deletedPath(dir)}/batch_id=$batchId")
+        require(hadTombstone == isDelete,
+          s"store $dir: batch $batchId was originally " +
+            s"${if (hadTombstone) "a delete" else "an upsert"} — a " +
+            s"${if (isDelete) "delete" else "an upsert"} may not reuse " +
+            "its id (only an identical redelivery may repeat a batch id)")
       }
+    }
   }
+
+  /** Highest run across a store's `tables` AND its tombstones — the
+    * store's batch high-water mark (a batch can write one table and not
+    * another, so any single table understates it).
+    */
+  private def maxRun(spark: SparkSession, dir: String,
+                     tables: Seq[String]): Option[Long] =
+    (tables :+ "deleted").flatMap(t => maxBatchIn(spark, s"$dir/$t"))
+      .reduceOption(_ max _)
 
   /** s39: the tombstone table every store shares — per-batch `batch_id=N`
     * runs of deleted ids under `dir/deleted` (the same dynamic-partition-
@@ -882,16 +875,10 @@ object StreamOps {
   private[graft] def tombstoneBatches(spark: org.apache.spark.sql.SparkSession,
                                       dir: String,
                                       asOf: Option[Long] = None): DataFrame = {
-    val tp = tablePath(spark, dir, "deleted", asOf)
-    if (!pathExists(spark, tp))
+    if (absent(spark, dir, "deleted", asOf))
       spark.range(0).select(col("id"), col("id").as("del_batch"))
-    else
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp, "id"),
-        spark, dir, asOf)
-        .select(col("id"), col("batch_id").cast("long").as("batch_id"))
-        .groupBy("id").agg(max("batch_id").as("del_batch"))
+    else servedRuns(spark, dir, "deleted", asOf, Nil, "id")
+      .groupBy("id").agg(max("batch_id").as("del_batch"))
   }
 
   /** Distinct ever-tombstoned ids (the raw gauge s47 reports; NOT the
@@ -903,25 +890,29 @@ object StreamOps {
     tombstoneBatches(spark, dir, asOf).select("id")
 
   /** Serve-side tombstone filter, batch-ordered: keep a data row iff its
-    * `batch_id` is STRICTLY past the id's latest tombstone (or the id was
-    * never tombstoned). `df` must still carry `batch_id` — every serve
-    * fold masks BEFORE folding, so a re-admitted id serves only its
-    * post-re-admission rows (old content is masked even when the
-    * re-ingested text/embedding differs). The tombstone side is
-    * delete-traffic-sized, so the join broadcasts.
+    * `batch_id` is STRICTLY past the latest tombstone of the id in EVERY
+    * column of `idCols` (or that id was never tombstoned) — one column
+    * for an entity table, both sides for a pair table. `df` must still
+    * carry `batch_id` — every serve fold masks BEFORE folding, so a
+    * re-admitted id serves only its post-re-admission rows (old content
+    * is masked even when the re-ingested text/embedding differs). The
+    * tombstones are read once and, being delete-traffic-sized, broadcast
+    * to each join.
     */
-  private def maskDeleted(df: DataFrame, spark: org.apache.spark.sql.SparkSession,
-                          dir: String, idCol: String,
-                          asOf: Option[Long] = None): DataFrame =
-    if (!pathExists(spark, tablePath(spark, dir, "deleted", asOf))) df
-    else df.join(
-      org.apache.spark.sql.functions.broadcast(
-        tombstoneBatches(spark, dir, asOf)
-          .select(col("id").as(idCol), col("del_batch").as("__del_batch"))),
-      Seq(idCol), "left")
-      .filter(col("__del_batch").isNull ||
-        col("batch_id").cast("long") > col("__del_batch"))
-      .drop("__del_batch")
+  private def maskDeleted(df: DataFrame, spark: SparkSession, dir: String,
+                          idCols: Seq[String], asOf: Option[Long]): DataFrame =
+    if (idCols.isEmpty ||
+        !pathExists(spark, tablePath(spark, dir, "deleted", asOf))) df
+    else {
+      val tomb = tombstoneBatches(spark, dir, asOf)
+      idCols.foldLeft(df) { (masked, idCol) =>
+        masked.join(broadcast(tomb.select(col("id").as(idCol),
+            col("del_batch").as("__del_batch"))), Seq(idCol), "left")
+          .filter(col("__del_batch").isNull ||
+            col("batch_id").cast("long") > col("__del_batch"))
+          .select(df.columns.map(col).toSeq: _*)
+      }
+    }
 
   /** The currently-DEAD ids of a store: tombstoned with no upsert after
     * the latest tombstone — i.e. ids the serve-side mask hides entirely.
@@ -937,53 +928,46 @@ object StreamOps {
                              idCol: String,
                              asOf: Option[Long] = None): DataFrame = {
     val tomb = tombstoneBatches(spark, dir, asOf)
-    val presencePath = tablePath(spark, dir, presenceTable, asOf)
-    if (!pathExists(spark, presencePath)) tomb.select("id")
+    if (absent(spark, dir, presenceTable, asOf)) tomb.select("id")
     else {
-      val up = asOfRuns(
-          graft.sources.ReadGuard.readRuns(spark, presencePath)
-            .select(col(idCol).as("id"),
-              col("batch_id").cast("long").as("batch_id")),
-          spark, dir, asOf)
-        .groupBy("id").agg(max("batch_id").as("up_batch"))
+      val up = servedRuns(spark, dir, presenceTable, asOf, Nil, idCol)
+        .groupBy(col(idCol).as("id")).agg(max("batch_id").as("up_batch"))
       tomb.join(up, Seq("id"), "left")
         .filter(col("up_batch").isNull || col("up_batch") <= col("del_batch"))
         .select("id")
     }
   }
 
-  /** The shared simple-delete fold (s32/s34/s35/s38 — stores whose rows
-    * are keyed by one id column): fence the batch, then write its
-    * tombstone run. The serve-side reads do the rest (anti-join); the
-    * s36 graph store additionally re-ranks affected srcs — see
-    * [[s36DeleteBatch]].
+  /** The shared delete fold every store starts from: fence the batch
+    * against the family's tables, then write its tombstone run; true when
+    * the batch named any id. The serve-side reads do the rest (the batch
+    * mask) for s32/s34/s35/s38/s51; the graph and cluster stores then
+    * re-derive what the deleted ids touched (see [[s36DeleteBatch]],
+    * [[s43DeleteClusterBatch]]).
     */
-  private def tombstoneBatch(dir: String, tables: Seq[String])(
-      deletes: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = deletes.sparkSession
+  private def tombstoneBatch(family: String, dir: String)(
+      deletes: DataFrame, batchId: Long): Boolean = {
     val ids = deletes.select(col(deletes.columns.head).as("id")).distinct()
-    if (!ids.isEmpty) {
-      requireFreshBatch(spark, dir, batchId, tables, isDelete = true)
-      ids.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(deletedPath(dir))
-      spark.catalog.refreshByPath(deletedPath(dir))
+    val any = !ids.isEmpty
+    if (any) {
+      requireFreshBatch(deletes.sparkSession, dir, batchId, tableNames(family),
+        isDelete = true)
+      writeRun(ids, deletedPath(dir), batchId)
     }
+    any
   }
 
   def s32DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit =
-    tombstoneBatch(dir, Seq("hash56", "bands"))(deletes, batchId)
+    tombstoneBatch("hash", dir)(deletes, batchId): Unit
 
   def s34DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit =
-    tombstoneBatch(dir, Seq("chunks"))(deletes, batchId)
+    tombstoneBatch("chunk", dir)(deletes, batchId): Unit
 
   def s35DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit =
-    tombstoneBatch(dir, Seq("assigned"))(deletes, batchId)
+    tombstoneBatch("assign", dir)(deletes, batchId): Unit
 
   def s38DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit =
-    tombstoneBatch(dir, Seq("codes"))(deletes, batchId)
+    tombstoneBatch("code", dir)(deletes, batchId): Unit
 
   /** s40: the generalized store compaction — s37's fold-materialize-
     * rewrite-restamp shape factored into ONE seam (r11 verdict item 2)
@@ -1037,15 +1021,12 @@ object StreamOps {
       primaryIdCol: String,
       retain: Int = DefaultRetainedGenerations,
       onStep: String => Unit = _ => ()): Unit = {
-    import org.apache.spark.sql.functions._
     // resume any in-flight flip FIRST: a previous run that died between
     // publishing the pointer and finishing the swap left a complete,
     // consistently-served staging generation — completing it is the only
     // admissible next step (and is idempotent).
     finishCompactionFlip(spark, dir, onStep)
-    val all = tables.map(_._1) :+ "deleted"
-    all.flatMap(t => maxBatchIn(spark, s"$dir/$t"))
-      .reduceOption(_ max _)
+    maxRun(spark, dir, tables.map(_._1))
       // RE-ENTRANCY guard: a compaction that would fold through the batch
       // the stamp already records has nothing to do — proceeding would
       // re-archive into the EXISTING gen_<stamp> (nesting the table dirs
@@ -1055,6 +1036,8 @@ object StreamOps {
       // or an operator retry, must be a no-op.
       .filter(maxBatch => !readCompactionStamp(spark, dir).contains(maxBatch))
       .foreach { maxBatch =>
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sessionState.newHadoopConf())
         // crashed-compaction detector — with the staged flip this state is
         // no longer reachable from compactStore itself (a crash leaves a
         // resumable pointer, handled above), but a mixed-generation
@@ -1066,76 +1049,71 @@ object StreamOps {
         // forever).
         retainedGenerations(spark, dir).headOption.foreach { g =>
           if (!readCompactionStamp(spark, dir).exists(_ >= g)) {
-            val fs0 = new org.apache.hadoop.fs.Path(dir)
-              .getFileSystem(spark.sessionState.newHadoopConf())
             val gp = new org.apache.hadoop.fs.Path(s"$dir/_history/gen_$g")
-            val restored = fs0.listStatus(gp).forall(!_.isDirectory)
+            val restored = fs.listStatus(gp).forall(!_.isDirectory)
             require(restored,
               s"store $dir holds generation gen_$g newer than its stamp — " +
                 "a compaction crashed mid-archive (or a restore mixed " +
                 s"generations); restore the live tables from gen_$g (rename " +
                 "them back — the emptied generation is then pruned " +
                 "automatically) before compacting again")
-            fs0.delete(gp, true)
+            fs.delete(gp, true)
           }
         }
-        val conf = spark.sessionState.newHadoopConf()
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
         // stale staging from a run that died BEFORE publishing its pointer
         // is unreferenced garbage — remove it and start fresh
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_staging"), true)
-        val withDeleted = tables ++
-          (if (pathExists(spark, deletedPath(dir)))
-             Seq("deleted" -> (() =>
-               deadIds(spark, dir, tables.head._1, primaryIdCol)))
-           else Nil)
         // 1. fold EVERY table and WRITE the folded bases into the staging
         // generation — the live dirs are untouched, so concurrent readers
         // (and the folds themselves, which read each other's raw runs)
-        // keep serving the old generation. Empty folds split three ways:
-        // a spent tombstone table (every tombstoned id re-admitted)
-        // carries no information and is DROPPED (readers treat a missing
-        // `deleted` as mask-free — correct, the data folds already
-        // dropped the pre-delete rows); a fold-only table (golden) is
-        // DROPPED too — its readers treat absence as empty, and
-        // restamping its label-keyed raw rows would tie stale elections
-        // with the RETIRE rows that overrode them (r13 ADVICE, the
-        // takedown-leakage bug); any other all-masked DATA table must
-        // stay readable, so its RAW rows restamp to the base id — they
-        // stay masked, because data at the stamp never outranks a
-        // tombstone at the stamp.
-        var rewriteSet = Set.empty[String]
-        var dropSet = Set.empty[String]
-        withDeleted.foreach { case (t, fold) =>
-          if (pathExists(spark, s"$dir/$t")) {
-            val served = fold().withColumn("batch_id", lit(maxBatch))
-              .localCheckpoint()
-            val base =
-              if (!served.isEmpty) Some(served)
-              else if (t == "deleted" || FoldOnlyTables(t)) None
-              else Some(
-                graft.sources.ReadGuard.readRuns(spark, s"$dir/$t")
-                  .drop("batch_id").withColumn("batch_id", lit(maxBatch))
-                  .localCheckpoint())
-            base match {
-              case Some(b) if !b.isEmpty =>
-                b.write.mode("overwrite").partitionBy("batch_id")
-                  .parquet(s"${stagingDir(dir, maxBatch)}/$t")
-                rewriteSet += t
-              case _ => dropSet += t
-            }
-          }
-        }
+        // keep serving the old generation; a table whose fold wrote no
+        // base is dropped ([[writeFoldedBases]]).
+        val rewrite = writeFoldedBases(spark, dir, tables, primaryIdCol,
+          maxBatch, stagingDir(dir, maxBatch), "overwrite")
+        val present = (tables.map(_._1) :+ "deleted")
+          .filter(t => pathExists(spark, s"$dir/$t")).toSet
         // 2. publish the pointer (one atomic rename — readers serve the
         // new generation from this instant on), then complete the swap:
         // archive the old runs, install the staged bases, stamp, unlink.
         onStep("staged")
         publishFlip(spark, dir, FlipState(maxBatch, retain,
-          readCompactionStamp(spark, dir), rewriteSet, dropSet))
+          readCompactionStamp(spark, dir), rewrite, present -- rewrite))
         onStep("flipped")
         finishCompactionFlip(spark, dir, onStep)
       }
   }
+
+  /** Fold every table of a store, plus its currently-dead ids as the
+    * tombstones, to one base run stamped `base` and write it under `dst`
+    * with `mode` — the step compaction (into its staging generation) and
+    * export (into the clone) share. Returns the tables written. Empty
+    * folds split three ways: a spent tombstone table (every tombstoned id
+    * re-admitted) carries no information and writes nothing (readers
+    * treat a missing `deleted` as mask-free — correct, the data folds
+    * already dropped the pre-delete rows); a fold-only table
+    * ([[FoldOnlyTables]]) writes nothing either — its readers treat
+    * absence as empty, and restamping its raw rows would tie stale
+    * elections with the RETIRE rows that overrode them (r13 ADVICE, the
+    * takedown-leakage bug); any other all-masked DATA table must stay
+    * readable, so its RAW rows restamp to the base id — they stay masked,
+    * because data at the stamp never outranks a tombstone at the stamp.
+    */
+  private def writeFoldedBases(spark: SparkSession, dir: String,
+      tables: Seq[(String, () => DataFrame)], idCol: String, base: Long,
+      dst: String, mode: String): Set[String] =
+    (tables :+ ("deleted" -> (() => deadIds(spark, dir, tables.head._1, idCol))))
+      .filter { case (t, _) => pathExists(spark, s"$dir/$t") }
+      .flatMap { case (t, fold) =>
+        val served = fold().withColumn("batch_id", lit(base)).localCheckpoint()
+        val rows =
+          if (!served.isEmpty) Some(served)
+          else if (t == "deleted" || FoldOnlyTables(t)) None
+          else Some(ReadGuard.readRuns(spark, s"$dir/$t")
+              .drop("batch_id").withColumn("batch_id", lit(base))
+              .localCheckpoint()).filterNot(_.isEmpty)
+        rows.foreach(_.write.mode(mode).partitionBy("batch_id").parquet(s"$dst/$t"))
+        rows.map(_ => t)
+      }.toSet
 
   /** Retained pre-compaction generations of a store, newest first (their
     * names carry the batch id each compaction folded through).
@@ -1199,26 +1177,17 @@ object StreamOps {
     * one base, serving view unchanged — StreamingSpec pins
     * upsert→delete→compact→upsert == rebuild per store.
     */
-  def s32CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "hash56" -> (() => s32HashRows(spark, dir)),
-      "bands"  -> (() => s32BandIndex(spark, dir))), "doc_id")
+  def s32CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "hash")
 
-  def s34CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "chunks" -> (() => s34ChunkRows(spark, dir))), "media_id")
+  def s34CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "chunk")
 
-  def s35CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "assigned" -> (() => s35Assignment(spark, dir))), "vec_id")
+  def s35CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "assign")
 
-  def s38CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "codes" -> (() => s38Codes(spark, dir))), "vec_id")
+  def s38CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "code")
 
   /** s36: incremental MAINTENANCE of the persisted graph-ANN index — the
     * one index family that (until this job) could only be rebuilt
@@ -1261,121 +1230,79 @@ object StreamOps {
     * serving walk's hop joins both prune.
     */
   def s36UpsertGraphBatch(cents: DataFrame, dir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val Sim = graft.queries.Similarity
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        val spark = cached.sparkSession
-        requireFreshBatch(spark, dir, batchId, Seq("vectors", "cells", "edges"))
-        val prep = Sim.prepareVectors(cached).select("vec_id", "q", "nrm")
-          .localCheckpoint()
-        // Append-only fence over the LIVE view (r11 advice item 1, made
-        // batch-tombstone-aware in r13): the delta fold is exact for ids
-        // not currently served — re-ingesting a LIVE id with a different
-        // embedding would leave the vectors dedup picking an arbitrary
-        // row, the cell union keeping both cell sets, and other srcs'
-        // stored lists carrying stale cos edges. Loud-fail instead of
-        // silently diverging from the rebuild; the batch's OWN prior run
-        // is exempt (foreachBatch redelivery rewrites it wholesale), and
-        // a TOMBSTONED id is exempt too — delete-then-upsert is the
-        // sanctioned way to change an embedding (the batch mask hides
-        // every pre-delete row, so the fold sees the id as new).
-        if (pathExists(spark, s"$dir/vectors")) {
-          val prior = maskDeleted(
-              graft.sources.ReadGuard.readRuns(spark, s"$dir/vectors")
-                .select(col("vec_id"),
-                  col("batch_id").cast("long").as("batch_id")),
-              spark, dir, "vec_id")
-            .filter(col("batch_id") =!= batchId)
-            .select("vec_id")
-          val dup = prep.select("vec_id")
-            .join(prior, Seq("vec_id"), "left_semi").take(1)
-          require(dup.isEmpty,
-            s"s36 store $dir is append-only: batch $batchId re-ingests " +
-              s"live vec_id ${dup.headOption.map(_.get(0)).orNull} — " +
-              "stored embeddings are immutable (delete the id first, then " +
-              "re-ingest at a later batch, or use a fresh id)")
-        }
-        prep.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/vectors")
-        val cellsNew = Sim.topCells(prep,
-            cents.select(col("cid"), col("cq"), col("cnrm")))
-          .select("vec_id", "cid").localCheckpoint()
-        cellsNew.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/cells")
-        // read the stores back AFTER the batch's own rows landed: the
-        // candidate generation below must see new-new pairs too
-        spark.catalog.refreshByPath(s"$dir/vectors")
-        spark.catalog.refreshByPath(s"$dir/cells")
-        val allCells = s36Cells(spark, dir)
-        val allVecs = s36Vectors(spark, dir)
-        // IVF-blocked candidate pairs touching this batch, BOTH directions
-        // (narrow id rows only — the build's d15 discipline)
-        val fwd = allCells.select(col("vec_id").as("src"), col("cid"))
-          .join(cellsNew.select(col("vec_id").as("dst"), col("cid")), Seq("cid"))
-          .select("src", "dst")
-        val pairs = fwd
-          .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-          .filter(col("src") =!= col("dst")).distinct()
-        val newScored = Sim.scoreDirectedPairs(pairs, allVecs)
-        // merge each affected src's stored list with its new candidates
-        // and re-rank: static scores make this exactly the full top-k
-        val affectedOld = s36DirectedEdges(spark, dir)
-          .join(newScored.select("src").distinct(), Seq("src"), "left_semi")
-        Sim.topKEdges(affectedOld.unionByName(newScored).distinct())
-          .select("src", "dst", "cos")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/edges")
-        spark.catalog.refreshByPath(s"$dir/edges")
+      batch: DataFrame, batchId: Long): Unit =
+    upsertFold("graph", dir, batch, batchId) { cached =>
+      val Sim = graft.queries.Similarity
+      val spark = cached.sparkSession
+      val prep = Sim.prepareVectors(cached).select("vec_id", "q", "nrm")
+        .localCheckpoint()
+      // Append-only fence over the LIVE view (r11 advice item 1, made
+      // batch-tombstone-aware in r13): the delta fold is exact for ids
+      // not currently served — re-ingesting a LIVE id with a different
+      // embedding would leave the vectors dedup picking an arbitrary
+      // row, the cell union keeping both cell sets, and other srcs'
+      // stored lists carrying stale cos edges. Loud-fail instead of
+      // silently diverging from the rebuild; the batch's OWN prior run
+      // is exempt (foreachBatch redelivery rewrites it wholesale), and
+      // a TOMBSTONED id is exempt too — delete-then-upsert is the
+      // sanctioned way to change an embedding (the batch mask hides
+      // every pre-delete row, so the fold sees the id as new).
+      if (pathExists(spark, s"$dir/vectors")) {
+        val prior = servedRuns(spark, dir, "vectors", None, Seq("vec_id"), "vec_id")
+          .filter(col("batch_id") =!= batchId)
+          .select("vec_id")
+        val dup = prep.select("vec_id")
+          .join(prior, Seq("vec_id"), "left_semi").take(1)
+        require(dup.isEmpty,
+          s"s36 store $dir is append-only: batch $batchId re-ingests " +
+            s"live vec_id ${dup.headOption.map(_.get(0)).orNull} — " +
+            "stored embeddings are immutable (delete the id first, then " +
+            "re-ingest at a later batch, or use a fresh id)")
       }
-    } finally cached.unpersist()
-  }
+      writeRun(prep, s"$dir/vectors", batchId)
+      val cellsNew = Sim.topCells(prep,
+          cents.select(col("cid"), col("cq"), col("cnrm")))
+        .select("vec_id", "cid").localCheckpoint()
+      // the stores are read back AFTER the batch's own rows landed: the
+      // candidate generation below must see new-new pairs too
+      writeRun(cellsNew, s"$dir/cells", batchId)
+      val allCells = s36Cells(spark, dir)
+      val allVecs = s36Vectors(spark, dir)
+      // IVF-blocked candidate pairs touching this batch, BOTH directions
+      // (narrow id rows only — the build's d15 discipline)
+      val fwd = allCells.select(col("vec_id").as("src"), col("cid"))
+        .join(cellsNew.select(col("vec_id").as("dst"), col("cid")), Seq("cid"))
+        .select("src", "dst")
+      val pairs = fwd
+        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")).distinct()
+      val newScored = Sim.scoreDirectedPairs(pairs, allVecs)
+      // merge each affected src's stored list with its new candidates
+      // and re-rank: static scores make this exactly the full top-k
+      val affectedOld = s36DirectedEdges(spark, dir)
+        .join(newScored.select("src").distinct(), Seq("src"), "left_semi")
+      writeRun(Sim.topKEdges(affectedOld.unionByName(newScored).distinct())
+        .select("src", "dst", "cos"), s"$dir/edges", batchId)
+    }
 
   def s36GraphMaintain(vectors: DataFrame, cents: DataFrame, dir: String,
                        checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s36UpsertGraphBatch(cents, dir) _)
-      .start()
+    maintain(vectors, checkpoint)(s36UpsertGraphBatch(cents, dir))
 
   /** Compacted reads of the s36 store. Vectors/cells rows are pure
     * functions of (vector, codebook) so replayed batches fold under
     * dedup; edges compact by LATEST batch per src — a later batch that
     * touches a src rewrites its complete list.
     */
-  def s36Vectors(spark: org.apache.spark.sql.SparkSession,
-                 dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "vectors", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "vec_id", "q", "nrm"),
-        spark, dir, asOf)
-        .select(col("vec_id"), col("q"), col("nrm"), col("batch_id")),
-      spark, dir, "vec_id", asOf)
-      .select("vec_id", "q", "nrm").dropDuplicates("vec_id")
-  }
+  def s36Vectors(spark: SparkSession,
+                 dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "vectors", asOf, Seq("vec_id"), "vec_id", "q", "nrm")
+      .drop("batch_id").dropDuplicates("vec_id")
 
-  def s36Cells(spark: org.apache.spark.sql.SparkSession,
-               dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "cells", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp, "vec_id", "cid"),
-        spark, dir, asOf)
-        .select(col("vec_id"), col("cid"), col("batch_id")),
-      spark, dir, "vec_id", asOf)
-      .select("vec_id", "cid").distinct()
-  }
+  def s36Cells(spark: SparkSession,
+               dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "cells", asOf, Seq("vec_id"), "vec_id", "cid")
+      .drop("batch_id").distinct()
 
   /** Latest-per-src fold of the edge runs with the SRC-side batch mask
     * applied before the fold (a deleted src's old lists are masked; its
@@ -1384,32 +1311,14 @@ object StreamOps {
     * find srcs whose stored lists contain a freshly-deleted dst. Keeps
     * `batch_id` so the caller can apply the dst-side batch mask per row.
     */
-  private def s36LatestEdges(spark: org.apache.spark.sql.SparkSession,
-                             dir0: String,
-                             asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "edges", asOf)
-    if (!pathExists(spark, tp))
+  private def s36LatestEdges(spark: SparkSession, dir: String,
+                             asOf: Option[Long] = None): DataFrame =
+    if (absent(spark, dir, "edges", asOf))
       // first batch: nothing stored yet — empty frame with the edge schema
       spark.range(0).select(col("id").as("src"), col("id").as("dst"),
         lit(0.0).as("cos"), col("id").as("batch_id"))
-    else {
-      val e = maskDeleted(
-        asOfRuns(
-          graft.sources.ReadGuard.requireColumns(
-            graft.sources.ReadGuard.readRuns(spark, tp), tp,
-            "src", "dst", "cos", "batch_id"),
-          spark, dir, asOf)
-          .select(col("src"), col("dst"), col("cos"),
-            col("batch_id").cast("long").as("batch_id")),
-        spark, dir, "src", asOf)
-      val latest = e.groupBy("src").agg(max("batch_id").as("mb"))
-        .withColumnRenamed("src", "lsrc")
-      e.join(latest, e("src") === col("lsrc") && e("batch_id") === col("mb"))
-        .select(e("src"), e("dst"), e("cos"), e("batch_id"))
-    }
-  }
+    else latestPerKey(servedRuns(spark, dir, "edges", asOf, Seq("src"),
+      "src", "dst", "cos"), "src")
 
   /** The served directed edges: latest live list per src, minus STALE
     * dst references via the batch mask — an edge row at batch B naming a
@@ -1425,13 +1334,10 @@ object StreamOps {
     * rebuild, because [[s36DeleteBatch]] re-ranked every src with live
     * candidates left.
     */
-  def s36DirectedEdges(spark: org.apache.spark.sql.SparkSession,
+  def s36DirectedEdges(spark: SparkSession,
                        dir0: String, asOf: Option[Long] = None): DataFrame = {
     val dir = resolveAsOfDir(spark, dir0, asOf)
-    maskDeleted(
-      s36LatestEdges(spark, dir, asOf).withColumnRenamed("dst", "vec_id"),
-      spark, dir, "vec_id", asOf)
-      .withColumnRenamed("vec_id", "dst")
+    maskDeleted(s36LatestEdges(spark, dir, asOf), spark, dir, Seq("dst"), asOf)
       .select("src", "dst", "cos")
   }
 
@@ -1466,20 +1372,10 @@ object StreamOps {
     * re-ranked lists no longer contain deleted dsts), so the fold is a
     * fixpoint.
     */
-  def s36DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val Sim = graft.queries.Similarity
-    val spark = deletes.sparkSession
-    val ids = deletes.select(col(deletes.columns.head).as("id")).distinct()
-      .localCheckpoint()
-    if (!ids.isEmpty) {
-      requireFreshBatch(spark, dir, batchId, Seq("vectors", "cells", "edges"),
-        isDelete = true)
-      ids.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(deletedPath(dir))
-      spark.catalog.refreshByPath(deletedPath(dir))
+  def s36DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit =
+    if (tombstoneBatch("graph", dir)(deletes, batchId)) {
+      val Sim = graft.queries.Similarity
+      val spark = deletes.sparkSession
       // srcs (themselves live) whose CURRENT stored list names ANY
       // currently-DEAD dst — the effective set, not every id ever
       // tombstoned: a re-admitted dst legitimately appears in lists
@@ -1507,16 +1403,9 @@ object StreamOps {
       val reranked = Sim.topKEdges(
           Sim.scoreDirectedPairs(pairs, s36Vectors(spark, dir)))
         .select("src", "dst", "cos")
-        .withColumn("batch_id", lit(batchId))
         .localCheckpoint()
-      if (!reranked.isEmpty) {
-        reranked.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/edges")
-        spark.catalog.refreshByPath(s"$dir/edges")
-      }
+      if (!reranked.isEmpty) writeRun(reranked, s"$dir/edges", batchId)
     }
-  }
 
   /** The serving view: symmetrized adjacency of the maintained directed
     * edges — the table the n26 batched walk reads.
@@ -1549,12 +1438,8 @@ object StreamOps {
     * generalized [[compactStore]] seam, shared with the s32/s34/s35/s38
     * stores (s40).
     */
-  def s37CompactEdgeStore(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "vectors" -> (() => s36Vectors(spark, dir)),
-      "cells"   -> (() => s36Cells(spark, dir)),
-      "edges"   -> (() => s36DirectedEdges(spark, dir))), "vec_id")
+  def s37CompactEdgeStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "graph")
 
   /** s43: streaming maintenance of the persisted dedup CLUSTER store —
     * the fourth derived artifact brought to full lifecycle parity (the
@@ -1605,11 +1490,10 @@ object StreamOps {
     * corpus's own pair plan) at every step, plus replay fixpoints.
     */
   def s43UpsertClusterBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
     s32UpsertIndexBatch(dir)(batch, batchId)
     val spark = batch.sparkSession
     if (pathExists(spark, s"$dir/bands")) {
-      val batchBands = graft.sources.ReadGuard.readRuns(spark, s"$dir/bands")
+      val batchBands = ReadGuard.readRuns(spark, s"$dir/bands")
         .filter(col("batch_id").cast("long") === batchId)
         .select("doc_id", "band_key")
         .localCheckpoint()
@@ -1646,21 +1530,16 @@ object StreamOps {
             Seq("cluster"), "left_semi")
           .select("doc_id", "cluster")
           .unionByName(batchCur).distinct()
-        affected
+        writeRun(affected
           .join(mergeMap, affected("cluster") === mergeMap("old_lbl"), "left")
           .select(col("doc_id"),
-            coalesce(col("new_lbl"), col("cluster")).as("cluster"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/labels")
-        spark.catalog.refreshByPath(s"$dir/labels")
+            coalesce(col("new_lbl"), col("cluster")).as("cluster")),
+          s"$dir/labels", batchId)
       }
     }
   }
 
   def s43DeleteClusterBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
     s32DeleteBatch(dir)(deletes, batchId)
     val spark = deletes.sparkSession
     if (pathExists(spark, s"$dir/labels") && pathExists(spark, deletedPath(dir))) {
@@ -1671,7 +1550,7 @@ object StreamOps {
       // partner seeds: live docs sharing a band with ANY tombstoned doc
       // (the deleted side reads the RAW band runs — its rows are already
       // invisible to the serving index)
-      val delBandKeys = graft.sources.ReadGuard.readRuns(spark, s"$dir/bands")
+      val delBandKeys = ReadGuard.readRuns(spark, s"$dir/bands")
         .select("doc_id", "band_key")
         .join(broadcast(del.withColumnRenamed("id", "doc_id")),
           Seq("doc_id"), "left_semi")
@@ -1696,61 +1575,33 @@ object StreamOps {
         val pairs = a.join(b, Seq("band_key"))
           .filter(col("d1") < col("d2"))
           .select("d1", "d2").distinct()
-        graft.queries.Dedup.clusterTableOf(affected, pairs)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/labels")
-        spark.catalog.refreshByPath(s"$dir/labels")
+        writeRun(graft.queries.Dedup.clusterTableOf(affected, pairs),
+          s"$dir/labels", batchId)
       }
     }
   }
 
   def s43ClusterMaintain(docs: DataFrame, dir: String,
                          checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s43UpsertClusterBatch(dir) _)
-      .start()
+    maintain(docs, checkpoint)(s43UpsertClusterBatch(dir))
 
   /** The served cluster table: latest live label per doc — the batch mask
     * runs BEFORE the latest-per-doc fold, so a re-admitted doc serves its
     * post-re-admission label and never a pre-delete one.
     */
-  def s43Clusters(spark: org.apache.spark.sql.SparkSession,
-                  dir0: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "labels", asOf)
-    if (!pathExists(spark, tp))
+  def s43Clusters(spark: SparkSession,
+                  dir: String, asOf: Option[Long] = None): DataFrame =
+    if (absent(spark, dir, "labels", asOf))
       spark.range(0).select(col("id").as("doc_id"), col("id").as("cluster"))
-    else {
-      val l = maskDeleted(
-        asOfRuns(
-          graft.sources.ReadGuard.requireColumns(
-            graft.sources.ReadGuard.readRuns(spark, tp), tp,
-            "doc_id", "cluster", "batch_id"),
-          spark, dir, asOf)
-          .select(col("doc_id"), col("cluster"),
-            col("batch_id").cast("long").as("batch_id")),
-        spark, dir, "doc_id", asOf)
-      val latest = l.groupBy("doc_id").agg(max("batch_id").as("mb"))
-        .withColumnRenamed("doc_id", "ldoc")
-      l.join(latest, l("doc_id") === col("ldoc") && l("batch_id") === col("mb"))
-        .select("doc_id", "cluster")
-    }
-  }
+    else latestPerKey(servedRuns(spark, dir, "labels", asOf, Seq("doc_id"),
+      "doc_id", "cluster"), "doc_id").drop("batch_id")
 
   /** s40 applied to the cluster store: hash/band/label runs (and the
     * tombstones) fold to one base each; the served cluster table is the
     * labels fold, so the latest-wins invariant carries over unchanged.
     */
-  def s43CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "hash56" -> (() => s32HashRows(spark, dir)),
-      "bands"  -> (() => s32BandIndex(spark, dir)),
-      "labels" -> (() => s43Clusters(spark, dir))), "doc_id")
+  def s43CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "cluster")
 
   // ===== s48: the maintained GOLDEN-RECORD table (r12 verdict item 5 —
   // ===== d33 elects survivors batch-only; this keeps the election current
@@ -1783,23 +1634,13 @@ object StreamOps {
     * membership comes from one semi-join against the served clusters;
     * the election is two partial-agg groupBys over those members.
     */
-  def s48UpsertGoldenBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        s43UpsertClusterBatch(dir)(cached.select("doc_id", "text"), batchId)
-        cached.select("doc_id", "lang", "source", "n_chars").distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/docattrs")
-        spark.catalog.refreshByPath(s"$dir/docattrs")
-        reelectGolden(spark, dir, batchId)
-      }
-    } finally cached.unpersist()
-  }
+  def s48UpsertGoldenBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    upsertFold("golden", dir, batch, batchId) { cached =>
+      s43UpsertClusterBatch(dir)(cached.select("doc_id", "text"), batchId)
+      writeRun(cached.select("doc_id", "lang", "source", "n_chars").distinct(),
+        s"$dir/docattrs", batchId)
+      reelectGolden(cached.sparkSession, dir, batchId)
+    }
 
   def s48DeleteGoldenBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit = {
     s43DeleteClusterBatch(dir)(deletes, batchId)
@@ -1809,10 +1650,7 @@ object StreamOps {
 
   def s48GoldenMaintain(docs: DataFrame, dir: String,
                         checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s48UpsertGoldenBatch(dir) _)
-      .start()
+    maintain(docs, checkpoint)(s48UpsertGoldenBatch(dir))
 
   /** The per-batch re-election: affected labels → members from the SERVED
     * views → one authoritative golden row per affected label (election or
@@ -1823,9 +1661,8 @@ object StreamOps {
     */
   private def reelectGolden(spark: org.apache.spark.sql.SparkSession,
                             dir: String, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
     if (!pathExists(spark, s"$dir/labels")) return
-    val labelsRaw = graft.sources.ReadGuard.readRuns(spark, s"$dir/labels")
+    val labelsRaw = ReadGuard.readRuns(spark, s"$dir/labels")
       .select(col("doc_id"), col("cluster"),
         col("batch_id").cast("long").as("batch_id"))
     val runLabels = labelsRaw.filter(col("batch_id") === batchId)
@@ -1835,20 +1672,14 @@ object StreamOps {
     val newlyDead =
       if (!pathExists(spark, deletedPath(dir)))
         spark.range(0).select(col("id").as("doc_id"))
-      else graft.sources.ReadGuard.readRuns(spark, deletedPath(dir))
+      else ReadGuard.readRuns(spark, deletedPath(dir))
         .filter(col("batch_id").cast("long") === batchId)
         .select(col("id").as("doc_id"))
     val touched = runLabels.select("doc_id").unionByName(newlyDead).distinct()
     // ... and the labels those docs held BEFORE this batch (read from the
     // immutable run history — merges/splits retire or shrink these)
-    val before = labelsRaw.filter(col("batch_id") < batchId)
-      .join(touched, Seq("doc_id"), "left_semi")
-    val latestBefore = before.groupBy("doc_id").agg(max("batch_id").as("mb"))
-      .withColumnRenamed("doc_id", "ldoc")
-    val priorLabels = before
-      .join(latestBefore,
-        before("doc_id") === col("ldoc") && before("batch_id") === col("mb"))
-      .select(before("cluster"))
+    val priorLabels = latestPerKey(labelsRaw.filter(col("batch_id") < batchId)
+      .join(touched, Seq("doc_id"), "left_semi"), "doc_id").select("cluster")
     val affected = runLabels.select("cluster").unionByName(priorLabels)
       .distinct().localCheckpoint()
     if (affected.isEmpty) return
@@ -1862,36 +1693,16 @@ object StreamOps {
     val retired = affected.select(col("cluster").as("kept_doc"))
       .join(elected.select(col("kept_doc")), Seq("kept_doc"), "left_anti")
       .join(elected.limit(0), Seq("kept_doc"), "left")
-    elected.unionByName(retired)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/golden")
-    spark.catalog.refreshByPath(s"$dir/golden")
+    writeRun(elected.unionByName(retired), s"$dir/golden", batchId)
   }
 
   /** Served member attributes: latest live row per doc (the election
     * inputs — a re-admitted doc's corrected attributes supersede).
     */
-  def s48DocAttrs(spark: org.apache.spark.sql.SparkSession,
-                  dir0: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "docattrs", asOf)
-    val a = maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "doc_id", "lang", "source", "n_chars"),
-        spark, dir, asOf)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          col("batch_id").cast("long").as("batch_id")),
-      spark, dir, "doc_id", asOf)
-    val latest = a.groupBy("doc_id").agg(max("batch_id").as("mb"))
-      .withColumnRenamed("doc_id", "ldoc")
-    a.join(latest, a("doc_id") === col("ldoc") && a("batch_id") === col("mb"))
-      .select(a("doc_id"), a("lang"), a("source"), a("n_chars"))
-  }
+  def s48DocAttrs(spark: SparkSession,
+                  dir: String, asOf: Option[Long] = None): DataFrame =
+    latestPerKey(servedRuns(spark, dir, "docattrs", asOf, Seq("doc_id"),
+      "doc_id", "lang", "source", "n_chars"), "doc_id").drop("batch_id")
 
   /** The served golden table: latest authoritative row per label, retire
     * and singleton rows filtered by d33's multi-member contract. No
@@ -1899,46 +1710,24 @@ object StreamOps {
     * re-election folds write the authoritative row whenever a label's
     * membership changes (including through deletes).
     */
-  def s48Golden(spark: org.apache.spark.sql.SparkSession,
-                dir0: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "golden", asOf)
-    if (!pathExists(spark, tp))
+  def s48Golden(spark: SparkSession,
+                dir: String, asOf: Option[Long] = None): DataFrame =
+    if (absent(spark, dir, "golden", asOf))
       spark.range(0).select(col("id").as("kept_doc"),
         col("id").as("cluster_size"), col("id").as("n_sources"),
         col("id").as("total_chars"), col("id").as("rep_doc"),
         col("id").as("rep_chars"), lit("").as("lang_mode"))
-    else {
-      val g = asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "kept_doc", "cluster_size", "n_sources", "total_chars",
-          "rep_doc", "rep_chars", "lang_mode"),
-        spark, dir, asOf)
-        .withColumn("batch_id", col("batch_id").cast("long"))
-      val latest = g.groupBy("kept_doc").agg(max("batch_id").as("mb"))
-        .withColumnRenamed("kept_doc", "lkey")
-      g.join(latest,
-          g("kept_doc") === col("lkey") && g("batch_id") === col("mb"))
-        .filter(col("cluster_size") >= 2)
-        .select(g("kept_doc"), g("cluster_size"), g("n_sources"),
-          g("total_chars"), g("rep_doc"), g("rep_chars"), g("lang_mode"))
-    }
-  }
+    else latestPerKey(servedRuns(spark, dir, "golden", asOf, Nil,
+        "kept_doc", "cluster_size", "n_sources", "total_chars",
+        "rep_doc", "rep_chars", "lang_mode"), "kept_doc")
+      .filter(col("cluster_size") >= 2).drop("batch_id")
 
   /** s40 applied to the golden store: the s43 tables plus attrs and the
     * golden table itself (folded to the SERVED view — retire/singleton
     * history is spent once the rows it overrode are physically gone).
     */
-  def s48CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, Seq(
-      "hash56"   -> (() => s32HashRows(spark, dir)),
-      "bands"    -> (() => s32BandIndex(spark, dir)),
-      "labels"   -> (() => s43Clusters(spark, dir)),
-      "docattrs" -> (() => s48DocAttrs(spark, dir)),
-      "golden"   -> (() => s48Golden(spark, dir))), "doc_id")
+  def s48CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "golden")
 
   // ===== s49: consistent store EXPORT (backup/clone) — the last ops verb
   // ===== the store family lacked: everything else mutates in place.
@@ -1966,7 +1755,6 @@ object StreamOps {
     */
   def s49ExportStore(spark: org.apache.spark.sql.SparkSession,
                      srcDir: String, dstDir: String, family: String): Unit = {
-    import org.apache.spark.sql.functions._
     // an in-flight flip means the source's live dirs are mid-swap; the
     // export must not read raw runs through that window — complete the
     // compaction (the family's CompactStore resumes it) and re-export
@@ -1980,42 +1768,14 @@ object StreamOps {
     // the last HEALTHY clone instead (pinned in StreamingSpec's drill)
     s46RequireHealthy(spark, srcDir, family)
     val tables = familyTables(spark, srcDir, family)
-    val all = tables.map(_._1) :+ "deleted"
-    all.flatMap(t => maxBatchIn(spark, s"$srcDir/$t"))
-      .reduceOption(_ max _)
-      .foreach { maxBatch =>
-        val withDeleted = tables ++
-          (if (pathExists(spark, deletedPath(srcDir)))
-             Seq("deleted" -> (() => deadIds(spark, srcDir,
-               tables.head._1, familyIdCol(family))))
-           else Nil)
-        withDeleted.foreach { case (t, fold) =>
-          if (pathExists(spark, s"$srcDir/$t")) {
-            val served = fold().withColumn("batch_id", lit(maxBatch))
-              .localCheckpoint()
-            val base =
-              if (!served.isEmpty || t == "deleted" || FoldOnlyTables(t))
-                // fold-only tables (golden) export their SERVED fold even
-                // when empty → absent on the clone, which its readers
-                // treat as empty — restamping the label-keyed raw rows
-                // would tie stale elections with the RETIRE rows that
-                // overrode them and resurrect retired elections on the
-                // clone (r13 ADVICE, takedown leakage)
-                served
-              else
-                // all-masked data table: export the raw rows restamped to
-                // the base id — readable on the clone, still masked
-                graft.sources.ReadGuard.readRuns(spark, s"$srcDir/$t")
-                  .drop("batch_id").withColumn("batch_id", lit(maxBatch))
-                  .localCheckpoint()
-            if (!base.isEmpty) {
-              base.write.mode("errorifexists").partitionBy("batch_id")
-                .parquet(s"$dstDir/$t")
-            } // spent tombstones: absent on the clone (mask-free, correct)
-          }
-        }
-        writeCompactionStamp(spark, dstDir, maxBatch)
-      }
+    maxRun(spark, srcDir, tables.map(_._1)).foreach { maxBatch =>
+      // the clone holds exactly the tables whose fold wrote a base: a
+      // spent tombstone table or an empty fold-only table is absent on the
+      // clone, which its readers treat as mask-free / empty
+      writeFoldedBases(spark, srcDir, tables, storeFamily(family).idCol,
+        maxBatch, dstDir, "errorifexists")
+      writeCompactionStamp(spark, dstDir, maxBatch)
+    }
   }
 
   // ===== s50: coordinated multi-store INGEST — p14 coordinates deletes
@@ -2127,56 +1887,19 @@ object StreamOps {
       docs: DataFrame, vectors: DataFrame, media: DataFrame,
       stores: Map[String, String], manifestDir: String,
       batchId: Long, cents: DataFrame, cbook: DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
     val spark = docs.sparkSession
-    // one count per MODALITY, not per family (hash/cluster/golden would
-    // otherwise re-scan docs three times on top of the folds' own scans)
-    lazy val nDocs = docs.count()
-    lazy val nVecs = vectors.count()
-    lazy val nMedia = media.count()
-    val rows = stores.toSeq.sortBy(_._1).map { case (family, dir) =>
-      val n = family match {
-        case "hash" =>
-          s32UpsertIndexBatch(dir)(docs.select("doc_id", "text"), batchId)
-          nDocs
-        case "cluster" =>
-          s43UpsertClusterBatch(dir)(docs.select("doc_id", "text"), batchId)
-          nDocs
-        case "golden" =>
-          s48UpsertGoldenBatch(dir)(docs.select(
-            "doc_id", "text", "lang", "source", "n_chars"), batchId)
-          nDocs
-        case "chunk" =>
-          s34UpsertChunkBatch(dir)(media, batchId)
-          nMedia
-        case "assign" =>
-          s35UpsertIvfBatch(cents, dir)(vectors, batchId)
-          nVecs
-        case "code" =>
-          s38UpsertPqBatch(cbook, dir)(vectors, batchId)
-          nVecs
-        case "graph" =>
-          s36UpsertGraphBatch(cents, dir)(vectors, batchId)
-          nVecs
-        case "prefix" =>
-          s51UpsertBatch(dir)(docs.select("doc_id", "text"), batchId)
-          nDocs
-        case other => throw new IllegalArgumentException(
-          s"unknown store family '$other' " +
-            "(hash|chunk|assign|code|cluster|golden|graph|prefix)")
-      }
-      (family, dir, n)
+    // every family resolves before any store is touched
+    val targets = stores.toSeq.sortBy(_._1)
+      .map { case (family, dir) => (family, dir, storeFamily(family)) }
+    val in = new Ingest(docs, vectors, media, cents, cbook)
+    val rows = targets.map { case (family, dir, fam) =>
+      (family, dir, fam.ingest(in, dir, batchId))
     }
     // the COMMIT MARK: written after every fold above returned — a crash
     // anywhere earlier leaves this batch unacknowledged (stores `ahead`)
     import spark.implicits._
-    rows.toDF("family", "dir", "n_rows")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(manifestDir)
-    spark.catalog.refreshByPath(manifestDir)
+    writeRun(rows.toDF("family", "dir", "n_rows").coalesce(1),
+      manifestDir, batchId)
   }
 
   /** The coordination audit: per listed store, its highest committed
@@ -2205,7 +1928,7 @@ object StreamOps {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     stores.toSeq.sortBy(_._1).map { case (family, dir) =>
       val storeMax =
-        maxBatchIn(spark, s"$dir/${familyTables(spark, dir, family).head._1}")
+        maxBatchIn(spark, s"$dir/${tableNames(family).head}")
           .getOrElse(-1L)
       val ackMax = expected.getOrElse(family, -1L)
       // compaction restamps the primary table to the max batch across ALL
@@ -2294,98 +2017,72 @@ object StreamOps {
     * Replay-safe: every table's run is a pure function of (batch, frozen
     * order, prior serve), rewritten under dynamic partition overwrite.
     */
-  def s51UpsertBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val tau = graft.queries.Dedup.PrefixTauPct
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        val spark = cached.sparkSession
-        require(pathExists(spark, s"$dir/order"),
-          s"store $dir is not initialized — run s51InitStore (the frozen " +
-            "token order) before the first upsert")
-        requireFreshBatch(spark, dir, batchId,
-          Seq("toks", "prefix", "pairs", "order"))
-        val idx = graft.queries.Dedup.prefixIndexUnderOrder(
-            cached.select("doc_id", "text"), s51Order(spark, dir),
-            tau, graft.queries.Dedup.PrefixShingleK)
-          .localCheckpoint()
-        idx.select("doc_id", "varr", "sz", "plen")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/toks")
-        spark.catalog.refreshByPath(s"$dir/toks")
-        val newPrefix = idx
-          .select(col("doc_id"), col("sz"),
-            posexplode(expr("slice(tarr, 1, cast(plen as int))"))
-              .as(Seq("p", "h")))
-        newPrefix
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/prefix")
-        spark.catalog.refreshByPath(s"$dir/prefix")
-        // candidates: delta prefix ⋈ served prefix (ordered-pair
-        // normalization via when-swaps so the positional filter keeps
-        // each side's own sz/p); filters + verify are d15's, verbatim
-        val n = newPrefix.select(col("doc_id").as("nd"), col("sz").as("ns"),
-          col("p").as("np"), col("h"))
-        val o = s51PrefixRows(spark, dir).select(col("doc_id").as("od"),
-          col("sz").as("os"), col("p").as("op"), col("h"))
-        val cand = n.join(o, Seq("h"))
-          .filter(col("nd") =!= col("od"))
-          .select(
-            least(col("nd"), col("od")).as("d1"),
-            greatest(col("nd"), col("od")).as("d2"),
-            when(col("nd") < col("od"), col("ns")).otherwise(col("os")).as("sa"),
-            when(col("nd") < col("od"), col("os")).otherwise(col("ns")).as("sb"),
-            when(col("nd") < col("od"), col("np")).otherwise(col("op")).as("pa"),
-            when(col("nd") < col("od"), col("op")).otherwise(col("np")).as("pb"))
-          .filter(least(col("sa"), col("sb")) * 100 >=
-            greatest(col("sa"), col("sb")) * tau)
-          .filter((lit(1) + least(col("sa") - col("pa") - 1,
-            col("sb") - col("pb") - 1)) * (100 + tau) >=
-            (col("sa") + col("sb")) * tau)
-          .select("d1", "d2")
-        // verify fetch broadcasts the index side at bench scale (AQE
-        // under-sizes the cached array column — d15's measured note); at
-        // 100 TB the index side shards by doc bucket instead, exactly as
-        // d15Pairs documents — the candidate stream itself never shuffles
-        val toks = s51Toks(spark, dir)
-        val pairs = cand
-          .join(broadcast(toks.select(col("doc_id").as("d1"),
-            col("varr").as("va"), col("sz").as("na"))), Seq("d1"))
-          .join(broadcast(toks.select(col("doc_id").as("d2"),
-            col("varr").as("vb"), col("sz").as("nb"))), Seq("d2"))
-          // threshold-aware merge (d15Pairs's r14 discipline): the
-          // unchanged τ filter below rejects every early-abort value, so
-          // the maintained pair rows stay bit-identical to the rebuild
-          .withColumn("inter", expr("sorted_inter_size(va, vb, " +
-            s"((na + nb) * $tau + ${100 + tau - 1}) div ${100 + tau})"))
-          .filter(col("inter") * 100 >=
-            (col("na") + col("nb") - col("inter")) * tau)
-          .select(col("d1"), col("d2"), col("inter"),
-            col("na").cast("long").as("na"), col("nb").cast("long").as("nb"))
-          .distinct()
-          .localCheckpoint()
-        if (!pairs.isEmpty) {
-          pairs.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(s"$dir/pairs")
-          spark.catalog.refreshByPath(s"$dir/pairs")
-        }
-      }
-    } finally cached.unpersist()
-  }
+  def s51UpsertBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    upsertFold("prefix", dir, batch, batchId) { cached =>
+      val tau = graft.queries.Dedup.PrefixTauPct
+      val spark = cached.sparkSession
+      require(pathExists(spark, s"$dir/order"),
+        s"store $dir is not initialized — run s51InitStore (the frozen " +
+          "token order) before the first upsert")
+      val idx = graft.queries.Dedup.prefixIndexUnderOrder(
+          cached.select("doc_id", "text"), s51Order(spark, dir),
+          tau, graft.queries.Dedup.PrefixShingleK)
+        .localCheckpoint()
+      writeRun(idx.select("doc_id", "varr", "sz", "plen"), s"$dir/toks", batchId)
+      val newPrefix = idx
+        .select(col("doc_id"), col("sz"),
+          posexplode(expr("slice(tarr, 1, cast(plen as int))"))
+            .as(Seq("p", "h")))
+      writeRun(newPrefix, s"$dir/prefix", batchId)
+      // candidates: delta prefix ⋈ served prefix (ordered-pair
+      // normalization via when-swaps so the positional filter keeps
+      // each side's own sz/p); filters + verify are d15's, verbatim
+      val n = newPrefix.select(col("doc_id").as("nd"), col("sz").as("ns"),
+        col("p").as("np"), col("h"))
+      val o = s51PrefixRows(spark, dir).select(col("doc_id").as("od"),
+        col("sz").as("os"), col("p").as("op"), col("h"))
+      val cand = n.join(o, Seq("h"))
+        .filter(col("nd") =!= col("od"))
+        .select(
+          least(col("nd"), col("od")).as("d1"),
+          greatest(col("nd"), col("od")).as("d2"),
+          when(col("nd") < col("od"), col("ns")).otherwise(col("os")).as("sa"),
+          when(col("nd") < col("od"), col("os")).otherwise(col("ns")).as("sb"),
+          when(col("nd") < col("od"), col("np")).otherwise(col("op")).as("pa"),
+          when(col("nd") < col("od"), col("op")).otherwise(col("np")).as("pb"))
+        .filter(least(col("sa"), col("sb")) * 100 >=
+          greatest(col("sa"), col("sb")) * tau)
+        .filter((lit(1) + least(col("sa") - col("pa") - 1,
+          col("sb") - col("pb") - 1)) * (100 + tau) >=
+          (col("sa") + col("sb")) * tau)
+        .select("d1", "d2")
+      // verify fetch broadcasts the index side at bench scale (AQE
+      // under-sizes the cached array column — d15's measured note); at
+      // 100 TB the index side shards by doc bucket instead, exactly as
+      // d15Pairs documents — the candidate stream itself never shuffles
+      val toks = s51Toks(spark, dir)
+      val pairs = cand
+        .join(broadcast(toks.select(col("doc_id").as("d1"),
+          col("varr").as("va"), col("sz").as("na"))), Seq("d1"))
+        .join(broadcast(toks.select(col("doc_id").as("d2"),
+          col("varr").as("vb"), col("sz").as("nb"))), Seq("d2"))
+        // threshold-aware merge (d15Pairs's r14 discipline): the
+        // unchanged τ filter below rejects every early-abort value, so
+        // the maintained pair rows stay bit-identical to the rebuild
+        .withColumn("inter", expr("sorted_inter_size(va, vb, " +
+          s"((na + nb) * $tau + ${100 + tau - 1}) div ${100 + tau})"))
+        .filter(col("inter") * 100 >=
+          (col("na") + col("nb") - col("inter")) * tau)
+        .select(col("d1"), col("d2"), col("inter"),
+          col("na").cast("long").as("na"), col("nb").cast("long").as("nb"))
+        .distinct()
+        .localCheckpoint()
+      if (!pairs.isEmpty) writeRun(pairs, s"$dir/pairs", batchId)
+    }
 
   def s51IndexMaintain(docs: DataFrame, dir: String,
                        checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s51UpsertBatch(dir) _)
-      .start()
+    maintain(docs, checkpoint)(s51UpsertBatch(dir))
 
   /** s51 delete: pure tombstone — pairs are per-pair FACTS, not bounded
     * lists, so unlike the s36 graph store no re-derivation is needed:
@@ -2398,52 +2095,25 @@ object StreamOps {
     * every distinct-fold store).
     */
   def s51DeleteBatch(dir: String)(deletes: DataFrame, batchId: Long): Unit =
-    tombstoneBatch(dir, Seq("toks", "prefix", "pairs", "order"))(
-      deletes, batchId)
+    tombstoneBatch("prefix", dir)(deletes, batchId): Unit
 
   /** Served per-doc index rows (varr/sz/plen), tombstone-masked. */
-  def s51Toks(spark: org.apache.spark.sql.SparkSession,
-              dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "toks", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "doc_id", "varr", "sz", "plen"),
-        spark, dir, asOf)
-        .select(col("doc_id"), col("varr"), col("sz"), col("plen"),
-          col("batch_id")),
-      spark, dir, "doc_id", asOf)
-      .select("doc_id", "varr", "sz", "plen").distinct()
-  }
+  def s51Toks(spark: SparkSession,
+              dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "toks", asOf, Seq("doc_id"),
+      "doc_id", "varr", "sz", "plen").drop("batch_id").distinct()
 
   /** Served exploded prefix index (h, doc_id, p, sz), tombstone-masked. */
-  def s51PrefixRows(spark: org.apache.spark.sql.SparkSession,
-                    dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "prefix", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "doc_id", "p", "h", "sz"),
-        spark, dir, asOf)
-        .select(col("doc_id"), col("p"), col("h"), col("sz"),
-          col("batch_id")),
-      spark, dir, "doc_id", asOf)
-      .select("doc_id", "p", "h", "sz").distinct()
-  }
+  def s51PrefixRows(spark: SparkSession,
+                    dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "prefix", asOf, Seq("doc_id"),
+      "doc_id", "p", "h", "sz").drop("batch_id").distinct()
 
   /** The frozen token order (h → df at freeze). */
-  def s51Order(spark: org.apache.spark.sql.SparkSession,
-               dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "order", asOf)
-    graft.sources.ReadGuard.requireColumns(
-        graft.sources.ReadGuard.readRuns(spark, tp), tp, "h", "df")
-      .select("h", "df").distinct()
-  }
+  def s51Order(spark: SparkSession,
+               dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "order", asOf, Nil, "h", "df")
+      .drop("batch_id").distinct()
 
   /** The served τ-pair table: TWO-SIDED batch mask (a pair row retires
     * when EITHER side was tombstoned at or after the batch that computed
@@ -2451,48 +2121,25 @@ object StreamOps {
     * runs. Tombstone side is delete-traffic-sized → both mask joins
     * broadcast.
     */
-  def s51Pairs(spark: org.apache.spark.sql.SparkSession,
-               dir0: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "pairs", asOf)
-    if (!pathExists(spark, tp))
+  def s51Pairs(spark: SparkSession,
+               dir: String, asOf: Option[Long] = None): DataFrame =
+    if (absent(spark, dir, "pairs", asOf))
       spark.range(0).select(col("id").as("d1"), col("id").as("d2"),
         col("id").cast("int").as("inter"), col("id").as("na"),
         col("id").as("nb"))
-    else {
-      val raw = asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "d1", "d2", "inter", "na", "nb"),
-        spark, dir, asOf)
-        .select(col("d1"), col("d2"), col("inter"), col("na"), col("nb"),
-          col("batch_id").cast("long").as("batch_id"))
-      val tomb = tombstoneBatches(spark, dir, asOf)
-      raw
-        .join(broadcast(tomb.select(col("id").as("d1"),
-          col("del_batch").as("__del1"))), Seq("d1"), "left")
-        .join(broadcast(tomb.select(col("id").as("d2"),
-          col("del_batch").as("__del2"))), Seq("d2"), "left")
-        .filter((col("__del1").isNull || col("batch_id") > col("__del1")) &&
-          (col("__del2").isNull || col("batch_id") > col("__del2")))
-        .select("d1", "d2", "inter", "na", "nb").distinct()
-    }
-  }
+    else servedRuns(spark, dir, "pairs", asOf, Seq("d1", "d2"),
+      "d1", "d2", "inter", "na", "nb").drop("batch_id").distinct()
 
   /** s40 applied to the prefix store. */
-  def s51CompactStore(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit =
-    compactStore(spark, dir, familyTables(spark, dir, "prefix"), "doc_id")
+  def s51CompactStore(spark: SparkSession, dir: String): Unit =
+    compactFamily(spark, dir, "prefix")
 
   /** s51's fsck: referential integrity of the served prefix-index views. */
-  def s46PrefixStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46PrefixStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val toks = s51Toks(spark, dir).select("doc_id").localCheckpoint()
     val pairs = s51Pairs(spark, dir).localCheckpoint()
     val prefix = s51PrefixRows(spark, dir).select("doc_id").distinct()
-    auditOf(Seq(
+    storeAudit(spark, dir, "prefix", toks)(
       auditRow("pair_side_not_served",
         pairs.select(col("d1").as("doc_id"))
           .unionByName(pairs.select(col("d2").as("doc_id"))).distinct()
@@ -2500,9 +2147,7 @@ object StreamOps {
       auditRow("indexed_doc_without_prefix",
         toks.join(prefix, Seq("doc_id"), "left_anti")),
       auditRow("prefix_doc_not_indexed",
-        prefix.join(toks, Seq("doc_id"), "left_anti")),
-      tombstonesServedRow(spark, dir, toks, "doc_id", "toks"),
-      staleRunsRow(spark, dir, Seq("toks", "prefix", "pairs", "order"))))
+        prefix.join(toks, Seq("doc_id"), "left_anti")))
   }
 
   // ===== p14 executor: the composed TAKEDOWN verb (r12 verdict item 4 —
@@ -2556,17 +2201,19 @@ object StreamOps {
     */
   def p14TakedownExecute(ids: DataFrame,
                          stores: Map[String, String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     val spark = ids.sparkSession
+    // every family resolves before any store is touched
+    val targets = stores.toSeq.sortBy(_._1)
+      .map { case (family, dir) => (family, dir, storeFamily(family)) }
     val victims = ids.select(col(ids.columns.head).cast("long").as("id"))
       .distinct().localCheckpoint()
-    val rows = stores.toSeq.sortBy(_._1).map { case (family, dir) =>
-      // the registry is the single source for the id column and the
+    val rows = targets.map { case (family, dir, fam) =>
+      // the registry is the single source for the id column, the
       // served-presence fold (its head table — the one every upsert of an
-      // id writes), so a new family cannot be missed by takedowns
-      val idCol = familyIdCol(family)
-      val servedIds = familyTables(spark, dir, family).head._2()
-        .select(idCol).distinct()
+      // id writes) and the delete fold, so a new family cannot be missed
+      // by takedowns
+      val idCol = fam.idCol
+      val servedIds = fam.tables.head._2(spark, dir).select(idCol).distinct()
       val vicAsId = victims.withColumnRenamed("id", idCol)
       val present = servedIds
         .join(broadcast(vicAsId), Seq(idCol), "left_semi").count()
@@ -2577,22 +2224,13 @@ object StreamOps {
         else None
       val batch = nextBatchId(spark, dir)
       val delBatch = victims.withColumnRenamed("id", idCol)
-      family match {
-        case "hash"    => s32DeleteBatch(dir)(delBatch, batch)
-        case "chunk"   => s34DeleteBatch(dir)(delBatch, batch)
-        case "assign"  => s35DeleteBatch(dir)(delBatch, batch)
-        case "code"    => s38DeleteBatch(dir)(delBatch, batch)
-        case "graph"   => s36DeleteBatch(dir)(delBatch, batch)
-        case "cluster" => s43DeleteClusterBatch(dir)(delBatch, batch)
-        case "golden"  => s48DeleteGoldenBatch(dir)(delBatch, batch)
-        case "prefix"  => s51DeleteBatch(dir)(delBatch, batch)
-      }
+      fam.delete(dir)(delBatch, batch)
       val reclaimed = chunksBefore.map { before =>
         val after = s34ChunkRows(spark, dir).select("h").distinct()
         before.join(after, Seq("h"), "left_anti")
           .agg(coalesce(sum("nb"), lit(0L))).head().getLong(0)
       }.getOrElse(0L)
-      s46RequireHealthy(spark, dir, family)
+      requireCleanAudit(s"$family store", dir, fam.audit(spark, dir))
       val tombstoned = deletedIds(spark, dir).count()
       (family, dir, present, tombstoned, reclaimed, true)
     }
@@ -2656,22 +2294,27 @@ object StreamOps {
       lit(below.toLong).as("n_bad"))
   }
 
-  /** DEAD ids visible in a served view — the batch-mask contract check
-    * every store audit runs. Checks against [[deadIds]] (tombstoned, not
-    * re-admitted), not every id ever tombstoned: a re-admitted id is
-    * legitimately served, so the raw tombstone set would false-positive.
-    */
-  private def tombstonesServedRow(spark: SparkSession, dir: String,
-                                  served: DataFrame, idCol: String,
-                                  presenceTable: String): DataFrame =
-    auditRow("tombstones_still_served",
-      served.select(col(idCol)).distinct()
-        .join(deadIds(spark, dir, presenceTable, idCol)
-            .withColumnRenamed("id", idCol),
-          Seq(idCol), "left_semi"))
-
   private def auditOf(rows: Seq[DataFrame]): DataFrame =
     rows.reduce(_.unionByName(_)).orderBy("check")
+
+  /** One family's fsck: its own `checks` plus the two lifecycle checks
+    * every store shares — DEAD ids visible in the `served` view (the
+    * batch-mask contract; checked against [[deadIds]] over the primary
+    * table, not every id ever tombstoned: a re-admitted id is
+    * legitimately served, so the raw tombstone set would false-positive)
+    * and runs below the compaction stamp across the family's tables.
+    */
+  private def storeAudit(spark: SparkSession, dir: String, family: String,
+                         served: DataFrame)(checks: DataFrame*): DataFrame = {
+    val idCol = storeFamily(family).idCol
+    val tables = tableNames(family)
+    auditOf(checks ++ Seq(
+      auditRow("tombstones_still_served",
+        served.select(col(idCol)).distinct()
+          .join(deadIds(spark, dir, tables.head, idCol)
+            .withColumnRenamed("id", idCol), Seq(idCol), "left_semi")),
+      staleRunsRow(spark, dir, tables)))
+  }
 
   /** Loud-fail wrapper shared by every store fsck: the collect is
     * metadata-bounded BY CONSTRUCTION — one row per invariant, never per
@@ -2684,13 +2327,11 @@ object StreamOps {
     require(bad.isEmpty, s"$what $dir failed fsck: ${bad.mkString(", ")}")
   }
 
-  def s44GraphStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s44GraphStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val vecs = s36Vectors(spark, dir).select("vec_id").localCheckpoint()
     val edges = s36DirectedEdges(spark, dir).localCheckpoint()
     val cells = s36Cells(spark, dir).select("vec_id").distinct()
-    auditOf(Seq(
+    storeAudit(spark, dir, "graph", vecs)(
       auditRow("edges_src_not_in_vectors",
         edges.select(col("src").as("vec_id")).distinct()
           .join(vecs, Seq("vec_id"), "left_anti")),
@@ -2700,9 +2341,7 @@ object StreamOps {
       auditRow("cells_vec_not_in_vectors",
         cells.join(vecs, Seq("vec_id"), "left_anti")),
       auditRow("vectors_without_cells",
-        vecs.join(cells, Seq("vec_id"), "left_anti")),
-      tombstonesServedRow(spark, dir, vecs, "vec_id", "vectors"),
-      staleRunsRow(spark, dir, Seq("vectors", "cells", "edges"))))
+        vecs.join(cells, Seq("vec_id"), "left_anti")))
   }
 
   /** Loud-fail wrapper over [[s44GraphStoreAudit]], naming every violated
@@ -2714,7 +2353,7 @@ object StreamOps {
 
   /** s46: the fsck GENERALIZED to the whole store family (s44 audits the
     * graph store; these are its four siblings, built from the same seams
-    * — [[auditRow]], [[tombstonesServedRow]], [[staleRunsRow]] — so every
+    * — [[auditRow]] and [[storeAudit]]'s shared lifecycle checks — so every
     * maintained store now has the post-incident consistency verb). Each
     * audit checks exactly what the fold discipline guarantees for ITS
     * store, so a nonzero count is store corruption or a code regression:
@@ -2744,14 +2383,12 @@ object StreamOps {
     * moves. RobustnessSpec plants a per-store corruption and asserts the
     * audit names it and the loud-fail wrapper fires.
     */
-  def s46HashStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46HashStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val hashRows = s32HashRows(spark, dir).localCheckpoint()
     val bandRows = s32BandIndex(spark, dir).localCheckpoint()
     val hashDocs = hashRows.select("doc_id").distinct()
     val bandDocs = bandRows.select("doc_id").distinct()
-    auditOf(Seq(
+    storeAudit(spark, dir, "hash", hashDocs)(
       auditRow("band_doc_not_in_hash",
         bandDocs.join(hashDocs, Seq("doc_id"), "left_anti")),
       auditRow("hash_doc_not_in_bands",
@@ -2762,45 +2399,31 @@ object StreamOps {
       auditRow("band_cardinality_wrong",
         bandRows.groupBy("doc_id")
           .agg(countDistinct("band_key").as("n"))
-          .filter(col("n") =!= graft.functions.TextHash.NumBands)),
-      tombstonesServedRow(spark, dir, hashDocs, "doc_id", "hash56"),
-      staleRunsRow(spark, dir, Seq("hash56", "bands"))))
+          .filter(col("n") =!= graft.functions.TextHash.NumBands)))
   }
 
-  def s46ChunkStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46ChunkStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val refs = s34ChunkRows(spark, dir).localCheckpoint()
-    auditOf(Seq(
+    storeAudit(spark, dir, "chunk", refs)(
       auditRow("hash_nb_conflict",
         refs.groupBy("h").agg(countDistinct("nb").as("n"))
-          .filter(col("n") > 1)),
-      tombstonesServedRow(spark, dir,
-        refs.select(col("media_id")), "media_id", "chunks"),
-      staleRunsRow(spark, dir, Seq("chunks"))))
+          .filter(col("n") > 1)))
   }
 
-  def s46AssignStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46AssignStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val assigned = s35Assignment(spark, dir).localCheckpoint()
-    auditOf(Seq(
+    storeAudit(spark, dir, "assign", assigned)(
       auditRow("vec_with_multiple_assignments",
         assigned.groupBy("vec_id").agg(count(lit(1)).as("n"))
           .filter(col("n") > 1)),
       auditRow("cid_out_of_range",
         assigned.filter(col("cid") < 0 ||
-          col("cid") >= graft.queries.Similarity.NumCentroids)),
-      tombstonesServedRow(spark, dir, assigned.select("vec_id"), "vec_id",
-        "assigned"),
-      staleRunsRow(spark, dir, Seq("assigned"))))
+          col("cid") >= graft.queries.Similarity.NumCentroids)))
   }
 
-  def s46CodeStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46CodeStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val codes = s38Codes(spark, dir).localCheckpoint()
-    auditOf(Seq(
+    storeAudit(spark, dir, "code", codes)(
       auditRow("vec_wrong_subspace_arity",
         codes.groupBy("vec_id").agg(countDistinct("sub").as("n"))
           .filter(col("n") =!= graft.queries.Similarity.NumSubspaces)),
@@ -2809,20 +2432,15 @@ object StreamOps {
           .filter(col("n") > 1)),
       auditRow("code_out_of_range",
         codes.filter(col("code") < 0 ||
-          col("code") >= graft.queries.Similarity.NumCentroids)),
-      tombstonesServedRow(spark, dir, codes.select("vec_id"), "vec_id",
-        "codes"),
-      staleRunsRow(spark, dir, Seq("codes"))))
+          col("code") >= graft.queries.Similarity.NumCentroids)))
   }
 
-  def s46ClusterStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46ClusterStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val served = s43Clusters(spark, dir).localCheckpoint()
     val labels = served.select(col("cluster")).distinct()
     val roots = served.select(col("doc_id").as("cluster"),
       col("cluster").as("root_label"))
-    auditOf(Seq(
+    storeAudit(spark, dir, "cluster", served)(
       auditRow("label_above_doc",
         served.filter(col("cluster") > col("doc_id"))),
       auditRow("label_not_served",
@@ -2840,10 +2458,7 @@ object StreamOps {
       // them so the operator knows to replay
       auditRow("ingested_doc_without_label",
         s32HashRows(spark, dir).select("doc_id").distinct()
-          .join(served.select("doc_id"), Seq("doc_id"), "left_anti")),
-      tombstonesServedRow(spark, dir, served.select("doc_id"), "doc_id",
-        "hash56"),
-      staleRunsRow(spark, dir, Seq("hash56", "bands", "labels"))))
+          .join(served.select("doc_id"), Seq("doc_id"), "left_anti")))
   }
 
   /** s48's fsck: the cluster-store audit PLUS the golden-table invariants
@@ -2852,9 +2467,7 @@ object StreamOps {
     * every multi-member served cluster HAS a golden row (the
     * completeness direction a lagging re-election would violate).
     */
-  def s46GoldenStoreAudit(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+  def s46GoldenStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val sizes = s43Clusters(spark, dir).groupBy("cluster")
       .agg(count(lit(1)).as("sz")).localCheckpoint()
     val golden = s48Golden(spark, dir).localCheckpoint()
@@ -2872,6 +2485,101 @@ object StreamOps {
             Seq("cluster"), "left_anti"))))
   }
 
+  private type Fold = (SparkSession, String) => DataFrame
+
+  /** One maintained-store family in the registry: its tables with their
+    * SERVED folds — the first is the primary presence table every upsert
+    * of an id writes, keyed by `idCol` (the tombstone/presence key) — its
+    * delete fold, its fsck, and its share of a coordinated ingest (s50:
+    * run the family's own upsert fold on its modality at the shared batch
+    * id, return that modality's row count).
+    */
+  private final case class StoreFamily(
+      idCol: String, tables: Seq[(String, Fold)],
+      delete: String => (DataFrame, Long) => Unit, audit: Fold,
+      ingest: (Ingest, String, Long) => Long)
+
+  /** One coordinated-ingest batch (s50): every modality plus the fixed
+    * codebooks, counted once per MODALITY, not per family (hash/cluster/
+    * golden would otherwise re-scan docs three times on top of the folds'
+    * own scans).
+    */
+  private final class Ingest(val docs: DataFrame, val vectors: DataFrame,
+      val media: DataFrame, val cents: DataFrame, val cbook: DataFrame) {
+    lazy val nDocs: Long = docs.count()
+    lazy val nVecs: Long = vectors.count()
+    lazy val nMedia: Long = media.count()
+  }
+
+  /** The family registry — the one definition of every maintained store
+    * family, shared by the compaction entry points, the fsck dispatch
+    * (s46), the stats digest (s47), export (s49), coordinated ingest
+    * (s50) and takedowns (p14), so a new table or family cannot be added
+    * in one consumer and missed in another.
+    */
+  private lazy val Families: Seq[(String, StoreFamily)] = {
+    val hash = Seq[(String, Fold)](
+      "hash56" -> (s32HashRows(_, _)), "bands" -> (s32BandIndex(_, _)))
+    val cluster = hash ++ Seq[(String, Fold)]("labels" -> (s43Clusters(_, _)))
+    def docs(in: Ingest) = in.docs.select("doc_id", "text")
+    Seq(
+      "hash" -> StoreFamily("doc_id", hash, s32DeleteBatch,
+        s46HashStoreAudit, (in, dir, b) => {
+          s32UpsertIndexBatch(dir)(docs(in), b); in.nDocs }),
+      "chunk" -> StoreFamily("media_id",
+        Seq("chunks" -> (s34ChunkRows(_, _))), s34DeleteBatch,
+        s46ChunkStoreAudit, (in, dir, b) => {
+          s34UpsertChunkBatch(dir)(in.media, b); in.nMedia }),
+      "assign" -> StoreFamily("vec_id",
+        Seq("assigned" -> (s35Assignment(_, _))), s35DeleteBatch,
+        s46AssignStoreAudit, (in, dir, b) => {
+          s35UpsertIvfBatch(in.cents, dir)(in.vectors, b); in.nVecs }),
+      "code" -> StoreFamily("vec_id",
+        Seq("codes" -> (s38Codes(_, _))), s38DeleteBatch,
+        s46CodeStoreAudit, (in, dir, b) => {
+          s38UpsertPqBatch(in.cbook, dir)(in.vectors, b); in.nVecs }),
+      "cluster" -> StoreFamily("doc_id", cluster, s43DeleteClusterBatch,
+        s46ClusterStoreAudit, (in, dir, b) => {
+          s43UpsertClusterBatch(dir)(docs(in), b); in.nDocs }),
+      "golden" -> StoreFamily("doc_id", cluster ++ Seq[(String, Fold)](
+          "docattrs" -> (s48DocAttrs(_, _)), "golden" -> (s48Golden(_, _))),
+        s48DeleteGoldenBatch, s46GoldenStoreAudit, (in, dir, b) => {
+          s48UpsertGoldenBatch(dir)(in.docs.select(
+            "doc_id", "text", "lang", "source", "n_chars"), b); in.nDocs }),
+      "graph" -> StoreFamily("vec_id", Seq[(String, Fold)](
+          "vectors" -> (s36Vectors(_, _)), "cells" -> (s36Cells(_, _)),
+          "edges" -> (s36DirectedEdges(_, _))),
+        s36DeleteBatch, s44GraphStoreAudit, (in, dir, b) => {
+          s36UpsertGraphBatch(in.cents, dir)(in.vectors, b); in.nVecs }),
+      "prefix" -> StoreFamily("doc_id", Seq[(String, Fold)](
+          "toks" -> (s51Toks(_, _)), "prefix" -> (s51PrefixRows(_, _)),
+          "pairs" -> (s51Pairs(_, _)),
+          // the frozen order is immutable decision data that must survive
+          // compaction/export with the index (the s35 codebook pattern)
+          "order" -> (s51Order(_, _))),
+        s51DeleteBatch, s46PrefixStoreAudit, (in, dir, b) => {
+          s51UpsertBatch(dir)(docs(in), b); in.nDocs }))
+  }
+
+  private def storeFamily(family: String): StoreFamily =
+    Families.collectFirst { case (`family`, f) => f }.getOrElse(
+      throw new IllegalArgumentException(s"unknown store family '$family' " +
+        Families.map(_._1).mkString("(", "|", ")")))
+
+  private def tableNames(family: String): Seq[String] =
+    storeFamily(family).tables.map(_._1)
+
+  /** A family's tables with their served folds bound to one store. */
+  private[graft] def familyTables(spark: SparkSession, dir: String,
+      family: String): Seq[(String, () => DataFrame)] =
+    storeFamily(family).tables.map { case (t, fold) => t -> (() => fold(spark, dir)) }
+
+  /** s40 per-family entry: compact a store by its registry entry. */
+  private def compactFamily(spark: SparkSession, dir: String,
+                            family: String): Unit =
+    compactStore(spark, dir, familyTables(spark, dir, family),
+      storeFamily(family).idCol)
+
   /** s47: maintained-store STATS digest — the `du`/compaction-debt gauge
     * an operator reads between the verbs (s39 deletes, s40 compacts, s44/
     * s46 fsck, s45 time-travels; s47 says WHEN to compact): one row per
@@ -2885,56 +2593,6 @@ object StreamOps {
     * statistics — O(files), not O(rows)); served counts run each table's
     * own fold, the one genuinely data-touching column.
     */
-  /** The family registry: each maintained store family's tables with
-    * their SERVED folds (first table = the primary presence table, whose
-    * id column is [[familyIdCol]]) — one definition shared by the stats
-    * digest (s47), the export verb (s49) and the per-family compaction
-    * entry points' table lists, so a new table cannot be added to a
-    * family in one consumer and missed in another.
-    */
-  private[graft] def familyTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String, family: String): Seq[(String, () => DataFrame)] =
-    family match {
-      case "hash" => Seq(
-        "hash56" -> (() => s32HashRows(spark, dir)),
-        "bands"  -> (() => s32BandIndex(spark, dir)))
-      case "chunk"  => Seq("chunks" -> (() => s34ChunkRows(spark, dir)))
-      case "assign" => Seq("assigned" -> (() => s35Assignment(spark, dir)))
-      case "code"   => Seq("codes" -> (() => s38Codes(spark, dir)))
-      case "cluster" => Seq(
-        "hash56" -> (() => s32HashRows(spark, dir)),
-        "bands"  -> (() => s32BandIndex(spark, dir)),
-        "labels" -> (() => s43Clusters(spark, dir)))
-      case "golden" => Seq(
-        "hash56"   -> (() => s32HashRows(spark, dir)),
-        "bands"    -> (() => s32BandIndex(spark, dir)),
-        "labels"   -> (() => s43Clusters(spark, dir)),
-        "docattrs" -> (() => s48DocAttrs(spark, dir)),
-        "golden"   -> (() => s48Golden(spark, dir)))
-      case "graph" => Seq(
-        "vectors" -> (() => s36Vectors(spark, dir)),
-        "cells"   -> (() => s36Cells(spark, dir)),
-        "edges"   -> (() => s36DirectedEdges(spark, dir)))
-      case "prefix" => Seq(
-        "toks"   -> (() => s51Toks(spark, dir)),
-        "prefix" -> (() => s51PrefixRows(spark, dir)),
-        "pairs"  -> (() => s51Pairs(spark, dir)),
-        // the frozen order is immutable decision data that must survive
-        // compaction/export with the index (the s35 codebook pattern)
-        "order"  -> (() => s51Order(spark, dir)))
-      case other => throw new IllegalArgumentException(
-        s"unknown store family '$other' (hash|chunk|assign|code|cluster|golden|graph|prefix)")
-    }
-
-  /** The primary table's id column per family (tombstone/presence key). */
-  private[graft] def familyIdCol(family: String): String = family match {
-    case "hash" | "cluster" | "golden" | "prefix" => "doc_id"
-    case "chunk"                       => "media_id"
-    case "assign" | "code" | "graph"   => "vec_id"
-    case other => throw new IllegalArgumentException(
-      s"unknown store family '$other' (hash|chunk|assign|code|cluster|golden|graph|prefix)")
-  }
-
   def s47StoreStats(spark: org.apache.spark.sql.SparkSession,
                     dir: String, family: String): DataFrame = {
     val tables = familyTables(spark, dir, family)
@@ -2951,7 +2609,7 @@ object StreamOps {
       val path = s"$dir/$t"
       val exists = pathExists(spark, path)
       val raw = if (!exists) 0L
-        else graft.sources.ReadGuard.readRuns(spark, path).count()
+        else ReadGuard.readRuns(spark, path).count()
       // Same guard for the served fold: a half-initialized or crash-lagged
       // store (the very state a stats gauge is for) must emit a zero row,
       // not throw PATH_NOT_FOUND from inside the fold.
@@ -2967,26 +2625,15 @@ object StreamOps {
   }
 
   /** s46's loud-fail wrapper: fsck one maintained store by family name
-    * (`hash`, `chunk`, `assign`, `code`, `cluster`, `graph`), failing
-    * with every violated invariant — [[s44RequireHealthy]]'s contract
-    * extended to the whole family.
+    * (`hash`, `chunk`, `assign`, `code`, `cluster`, `golden`, `graph`,
+    * `prefix` — the registry's families), failing with every violated
+    * invariant — [[s44RequireHealthy]]'s contract extended to the whole
+    * family.
     */
-  def s46RequireHealthy(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, family: String): Unit = {
-    val audit = family match {
-      case "hash"    => s46HashStoreAudit(spark, dir)
-      case "chunk"   => s46ChunkStoreAudit(spark, dir)
-      case "assign"  => s46AssignStoreAudit(spark, dir)
-      case "code"    => s46CodeStoreAudit(spark, dir)
-      case "cluster" => s46ClusterStoreAudit(spark, dir)
-      case "golden"  => s46GoldenStoreAudit(spark, dir)
-      case "graph"   => s44GraphStoreAudit(spark, dir)
-      case "prefix"  => s46PrefixStoreAudit(spark, dir)
-      case other => throw new IllegalArgumentException(
-        s"unknown store family '$other' (hash|chunk|assign|code|cluster|golden|graph|prefix)")
-    }
-    requireCleanAudit(s"$family store", dir, audit)
-  }
+  def s46RequireHealthy(spark: SparkSession, dir: String,
+                        family: String): Unit =
+    requireCleanAudit(s"$family store", dir,
+      storeFamily(family).audit(spark, dir))
 
   /** s42: codebook-staleness monitor over the MAINTAINED s35 store — the
     * operational twin of the oracle-checked n30 drift report: s35/s36/s38
@@ -3008,15 +2655,8 @@ object StreamOps {
     */
   def s42AssignmentQuality(spark: org.apache.spark.sql.SparkSession,
                            dir: String, baseline: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val live = maskDeleted(
-      graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, s"$dir/assigned"), s"$dir/assigned",
-          "vec_id", "cid", "ccos", "batch_id")
-        .select(col("vec_id"), col("cid"), col("ccos"),
-          col("batch_id").cast("long").as("batch_id"))
-        .distinct(),
-      spark, dir, "vec_id")
+    val live = servedRuns(spark, dir, "assigned", None, Seq("vec_id"),
+      "vec_id", "cid", "ccos").distinct()
     val per = live.groupBy("batch_id")
       .agg(count(lit(1)).as("n_vecs"), avg("ccos").as("mean_ccos"))
     val skew = live.groupBy("batch_id", "cid").agg(count(lit(1)).as("sz"))
@@ -3048,53 +2688,27 @@ object StreamOps {
     * pqAssigned over the same replay + replay idempotence.
     */
   def s38UpsertPqBatch(cbook: DataFrame, dir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val Sim = graft.queries.Similarity
-    val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        val spark = cached.sparkSession
-        requireFreshBatch(spark, dir, batchId, Seq("codes"))
-        Sim.pqAssignToCodebook(
-            Sim.subVectorsOf(
-              Sim.prepareVectors(cached).select("vec_id", "q")), cbook)
-          .select("vec_id", "sub", "code", "dist2")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dir/codes")
-        spark.catalog.refreshByPath(s"$dir/codes")
-      }
-    } finally cached.unpersist()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    upsertFold("code", dir, batch, batchId) { cached =>
+      val Sim = graft.queries.Similarity
+      writeRun(Sim.pqAssignToCodebook(
+          Sim.subVectorsOf(Sim.prepareVectors(cached).select("vec_id", "q")),
+          cbook)
+        .select("vec_id", "sub", "code", "dist2"), s"$dir/codes", batchId)
+    }
 
   def s38PqMaintain(vectors: DataFrame, cbook: DataFrame, dir: String,
                     checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(s38UpsertPqBatch(cbook, dir) _)
-      .start()
+    maintain(vectors, checkpoint)(s38UpsertPqBatch(cbook, dir))
 
   /** Compacted read of the s38-maintained code table: rows are pure
     * functions of (vector, codebook), so replayed batches fold under
     * distinct.
     */
-  def s38Codes(spark: org.apache.spark.sql.SparkSession,
-               dir0: String, asOf: Option[Long] = None): DataFrame = {
-    val dir = resolveAsOfDir(spark, dir0, asOf)
-    val tp = tablePath(spark, dir, "codes", asOf)
-    maskDeleted(
-      asOfRuns(
-        graft.sources.ReadGuard.requireColumns(
-          graft.sources.ReadGuard.readRuns(spark, tp), tp,
-          "vec_id", "sub", "code", "dist2"),
-        spark, dir, asOf)
-        .select(col("vec_id"), col("sub"), col("code"), col("dist2"),
-          col("batch_id")),
-      spark, dir, "vec_id", asOf)
-      .select("vec_id", "sub", "code", "dist2").distinct()
-  }
+  def s38Codes(spark: SparkSession,
+               dir: String, asOf: Option[Long] = None): DataFrame =
+    servedRuns(spark, dir, "codes", asOf, Seq("vec_id"),
+      "vec_id", "sub", "code", "dist2").drop("batch_id").distinct()
 
   /** s14: the fraud pipeline on the SYNTHETIC streaming source — the
     * load-test configuration: `graft.sources.TransactionSource`'s

@@ -576,10 +576,12 @@ class DedupSpec extends SparkSpec {
   /** Ground truth for the d15 joins: brute-force exact Jaccard ≥ τ pairs
     * (d1 < d2) over the same shingle sets.
     */
-  private def bruteJaccardPairs(tauPct: Int): Set[(Long, Long)] = {
+  private def bruteJaccardPairs(tauPct: Int,
+      docs: => org.apache.spark.sql.DataFrame = Tables.documents(spark, sf))
+      : Set[(Long, Long)] = {
     import org.apache.spark.sql.functions._
     import graft.queries.Dedup
-    val tok = Tables.documents(spark, sf)
+    val tok = docs
       .withColumn("tokens", split(col("text"), " "))
       .select(col("doc_id"), explode(expr(
         s"array_distinct(shingles(tokens, ${Dedup.PrefixShingleK}))")).as("t"))
@@ -622,6 +624,39 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     finally idx.unpersist()
     assert(got === brute)
+  }
+
+  test("d15Pairs separates τ = 30 from τ = 50 on a fixture scoring Jaccard 30%–89%") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.queries.Dedup
+    // word 3-gram Jaccard against doc 1: 85% (doc 2), 62% (doc 3) and 36%
+    // (doc 4); doc 2 scores 52% against doc 3 and 33% against doc 4, doc 3
+    // 27% against doc 4, and doc 5 shares no word with any of them — so
+    // the τ = 30 and τ = 50 pair sets differ by exactly (1,4) and (2,4)
+    val base = (0 until 40).map(i => f"w$i%02d")
+    def variant(tag: String, changed: Int*): String =
+      base.indices.map(i => if (changed.contains(i)) s"$tag$i" else base(i))
+        .mkString(" ")
+    val docs = Seq(
+      1L -> base.mkString(" "),
+      2L -> variant("a", 20),
+      3L -> variant("b", 5, 15, 25),
+      4L -> variant("c", 3, 9, 15, 21, 27, 33),
+      5L -> base.map("z" + _).mkString(" ")).toDF("doc_id", "text")
+    def pairsAt(tauPct: Int): Set[(Long, Long)] = {
+      val idx = Dedup.prefixIndexOf(
+        docs.select(col("doc_id"), split(col("text"), " ").as("tokens")),
+        tauPct, Dedup.PrefixShingleK)
+      try Dedup.d15Pairs(idx, tauPct).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally idx.unpersist()
+    }
+    val (at30, at50) = (pairsAt(30), pairsAt(50))
+    assert(at30 === bruteJaccardPairs(30, docs))
+    assert(at50 === bruteJaccardPairs(50, docs))
+    assert(at30 -- at50 === Set((1L, 4L), (2L, 4L)) && at50.nonEmpty,
+      s"τ = 30: $at30, τ = 50: $at50")
   }
 
   test("p06 refresh: statuses partition the delta, bins only on accepted, consistent with p04/t20") {

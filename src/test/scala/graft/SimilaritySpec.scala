@@ -266,11 +266,17 @@ class SimilaritySpec extends SparkSpec {
     assert(jobs <= N24JobsBefore * 2 / 3, s"n24 took $jobs jobs")
   }
 
-  test("n17 leaves no cached relation behind") {
-    SparkEntry.releaseMemos(spark)
-    assert(Similarity.n17IvfRebalance(spark, sf).collect().nonEmpty)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "n17 left cached plans behind after its result was materialized")
+  test("n16, n17 and n27 leave no cached relation behind") {
+    val leaked = Seq[(String, Similarity.Q)](
+      "n16" -> Similarity.n16KcenterSeed,
+      "n17" -> Similarity.n17IvfRebalance,
+      "n27" -> Similarity.n27KmeansIter).filter { case (name, q) =>
+      SparkEntry.releaseMemos(spark)
+      assert(q(spark, sf).collect().nonEmpty, s"$name returned no rows")
+      !spark.sharedState.cacheManager.isEmpty
+    }.map(_._1)
+    assert(leaked.isEmpty,
+      s"cached plans left behind after the result was materialized: $leaked")
   }
 
   test("n26 persisted-graph serving equals n24's in-session batched walk row-for-row") {

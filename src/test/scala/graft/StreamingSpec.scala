@@ -3060,4 +3060,32 @@ class StreamingSpec extends SparkSpec {
     assert(StreamOps.readCompactionStamp(spark, dir) === Some(1L))
     assert(StreamOps.s32HashIndex(spark, dir).count() === 3L)
   }
+
+  test("unknown store family: every family-dispatching verb refuses with the registry's one message, and s50 releases its lease") {
+    import spark.implicits._
+    val dir = tmp("unknown_family")
+    val mdir = tmp("unknown_family_manifest") + "/manifest"
+    val docs = Seq((1L, "a doc", "en", "src", 5L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val noMedia = Seq.empty[(Long, Array[Byte])].toDF("media_id", "payload")
+    val verbs: Seq[(String, () => Unit)] = Seq(
+      "s46RequireHealthy" -> (() => StreamOps.s46RequireHealthy(spark, dir, "nope")),
+      "s47StoreStats" -> (() => { StreamOps.s47StoreStats(spark, dir, "nope"); () }),
+      "s49ExportStore" -> (() => StreamOps.s49ExportStore(spark, dir,
+        tmp("unknown_family_clone") + "/clone", "nope")),
+      "p14TakedownExecute" -> (() => {
+        StreamOps.p14TakedownExecute(Seq(1L).toDF("doc_id"), Map("nope" -> dir)); () }),
+      "s50IngestAll" -> (() => StreamOps.s50IngestAll(docs, noVecs, noMedia,
+        Map("nope" -> dir), mdir, 0L, cents = noVecs, cbook = noVecs)))
+    verbs.foreach { case (verb, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage === "unknown store family 'nope' " +
+        "(hash|chunk|assign|code|cluster|golden|graph|prefix)", verb)
+    }
+    // the refused coordinated ingest released its writer lease: the next
+    // writer acquires it (and breaking it returns that writer's line)
+    StreamOps.s50AcquireLease(spark, mdir, "next-writer")
+    assert(StreamOps.s50BreakLease(spark, mdir).startsWith("next-writer"))
+  }
 }
