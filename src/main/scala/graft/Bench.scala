@@ -19,14 +19,8 @@ object Bench {
     }.min
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.build(cpus)
     // Warm up the JVM/scheduler/codegen/parquet paths so the first measured
     // query isn't charged several seconds of one-time init (measured; skews
     // per-query comparisons otherwise). Touches a real scan + md5 codegen.
@@ -52,8 +46,7 @@ object Bench {
     // Local-iteration filter (the driver never sets this).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     // Sorted name order: deterministic run-to-run comparison.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
+    val results = SparkEntry.selected(only)
       .zipWithIndex
       .map { case ((name, fn), qIdx) =>
         if (qIdx > 0 && qIdx % 50 == 0)

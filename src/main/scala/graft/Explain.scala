@@ -12,7 +12,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * representative set) execute, so partitioning/pushdown/codegen claims
   * can be audited, and each query's Spark job count (its eager build steps
   * plus one `count()` of the result). Usage:
-  * scripts/run.sh Explain [sfDir] [nameRegex]
+  * scripts/run.sh Explain [sfDir] [nameRegex], on `SPARK_GRAFT_CPUS`
+  * cores (default 4; job counts depend on it).
   */
 object Explain {
 
@@ -75,32 +76,23 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val pattern = args.lift(1).getOrElse(
       "^(q01|q05|q09|q12|q20|d01|d04|q33)").r
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => pattern.findFirstIn(name).isDefined }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        var plans = Seq.empty[(String, String)]
-        val jobs = jobsOf(spark) {
-          var df: DataFrame = null
-          plans = plansOf(spark) { df = fn(spark, sfDir); df }
-          df.count(): Unit
-        }
-        plans.foreach { case (step, plan) =>
-          println(s"---------- $step ----------\n$plan")
-        }
-        println(s"---------- jobs: $jobs ----------")
-        // memoized tables would otherwise show up as cache scans in a
-        // later query's plans
-        SparkEntry.releaseMemos(spark)
+    val spark = GraftSession.build(GraftSession.cpus(4))
+    SparkEntry.selected(Some(pattern)).foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      var plans = Seq.empty[(String, String)]
+      val jobs = jobsOf(spark) {
+        var df: DataFrame = null
+        plans = plansOf(spark) { df = fn(spark, sfDir); df }
+        df.count(): Unit
       }
+      plans.foreach { case (step, plan) =>
+        println(s"---------- $step ----------\n$plan")
+      }
+      println(s"---------- jobs: $jobs ----------")
+      // memoized tables would otherwise show up as cache scans in a
+      // later query's plans
+      SparkEntry.releaseMemos(spark)
+    }
     spark.stop()
   }
 }

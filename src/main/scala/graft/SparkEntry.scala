@@ -1,6 +1,8 @@
 package graft
 
+import scala.util.matching.Regex
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Multimodal
 import graft.queries.{Dedup, Extended, Extras, Relational, ScaleOps, Similarity, TextOps, UdfOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -23,50 +25,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.queries ++ TextOps.queries ++ Dedup.queries ++
       Similarity.queries ++ UdfOps.queries ++ Extended.queries ++
-      Extras.queries ++ ScaleOps.queries ++
-      Map(
-        "m01_multimodal_features" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m01MultimodalFeatures(s, d)),
-        "m02_frame_explode" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m02FrameExplode(s, d)),
-        "m03_chunk_dedup" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m03ChunkDedup(s, d)),
-        "m04_cdc_chunks" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m04CdcChunks(s, d)),
-        "m05_manifest" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m05Manifest(s, d)),
-        "m06_phash_neardup" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m06PhashNearDup(s, d)),
-        "m07_tier_report" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m07TierReport(s, d)),
-        "m08_delta_sync" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m08DeltaSync(s, d)),
-        "m09_batch_assembly" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m09BatchAssembly(s, d)),
-        "m10_magic_sniff" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m10MagicSniff(s, d)),
-        "m11_wav_features" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m11WavFeatures(s, d)),
-        "m12_clip_temporal_dedup" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m12ClipTemporalDedup(s, d)),
-        "m13_resize_real" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m13ResizeReal(s, d)),
-        "m14_compressed_features" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m14CompressedFeatures(s, d)),
-        "m15_gc_report" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m15GcReport(s, d)),
-        "m16_wav_resample" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m16WavResample(s, d)),
-        "m17_scene_cuts" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m17SceneCuts(s, d)),
-        "m18_png_decode" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m18PngDecode(s, d)),
-        "m19_png_metadata" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m19PngMetadata(s, d)),
-        "m20_wav_spectral" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m20WavSpectral(s, d)),
-        "m21_wav_frames" ->
-          ((s: SparkSession, d: String) => graft.operators.Multimodal.m21WavFrames(s, d)))
+      Extras.queries ++ ScaleOps.queries ++ Multimodal.queries
+
+  /** The queries whose name `only` matches (all when `None`), sorted by
+    * name: every harness runs them in the same order.
+    */
+  def selected(only: Option[Regex]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
 
   /** The m01/m14 feature oracle: every feature recomputed from the
     * content FORMULAS the real fixtures encode, including the exact
@@ -144,14 +110,12 @@ object SparkEntry {
        |ORDER BY media_id""".stripMargin
   }
 
-  /** Run-boundary release: drops the memoized pair/cluster, graph-ANN and
-    * prefix-sum tables (shared-index realism keeps them alive ACROSS
-    * queries by design) and every cached relation.
+  /** Run-boundary release: the [[RunScope]] (the memoized pair/cluster
+    * and graph-ANN tables, alive ACROSS queries by design, and the query
+    * scope's caches) and every other cached relation.
     */
   def releaseMemos(spark: SparkSession): Unit = {
-    Dedup.clearClusterMemo()
-    Similarity.clearGraphAnnMemo()
-    TextOps.releasePrefixSumCaches()
+    RunScope.release()
     spark.catalog.clearCache()
   }
 
@@ -183,9 +147,9 @@ object SparkEntry {
           // sides can never silently desynchronize (round-5 advice).
           s"""WITH c AS (
             |  SELECT DISTINCT doc_id AS mid,
-            |         md5(substr(text, s, ${graft.operators.Multimodal.DedupChunkBytes})) AS h
+            |         md5(substr(text, s, ${Multimodal.DedupChunkBytes})) AS h
             |  FROM (SELECT doc_id, text,
-            |               unnest(generate_series(1, length(text), ${graft.operators.Multimodal.DedupChunkBytes})) AS s
+            |               unnest(generate_series(1, length(text), ${Multimodal.DedupChunkBytes})) AS s
             |        FROM documents))
             |SELECT a.mid AS m1, b.mid AS m2, COUNT(1) AS n_shared
             |FROM c a JOIN c b ON a.h = b.h AND a.mid < b.mid
@@ -196,10 +160,10 @@ object SparkEntry {
         "m07_tier_report" ->
           s"""WITH c AS (
              |  SELECT doc_id AS media_id,
-             |         md5(substr(text, s, ${graft.operators.Multimodal.DedupChunkBytes})) AS h,
-             |         least(length(text) - s + 1, ${graft.operators.Multimodal.DedupChunkBytes}) AS nb
+             |         md5(substr(text, s, ${Multimodal.DedupChunkBytes})) AS h,
+             |         least(length(text) - s + 1, ${Multimodal.DedupChunkBytes}) AS nb
              |  FROM (SELECT doc_id, text,
-             |               unnest(generate_series(1, length(text), ${graft.operators.Multimodal.DedupChunkBytes})) AS s
+             |               unnest(generate_series(1, length(text), ${Multimodal.DedupChunkBytes})) AS s
              |        FROM documents)),
              |df AS (SELECT h, COUNT(DISTINCT media_id) AS dm FROM c GROUP BY h)
              |SELECT media_id, COUNT(1) AS n_chunks,
@@ -216,10 +180,10 @@ object SparkEntry {
         "m15_gc_report" ->
           s"""WITH slots AS (
              |  SELECT doc_id AS media_id,
-             |         md5(substr(text, s, ${graft.operators.Multimodal.DedupChunkBytes})) AS h,
-             |         least(length(text) - s + 1, ${graft.operators.Multimodal.DedupChunkBytes}) AS nb
+             |         md5(substr(text, s, ${Multimodal.DedupChunkBytes})) AS h,
+             |         least(length(text) - s + 1, ${Multimodal.DedupChunkBytes}) AS nb
              |  FROM (SELECT doc_id, text,
-             |               unnest(generate_series(1, length(text), ${graft.operators.Multimodal.DedupChunkBytes})) AS s
+             |               unnest(generate_series(1, length(text), ${Multimodal.DedupChunkBytes})) AS s
              |        FROM documents)),
              |refs AS (SELECT DISTINCT media_id, h, nb FROM slots),
              |st AS (
@@ -254,15 +218,15 @@ object SparkEntry {
              |md AS (SELECT media_id,
              |              payload || ' updated rev ' || CAST(media_id AS VARCHAR) AS payload
              |       FROM base WHERE media_id % 5 = 0),
-             |bc AS (SELECT DISTINCT md5(substr(payload, s, ${graft.operators.Multimodal.DedupChunkBytes})) AS h
+             |bc AS (SELECT DISTINCT md5(substr(payload, s, ${Multimodal.DedupChunkBytes})) AS h
              |       FROM (SELECT payload,
-             |                    unnest(generate_series(1, length(payload), ${graft.operators.Multimodal.DedupChunkBytes})) AS s
+             |                    unnest(generate_series(1, length(payload), ${Multimodal.DedupChunkBytes})) AS s
              |             FROM base)),
              |mc AS (SELECT media_id,
-             |              md5(substr(payload, s, ${graft.operators.Multimodal.DedupChunkBytes})) AS h,
-             |              least(length(payload) - s + 1, ${graft.operators.Multimodal.DedupChunkBytes}) AS nb
+             |              md5(substr(payload, s, ${Multimodal.DedupChunkBytes})) AS h,
+             |              least(length(payload) - s + 1, ${Multimodal.DedupChunkBytes}) AS nb
              |       FROM (SELECT media_id, payload,
-             |                    unnest(generate_series(1, length(payload), ${graft.operators.Multimodal.DedupChunkBytes})) AS s
+             |                    unnest(generate_series(1, length(payload), ${Multimodal.DedupChunkBytes})) AS s
              |             FROM md))
              |SELECT media_id, COUNT(1) AS n_chunks,
              |       CAST(SUM(CASE WHEN h IN (SELECT h FROM bc) THEN 1 ELSE 0 END) AS BIGINT) AS n_reused,
@@ -276,10 +240,10 @@ object SparkEntry {
         "m05_manifest" ->
           s"""WITH c AS (
              |  SELECT doc_id AS media_id, s AS p,
-             |         md5(substr(text, s, ${graft.operators.Multimodal.DedupChunkBytes})) AS h,
-             |         least(length(text) - s + 1, ${graft.operators.Multimodal.DedupChunkBytes}) AS nb
+             |         md5(substr(text, s, ${Multimodal.DedupChunkBytes})) AS h,
+             |         least(length(text) - s + 1, ${Multimodal.DedupChunkBytes}) AS nb
              |  FROM (SELECT doc_id, text,
-             |               unnest(generate_series(1, length(text), ${graft.operators.Multimodal.DedupChunkBytes})) AS s
+             |               unnest(generate_series(1, length(text), ${Multimodal.DedupChunkBytes})) AS s
              |        FROM documents))
              |SELECT media_id, CAST(COUNT(1) AS BIGINT) AS n_chunks,
              |       CAST(SUM(nb) AS BIGINT) AS n_bytes,

@@ -50,7 +50,7 @@ object Tables {
     * exceed 2^53, so float division would lose precision) or TIMESTAMP(US)
     * without the UTC-adjusted flag (current fixtures — arrives as
     * TIMESTAMP_NTZ). Both normalize to a session-TZ TimestampType (UTC is
-    * pinned in every entrypoint, so NTZ→LTZ is value-identity) and the same
+    * pinned by [[GraftSession]], so NTZ→LTZ is value-identity) and the same
     * epoch-µs instants, keeping every downstream query and oracle stable
     * across fixture regenerations.
     */

@@ -30,15 +30,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32))
     // Local-iteration filter (the driver never sets this): only dump queries
     // whose name matches the regex.
     run(spark, sfDir, outDir, sys.env.get("SPARK_GRAFT_ONLY").map(_.r))
@@ -74,9 +66,7 @@ object Verify {
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
 
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected(only).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -1013,7 +1013,7 @@ object Multimodal {
       // two consumers with different shuffle shapes (df build + the join
       // probe): cache so cdc_chunks + per-chunk md5 over the payload bytes
       // run once, keeping the "one JIT'd pass per payload" contract
-      .cache()
+      .transform(graft.RunScope.query.cache)
     val df = hashed.groupBy("h").agg(countDistinct(col("media_id")).as("dm"))
     hashed.join(df, "h")
       .groupBy("media_id")
@@ -1815,4 +1815,27 @@ object Multimodal {
       .toDF("media_id", "frame_idx", "frame_bytes", "frame_sum")
       .orderBy("media_id", "frame_idx")
   }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "m01_multimodal_features" -> m01MultimodalFeatures _,
+    "m02_frame_explode"       -> m02FrameExplode _,
+    "m03_chunk_dedup"         -> m03ChunkDedup _,
+    "m04_cdc_chunks"          -> m04CdcChunks _,
+    "m05_manifest"            -> m05Manifest _,
+    "m06_phash_neardup"       -> m06PhashNearDup _,
+    "m07_tier_report"         -> m07TierReport _,
+    "m08_delta_sync"          -> m08DeltaSync _,
+    "m09_batch_assembly"      -> m09BatchAssembly _,
+    "m10_magic_sniff"         -> m10MagicSniff _,
+    "m11_wav_features"        -> m11WavFeatures _,
+    "m12_clip_temporal_dedup" -> m12ClipTemporalDedup _,
+    "m13_resize_real"         -> m13ResizeReal _,
+    "m14_compressed_features" -> m14CompressedFeatures _,
+    "m15_gc_report"           -> m15GcReport _,
+    "m16_wav_resample"        -> m16WavResample _,
+    "m17_scene_cuts"          -> m17SceneCuts _,
+    "m18_png_decode"          -> m18PngDecode _,
+    "m19_png_metadata"        -> m19PngMetadata _,
+    "m20_wav_spectral"        -> m20WavSpectral _,
+    "m21_wav_frames"          -> m21WavFrames _)
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.functions.TextHash
 import graft.functions.TextHash._
 
@@ -55,11 +55,7 @@ object Dedup {
     * shingle per permutation (measured 80× slower); this shape keeps md5 in
     * whole-stage codegen and the signature build partial-agg friendly.
     */
-  val d01MinhashLsh: Q = (s, d) => {
-    val p = buildPairs(s, d)
-    pairsMemo((s, d)) = p
-    p.orderBy("d1", "d2")
-  }
+  val d01MinhashLsh: Q = (s, d) => pairsTable.rebuild(s, d).orderBy("d1", "d2")
 
   /** Materialized candidate-pair table (d1 < d2), built by d01 and READ by
     * d05/d07 — the same shared-table shape as [[clusterMemo]]: at 100 TB
@@ -69,11 +65,7 @@ object Dedup {
     * QUERY) always rebuilds and overwrites, so its bench cost stays the
     * honest full build.
     */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def pairsTable(s: SparkSession, d: String): DataFrame =
-    pairsMemo.getOrElseUpdate((s, d), buildPairs(s, d))
+  private val pairsTable = new RunScope.Memo(buildPairs)
 
   /** The candidate-pair PLAN (band self-join, pre-materialization) —
     * exposed separately so PlanSpec can assert the band join is a hash
@@ -251,7 +243,7 @@ object Dedup {
     val informative = sh
       .join(keep, Seq("shingle"), "left_semi")
       .select("doc_id", "shingle")
-      .cache()
+      .transform(RunScope.query.cache)
     val sizes = informative.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = informative.select(col("doc_id").as("d1"), col("shingle"))
     val b = informative.select(col("doc_id").as("d2"), col("shingle"))
@@ -333,8 +325,8 @@ object Dedup {
   }
 
   /** Materialized cluster table (doc_id, cluster) — built by d05, READ by
-    * d06/d14/p03/p05/t29/t31 (every downstream consumer takes
-    * `getOrElseUpdate`, so across a whole verify/bench run the expensive
+    * d06/d14/p03/p05/t29/t31 (every downstream consumer reads it through
+    * the memo, so across a whole verify/bench run the expensive
     * contraction executes exactly once — the written-table contract),
     * exactly the "one shared, checkpointed cluster table both queries
     * read" shape of the round-2 verdict. At 100 TB this memo is a written
@@ -343,15 +335,14 @@ object Dedup {
     * d05 (the clustering QUERY) always recomputes and overwrites — it is
     * the CREATE TABLE AS step, so its bench cost stays the honest full
     * build; d06 (the downstream consumer) reads the memo when present and
-    * builds it only when run standalone (Verify may run d06 first).
+    * builds it only when run standalone (a name filter may select d06 alone).
     */
-  private val clusterMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val clusterMemo = new RunScope.Memo(buildClusterTable)
 
-  /** Test/bench hook: drop memoized pair/cluster tables (checkpoint blocks
-    * of a dropped entry are freed with the session; entries are small).
+  /** Drops the pair and cluster memos alone (the run boundary is
+    * [[RunScope.release]]).
     */
-  def clearClusterMemo(): Unit = { clusterMemo.clear(); pairsMemo.clear() }
+  def clearClusterMemo(): Unit = { clusterMemo.clear(); pairsTable.clear() }
 
   /** Min-label cluster table over an arbitrary (doc_id) corpus and
     * (d1, d2) pair graph — buildClusterTable's core, factored so d32's
@@ -382,11 +373,7 @@ object Dedup {
     * O(log n) rounds — see [[connectedComponents]]. Materializes the
     * cluster table d06 consumes.
     */
-  val d05DedupClusters: Q = (s, d) => {
-    val t = buildClusterTable(s, d)
-    clusterMemo((s, d)) = t
-    t.orderBy("doc_id")
-  }
+  val d05DedupClusters: Q = (s, d) => clusterMemo.rebuild(s, d).orderBy("doc_id")
 
   /** d06: dedup survivors — the actual OUTPUT of the dedup pipeline: one
     * row per cluster, keyed by the kept (minimum) doc_id, with the number
@@ -395,7 +382,7 @@ object Dedup {
     * shared-table fix for the full d05 recomputation it used to do.
     */
   val d06DedupSurvivors: Q = (s, d) =>
-    clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    clusterMemo(s, d)
       .groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size"))
       .select(col("cluster").as("kept_doc"), col("cluster_size"))
@@ -461,7 +448,7 @@ object Dedup {
   }
 
   val d33GoldenRecord: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     goldenRecordsOf(clusters.join(docs, "doc_id"))
@@ -508,7 +495,7 @@ object Dedup {
         when(k1 < k2, col("d1")).otherwise(col("d2")).as("src"),
         when(k1 < k2, col("d2")).otherwise(col("d1")).as("dst"),
         when(k1 < k2, k2).otherwise(k1).as("dkey"))
-      .cache()
+      .transform(RunScope.query.cache)
   }
 
   /** The oriented wedge join: one row per triangle — e1/e2 the wedge at
@@ -602,7 +589,7 @@ object Dedup {
     * no RNG, replayable on any cluster size.
     */
   val p11ClusterSafeSplit: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val base = Tables.documents(s, d)
       .select(col("doc_id"),
         expr("cast(size(split(text, ' ')) as bigint)").as("toks"))
@@ -739,7 +726,7 @@ object Dedup {
 
   val d30ClusterAudit: Q = (s, d) =>
     d30AuditOf(
-      clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d)),
+      clusterMemo(s, d),
       d08ScoredPairs(s, d).select("d1", "d2", "est_pct"))
 
   /** d27: MinHash-estimated CONTAINMENT — the asymmetric score d08's
@@ -799,7 +786,7 @@ object Dedup {
     val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val withDeg = edges.join(deg, "src").cache()
+    val withDeg = edges.join(deg, "src").transform(RunScope.query.cache)
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("pr"))
     for (_ <- 1 to 3) {
       rank = withDeg.join(rank.withColumnRenamed("node", "src"), "src")
@@ -840,7 +827,7 @@ object Dedup {
     val pairs = pairsTable(s, d)
     val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .cache()
+      .transform(RunScope.query.cache)
     var labels = Tables.documents(s, d)
       .select(col("doc_id").as("node"), col("doc_id").as("lbl"))
     for (_ <- 1 to 3) {
@@ -881,11 +868,11 @@ object Dedup {
     * partial-agg groupBys over O(clusters) keys.
     */
   val d24CommunityRefinement: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val m = clusters
       .join(lpaLabels(s, d), clusters("doc_id") === col("node"))
       .select(col("doc_id"), col("cluster"), col("lbl").as("lpa"))
-      .cache()
+      .transform(RunScope.query.cache)
     val agg = m.groupBy("cluster")
       .agg(count(lit(1)).as("sz"), countDistinct(col("lpa")).as("n_communities"))
     val m1 = m.select(col("doc_id").as("d1"), col("cluster"), col("lpa").as("lpa1"))
@@ -928,7 +915,7 @@ object Dedup {
       // three consumers (sizes + both join sides); ReuseExchange only
       // dedupes the two identical join sides, so without this the shingle
       // explode + hash would run twice (harness clearCache()s per query)
-      .cache()
+      .transform(RunScope.query.cache)
     val sizes = shSet.groupBy("source").agg(count(lit(1)).as("n"))
     val inter = shSet.select(col("source").as("s1"), col("h"))
       .join(shSet.select(col("source").as("s2"), col("h")), "h")
@@ -1041,7 +1028,7 @@ object Dedup {
     * ADDITIONS to member REMOVALS).
     */
   val d32ClusterRetraction: Q = (s, d) => {
-    val base = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val base = clusterMemo(s, d)
     retractionFold(pairsTable(s, d), base, d32Retracted)
       .orderBy("doc_id")
   }
@@ -1080,7 +1067,7 @@ object Dedup {
     val vecAgg = Tables.embeddings(s, d)
       .agg(sum(when(d32Retracted(col("vec_id")), 1L).otherwise(0L))
         .as("n_vectors_purged"))
-    val base = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val base = clusterMemo(s, d)
     val touched = base.filter(d32Retracted(col("doc_id")))
       .select("cluster").distinct()
     val clusterAgg = base.join(touched, Seq("cluster"), "left_semi")
@@ -1198,7 +1185,7 @@ object Dedup {
   val d35DedupBias: Q = (s, d) => {
     val attrs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"))
-    val withCl = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val withCl = clusterMemo(s, d)
       .join(attrs, "doc_id")
     val cells = withCl.groupBy("source", "lang").agg(
       count(lit(1)).as("n_before"),
@@ -1256,7 +1243,7 @@ object Dedup {
       .select("doc_id", "source", "n_tokens", "g1", "g2", "eh")
       .localCheckpoint()
     // the survivor elections + rollup over the materialized gate table
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val exactMin = g.filter(col("g2"))
       .groupBy("eh").agg(min("doc_id").as("e_min"))
     val ge = g.join(exactMin, Seq("eh"), "left")
@@ -1413,13 +1400,13 @@ object Dedup {
     val exactMin = docs.groupBy("text").agg(min("doc_id").as("tmin"))
     val st1 = docs.join(exactMin, "text")
       .select(col("doc_id"), (col("doc_id") =!= col("tmin")).as("exact_dup"))
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val surv = clusters.filter(col("doc_id") === col("cluster"))
       .select(col("doc_id").as("sid"))
     val sa = Similarity.ivfAssigned(s, d)
       .join(surv, col("vec_id") === col("sid"))
       .select("vec_id", "q", "nrm", "cid")
-      .cache()
+      .transform(RunScope.query.cache)
     val a = sa.select(col("vec_id").as("v1"), col("q").as("q1"),
                       col("nrm").as("n1"), col("cid"))
     val b = sa.select(col("vec_id").as("v2"), col("q").as("q2"),
@@ -1578,7 +1565,7 @@ object Dedup {
     * collapses almost everything).
     */
   val d14QualitySurvivors: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val quality = TextOps.qualityCols(Tables.documents(s, d))
       .select(col("doc_id"), col("quality"))
     clusters.join(quality, "doc_id")
@@ -1600,7 +1587,7 @@ object Dedup {
     * partial-agg, O(clusters) output.
     */
   val d29PolicyAgreement: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val quality = TextOps.qualityCols(Tables.documents(s, d))
       .select(col("doc_id"), col("quality"))
     val withQ = clusters.join(quality, "doc_id")
@@ -1647,13 +1634,13 @@ object Dedup {
     // re-join the documents table.
     val feats = TextOps.qualityCols(TextOps.gopherCols(docs))
       .select(col("doc_id"), col("keep"), col("quality"), col("n_tokens"))
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     // Cached: `membered` feeds survivor election AND status assignment —
     // without the cache the cluster-join + feature scan runs twice. One
     // narrow row per doc; at 100 TB this is the pipeline's natural stage
     // boundary (the gated-membership table a real curation job would
     // write out between gate and pack).
-    val membered = clusters.join(feats, "doc_id").cache()
+    val membered = clusters.join(feats, "doc_id").transform(RunScope.query.cache)
     val survivors = membered.filter(col("keep"))
       .groupBy("cluster")
       .agg(expr("max_by(doc_id, struct(quality, -doc_id))").as("doc_id"))
@@ -1763,7 +1750,7 @@ object Dedup {
     val deciled = quality.join(broadcast(cum), "quality")
       .crossJoin(broadcast(total))
       .select(col("doc_id"), expr("least(9, n_less * 10 div n_total)").as("decile"))
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val sizes = clusters.groupBy("cluster").agg(count(lit(1)).as("sz"))
     val flagged = clusters.join(sizes, "cluster")
       .select(col("doc_id"), (col("sz") > 1).as("is_dup"))
@@ -1794,7 +1781,7 @@ object Dedup {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("bigint").as("tok"))
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     docs.join(clusters, "doc_id")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -2316,7 +2303,7 @@ object Dedup {
       .select(col("doc_id"), col("source"), col("lang"),
         size(split(col("text"), " ")).cast("bigint").as("tok"),
         col("quality"))
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val base = docs.join(clusters, "doc_id")
     val agg = base.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
@@ -2351,7 +2338,7 @@ object Dedup {
     * groupBy + one per-source groupBy — nothing touches the corpus twice.
     */
   val t33SoftDedup: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val sizes = clusters.groupBy("cluster").agg(count(lit(1)).as("sz"))
     Tables.documents(s, d).select(col("doc_id"), col("source"))
       .join(clusters, "doc_id").join(sizes, "cluster")
@@ -2381,7 +2368,7 @@ object Dedup {
     * no lineage blow-up at 3 rounds); members beyond the cap report −1.
     */
   val d26BfsHops: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val pairs = pairsTable(s, d) // shared materialized pair table (see d01)
     val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
@@ -2415,7 +2402,7 @@ object Dedup {
     * broadcast.
     */
   val p10MixtureTable: Q = (s, d) => {
-    val clusters = clusterMemo.getOrElseUpdate((s, d), buildClusterTable(s, d))
+    val clusters = clusterMemo(s, d)
     val sizes = clusters.groupBy("cluster").agg(count(lit(1)).as("sz"))
     val docs = TextOps.gopherCols(Tables.documents(s, d))
       .select(col("doc_id"), col("source"), col("keep"),

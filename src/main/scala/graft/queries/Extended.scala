@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.functions.TextHash
 
 /** Extended SQL surface beyond the SURVEY §2 core: pivot/unpivot, scalar
@@ -226,9 +226,9 @@ object Extended {
   val x15AccuracySweep: Q = (s, d) => {
     // Private cache owner: prefixSum's internal shard cache registers
     // HERE, so the release below drops exactly this query's caches — not
-    // the global registry, whose mid-run release would take every other
-    // query's shard cache with it.
-    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // the query scope, whose release would take the caches of whatever
+    // else is being built with it.
+    val mine = new RunScope.Caches
     val v = Tables.lineitem(s, d).select(col("l_extendedprice").as("v"))
     val g = v.groupBy("v").agg(count(lit(1)).as("c"))
     val cum = TextOps.prefixSum(g, "v", "c", "cum", includeCurrent = true,
@@ -256,7 +256,7 @@ object Extended {
     // rest of a 300-query run).
     val out = legs.reduce(_.unionByName(_)).orderBy("accuracy").localCheckpoint()
     cum.unpersist(); v.unpersist()
-    TextOps.release(mine)
+    mine.release()
     out
   }
 

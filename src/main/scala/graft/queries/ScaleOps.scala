@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.functions.TextHash
 
 /** Cluster-scale query techniques a 100 TB engine needs beyond the plain
@@ -349,7 +349,7 @@ object ScaleOps {
       .groupBy("grp")
       .agg(expr(s"hll_sketch_agg(o_custkey, $HllLgK)").as("sk"),
            countDistinct(col("o_custkey")).as("n_exact"))
-      .cache()
+      .transform(RunScope.query.cache)
     per.select("grp", "sk").write.mode("overwrite").parquet(out)
     val reloaded = per.sparkSession.read.parquet(out)
       .select(col("grp"), expr("hll_sketch_estimate(sk)").as("est_reloaded"))

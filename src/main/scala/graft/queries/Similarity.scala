@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{RunScope, Tables}
 
 /** Similarity search over the `embeddings` table (SURVEY §2 Part B q33 +
   * the ANN scale path + embedding-cosine near-dup).
@@ -120,7 +120,7 @@ object Similarity {
     * recall against q33's exact result.
     */
   val n01AnnLsh: Q = (s, d) => {
-    val withBucket = prepared(s, d).withColumn("bkt", expr(bucket("q"))).cache()
+    val withBucket = prepared(s, d).withColumn("bkt", expr(bucket("q"))).transform(RunScope.query.cache)
     val qv = withBucket.filter(col("vec_id") === 0)
       .select(col("q").as("qa"), col("nrm").as("na"), col("bkt").as("qbkt"))
     withBucket.filter(col("vec_id") =!= 0)
@@ -151,7 +151,7 @@ object Similarity {
     // reads only the matching bucket partitions (partition pruning).
     val v = prepared(s, d).withColumn("bkt", expr(bucket("q")))
       .select("vec_id", "q", "nrm", "bkt")
-      .cache()
+      .transform(RunScope.query.cache)
     val a = v.select(col("vec_id").as("v1"), col("q").as("q1"),
                      col("nrm").as("n1"), col("bkt"))
     val b = v.select(col("vec_id").as("v2"), col("q").as("q2"),
@@ -394,7 +394,7 @@ object Similarity {
         s"cast(${dot("qa", "q")} as double) / " +
           "sqrt(cast(na as double) * cast(nrm as double))"))
       .select("vec_id", "cid", "cos")
-      .cache()
+      .transform(RunScope.query.cache)
     val goodScored = scored.join(good, Seq("vec_id"), "left_semi")
     val truth = goodScored.orderBy(col("cos").desc, col("vec_id").asc)
       .limit(TopK).select(col("vec_id").as("tid"))
@@ -549,7 +549,7 @@ object Similarity {
     val base = prep.filter(col("vec_id") =!= 0)
       .select("vec_id", "q", "nrm")
       .crossJoin(broadcast(qv))
-      .cache()
+      .transform(RunScope.query.cache)
     def cosm(m: Int) =
       s"""cast(${dot(s"slice(qa, 1, $m)", s"slice(q, 1, $m)")} as double) /
          |sqrt(cast(${dot(s"slice(qa, 1, $m)", s"slice(qa, 1, $m)")} as double) *
@@ -582,7 +582,7 @@ object Similarity {
       .withColumn("cos", expr(
         s"cast(${dot("qa", "q")} as double) / sqrt(cast(na as double) * cast(nrm as double))"))
       .select("vec_id", "cid", "cos")
-      .cache()
+      .transform(RunScope.query.cache)
     val truth = scored.orderBy(col("cos").desc, col("vec_id").asc).limit(TopK)
       .select(col("vec_id").as("tid"))
     val centScores = prep.filter(col("vec_id") < NumCentroids)
@@ -591,7 +591,7 @@ object Similarity {
       .withColumn("qcos", expr(
         s"cast(${dot("qa", "cq")} as double) / sqrt(cast(na as double) * cast(cnrm as double))"))
       .select("pcid", "qcos")
-      .cache()
+      .transform(RunScope.query.cache)
     val reports = NprobeSweep.map { np =>
       val probes = centScores.orderBy(col("qcos").desc, col("pcid").asc)
         .limit(np).select("pcid")
@@ -763,7 +763,7 @@ object Similarity {
       .select(col("vec_id"),
         (col("vec_id") % IvfMonitorBatches).cast("int").as("batch"),
         col("cid"), expr(dot("q", "cq")).as("cdot"))
-      .cache()
+      .transform(RunScope.query.cache)
     val per = cd.groupBy("batch")
       .agg(count(lit(1)).as("n_vecs"), sum("cdot").as("sum_cdot"))
     val skew = cd.groupBy("batch", "cid").agg(count(lit(1)).as("sz"))
@@ -986,11 +986,10 @@ object Similarity {
   private case class GraphAnnParts(adj: DataFrame, allsc: DataFrame,
                                    truth: DataFrame, hubReport: DataFrame)
 
-  private val graphAnnMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), GraphAnnParts]
+  private val graphAnnMemo = new RunScope.Memo(buildGraphAnnParts)
 
-  /** Run-boundary teardown (Verify/Bench/specs): drop the memoized graph
-    * triple; checkpoint blocks free with the references/session.
+  /** Drops the graph-ANN memo alone (the run boundary is
+    * [[RunScope.release]]).
     */
   def clearGraphAnnMemo(): Unit = graphAnnMemo.clear()
 
@@ -1164,7 +1163,7 @@ object Similarity {
     * rebuild.
     */
   private[graft] def builtAdjacency(s: SparkSession, d: String): DataFrame =
-    graphAnnMemo.getOrElseUpdate((s, d), buildGraphAnnParts(s, d)).adj
+    graphAnnMemo(s, d).adj
 
   /** The batched walk over an arbitrary adjacency — the s36 serving pin
     * runs it against the maintained edge table.
@@ -1176,9 +1175,7 @@ object Similarity {
   val n22GraphAnn: Q = (s, d) => {
     // n22 is the index BUILD (the CREATE TABLE AS step): always recompute
     // and overwrite the memo so its bench cost stays the honest full build.
-    val parts = buildGraphAnnParts(s, d)
-    graphAnnMemo((s, d)) = parts
-    parts.hubReport.orderBy("hop")
+    graphAnnMemo.rebuild(s, d).hubReport.orderBy("hop")
   }
 
   /** n23: LAYERED entry — the hierarchy that puts the H in HNSW, as a
@@ -1204,8 +1201,8 @@ object Similarity {
   val n23LayeredAnn: Q = (s, d) => {
     // Consumer side of the memo: reads the shared (graph, scoring, truth,
     // hub-walk) build n22 materialized, building only when run standalone
-    // (Verify may run n23 first) — d06's getOrElseUpdate discipline.
-    val parts = graphAnnMemo.getOrElseUpdate((s, d), buildGraphAnnParts(s, d))
+    // (a name filter may select n23 alone) — d06's memo discipline.
+    val parts = graphAnnMemo(s, d)
     // layered entry: greedy top-layer routing — best BeamSeeds centroids
     // by query cosine (centroids are corpus rows, so allsc already
     // carries their scores; the query's own row, cid 0, is excluded)
@@ -1250,7 +1247,7 @@ object Similarity {
     * bounded by batch × beam × degree, independent of corpus size.
     */
   val n24BatchedBeam: Q = (s, d) => {
-    val parts = graphAnnMemo.getOrElseUpdate((s, d), buildGraphAnnParts(s, d))
+    val parts = graphAnnMemo(s, d)
     batchedBeamWalk(s, d, parts.adj)
   }
 
@@ -1452,7 +1449,7 @@ object Similarity {
     */
   val n26GraphServe: Q = (s, d) => {
     val out = s"${annStoreRoot(s)}/ann_graph_store"
-    val parts = graphAnnMemo.getOrElseUpdate((s, d), buildGraphAnnParts(s, d))
+    val parts = graphAnnMemo(s, d)
     parts.adj.write.mode("overwrite").parquet(s"$out/adjacency")
     batchedBeamWalk(s, d, graft.sources.ReadGuard.requireColumns(
       s.read.parquet(s"$out/adjacency"), s"$out/adjacency", "src", "dst"))
@@ -1471,7 +1468,7 @@ object Similarity {
     * row-for-row (SimilaritySpec pin; oracle = n24's text verbatim).
     */
   val n28OndemandBeam: Q = (s, d) => {
-    val parts = graphAnnMemo.getOrElseUpdate((s, d), buildGraphAnnParts(s, d))
+    val parts = graphAnnMemo(s, d)
     batchedBeamWalk(s, d, parts.adj, onDemand = true)
   }
 
@@ -1816,20 +1813,20 @@ object Similarity {
       .select(col("q").as("qa"), col("nrm").as("na"))
     val exact = prep.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
       .withColumn("d2", expr("na + nrm - 2 * vec_dot(qa, q)"))
-      .select("vec_id", "d2").cache()
+      .select("vec_id", "d2").transform(RunScope.query.cache)
     val truth = exact.orderBy(col("d2").asc, col("vec_id").asc).limit(TopK)
       .select(col("vec_id").as("tid"))
     val adcAll = pqAssigned(s, d).filter(col("vec_id") =!= 0)
       .join(broadcast(pqQueryTable(s, d)), Seq("sub", "code"))
       .groupBy("vec_id").agg(sum("qd2").as("adc"))
       .join(ivfAssigned(s, d).select("vec_id", "cid"), "vec_id")
-      .cache()
+      .transform(RunScope.query.cache)
     val centScores = prep.filter(col("vec_id") < NumCentroids)
       .select(col("vec_id").as("pcid"), col("q").as("cq"), col("nrm").as("cnrm"))
       .crossJoin(broadcast(qv))
       .withColumn("qcos", expr(
         s"cast(${dot("qa", "cq")} as double) / sqrt(cast(na as double) * cast(cnrm as double))"))
-      .select("pcid", "qcos").cache()
+      .select("pcid", "qcos").transform(RunScope.query.cache)
     val reports = NprobeSweep.map { np =>
       val probes = centScores.orderBy(col("qcos").desc, col("pcid").asc)
         .limit(np).select("pcid")
@@ -1871,7 +1868,7 @@ object Similarity {
     * engines. The assigned table is cached once: it is both join sides.
     */
   val d11SemDedup: Q = (s, d) => {
-    val assigned = ivfAssigned(s, d).select("vec_id", "q", "nrm", "cid").cache()
+    val assigned = ivfAssigned(s, d).select("vec_id", "q", "nrm", "cid").transform(RunScope.query.cache)
     val a = assigned.select(col("vec_id").as("v1"), col("q").as("q1"),
                             col("nrm").as("n1"), col("cid"))
     val b = assigned.select(col("vec_id").as("v2"), col("q").as("q2"),
@@ -1903,7 +1900,7 @@ object Similarity {
   val n08AnnRecall: Q = (s, d) => {
     val v = prepared(s, d).withColumn("bkt", expr(bucket("q")))
       .select("vec_id", "q", "nrm", "bkt")
-      .cache()
+      .transform(RunScope.query.cache)
     val qv = v.filter(col("vec_id") === 0)
       .select(col("q").as("qa"), col("nrm").as("na"), col("bkt").as("qbkt"))
     def scored(df: DataFrame): DataFrame = df
@@ -1945,7 +1942,7 @@ object Similarity {
   val n09AnnMultiprobe: Q = (s, d) => {
     val v = prepared(s, d).withColumn("bkt", expr(bucket("q")))
       .select("vec_id", "q", "nrm", "bkt")
-      .cache()
+      .transform(RunScope.query.cache)
     val qv = v.filter(col("vec_id") === 0)
       .select(col("q").as("qa"), col("nrm").as("na"), col("bkt").as("qbkt"))
     val flips = (0 until NumPlanes).map(j => s"qbkt ^ ${1 << j}")
@@ -1980,7 +1977,7 @@ object Similarity {
     * re-rank.
     */
   val n11AnnSq8: Q = (s, d) => {
-    val p = prepared(s, d).cache()
+    val p = prepared(s, d).transform(RunScope.query.cache)
     val stats = p.select(posexplode(col("q")).as(Seq("i", "v")))
       .groupBy("i").agg(min("v").as("mn"), max("v").as("mx"))
       .agg(expr("transform(array_sort(collect_list(struct(i, mn))), x -> x.mn)").as("mns"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.functions.TextHash
 
 /** Text-analysis suite over the `documents` table (SURVEY §2 Part B q29/q34
@@ -292,6 +292,11 @@ object TextOps {
   /** Token budget per packed training sequence (t07). */
   val PackBudget = 4096L
 
+  /** Releases the query scope's caches, prefixSum's ranged shards among
+    * them (see [[RunScope.query]]).
+    */
+  def releasePrefixSumCaches(): Unit = RunScope.query.release()
+
   /** Distributed prefix sum of `valueCol` in `orderCol` order — the
     * two-pass range-partitioned spelling that replaces the naive global
     * `Window.orderBy(...)` (which Spark executes as a SINGLE partition —
@@ -314,48 +319,15 @@ object TextOps {
     *
     * `numParts` defaults to the session's shuffle parallelism (round-3
     * verdict item 3 — a hard-coded 32 would under-partition a real
-    * cluster).
+    * cluster). `owner` holds the ranged-shard cache: the query scope, or
+    * the caller's own [[RunScope.Caches]] when it releases its caches
+    * before returning (x15).
     */
-  /** The default registry for the ranged-shard caches [[prefixSum]]
-    * creates (one per call); Bench/Verify teardown releases it at the run
-    * boundary. A query that materializes-then-releases its OWN result
-    * (x15's pattern) passes a private `owner` buffer instead and
-    * unpersists exactly the caches it created — releasing the global
-    * registry mid-run would also drop every other query's shard cache
-    * (safe only under strict sequencing, and needlessly wide even then).
-    */
-  private val prefixSumCaches =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  def releasePrefixSumCaches(): Unit = release(prefixSumCaches)
-
-  /** Unpersist and clear every cache registered in `owner`. */
-  def release(owner: scala.collection.mutable.Buffer[DataFrame]): Unit =
-    owner.synchronized {
-      owner.foreach(_.unpersist())
-      owner.clear()
-    }
-
-  /** Register `df` in `owner`, first dropping entries something else
-    * already unpersisted (the harness `clearCache()`s between queries, so
-    * over a 300-query run the registry would otherwise grow one dead
-    * reference per prefixSum/prefixMax call — advice r07). Cheap: the
-    * registry is at most a few entries between clearCache boundaries.
-    */
-  private def register(owner: scala.collection.mutable.Buffer[DataFrame],
-                       df: DataFrame): Unit =
-    owner.synchronized {
-      val live = owner.filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      owner.clear()
-      owner ++= live
-      owner += df
-    }
-
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String,
                 outCol: String, includeCurrent: Boolean,
                 keyCols: Seq[String] = Nil,
                 numParts: Int = -1,
-                owner: scala.collection.mutable.Buffer[DataFrame] = prefixSumCaches)
+                owner: RunScope.Caches = RunScope.query)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts =
@@ -365,13 +337,11 @@ object TextOps {
     // cache: BOTH passes (local sums + per-partition totals) read the
     // ranged table; without it the upstream plan runs twice. At 100 TB
     // this materialization is the written range-ordered shard table.
-    // Lifetime is one query — the harness clearCache()s after the action,
-    // and a query that materializes-then-releases its own result can drop
-    // it earlier via [[releasePrefixSumCaches]].
-    val ranged = df.repartitionByRange(parts, (keyCols :+ orderCol).map(col): _*)
-      .withColumn("_pid", spark_partition_id())
-      .cache()
-    register(owner, ranged)
+    // Lifetime is one query: `owner` (the query scope unless the caller
+    // passes its own) holds it until the result has been read.
+    val ranged = owner.cache(
+      df.repartitionByRange(parts, (keyCols :+ orderCol).map(col): _*)
+        .withColumn("_pid", spark_partition_id()))
     val wLocal = Window.partitionBy(("_pid" +: keyCols).map(col): _*)
       .orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, upper)
@@ -413,7 +383,7 @@ object TextOps {
                 outCol: String, includeCurrent: Boolean,
                 descending: Boolean = false,
                 numParts: Int = -1,
-                owner: scala.collection.mutable.Buffer[DataFrame] = prefixSumCaches)
+                owner: RunScope.Caches = RunScope.query)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts =
@@ -422,11 +392,9 @@ object TextOps {
     val upper = if (includeCurrent) 0L else -1L
     def ord = if (descending) col(orderCol).desc else col(orderCol).asc
     // cache: both passes read the ranged table (same contract as prefixSum,
-    // including registration in the run-boundary release registry).
-    val ranged = df.repartitionByRange(parts, ord)
-      .withColumn("_pid", spark_partition_id())
-      .cache()
-    register(owner, ranged)
+    // including its owner).
+    val ranged = owner.cache(df.repartitionByRange(parts, ord)
+      .withColumn("_pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("_pid")).orderBy(ord)
       .rowsBetween(Window.unboundedPreceding, upper)
     val local = ranged.withColumn("_loc",

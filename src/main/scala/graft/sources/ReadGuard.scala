@@ -63,26 +63,27 @@ object ReadGuard {
     * (per [[widen]]'s ladder — narrowing/kind changes stay loud), by
     * reading each run's footer schema (one cheap metadata read per run,
     * never a data scan) and, only when they differ, re-reading the whole
-    * table under the widened schema. The fast path (all runs agree) is
-    * the plain read. Columns absent from some runs read as null there
-    * (the additive-evolution tolerance, unchanged).
+    * table under the widened schema. The fast path (all runs agree) reads
+    * with the plain read's schema. Columns absent from some runs read as
+    * null there (the additive-evolution tolerance, unchanged).
     */
-  /** Schema-decision memo: (path, run-name set, content fingerprint) →
-    * widened schema, or None for the plain-read fast path. Runs change
-    * only when a batch lands or a compaction rewrites — between those
-    * events every serve read of the table would otherwise pay one footer
-    * read PER RUN just to rediscover that nothing evolved. The key
-    * self-invalidates on any run change — INCLUDING an in-place rewrite
-    * of an existing `batch_id=N` partition (a redelivered batch under
-    * dynamic partition overwrite can land an evolved schema at the same
-    * run name — r13 ADVICE: the name-only key served the stale decision
-    * and a plain mixed-footer read could pick the narrow schema): the
-    * fingerprint folds every run's file names, lengths and modification
-    * times, one cheap directory listing per run, no footer read. Bounded
-    * by the number of live store tables in the JVM.
+  /** Read-schema memo: (path, run-name set, content fingerprint) → the
+    * full schema the table reads with (the plain read's, `batch_id` typed
+    * as partition inference typed it, or the widened one). A hit reads
+    * with `.schema(...)`, which skips both the per-run footer reads and
+    * the schema-inference Spark job a plain `spark.read.parquet` starts.
+    * Runs change only when a batch lands or a compaction rewrites, and
+    * the key self-invalidates on any run change — INCLUDING an in-place
+    * rewrite of an existing `batch_id=N` partition (a redelivered batch
+    * under dynamic partition overwrite can land an evolved schema at the
+    * same run name — r13 ADVICE: the name-only key served the stale
+    * decision and a plain mixed-footer read could pick the narrow
+    * schema): the fingerprint folds every run's file names, lengths and
+    * modification times, one cheap directory listing per run, no footer
+    * read. Bounded by the number of live store tables in the JVM.
     */
   private val runSchemaMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Seq[String], Long), Option[StructType]]
+    scala.collection.concurrent.TrieMap.empty[(String, Seq[String], Long), StructType]
 
   def readRuns(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -101,23 +102,26 @@ object ReadGuard {
           x * 31 + java.lang.Long.hashCode(st.getModificationTime)
         }
     }
-    val decision = runSchemaMemo.getOrElseUpdate((path, runs, fingerprint), {
-      val schemas = runs.map(r => spark.read.parquet(s"$path/$r").schema)
-      if (schemas.distinct.size == 1) None
-      else {
-        val fields =
-          scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-        for (sch <- schemas; f <- sch.fields)
-          fields(f.name) = fields.get(f.name)
-            .map(widen(path, f.name, _, f.dataType)).getOrElse(f.dataType)
-        Some(StructType(
-          fields.map { case (n, t) => StructField(n, t, nullable = true) }
-            .toSeq :+ StructField("batch_id", LongType, nullable = true)))
-      }
-    })
-    decision match {
-      case None          => spark.read.parquet(path)
-      case Some(widened) => spark.read.schema(widened).parquet(path)
+    val key = (path, runs, fingerprint)
+    runSchemaMemo.get(key) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val schemas = runs.map(r => spark.read.parquet(s"$path/$r").schema)
+        val df =
+          if (schemas.distinct.size == 1) spark.read.parquet(path)
+          else {
+            val fields =
+              scala.collection.mutable.LinkedHashMap.empty[String, DataType]
+            for (sch <- schemas; f <- sch.fields)
+              fields(f.name) = fields.get(f.name)
+                .map(widen(path, f.name, _, f.dataType)).getOrElse(f.dataType)
+            spark.read.schema(StructType(
+              fields.map { case (n, t) => StructField(n, t, nullable = true) }
+                .toSeq :+ StructField("batch_id", LongType, nullable = true)))
+              .parquet(path)
+          }
+        runSchemaMemo(key) = df.schema
+        df
     }
   }
 }

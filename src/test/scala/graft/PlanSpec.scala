@@ -948,14 +948,24 @@ class PlanSpec extends SparkSpec {
     // built — and its plans audited — by the first query that reads it, and
     // none leaks into later suites. Releasing per query would only rebuild
     // and re-audit the same memo plans for every later reader.
+    // After each build the query scope is released: a query whose cache
+    // is in no scope leaves it registered, and is named below.
     SparkEntry.releaseMemos(spark)
-    val captured = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val leaked = scala.collection.mutable.ArrayBuffer.empty[String]
+    val captured = SparkEntry.selected(None).map { case (name, fn) =>
       val plans =
         try Explain.plansOf(spark)(fn(spark, sf))
         catch { case e: Throwable => fail(s"$name failed to plan: $e") }
+      RunScope.query.release()
+      if (!spark.sharedState.cacheManager.isEmpty) {
+        leaked += name
+        spark.catalog.clearCache()
+      }
       name -> plans
     }
     SparkEntry.releaseMemos(spark)
+    assert(leaked.isEmpty,
+      s"queries left a cached relation outside the query scope: ${leaked.mkString(" ")}")
     // these queries materialize their heavy sub-plans while they are built;
     // without their eager plans the gate would audit only RDD scans
     val materializing = Seq("d15_prefix_filter_join", "d16_containment_join",

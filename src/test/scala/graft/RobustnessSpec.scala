@@ -84,6 +84,27 @@ class RobustnessSpec extends SparkSpec {
       e.getMessage.contains("doc_id"), e.getMessage)
   }
 
+  test("ReadGuard: a repeated read of an unchanged run table starts no Spark job") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.ReadGuard
+    val dir = Files.createTempDirectory("reread_store").toString
+    val uniform = s"$dir/uniform"
+    val widened = s"$dir/widened"
+    val ids = spark.range(0, 40).select(col("id").as("doc_id"))
+    ids.write.parquet(s"$uniform/batch_id=0")
+    ids.write.parquet(s"$uniform/batch_id=1")
+    ids.select(col("doc_id").cast("int").as("doc_id")).write.parquet(s"$widened/batch_id=0")
+    ids.write.parquet(s"$widened/batch_id=1")
+    for (path <- Seq(uniform, widened)) {
+      val first = ReadGuard.readRuns(spark, path)
+      var again: org.apache.spark.sql.DataFrame = null
+      val jobs = Explain.jobsOf(spark) { again = ReadGuard.readRuns(spark, path) }
+      assert(jobs === 0, s"$path: the second read started $jobs jobs")
+      assert(again.schema === first.schema, path)
+      assert(again.exceptAll(first).isEmpty && first.exceptAll(again).isEmpty, path)
+    }
+  }
+
   test("media codecs under fuzz: decode returns or fails LOUDLY — never crashes or hangs") {
     // The codecs run inside long-lived executor tasks over untrusted
     // bytes; the contract is a typed IllegalArgumentException (the

@@ -128,23 +128,8 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     assume(sys.env.contains("SPARK_GRAFT_SCALE_REHEARSAL"),
       "opt-in heavy run: SPARK_GRAFT_SCALE_REHEARSAL=1 " +
         "sbt -batch 'testOnly graft.ScaleRehearsalSpec' (run alone)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // a 10x run on a shared box can stall for minutes (full GC while
-      // the corpus caches churn, neighbor load); the default 120 s
-      // heartbeat timeout then kills the local executor mid-suite —
-      // heartbeats are JVM-internal in local mode, so a generous timeout
-      // costs nothing
-      .config("spark.network.timeout", "900s")
-      .config("spark.executor.heartbeatInterval", "120s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(16)
+    val spark = GraftSession.build(cpus)
     val base = "target/scale_rehearsal"
     val dir1 = s"$base/x1"
     val dir10 = s"$base/x$Copies"
@@ -152,12 +137,10 @@ class ScaleRehearsalSpec extends AnyFunSuite {
     buildCorpus(spark, dir1, 1)
     buildCorpus(spark, dir10, Copies)
     buildCorpus(spark, dir3, QuadraticCopies)
-    val queries = SparkEntry.queries.toSeq
-      .filter { case (k, _) => Heaviest.exists(h => k.startsWith(h + "_")) }
-      .sortBy(_._1)
+    val queries = SparkEntry.selected(Some(Heaviest.mkString("^(", "|", ")_").r))
     assert(queries.size === Heaviest.size,
       s"heaviest-query prefixes must resolve 1:1, got ${queries.map(_._1)}")
-    def canary(): Double = Bench.cpuCanary(spark, cpus.toInt)
+    def canary(): Double = Bench.cpuCanary(spark, cpus)
     // min-of-2 at 1x (short runs need the noise floor); SINGLE pass at
     // 10x — multi-minute runs self-average, and a second pass of the
     // fixed-K graph-ANN leg would double the suite's half-hour bill for
