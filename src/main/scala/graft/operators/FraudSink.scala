@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.sql.{Connection, DriverManager, Types}
+import java.sql.{Connection, DriverManager, SQLException, Types}
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -106,8 +106,8 @@ object FraudSink {
     write(batch, url, table, props, Some(createSql), BatchSize, NumPartitions)
 
   /** The one writer behind [[append]] and [[appendBatch]]: each non-empty
-    * partition opens one connection, runs `createSql` if given, and inserts
-    * its rows in one transaction.
+    * partition runs `createSql` if given and inserts its rows in one
+    * [[inTransaction]].
     */
   private def write(df: DataFrame, url: String, table: String,
                     props: Properties, createSql: Option[String],
@@ -116,37 +116,70 @@ object FraudSink {
     val nullTypes = cols.map(f => jdbcType(f.dataType))
     val insertSql = s"INSERT INTO $table (${cols.map(_.name).mkString(", ")}) " +
       s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    df.coalesce(numPartitions).foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
+    inTransaction(df, numPartitions, url, props, createSql) { (conn, rows) =>
+      val st = conn.prepareStatement(insertSql)
+      try {
+        var pending = 0
+        rows.foreach { r =>
+          var i = 0
+          while (i < nullTypes.length) {
+            if (r.isNullAt(i)) st.setNull(i + 1, nullTypes(i))
+            else st.setObject(i + 1, r.get(i))
+            i += 1
+          }
+          st.addBatch()
+          pending += 1
+          if (pending == batchSize) { st.executeBatch(); pending = 0 }
+        }
+        if (pending > 0) st.executeBatch()
+      } finally st.close()
+    }
+  }
+
+  /** The per-partition JDBC transaction every sink writer runs, in one
+    * executor-side `foreachPartition` over `df` coalesced to at most
+    * `numPartitions`: a partition opens its connection only when it holds
+    * a row (A9: an empty batch opens none and creates no table), runs
+    * `createSql` if given with autocommit on ([[ensureTable]], A10), then
+    * `body` over its rows in one transaction — commit, rollback on
+    * failure — and closes the connection. A transaction the database
+    * rolls back for a transient conflict (SQLState class 40: Derby refuses
+    * an identity-range allocation with 40XL1 when partitions insert into a
+    * new table at once) is replayed from the partition's buffered rows, up
+    * to [[TxAttempts]] times; nothing of it was committed.
+    */
+  private[operators] def inTransaction(df: DataFrame, numPartitions: Int,
+      url: String, props: Properties, createSql: Option[String])(
+      body: (Connection, Iterator[Row]) => Unit): Unit =
+    df.coalesce(numPartitions).foreachPartition { part: Iterator[Row] =>
+      if (part.hasNext) {
+        val rows = part.toVector
         val conn = DriverManager.getConnection(url, props)
         try {
           createSql.foreach(ensureTable(conn, _))
           conn.setAutoCommit(false)
-          try {
-            val st = conn.prepareStatement(insertSql)
-            try {
-              var pending = 0
-              rows.foreach { r =>
-                var i = 0
-                while (i < nullTypes.length) {
-                  if (r.isNullAt(i)) st.setNull(i + 1, nullTypes(i))
-                  else st.setObject(i + 1, r.get(i))
-                  i += 1
-                }
-                st.addBatch()
-                pending += 1
-                if (pending == batchSize) { st.executeBatch(); pending = 0 }
-              }
-              if (pending > 0) st.executeBatch()
-            } finally st.close()
-            conn.commit()
-          } catch {
-            case t: Throwable => conn.rollback(); throw t
-          }
+          def attempt(n: Int): Unit =
+            try { body(conn, rows.iterator); conn.commit() }
+            catch {
+              case e: SQLException if n < TxAttempts && transient(e) =>
+                conn.rollback(); Thread.sleep(50L * n); attempt(n + 1)
+              case t: Throwable => conn.rollback(); throw t
+            }
+          attempt(1)
         } finally conn.close()
       }
     }
-  }
+
+  private val TxAttempts = 3
+
+  /** The database rolled the transaction back (SQLState class 40) —
+    * anywhere in the cause chain, as a batch failure wraps its statement's.
+    */
+  private def transient(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: SQLException => Option(s.getSQLState).exists(_.startsWith("40"))
+      case _ => false
+    }
 
   /** The JDBC type [[write]] binds a null of this column type as. */
   private def jdbcType(dt: DataType): Int = dt match {

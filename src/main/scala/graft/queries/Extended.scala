@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.{RunScope, Tables}
 import graft.functions.TextHash
+import Relational.{dec, decD}
 
 /** Extended SQL surface beyond the SURVEY §2 core: pivot/unpivot, scalar
   * and IN subqueries, deterministic hash sampling. Same determinism rules
@@ -14,13 +14,6 @@ import graft.functions.TextHash
 object Extended {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  /** Decimal-exact math, double final representation: the driver's value
-    * hash diverges on DECIMAL output columns (round-1 lesson), so every
-    * final schema is decimal-free; oracles mirror with CAST(... AS DOUBLE).
-    */
-  private def decD(c: Column): Column = c.cast(DecimalType(18, 2)).cast("double")
 
   /** q35: pivot — returnflag columns per linestatus. The pivot values are
     * DECLARED (not discovered) so the plan is a single pass with no

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.operators.SkewJoin
+import Relational.{dec, decD}
 
 /** Typed row for q72's Dataset[T] surface (top-level for a clean encoder). */
 final case class OrderRow(o_orderkey: Long, o_custkey: Long,
@@ -20,9 +21,6 @@ final case class OrderRow(o_orderkey: Long, o_custkey: Long,
 object Extras {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  private def decD(c: Column): Column = c.cast(DecimalType(18, 2)).cast("double")
 
   /** q54: map functions — JSON props parsed to map<string,int>, then
     * size/keys/values/element_at. The oracle mirrors with DuckDB's JSON

@@ -23,9 +23,12 @@ object Relational {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
+  /** DECIMAL(18,2) accumulation (see object Scaladoc) — the one definition
+    * every query suite's decimal-exact sums use.
+    */
+  private[queries] def dec(c: Column): Column = c.cast(DecimalType(18, 2))
   /** Decimal-exact math, double final representation (see object Scaladoc). */
-  private def decD(c: Column): Column = c.cast(DecimalType(18, 2)).cast("double")
+  private[queries] def decD(c: Column): Column = dec(c).cast("double")
 
   // ---------------------------------------------------------------- filters
 

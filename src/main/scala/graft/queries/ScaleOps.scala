@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{RunScope, Tables}
 import graft.functions.TextHash
+import Relational.decD
 
 /** Cluster-scale query techniques a 100 TB engine needs beyond the plain
   * SQL surface: sketch-based pre-filters (Bloom, Count-Min), data-layout
@@ -17,8 +18,6 @@ import graft.functions.TextHash
 object ScaleOps {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def decD(c: Column): Column = c.cast(DecimalType(18, 2)).cast("double")
 
   // ---------------------------------------------------------------- x03
 

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.{RunScope, Tables}
 import graft.functions.TextHash
+import Relational.{dec, decD}
 
 /** Text-analysis suite over the `documents` table (SURVEY §2 Part B q29/q34
   * plus the LLM-pipeline text ops: language-ID, quality scoring, token
@@ -20,12 +20,6 @@ import graft.functions.TextHash
 object TextOps {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  /** Decimal-exact math, double final representation (driver hashes diverge
-    * on DECIMAL output columns — round-1 lesson; oracle mirrors the cast).
-    */
-  private def decD(c: Column): Column = c.cast(DecimalType(18, 2)).cast("double")
 
   /** q29: tokenize + global token frequency — the canonical explode/groupBy
     * word count. Partial aggregation makes the shuffle carry one row per
@@ -317,7 +311,7 @@ object TextOps {
     * slice touching that partition), still metadata-scale — gets its
     * per-key prefix sum from a window over `_pid` alone.
     *
-    * `numParts` defaults to the session's shuffle parallelism (round-3
+    * The range count is the session's shuffle parallelism (round-3
     * verdict item 3 — a hard-coded 32 would under-partition a real
     * cluster). `owner` holds the ranged-shard cache: the query scope, or
     * the caller's own [[RunScope.Caches]] when it releases its caches
@@ -326,13 +320,10 @@ object TextOps {
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String,
                 outCol: String, includeCurrent: Boolean,
                 keyCols: Seq[String] = Nil,
-                numParts: Int = -1,
                 owner: RunScope.Caches = RunScope.query)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parts =
-      if (numParts > 0) numParts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val upper = if (includeCurrent) 0L else -1L
     // cache: BOTH passes (local sums + per-partition totals) read the
     // ranged table; without it the upstream plan runs twice. At 100 TB
@@ -348,7 +339,7 @@ object TextOps {
     val local = ranged.withColumn("_loc",
       coalesce(sum(col(valueCol).cast("bigint")).over(wLocal), lit(0L)))
     // `pmod(_pid, 1)` partition key: same single-reducer execution (correct
-    // here — the input is ≤ numParts rows per key-slice, metadata-scale),
+    // here — the input is ≤ `parts` rows per key-slice, metadata-scale),
     // but a DEFINED partition spec that survives the optimizer, so
     // WindowExec doesn't emit its global-window WARN into every driver log
     // for a window that is bounded by design (lit(0) and `_pid * 0` are
@@ -361,7 +352,7 @@ object TextOps {
       .withColumn("_off", coalesce(sum("_t").over(wOff), lit(0L)))
       .select(("_pid" +: keyCols :+ "_off").map(col): _*)
       // one row per (partition, key-slice): the windows above run over
-      // ~numParts rows per key — metadata-scale, broadcastable
+      // ~`parts` rows per key — metadata-scale, broadcastable
     local.join(broadcast(offsets), "_pid" +: keyCols)
       .withColumn(outCol, col("_loc") + col("_off"))
       .drop("_pid", "_loc", "_off")
@@ -382,13 +373,10 @@ object TextOps {
   def prefixMax(df: DataFrame, orderCol: String, valueCol: String,
                 outCol: String, includeCurrent: Boolean,
                 descending: Boolean = false,
-                numParts: Int = -1,
                 owner: RunScope.Caches = RunScope.query)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parts =
-      if (numParts > 0) numParts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val upper = if (includeCurrent) 0L else -1L
     def ord = if (descending) col(orderCol).desc else col(orderCol).asc
     // cache: both passes read the ranged table (same contract as prefixSum,

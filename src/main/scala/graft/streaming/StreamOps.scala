@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.FraudPipeline
@@ -540,15 +540,20 @@ object StreamOps {
     * understates the base when a batch wrote vectors/cells but no edges).
     */
   private def maxBatchIn(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Option[Long] = {
+                         path: String): Option[Long] =
+    runBatches(spark, path).reduceOption(_ max _)
+
+  /** The batch ids of a store table's runs, from its `batch_id=N`
+    * partition directory names (one listing; none for an absent table).
+    */
+  private def runBatches(spark: org.apache.spark.sql.SparkSession,
+                         path: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .collect { case n if n.startsWith("batch_id=") =>
         n.stripPrefix("batch_id=").toLong }
-      .reduceOption(_ max _)
   }
 
   /** s45: AS-OF (time-travel) bound on a store read — the per-batch
@@ -2134,20 +2139,20 @@ object StreamOps {
   def s51CompactStore(spark: SparkSession, dir: String): Unit =
     compactFamily(spark, dir, "prefix")
 
-  /** s51's fsck: referential integrity of the served prefix-index views. */
+  /** s51's fsck: every pair side is an indexed doc, and the token and
+    * prefix tables index the same docs (`indexed_doc_without_prefix`
+    * counts token rows, the other two distinct doc ids).
+    */
   def s46PrefixStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val toks = s51Toks(spark, dir).select("doc_id").localCheckpoint()
-    val pairs = s51Pairs(spark, dir).localCheckpoint()
-    val prefix = s51PrefixRows(spark, dir).select("doc_id").distinct()
-    storeAudit(spark, dir, "prefix", toks)(
-      auditRow("pair_side_not_served",
-        pairs.select(col("d1").as("doc_id"))
-          .unionByName(pairs.select(col("d2").as("doc_id"))).distinct()
-          .join(toks, Seq("doc_id"), "left_anti")),
-      auditRow("indexed_doc_without_prefix",
-        toks.join(prefix, Seq("doc_id"), "left_anti")),
-      auditRow("prefix_doc_not_indexed",
-        prefix.join(toks, Seq("doc_id"), "left_anti")))
+    val pairs = s51Pairs(spark, dir)
+    storeAudit(spark, dir, "prefix", "toks", Seq(
+        "toks" -> s51Toks(spark, dir).select("doc_id"),
+        "prefix" -> s51PrefixRows(spark, dir).select("doc_id"),
+        "pair" -> pairs.select(col("d1").as("doc_id")),
+        "pair" -> pairs.select(col("d2").as("doc_id"))), Seq(
+      "pair_side_not_served" -> onlyIn("pair", "toks"),
+      "indexed_doc_without_prefix" -> when(!has("prefix"), rowsOf("toks")).otherwise(0L),
+      "prefix_doc_not_indexed" -> onlyIn("prefix", "toks")))
   }
 
   // ===== p14 executor: the composed TAKEDOWN verb (r12 verdict item 4 —
@@ -2240,6 +2245,82 @@ object StreamOps {
       .orderBy("family")
   }
 
+  /** The runs-below-compaction-stamp check shared by every store audit
+    * (the mixed-generation restore the s41 fence cannot see): counts data
+    * runs whose `batch_id=N` directory sits below the recorded stamp.
+    * Pure filesystem listing — no data scan.
+    */
+  private def staleRunsRow(spark: SparkSession, dir: String,
+                           tables: Seq[String]): DataFrame = {
+    val below = readCompactionStamp(spark, dir).map { st =>
+      (tables :+ "deleted").map(t => runBatches(spark, s"$dir/$t").count(_ < st)).sum
+    }.getOrElse(0)
+    spark.range(1).select(lit("runs_below_compaction_stamp").as("check"),
+      lit(below.toLong).as("n_bad"))
+  }
+
+  private val Side = "__side" // a row's side in a [[groupedChecks]] union
+
+  /** Rows of side `tag` in the group where `cond` holds (NULL drops). */
+  private def rowsOf(tag: String, cond: Column = lit(true)): Column =
+    count(when(col(Side) === tag && cond, 1))
+
+  private def has(tag: String): Column = rowsOf(tag) > 0
+
+  /** The anti-join check: the key is in side `a` and not in side `b`. */
+  private def onlyIn(a: String, b: String): Column = has(a) && !has(b)
+
+  /** One grouped pass of a store fsck: the `sides` (tag → narrow rows
+    * carrying `key` and what the checks read) are tagged, unioned and
+    * grouped ONCE by `key`; each check is one aggregate over a group — a
+    * flag (counted once per key) or a row count — summed over the groups
+    * into one (check, n_bad) row. Every invariant of a key thus costs one
+    * aggregation and each served view is read once (many aggregates in
+    * one grouped operator: Kohn, Leis & Neumann, SIGMOD 2021).
+    */
+  private def groupedChecks(key: String, sides: Seq[(String, DataFrame)],
+                            checks: Seq[(String, Column)]): DataFrame = {
+    val perKey = checks.map { case (n, c) => c.cast("long").as(n) }
+    val totals = checks.map { case (n, _) => sum(n).as(n) }
+    sides.map { case (tag, df) => df.withColumn(Side, lit(tag)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .groupBy(key).agg(perKey.head, perKey.tail: _*)
+      .agg(totals.head, totals.tail: _*)
+      .select(explode(array(checks.map { case (n, _) => struct(
+        lit(n).as("check"), coalesce(col(n), lit(0L)).as("n_bad")) }: _*)))
+      .select("col.*")
+  }
+
+  /** One family's fsck, sorted by check: its `checks` over its `sides`
+    * in one [[groupedChecks]] pass by the family's id, any `extra` pass,
+    * and the two lifecycle checks every store shares — DEAD ids in the
+    * `served` side (the batch-mask contract, same pass; [[deadIds]] over
+    * the primary table, not every id ever tombstoned: a re-admitted id is
+    * legitimately served) and runs below the compaction stamp.
+    */
+  private def storeAudit(spark: SparkSession, dir: String, family: String,
+      served: String, sides: Seq[(String, DataFrame)],
+      checks: Seq[(String, Column)], extra: Seq[DataFrame] = Nil): DataFrame = {
+    val idCol = storeFamily(family).idCol
+    val tables = tableNames(family)
+    val dead = deadIds(spark, dir, tables.head, idCol).withColumnRenamed("id", idCol)
+    (groupedChecks(idCol, sides :+ ("dead" -> dead),
+        checks :+ ("tombstones_still_served" -> (has(served) && has("dead")))) +:
+      extra :+ staleRunsRow(spark, dir, tables))
+      .reduce(_.unionByName(_)).orderBy("check")
+  }
+
+  /** Loud-fail wrapper shared by every store fsck: the collect is
+    * metadata-bounded BY CONSTRUCTION — one row per invariant, never per
+    * data row.
+    */
+  private def requireCleanAudit(what: String, dir: String,
+                                audit: DataFrame): Unit = {
+    val bad = audit.filter(col("n_bad") > 0)
+      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
+    require(bad.isEmpty, s"$what $dir failed fsck: ${bad.mkString(", ")}")
+  }
+
   /** s44: store FSCK — the consistency audit an operator runs against the
     * maintained s36 graph store after an incident (a partial write, a
     * manually-pruned run, a bad backfill) and periodically as a canary:
@@ -2264,99 +2345,35 @@ object StreamOps {
     * [[s44RequireHealthy]] is the loud-fail wrapper (ReadGuard's
     * discipline, lifted from schema to referential integrity).
     * RobustnessSpec plants a bogus edge run and a stale run and asserts
-    * the audit names them. Cost: anti/semi-joins on narrow id columns of
-    * the served views + one filesystem listing — no payload ever moves.
+    * the audit names them. Cost: one [[storeAudit]] pass over the vec_id
+    * columns of the served views (counts are of distinct vec_ids) + one
+    * filesystem listing — no payload ever moves.
     */
-  /** One (check, n_bad) audit row — the shape every store fsck emits. */
-  private def auditRow(name: String, bad: DataFrame): DataFrame =
-    bad.agg(count(lit(1)).as("n_bad"))
-      .select(lit(name).as("check"), col("n_bad"))
-
-  /** The runs-below-compaction-stamp check shared by every store audit
-    * (the mixed-generation restore the s41 fence cannot see): counts data
-    * runs whose `batch_id=N` directory sits below the recorded stamp.
-    * Pure filesystem listing — no data scan.
-    */
-  private def staleRunsRow(spark: SparkSession, dir: String,
-                           tables: Seq[String]): DataFrame = {
-    val below = readCompactionStamp(spark, dir).map { st =>
-      (tables :+ "deleted").map { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(p)) 0
-        else fs.listStatus(p).count { s =>
-          val n = s.getPath.getName
-          n.startsWith("batch_id=") && n.stripPrefix("batch_id=").toLong < st
-        }
-      }.sum
-    }.getOrElse(0)
-    spark.range(1).select(lit("runs_below_compaction_stamp").as("check"),
-      lit(below.toLong).as("n_bad"))
-  }
-
-  private def auditOf(rows: Seq[DataFrame]): DataFrame =
-    rows.reduce(_.unionByName(_)).orderBy("check")
-
-  /** One family's fsck: its own `checks` plus the two lifecycle checks
-    * every store shares — DEAD ids visible in the `served` view (the
-    * batch-mask contract; checked against [[deadIds]] over the primary
-    * table, not every id ever tombstoned: a re-admitted id is
-    * legitimately served, so the raw tombstone set would false-positive)
-    * and runs below the compaction stamp across the family's tables.
-    */
-  private def storeAudit(spark: SparkSession, dir: String, family: String,
-                         served: DataFrame)(checks: DataFrame*): DataFrame = {
-    val idCol = storeFamily(family).idCol
-    val tables = tableNames(family)
-    auditOf(checks ++ Seq(
-      auditRow("tombstones_still_served",
-        served.select(col(idCol)).distinct()
-          .join(deadIds(spark, dir, tables.head, idCol)
-            .withColumnRenamed("id", idCol), Seq(idCol), "left_semi")),
-      staleRunsRow(spark, dir, tables)))
-  }
-
-  /** Loud-fail wrapper shared by every store fsck: the collect is
-    * metadata-bounded BY CONSTRUCTION — one row per invariant, never per
-    * data row.
-    */
-  private def requireCleanAudit(what: String, dir: String,
-                                audit: DataFrame): Unit = {
-    val bad = audit.filter(col("n_bad") > 0)
-      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
-    require(bad.isEmpty, s"$what $dir failed fsck: ${bad.mkString(", ")}")
-  }
-
   def s44GraphStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = s36Vectors(spark, dir).select("vec_id").localCheckpoint()
-    val edges = s36DirectedEdges(spark, dir).localCheckpoint()
-    val cells = s36Cells(spark, dir).select("vec_id").distinct()
-    storeAudit(spark, dir, "graph", vecs)(
-      auditRow("edges_src_not_in_vectors",
-        edges.select(col("src").as("vec_id")).distinct()
-          .join(vecs, Seq("vec_id"), "left_anti")),
-      auditRow("edges_dst_not_in_vectors",
-        edges.select(col("dst").as("vec_id")).distinct()
-          .join(vecs, Seq("vec_id"), "left_anti")),
-      auditRow("cells_vec_not_in_vectors",
-        cells.join(vecs, Seq("vec_id"), "left_anti")),
-      auditRow("vectors_without_cells",
-        vecs.join(cells, Seq("vec_id"), "left_anti")))
+    val edges = s36DirectedEdges(spark, dir)
+    storeAudit(spark, dir, "graph", "vectors", Seq(
+        "vectors" -> s36Vectors(spark, dir).select("vec_id"),
+        "cells" -> s36Cells(spark, dir).select("vec_id"),
+        "src" -> edges.select(col("src").as("vec_id")),
+        "dst" -> edges.select(col("dst").as("vec_id"))), Seq(
+      "edges_src_not_in_vectors" -> onlyIn("src", "vectors"),
+      "edges_dst_not_in_vectors" -> onlyIn("dst", "vectors"),
+      "cells_vec_not_in_vectors" -> onlyIn("cells", "vectors"),
+      "vectors_without_cells" -> onlyIn("vectors", "cells")))
   }
 
   /** Loud-fail wrapper over [[s44GraphStoreAudit]], naming every violated
     * invariant — run it before trusting a restored or hand-touched store.
     */
-  def s44RequireHealthy(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit =
-    requireCleanAudit("graph store", dir, s44GraphStoreAudit(spark, dir))
+  def s44RequireHealthy(spark: SparkSession, dir: String): Unit =
+    s46RequireHealthy(spark, dir, "graph")
 
   /** s46: the fsck GENERALIZED to the whole store family (s44 audits the
-    * graph store; these are its four siblings, built from the same seams
-    * — [[auditRow]] and [[storeAudit]]'s shared lifecycle checks — so every
-    * maintained store now has the post-incident consistency verb). Each
-    * audit checks exactly what the fold discipline guarantees for ITS
-    * store, so a nonzero count is store corruption or a code regression:
+    * graph store; these are its siblings, built on the same
+    * [[storeAudit]] pass and shared lifecycle checks, so every maintained
+    * store has the post-incident consistency verb). Each audit checks
+    * exactly what the fold discipline guarantees for ITS store, so a
+    * nonzero count is store corruption or a code regression:
     *
     *  - hash/band store (s32): hash and band rows are written by the same
     *    batch from the same documents, so the LIVE doc sets must coincide
@@ -2378,111 +2395,88 @@ object StreamOps {
     *    is self-rooted (label(label) == label) — the invariants d05's
     *    contraction guarantees and d32's retraction re-establishes.
     *
-    * All checks are anti/semi-joins and partial-agg groupBys on narrow id
-    * columns of the served views + one filesystem listing — no payload
-    * moves. RobustnessSpec plants a per-store corruption and asserts the
-    * audit names it and the loud-fail wrapper fires.
+    * Each is one grouped pass over the narrow id columns of the served
+    * views (+ a pass keyed by `h` for chunks; code slots roll up into the
+    * vector pass) + one listing — no payload moves. Anti-join checks
+    * count distinct ids, `label_above_doc`, `*_out_of_range` and golden
+    * checks rows, per-key checks keys. RobustnessSpec plants corruption
+    * per store and asserts the counts and the loud-fail wrapper.
     */
-  def s46HashStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val hashRows = s32HashRows(spark, dir).localCheckpoint()
-    val bandRows = s32BandIndex(spark, dir).localCheckpoint()
-    val hashDocs = hashRows.select("doc_id").distinct()
-    val bandDocs = bandRows.select("doc_id").distinct()
-    storeAudit(spark, dir, "hash", hashDocs)(
-      auditRow("band_doc_not_in_hash",
-        bandDocs.join(hashDocs, Seq("doc_id"), "left_anti")),
-      auditRow("hash_doc_not_in_bands",
-        hashDocs.join(bandDocs, Seq("doc_id"), "left_anti")),
-      auditRow("doc_with_multiple_hashes",
-        hashRows.groupBy("doc_id")
-          .agg(countDistinct("th").as("n")).filter(col("n") > 1)),
-      auditRow("band_cardinality_wrong",
-        bandRows.groupBy("doc_id")
-          .agg(countDistinct("band_key").as("n"))
-          .filter(col("n") =!= graft.functions.TextHash.NumBands)))
-  }
+  def s46HashStoreAudit(spark: SparkSession, dir: String): DataFrame =
+    storeAudit(spark, dir, "hash", "hash56", Seq(
+        "hash56" -> s32HashRows(spark, dir), "bands" -> s32BandIndex(spark, dir)), Seq(
+      "band_doc_not_in_hash" -> onlyIn("bands", "hash56"),
+      "hash_doc_not_in_bands" -> onlyIn("hash56", "bands"),
+      "doc_with_multiple_hashes" -> (size(collect_set("th")) > 1),
+      "band_cardinality_wrong" -> (has("bands") &&
+        size(collect_set("band_key")) =!= graft.functions.TextHash.NumBands)))
 
   def s46ChunkStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val refs = s34ChunkRows(spark, dir).localCheckpoint()
-    storeAudit(spark, dir, "chunk", refs)(
-      auditRow("hash_nb_conflict",
-        refs.groupBy("h").agg(countDistinct("nb").as("n"))
-          .filter(col("n") > 1)))
+    val refs = s34ChunkRows(spark, dir)
+    storeAudit(spark, dir, "chunk", "chunks", Seq("chunks" -> refs), Nil,
+      Seq(groupedChecks("h", Seq("chunks" -> refs),
+        Seq("hash_nb_conflict" -> (size(collect_set("nb")) > 1)))))
   }
 
-  def s46AssignStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = s35Assignment(spark, dir).localCheckpoint()
-    storeAudit(spark, dir, "assign", assigned)(
-      auditRow("vec_with_multiple_assignments",
-        assigned.groupBy("vec_id").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)),
-      auditRow("cid_out_of_range",
-        assigned.filter(col("cid") < 0 ||
+  def s46AssignStoreAudit(spark: SparkSession, dir: String): DataFrame =
+    storeAudit(spark, dir, "assign", "assigned",
+      Seq("assigned" -> s35Assignment(spark, dir)), Seq(
+        "vec_with_multiple_assignments" -> (rowsOf("assigned") > 1),
+        "cid_out_of_range" -> rowsOf("assigned", col("cid") < 0 ||
           col("cid") >= graft.queries.Similarity.NumCentroids)))
-  }
 
   def s46CodeStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val codes = s38Codes(spark, dir).localCheckpoint()
-    storeAudit(spark, dir, "code", codes)(
-      auditRow("vec_wrong_subspace_arity",
-        codes.groupBy("vec_id").agg(countDistinct("sub").as("n"))
-          .filter(col("n") =!= graft.queries.Similarity.NumSubspaces)),
-      auditRow("sub_code_conflict",
-        codes.groupBy("vec_id", "sub").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)),
-      auditRow("code_out_of_range",
-        codes.filter(col("code") < 0 ||
-          col("code") >= graft.queries.Similarity.NumCentroids)))
+    // one row per (vector, subspace) slot: its code rows, out-of-range ones
+    val slots = s38Codes(spark, dir).groupBy("vec_id", "sub").agg(
+      count(lit(1)).as("n"), count(when(col("code") < 0 ||
+        col("code") >= graft.queries.Similarity.NumCentroids, 1)).as("n_oor"))
+    storeAudit(spark, dir, "code", "codes", Seq("codes" -> slots), Seq(
+      "vec_wrong_subspace_arity" -> (has("codes") &&
+        count(col("sub")) =!= graft.queries.Similarity.NumSubspaces),
+      "sub_code_conflict" -> rowsOf("codes", col("n") > 1),
+      "code_out_of_range" -> sum("n_oor")))
   }
 
-  def s46ClusterStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val served = s43Clusters(spark, dir).localCheckpoint()
-    val labels = served.select(col("cluster")).distinct()
-    val roots = served.select(col("doc_id").as("cluster"),
-      col("cluster").as("root_label"))
-    storeAudit(spark, dir, "cluster", served)(
-      auditRow("label_above_doc",
-        served.filter(col("cluster") > col("doc_id"))),
-      auditRow("label_not_served",
-        labels.join(served.select(col("doc_id").as("cluster")),
-          Seq("cluster"), "left_anti")),
-      auditRow("label_not_self_rooted",
-        labels.join(roots, Seq("cluster"))
-          .filter(col("root_label") =!= col("cluster"))),
-      auditRow("doc_with_multiple_labels",
-        served.groupBy("doc_id").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)),
+  def s46ClusterStoreAudit(spark: SparkSession, dir: String): DataFrame =
+    clusterAudit(spark, dir, Nil, Nil)
+
+  /** The cluster-store pass by doc_id — served rows (`labels`), each
+    * served row's label (`label`: its count is the label's served size),
+    * hashed docs — plus the golden store's `sides` and `checks`.
+    */
+  private def clusterAudit(spark: SparkSession, dir: String,
+      sides: Seq[(String, DataFrame)], checks: Seq[(String, Column)]): DataFrame = {
+    val served = s43Clusters(spark, dir)
+    storeAudit(spark, dir, "cluster", "labels", Seq(
+        "labels" -> served, "label" -> served.select(col("cluster").as("doc_id")),
+        "hash56" -> s32HashRows(spark, dir).select("doc_id")) ++ sides, Seq(
+      "label_above_doc" -> rowsOf("labels", col("cluster") > col("doc_id")),
+      "label_not_served" -> onlyIn("label", "labels"),
+      "label_not_self_rooted" -> when(has("label"),
+        rowsOf("labels", col("cluster") =!= col("doc_id"))).otherwise(0L),
+      "doc_with_multiple_labels" -> (rowsOf("labels") > 1),
       // the crash-lag case: the s43 fold writes hash/bands then labels —
       // a crash between the two leaves ingested docs INVISIBLE in the
       // served cluster view (silent until the batch replays); fsck names
       // them so the operator knows to replay
-      auditRow("ingested_doc_without_label",
-        s32HashRows(spark, dir).select("doc_id").distinct()
-          .join(served.select("doc_id"), Seq("doc_id"), "left_anti")))
+      "ingested_doc_without_label" -> onlyIn("hash56", "labels")) ++ checks)
   }
 
   /** s48's fsck: the cluster-store audit PLUS the golden-table invariants
     * the re-election fold guarantees — every golden row names a live
     * served label whose recorded size matches the served membership, and
     * every multi-member served cluster HAS a golden row (the
-    * completeness direction a lagging re-election would violate).
+    * completeness direction a lagging re-election would violate). Golden
+    * rows are keyed by label, a doc id, so they join the cluster pass.
     */
   def s46GoldenStoreAudit(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = s43Clusters(spark, dir).groupBy("cluster")
-      .agg(count(lit(1)).as("sz")).localCheckpoint()
-    val golden = s48Golden(spark, dir).localCheckpoint()
-    auditOf(Seq(
-      s46ClusterStoreAudit(spark, dir),
-      auditRow("golden_label_not_served",
-        golden.select(col("kept_doc").as("cluster"))
-          .join(sizes, Seq("cluster"), "left_anti")),
-      auditRow("golden_size_mismatch",
-        golden.join(sizes, golden("kept_doc") === sizes("cluster"))
-          .filter(col("cluster_size") =!= col("sz"))),
-      auditRow("multi_cluster_without_golden",
-        sizes.filter(col("sz") >= 2)
-          .join(golden.select(col("kept_doc").as("cluster")),
-            Seq("cluster"), "left_anti"))))
+    val members = rowsOf("label")
+    clusterAudit(spark, dir, Seq("golden" -> s48Golden(spark, dir)
+        .select(col("kept_doc").as("doc_id"), col("cluster_size"))), Seq(
+      "golden_label_not_served" -> when(!has("label"), rowsOf("golden")).otherwise(0L),
+      "golden_size_mismatch" -> when(has("label"), size(filter(
+        collect_list("cluster_size"), (x: Column) => x =!= members))).otherwise(0),
+      "multi_cluster_without_golden" -> (members >= 2 && !has("golden"))))
   }
 
   private type Fold = (SparkSession, String) => DataFrame
@@ -2599,12 +2593,6 @@ object StreamOps {
     val stamp = readCompactionStamp(spark, dir)
     val nTomb = deletedIds(spark, dir).count()
     val nGens = retainedGenerations(spark, dir).size.toLong
-    def runsIn(path: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).count(_.getPath.getName.startsWith("batch_id=")).toLong
-    }
     val rows = tables.map { case (t, fold) =>
       val path = s"$dir/$t"
       val exists = pathExists(spark, path)
@@ -2614,7 +2602,7 @@ object StreamOps {
       // store (the very state a stats gauge is for) must emit a zero row,
       // not throw PATH_NOT_FOUND from inside the fold.
       val served = if (!exists) 0L else fold().count()
-      (t, runsIn(path), raw, served, nTomb,
+      (t, runBatches(spark, path).size.toLong, raw, served, nTomb,
         maxBatchIn(spark, path).getOrElse(-1L), stamp.getOrElse(-1L),
         if (served == 0) -1L else raw * 100L / served, nGens)
     }

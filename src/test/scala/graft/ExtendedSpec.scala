@@ -46,12 +46,23 @@ class ExtendedSpec extends SparkSpec {
       incl <- Seq(false, true)
       parts <- Seq(3, 32)
     } {
-      val got = graft.queries.TextOps
-        .prefixMax(df, "k", "v", "pm", includeCurrent = incl,
-          descending = desc, numParts = parts)
-        .select("k", "pm").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
-        .toMap
+      // prefixMax ranges into the session's shuffle parallelism: set it
+      // for this build only, and free the build's ranged cache before the
+      // next one plans the same table again
+      val conf = spark.conf
+      val saved = conf.get("spark.sql.shuffle.partitions")
+      val got = try {
+        conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        graft.queries.TextOps
+          .prefixMax(df, "k", "v", "pm", includeCurrent = incl,
+            descending = desc)
+          .select("k", "pm").collect()
+          .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+          .toMap
+      } finally {
+        conf.set("spark.sql.shuffle.partitions", saved)
+        RunScope.query.release()
+      }
       val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
         .sortBy(r => if (desc) -r._1 else r._1)
       var best: Option[Long] = None

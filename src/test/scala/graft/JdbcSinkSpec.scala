@@ -225,6 +225,25 @@ class JdbcSinkSpec extends SparkSpec {
     assert(landed === (1 to 40).map(i => s"C$i").sorted)
   }
 
+  test("appendBatch replays a partition the database rolls back: 20 racing appends into new tables each land every row once") {
+    // Four partitions inserting into a new Derby table at once contend for
+    // its identity range; Derby refuses the loser with a transaction
+    // rollback (40XL1) in about one race in five. The sink replays that
+    // partition's transaction, so every race must land all 40 rows once.
+    val dir = Files.createTempDirectory("sink_race")
+    val lines = (1 to 40).map(i => s"1,TRANSFER,$i.0,C$i,$i.0,0.0,M$i,0.0,0.0,1,0")
+    Files.writeString(dir.resolve("t.csv"), (header +: lines).mkString("", "\n", "\n"))
+    val batch = FraudPipeline(FraudPipeline.readCsv(spark, dir.toString))
+      .repartition(4).localCheckpoint()
+    (1 to 20).foreach { i =>
+      val table = s"fraud_race_$i"
+      FraudSink.appendBatch(url, table, props, FraudSink.derbyDdl(table))(batch, 0L)
+      val landed = spark.read.jdbc(url, table, props)
+        .select("NAMEORIG").collect().map(_.getString(0)).sorted.toSeq
+      assert(landed === (1 to 40).map(i => s"C$i").sorted, table)
+    }
+  }
+
   test("append stores SQL NULLs for a null string and a null double") {
     val table = "fraud_nulls"
     FraudSink.ensureTable(url, props, FraudSink.derbyDdl(table))

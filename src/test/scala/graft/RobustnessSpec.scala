@@ -434,6 +434,260 @@ class RobustnessSpec extends SparkSpec {
     assert(fEx.getMessage.contains("hash|chunk|assign|code|cluster|golden|graph"))
   }
 
+  // ---- store fsck counting units and job budgets. Each family gets one
+  // store (two ingest batches, a delete of the ids ≡ 1 mod 3, compaction);
+  // its fsck must pass within the family's Spark-job budget, then planted
+  // corruption that drives checks to counts ≥ 2 must give every check's
+  // n_bad exactly — which pins each check's counting unit (distinct ids,
+  // rows or keys). The expected maps are the audits of the per-invariant
+  // anti-join/groupBy fsck these checks replaced; the budgets are the
+  // one-pass fsck's counts (the replaced fsck ran 17–45 jobs, named per
+  // family) at sf0.001 on `local[4]`, the first fsck after compaction.
+
+  private val HashFsckJobs = 16
+  private val ChunkFsckJobs = 15
+  private val AssignFsckJobs = 13
+  private val CodeFsckJobs = 14
+  private val ClusterFsckJobs = 17
+  private val GoldenFsckJobs = 21
+  private val PrefixFsckJobs = 19
+  private val ClusterUnits = Seq(
+    "doc_with_multiple_labels" -> 1L, "ingested_doc_without_label" -> 2L,
+    "label_above_doc" -> 2L, "label_not_self_rooted" -> 2L,
+    "label_not_served" -> 1L, "runs_below_compaction_stamp" -> 0L,
+    "tombstones_still_served" -> 0L)
+  private val GoldenUnits = Seq(
+    "doc_with_multiple_labels" -> 0L, "golden_label_not_served" -> 2L,
+    "golden_size_mismatch" -> 2L, "ingested_doc_without_label" -> 0L,
+    "label_above_doc" -> 0L, "label_not_self_rooted" -> 0L,
+    "label_not_served" -> 0L, "multi_cluster_without_golden" -> 1L,
+    "runs_below_compaction_stamp" -> 0L, "tombstones_still_served" -> 0L)
+
+  private lazy val fsckDocs: Seq[(Long, String, String, String, Long)] =
+    graft.Tables.documents(spark, sf)
+      .select("doc_id", "text", "lang", "source", "n_chars").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getLong(4))).toSeq.sortBy(_._1)
+  private lazy val fsckVecs: Seq[(Long, Array[Float])] =
+    graft.Tables.embeddings(spark, sf).select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
+  private lazy val fsckCents =
+    graft.queries.Similarity.ivfCentroids(spark, sf).localCheckpoint()
+
+  private def docsOf(ids: Seq[Long]) = {
+    import spark.implicits._
+    fsckDocs.filter(d => ids.contains(d._1)).map(d => (d._1, d._2))
+      .toDF("doc_id", "text")
+  }
+  private def vecsOf(ids: Seq[Long]) = {
+    import spark.implicits._
+    fsckVecs.filter(v => ids.contains(v._1)).toDF("vec_id", "embedding")
+  }
+
+  /** A store after ingest batches `first` (even ids) and `first + 1` (odd
+    * ids), a delete of the ids ≡ 1 mod 3 at `first + 2`, then compaction;
+    * returns the store dir and the live ids.
+    */
+  private def fsckStore(family: String, ids: Seq[Long], first: Long = 0L)(
+      ingest: (String, Seq[Long], Long) => Unit,
+      delete: (String, org.apache.spark.sql.DataFrame, Long) => Unit,
+      compact: String => Unit,
+      init: String => Unit = _ => ()): (String, Seq[Long]) = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(s"fsck_units_$family").toString
+    init(dir)
+    ingest(dir, ids.filter(_ % 2 == 0), first)
+    ingest(dir, ids.filter(_ % 2 == 1), first + 1)
+    delete(dir, ids.filter(_ % 3 == 1).toDF("id"), first + 2)
+    compact(dir)
+    (dir, ids.filter(_ % 3 != 1))
+  }
+
+  /** The healthy store fscks clean within `budget` jobs (None: unbudgeted). */
+  private def fsckWithin(dir: String, family: String,
+                         budget: Option[Int], parentJobs: Int): Unit = {
+    val jobs = Explain.jobsOf(spark)(
+      graft.streaming.StreamOps.s46RequireHealthy(spark, dir, family))
+    budget.foreach { b =>
+      assert(jobs <= b,
+        s"$family fsck ran $jobs Spark jobs (budget $b; the per-invariant fsck ran $parentJobs)")
+    }
+  }
+
+  private def plantRun(rows: org.apache.spark.sql.DataFrame, path: String,
+                       batchId: Long): Unit = {
+    rows.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(path)
+    spark.catalog.refreshByPath(path)
+  }
+
+  /** `template`'s first row once per id in `ids`, its `idCol` replaced. */
+  private def rowsLike(template: org.apache.spark.sql.DataFrame, idCol: String,
+                       ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    val row = template.limit(1).collect().head
+    val at = template.schema.fieldIndex(idCol)
+    val rows = ids.map(id => org.apache.spark.sql.Row.fromSeq(row.toSeq.updated(at, id)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), template.schema)
+  }
+
+  private def auditOf(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  test("hash fsck counts distinct docs for the doc-set checks and docs for the per-doc checks, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val (dir, live) = fsckStore("hash", fsckDocs.map(_._1))(
+      (d, ids, b) => S.s32UpsertIndexBatch(d)(docsOf(ids), b),
+      (d, x, b) => S.s32DeleteBatch(d)(x, b), S.s32CompactStore(spark, _))
+    fsckWithin(dir, "hash", Some(HashFsckJobs), 32)
+    val Seq(a, b, c, d, e) = live.take(5)
+    // two phantom docs in bands only, one stray band key on three docs,
+    // a second content hash on two docs
+    plantRun(Seq((999999L, "0:bogus"), (999998L, "0:bogus"), (a, "0:extra"),
+        (b, "0:extra"), (c, "0:extra")).toDF("doc_id", "band_key"),
+      s"$dir/bands", 3L)
+    plantRun(Seq((1L, d), (2L, e)).toDF("th", "doc_id"), s"$dir/hash56", 3L)
+    assert(auditOf(S.s46HashStoreAudit(spark, dir)) === Seq(
+      "band_cardinality_wrong" -> 5L, "band_doc_not_in_hash" -> 2L,
+      "doc_with_multiple_hashes" -> 2L, "hash_doc_not_in_bands" -> 0L,
+      "runs_below_compaction_stamp" -> 0L, "tombstones_still_served" -> 0L))
+  }
+
+  test("chunk fsck counts content hashes with conflicting lengths, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val media = graft.operators.Multimodal.fixtureFromDocuments(spark, sf)
+      .toDF().select("media_id", "payload").collect()
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq
+    val (dir, _) = fsckStore("chunk", media.map(_._1))(
+      (d, ids, b) => S.s34UpsertChunkBatch(d)(
+        media.filter(m => ids.contains(m._1)).toDF("media_id", "payload"), b),
+      (d, x, b) => S.s34DeleteBatch(d)(x, b), S.s34CompactStore(spark, _))
+    fsckWithin(dir, "chunk", Some(ChunkFsckJobs), 17)
+    val Array(h1, h2) = S.s34ChunkStore(spark, dir).select("h").orderBy("h")
+      .limit(2).collect().map(_.getString(0))
+    // three lengths under one hash count once; two under another once more
+    plantRun(Seq((h1, 999999L, -7), (h1, 999998L, -8), (h2, 999997L, -9))
+      .toDF("h", "media_id", "nb"), s"$dir/chunks", 3L)
+    assert(auditOf(S.s46ChunkStoreAudit(spark, dir)) === Seq(
+      "hash_nb_conflict" -> 2L, "runs_below_compaction_stamp" -> 0L,
+      "tombstones_still_served" -> 0L))
+  }
+
+  test("assign fsck counts vectors with several rows and out-of-range rows, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val (dir, live) = fsckStore("assign", fsckVecs.map(_._1))(
+      (d, ids, b) => S.s35UpsertIvfBatch(fsckCents, d)(vecsOf(ids), b),
+      (d, x, b) => S.s35DeleteBatch(d)(x, b), S.s35CompactStore(spark, _))
+    fsckWithin(dir, "assign", Some(AssignFsckJobs), 17)
+    val Seq(v1, v2) = live.take(2)
+    plantRun(Seq((v1, 99L, 0.0), (v1, 98L, 0.0), (v2, -1L, 0.0))
+      .toDF("vec_id", "cid", "ccos"), s"$dir/assigned", 3L)
+    assert(auditOf(S.s46AssignStoreAudit(spark, dir)) === Seq(
+      "cid_out_of_range" -> 3L, "runs_below_compaction_stamp" -> 0L,
+      "tombstones_still_served" -> 0L, "vec_with_multiple_assignments" -> 2L))
+  }
+
+  test("code fsck counts (vector, subspace) slots, code rows and vectors, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val cbook = graft.queries.Similarity.pqCodebook(spark, sf).localCheckpoint()
+    val (dir, live) = fsckStore("code", fsckVecs.map(_._1))(
+      (d, ids, b) => S.s38UpsertPqBatch(cbook, d)(vecsOf(ids), b),
+      (d, x, b) => S.s38DeleteBatch(d)(x, b), S.s38CompactStore(spark, _))
+    fsckWithin(dir, "code", Some(CodeFsckJobs), 20)
+    // one slot holding 3 rows (two out of range), two one-subspace vectors
+    plantRun(Seq((live.head, 0, 99L, 0L), (live.head, 0, 98L, 0L),
+        (999999L, 0, 1L, 0L), (999998L, 1, 1L, 0L))
+      .toDF("vec_id", "sub", "code", "dist2"), s"$dir/codes", 3L)
+    assert(auditOf(S.s46CodeStoreAudit(spark, dir)) === Seq(
+      "code_out_of_range" -> 2L, "runs_below_compaction_stamp" -> 0L,
+      "sub_code_conflict" -> 1L, "tombstones_still_served" -> 0L,
+      "vec_wrong_subspace_arity" -> 2L))
+  }
+
+  test("cluster fsck counts label rows, distinct labels and docs, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val (dir, live) = fsckStore("cluster", fsckDocs.map(_._1))(
+      (d, ids, b) => S.s43UpsertClusterBatch(d)(docsOf(ids), b),
+      (d, x, b) => S.s43DeleteClusterBatch(d)(x, b), S.s43CompactStore(spark, _))
+    fsckWithin(dir, "cluster", Some(ClusterFsckJobs), 28)
+    val Seq(a, b, c) = live.take(3)
+    // two docs above one phantom label; c served twice, once under a
+    plantRun(Seq((a, 999999L), (b, 999999L), (c, c), (c, a))
+      .toDF("doc_id", "cluster"), s"$dir/labels", 3L)
+    // two hashed docs that never got a label
+    plantRun(Seq((5L, 999997L), (6L, 999996L)).toDF("th", "doc_id"),
+      s"$dir/hash56", 3L)
+    assert(auditOf(S.s46ClusterStoreAudit(spark, dir)) === ClusterUnits)
+  }
+
+  test("golden fsck counts golden rows and multi-member labels, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val (dir, _) = fsckStore("golden", fsckDocs.map(_._1))(
+      (d, ids, b) => S.s48UpsertGoldenBatch(d)(fsckDocs.filter(x => ids.contains(x._1))
+        .toDF("doc_id", "text", "lang", "source", "n_chars"), b),
+      (d, x, b) => S.s48DeleteGoldenBatch(d)(x, b), S.s48CompactStore(spark, _))
+    fsckWithin(dir, "golden", Some(GoldenFsckJobs), 45)
+    val golden = S.s48Golden(spark, dir).orderBy("kept_doc")
+    val Seq(g1, g2, g3) = golden.limit(3).collect().toSeq
+    def lie(g: org.apache.spark.sql.Row, size: Long) =
+      (g.getLong(0), size, g.getLong(2), g.getLong(3), g.getLong(4),
+        g.getLong(5), g.getString(6))
+    // two phantom labels, two size lies, one multi-member label retired
+    plantRun(Seq((999999L, 2L, 1L, 10L, 999999L, 10L, "en"),
+        (999998L, 3L, 1L, 10L, 999998L, 10L, "en"),
+        lie(g1, g1.getLong(1) + 5), lie(g2, g2.getLong(1) + 7), lie(g3, 1L))
+      .toDF("kept_doc", "cluster_size", "n_sources", "total_chars",
+        "rep_doc", "rep_chars", "lang_mode"), s"$dir/golden", 3L)
+    assert(auditOf(S.s46GoldenStoreAudit(spark, dir)) === GoldenUnits)
+  }
+
+  test("prefix fsck counts distinct pair sides, token rows and prefix docs, within its job budget") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val (dir, _) = fsckStore("prefix", fsckDocs.map(_._1), first = 1L)(
+      (d, ids, b) => S.s51UpsertBatch(d)(docsOf(ids), b),
+      (d, x, b) => S.s51DeleteBatch(d)(x, b), S.s51CompactStore(spark, _),
+      init = d => S.s51InitStore(spark, d, docsOf(fsckDocs.map(_._1))))
+    fsckWithin(dir, "prefix", Some(PrefixFsckJobs), 34)
+    // three phantom pair sides, two token-only docs, one prefix-only doc
+    plantRun(Seq((999999L, 999998L, 1, 10L, 10L), (999999L, 999997L, 1, 10L, 10L))
+      .toDF("d1", "d2", "inter", "na", "nb"), s"$dir/pairs", 4L)
+    plantRun(rowsLike(S.s51Toks(spark, dir), "doc_id", Seq(999996L, 999995L)),
+      s"$dir/toks", 4L)
+    plantRun(rowsLike(S.s51PrefixRows(spark, dir), "doc_id", Seq(999994L)),
+      s"$dir/prefix", 4L)
+    assert(auditOf(S.s46PrefixStoreAudit(spark, dir)) === Seq(
+      "indexed_doc_without_prefix" -> 2L, "pair_side_not_served" -> 3L,
+      "prefix_doc_not_indexed" -> 1L, "runs_below_compaction_stamp" -> 0L,
+      "tombstones_still_served" -> 0L))
+  }
+
+  test("graph fsck counts distinct edge ends and cell vectors") {
+    import spark.implicits._
+    val S = graft.streaming.StreamOps
+    val (dir, live) = fsckStore("graph", fsckVecs.map(_._1))(
+      (d, ids, b) => S.s36UpsertGraphBatch(fsckCents, d)(vecsOf(ids), b),
+      (d, x, b) => S.s36DeleteBatch(d)(x, b), S.s37CompactEdgeStore(spark, _))
+    // no job budget: the graph store's job count varies between runs of
+    // the same code (see CHANGES.md), so a budget would flap
+    fsckWithin(dir, "graph", None, 32)
+    val Seq(v1, v2, v3) = live.take(3)
+    plantRun(Seq((999999L, v1, 0.5), (999998L, v2, 0.5), (v3, 999997L, 0.5))
+      .toDF("src", "dst", "cos"), s"$dir/edges", 3L)
+    plantRun(Seq((999996L, 1L), (999995L, 2L)).toDF("vec_id", "cid"),
+      s"$dir/cells", 3L)
+    assert(auditOf(S.s44GraphStoreAudit(spark, dir)) === Seq(
+      "cells_vec_not_in_vectors" -> 2L, "edges_dst_not_in_vectors" -> 1L,
+      "edges_src_not_in_vectors" -> 2L, "runs_below_compaction_stamp" -> 0L,
+      "tombstones_still_served" -> 0L, "vectors_without_cells" -> 0L))
+  }
+
   test("store schema evolution: an ADDITIVE run (extra column) still serves and fscks clean; a missing column stays loud") {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
