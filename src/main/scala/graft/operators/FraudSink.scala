@@ -4,6 +4,7 @@ import java.sql.{Connection, DriverManager, SQLException, Types}
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
 
 /** The reference's sink contract (SURVEY §2 A9–A12), Spark-first.
   *
@@ -142,26 +143,36 @@ object FraudSink {
     * a row (A9: an empty batch opens none and creates no table), runs
     * `createSql` if given with autocommit on ([[ensureTable]], A10), then
     * `body` over its rows in one transaction — commit, rollback on
-    * failure — and closes the connection. A transaction the database
-    * rolls back for a transient conflict (SQLState class 40: Derby refuses
-    * an identity-range allocation with 40XL1 when partitions insert into a
-    * new table at once) is replayed from the partition's buffered rows, up
-    * to [[TxAttempts]] times; nothing of it was committed.
+    * failure — and closes the connection. The rows stream to `body`; the
+    * first [[ReplayRows]] it reads are also kept, so a transaction the
+    * database rolls back for a transient conflict (SQLState class 40:
+    * Derby refuses an identity-range allocation with 40XL1 when partitions
+    * insert into a new table at once) is replayed, up to [[TxAttempts]]
+    * times, if `body` had read no more rows than that; nothing of it was
+    * committed. Past that bound the rollback is rethrown.
     */
-  private[operators] def inTransaction(df: DataFrame, numPartitions: Int,
+  private[graft] def inTransaction(df: DataFrame, numPartitions: Int,
       url: String, props: Properties, createSql: Option[String])(
       body: (Connection, Iterator[Row]) => Unit): Unit =
     df.coalesce(numPartitions).foreachPartition { part: Iterator[Row] =>
       if (part.hasNext) {
-        val rows = part.toVector
+        val read = new ArrayBuffer[Row]()
+        var replayable = true
+        def rows(): Iterator[Row] = read.toList.iterator ++ part.map { r =>
+          if (replayable) {
+            if (read.length < ReplayRows) read += r
+            else { replayable = false; read.clear() }
+          }
+          r
+        }
         val conn = DriverManager.getConnection(url, props)
         try {
           createSql.foreach(ensureTable(conn, _))
           conn.setAutoCommit(false)
           def attempt(n: Int): Unit =
-            try { body(conn, rows.iterator); conn.commit() }
+            try { body(conn, rows()); conn.commit() }
             catch {
-              case e: SQLException if n < TxAttempts && transient(e) =>
+              case e: SQLException if replayable && n < TxAttempts && transient(e) =>
                 conn.rollback(); Thread.sleep(50L * n); attempt(n + 1)
               case t: Throwable => conn.rollback(); throw t
             }
@@ -171,6 +182,11 @@ object FraudSink {
     }
 
   private val TxAttempts = 3
+
+  /** The rows a partition keeps for a replay: one default JDBC batch, so
+    * a rollback in a partition's first batch can always be replayed.
+    */
+  private[graft] val ReplayRows = BatchSize
 
   /** The database rolled the transaction back (SQLState class 40) —
     * anywhere in the cause chain, as a batch failure wraps its statement's.

@@ -244,6 +244,41 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
+  test("append streams a partition of 2,500 rows, larger than one JDBC batch and the replay buffer, into the table once") {
+    val table = "sink_big_partition"
+    FraudSink.ensureTable(url, props,
+      s"CREATE TABLE $table (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, k BIGINT)")
+    val df = spark.range(2500).coalesce(1).toDF("k")
+    assert(df.rdd.getNumPartitions === 1)
+    FraudSink.append(df, url, table, props)
+    val keys = spark.read.jdbc(url, table, props).select("K").collect().map(_.getLong(0)).sorted
+    assert(keys.toSeq === (0L until 2500L))
+  }
+
+  test("a rolled-back transaction is replayed while its rows fit the replay buffer and rethrown past it") {
+    // The body inserts every row it reads, then fails its first attempt
+    // with Derby's identity-contention rollback (SQLState 40XL1).
+    def run(table: String, rows: Int): Unit = {
+      FraudSink.ensureTable(url, props, s"CREATE TABLE $table (k BIGINT)")
+      var failed = false
+      FraudSink.inTransaction(spark.range(rows).coalesce(1).toDF("k"), 1, url, props, None) {
+        (conn, it) =>
+          val st = conn.prepareStatement(s"INSERT INTO $table (k) VALUES (?)")
+          try it.foreach { r => st.setLong(1, r.getLong(0)); st.executeUpdate() }
+          finally st.close()
+          if (!failed) { failed = true; throw new java.sql.SQLException("forced rollback", "40XL1") }
+      }
+    }
+    def landed(table: String): Long = spark.read.jdbc(url, table, props).count()
+    val fits = FraudSink.ReplayRows
+    run("sink_replayed", fits)
+    assert(landed("sink_replayed") === fits)
+    val e = intercept[org.apache.spark.SparkException](run("sink_not_replayed", fits + 1))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "forced rollback"), e)
+    assert(landed("sink_not_replayed") === 0)
+  }
+
   test("append stores SQL NULLs for a null string and a null double") {
     val table = "fraud_nulls"
     FraudSink.ensureTable(url, props, FraudSink.derbyDdl(table))
