@@ -137,19 +137,14 @@ object FraudSink {
     }
   }
 
-  /** The per-partition JDBC transaction every sink writer runs, in one
-    * executor-side `foreachPartition` over `df` coalesced to at most
-    * `numPartitions`: a partition opens its connection only when it holds
-    * a row (A9: an empty batch opens none and creates no table), runs
-    * `createSql` if given with autocommit on ([[ensureTable]], A10), then
-    * `body` over its rows in one transaction — commit, rollback on
-    * failure — and closes the connection. The rows stream to `body`; the
-    * first [[ReplayRows]] it reads are also kept, so a transaction the
-    * database rolls back for a transient conflict (SQLState class 40:
-    * Derby refuses an identity-range allocation with 40XL1 when partitions
-    * insert into a new table at once) is replayed, up to [[TxAttempts]]
-    * times, if `body` had read no more rows than that; nothing of it was
-    * committed. Past that bound the rollback is rethrown.
+  /** The per-partition JDBC transaction of the design above, shared by
+    * every sink writer: a non-empty partition of `df` coalesced to
+    * `numPartitions` opens its connection, runs `createSql` if given
+    * (A9, A10), then `body` over its rows in one transaction. The rows
+    * stream to `body` and the first [[ReplayRows]] it reads are kept: a
+    * transaction the database rolls back (SQLState class 40, as Derby's
+    * 40XL1 when partitions insert into a new table at once) is replayed,
+    * up to [[TxAttempts]] times, unless `body` had read more than that.
     */
   private[graft] def inTransaction(df: DataFrame, numPartitions: Int,
       url: String, props: Properties, createSql: Option[String])(
@@ -159,10 +154,8 @@ object FraudSink {
         val read = new ArrayBuffer[Row]()
         var replayable = true
         def rows(): Iterator[Row] = read.toList.iterator ++ part.map { r =>
-          if (replayable) {
-            if (read.length < ReplayRows) read += r
-            else { replayable = false; read.clear() }
-          }
+          if (replayable && read.length < ReplayRows) read += r
+          else if (replayable) { replayable = false; read.clear() }
           r
         }
         val conn = DriverManager.getConnection(url, props)
@@ -182,15 +175,9 @@ object FraudSink {
     }
 
   private val TxAttempts = 3
+  private[graft] val ReplayRows = BatchSize // a first JDBC batch can always replay
 
-  /** The rows a partition keeps for a replay: one default JDBC batch, so
-    * a rollback in a partition's first batch can always be replayed.
-    */
-  private[graft] val ReplayRows = BatchSize
-
-  /** The database rolled the transaction back (SQLState class 40) —
-    * anywhere in the cause chain, as a batch failure wraps its statement's.
-    */
+  /** SQLState class 40 (transaction rolled back) in the cause chain. */
   private def transient(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
       case s: SQLException => Option(s.getSQLState).exists(_.startsWith("40"))

@@ -43,12 +43,10 @@ object UpsertSink {
     s"""INSERT INTO $table (k, v, updated_ts) VALUES (?, ?, ?)
        |ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v, updated_ts = EXCLUDED.updated_ts""".stripMargin
 
-  /** Upsert one compacted micro-batch. Expects columns (k, v, ts). No
-    * separate emptiness job: the batch runs FraudSink's per-partition
-    * transaction ([[FraudSink.inTransaction]]) with an UPDATE-else-INSERT
-    * body — each non-empty partition opens its own connection, ensures the
-    * table on it (A10, autocommit on), then upserts in one transaction; an
-    * empty batch opens no connection and creates no table (A9).
+  /** Upsert one compacted micro-batch. Expects columns (k, v, ts). It runs
+    * [[FraudSink.inTransaction]] with an UPDATE-else-INSERT body: an empty
+    * batch needs no emptiness job, opens no connection and creates no table
+    * (A9), and each partition ensures the table first (A10).
     */
   def upsertBatch(url: String, props: Properties, table: String,
                   createSql: String)(batch: DataFrame, batchId: Long): Unit = {
@@ -58,23 +56,22 @@ object UpsertSink {
       .groupBy("k")
       .agg(max_by(struct(col("v"), col("ts")), struct(col("ts"), col("v"))).as("b"))
       .select(col("k"), col("b.v").as("v"), col("b.ts").as("ts"))
-    FraudSink.inTransaction(latest, 4, url, props, Some(createSql)) {
-      (conn, rows) =>
-        val upd = conn.prepareStatement(
-          s"UPDATE $table SET v = ?, updated_ts = ? WHERE k = ?")
-        val ins = conn.prepareStatement(
-          s"INSERT INTO $table (k, v, updated_ts) VALUES (?, ?, ?)")
-        rows.foreach { r =>
-          upd.setDouble(1, r.getDouble(1))
-          upd.setTimestamp(2, r.getTimestamp(2))
-          upd.setLong(3, r.getLong(0))
-          if (upd.executeUpdate() == 0) {
-            ins.setLong(1, r.getLong(0))
-            ins.setDouble(2, r.getDouble(1))
-            ins.setTimestamp(3, r.getTimestamp(2))
-            ins.executeUpdate()
-          }
+    FraudSink.inTransaction(latest, 4, url, props, Some(createSql)) { (conn, rows) =>
+      val upd = conn.prepareStatement(
+        s"UPDATE $table SET v = ?, updated_ts = ? WHERE k = ?")
+      val ins = conn.prepareStatement(
+        s"INSERT INTO $table (k, v, updated_ts) VALUES (?, ?, ?)")
+      rows.foreach { r =>
+        upd.setDouble(1, r.getDouble(1))
+        upd.setTimestamp(2, r.getTimestamp(2))
+        upd.setLong(3, r.getLong(0))
+        if (upd.executeUpdate() == 0) {
+          ins.setLong(1, r.getLong(0))
+          ins.setDouble(2, r.getDouble(1))
+          ins.setTimestamp(3, r.getTimestamp(2))
+          ins.executeUpdate()
         }
+      }
     }
   }
 }
