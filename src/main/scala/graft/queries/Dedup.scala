@@ -1836,10 +1836,9 @@ object Dedup {
     * CacheManager in DedupSpec).
     */
   /** The (doc_id, tokens) frame every prefix index starts from — hoisted
-    * out of [[prefixIndexOf]] so d28's three per-k legs tokenize the
-    * corpus ONCE (the shingle sets differ by k; the token arrays do not —
-    * round-6 verdict item 2: three re-reads + re-splits of the corpus was
-    * the suite's single largest avoidable cost at 100 TB).
+    * out of [[prefixIndexOf]] so d28 shingles all of its widths from ONE
+    * read and split of the corpus (the shingle sets differ by k; the
+    * token arrays do not).
     */
   private def tokenizedDocs(s: SparkSession, d: String): DataFrame =
     // spreadByDoc: parallelizes BOTH of the prefix-index build's
@@ -1887,16 +1886,27 @@ object Dedup {
     // frozen order is VOCABULARY-sized — corpus-scale at 100 TB — so it
     // must never broadcast; the join keys are uniform hashes, and the
     // delta side is batch-sized, so AQE picks the right build side
-    tok.join(order.select(col("h"), col("df")), Seq("h"), "left")
-      .na.fill(0L, Seq("df"))
-      .groupBy("doc_id")
+    indexRows(tok.join(order.select(col("h"), col("df")), Seq("h"), "left")
+      .na.fill(0L, Seq("df")), tauPct, Nil)
+  }
+
+  /** The per-doc index rows (tarr/varr/sz/plen, after the `keys`) of
+    * (keys, doc_id, h, df) rows — the one spelling of the index both
+    * the fresh-order and the frozen-order builds share.
+    */
+  private def indexRows(ranked: DataFrame, tauPct: Int,
+                        keys: Seq[String]): DataFrame =
+    ranked
+      .groupBy((keys :+ "doc_id").map(col): _*)
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("toks"))
       .withColumn("tarr", expr("transform(toks, x -> x.h)"))
+      // the h-SORTED twin: tarr's (df, h) order drives the prefix slice,
+      // but the verify step only needs the h-set — kept ascending-sorted
+      // so sorted_inter_size can merge-count it (see SortedInterSize)
       .withColumn("varr", expr("array_sort(transform(toks, x -> x.h))"))
       .withColumn("sz", size(col("toks")))
       .withColumn("plen", expr(s"sz - ((sz * $tauPct + 99) div 100) + 1"))
-      .select("doc_id", "tarr", "varr", "sz", "plen")
-  }
+      .select((keys ++ Seq("doc_id", "tarr", "varr", "sz", "plen")).map(col): _*)
 
   /** d15's machinery as a one-call rebuild over an arbitrary (doc_id,
     * text) frame — the oracle side of StreamingSpec's s51 maintained ==
@@ -1913,7 +1923,15 @@ object Dedup {
   }
 
   private[graft] def prefixIndexOf(docTokens: DataFrame, tauPct: Int,
-                            shingleK: Int): DataFrame = {
+                            shingleK: Int): DataFrame =
+    prefixIndexOver(shingleHashes(docTokens, shingleK), tauPct)
+
+  /** The cached prefix index of (keys, doc_id, h) shingle rows: one
+    * independent index per value of the `keys` (the df order, and so
+    * every prefix, is computed within each key), in one plan.
+    */
+  private def prefixIndexOver(tok: DataFrame, tauPct: Int,
+                              keys: Seq[String] = Nil): DataFrame = {
     // hash at the ROW stage, before any shuffle: one codegen'd md5 per
     // (doc, shingle) row, so the df groupBy, the index join, and the
     // collect_list all carry 8-byte longs instead of 20-byte shingle
@@ -1930,25 +1948,16 @@ object Dedup {
     // whp-exactness contract d01/d10 already run under, and the
     // string-array spelling remains the drop-in fallback if a corpus
     // ever trips it.
-    val tok = shingleHashes(docTokens, shingleK)
-    val df = tok.groupBy("h").agg(count(lit(1)).as("df"))
-    tok.join(df, "h")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("toks"))
-      .withColumn("tarr", expr("transform(toks, x -> x.h)"))
-      // the h-SORTED twin: tarr's (df, h) order drives the prefix slice,
-      // but the verify step only needs the h-set — kept ascending-sorted
-      // so sorted_inter_size can merge-count it (see SortedInterSize)
-      .withColumn("varr", expr("array_sort(transform(toks, x -> x.h))"))
-      .withColumn("sz", size(col("toks")))
-      .withColumn("plen", expr(s"sz - ((sz * $tauPct + 99) div 100) + 1"))
-      .select("doc_id", "tarr", "varr", "sz", "plen")
-      .cache()
+    val df = tok.groupBy((keys :+ "h").map(col): _*).agg(count(lit(1)).as("df"))
+    indexRows(tok.join(df, keys :+ "h"), tauPct, keys).cache()
   }
 
-  /** d15's τ-pair plan over a prefix index — shared by d15, d28's legs,
-    * d37 and the s51 rebuild oracle. `tauPct` must be the τ the index was
-    * built at: the probe side slices the index's own τ-prefix (`plen`).
+  /** d15's τ-pair plan over a prefix index — shared by d15, d28, d37 and
+    * the s51 rebuild oracle. `tauPct` must be the τ the index was built
+    * at: the probe side slices the index's own τ-prefix (`plen`). `keys`
+    * are the index's key columns (d28's shingle width `k`): pairs form
+    * only within one key value, every join carries them, and they lead
+    * each output row; none (the default) is the plain one-index plan.
     *
     * Candidate generation applies the two standard EXACT prefix-join
     * prunes (PPJoin, Xiao et al. 2008) on top of the basic prefix filter
@@ -1967,8 +1976,9 @@ object Dedup {
     *    be over-pruned, which only removes duplicates.
     *    J ≥ τ ⟺ inter·(100+τ) ≥ τ·(na+nb) gives the integer spelling.
     */
-  private[graft] def d15Pairs(idx: DataFrame,
-                              tauPct: Int = PrefixTauPct): DataFrame = {
+  private[graft] def d15Pairs(idx: DataFrame, tauPct: Int = PrefixTauPct,
+                              keys: Seq[String] = Nil): DataFrame = {
+    val kc = keys.map(col)
     // ASYMMETRIC (indexing) PREFIX (PPJoin, Xiao et al. 2008 §3 — the
     // r15 candidate-count optimization): orient every unordered pair by
     // (sz, doc_id) and join the larger/probing side's FULL τ-prefix
@@ -1987,14 +1997,14 @@ object Dedup {
     // so the candidate cut is superlinear in the prefix cut (measured at
     // sf0.1: k=2 occurrences 5.43 M → 2.81 M, d28 −20 %).
     val probe = idx
-      .select(col("doc_id").as("dp"), col("sz").as("sp"),
-        posexplode(expr("slice(tarr, 1, cast(plen as int))")).as(Seq("pp", "h")))
+      .select(kc ++ Seq(col("doc_id").as("dp"), col("sz").as("sp"),
+        posexplode(expr("slice(tarr, 1, cast(plen as int))")).as(Seq("pp", "h"))): _*)
     val index = idx
-      .select(col("doc_id").as("di"), col("sz").as("si"),
+      .select(kc ++ Seq(col("doc_id").as("di"), col("sz").as("si"),
         posexplode(expr("slice(tarr, 1, cast(sz - ((sz * " +
           s"${2 * tauPct} + ${100 + tauPct - 1}) div " +
-          s"${100 + tauPct}) + 1 as int))")).as(Seq("pi", "h")))
-    val cand = index.join(probe, Seq("h"))
+          s"${100 + tauPct}) + 1 as int))")).as(Seq("pi", "h"))): _*)
+    val cand = index.join(probe, keys :+ "h")
       // pair orientation: index side strictly smaller by (sz, doc_id) —
       // also what makes the pair generation self-pair-free
       .filter(col("si") < col("sp") ||
@@ -2003,7 +2013,7 @@ object Dedup {
       .filter(col("si") * 100 >= col("sp") * tauPct)
       .filter((lit(1) + least(col("si") - col("pi") - 1, col("sp") - col("pp") - 1)) *
         (100 + tauPct) >= (col("si") + col("sp")) * tauPct)
-      .select("di", "dp")
+      .select(kc ++ Seq(col("di"), col("dp")): _*)
     // exact verification: merge-count over the h-sorted twins — one
     // codegen'd primitive pass per candidate (sorted_inter_size), no
     // per-pair hash set, no materialized intersection array; at k=2 the
@@ -2021,8 +2031,10 @@ object Dedup {
     // At 100 TB the index side shards by doc bucket instead of
     // broadcasting; the occurrence stream still never shuffles.
     cand
-      .join(broadcast(idx.select(col("doc_id").as("di"), col("varr").as("va"), col("sz").as("na"))), Seq("di"))
-      .join(broadcast(idx.select(col("doc_id").as("dp"), col("varr").as("vb"), col("sz").as("nb"))), Seq("dp"))
+      .join(broadcast(idx.select(kc ++ Seq(col("doc_id").as("di"), col("varr").as("va"),
+        col("sz").as("na")): _*)), keys :+ "di")
+      .join(broadcast(idx.select(kc ++ Seq(col("doc_id").as("dp"), col("varr").as("vb"),
+        col("sz").as("nb")): _*)), keys :+ "dp")
       // THRESHOLD-AWARE merge (r14 optimization): J ≥ τ ⟺ inter ≥
       // ceil((na+nb)·τ/(100+τ)); passing that bound lets the merge abort
       // on candidates that provably cannot qualify (most of the k=2
@@ -2035,13 +2047,13 @@ object Dedup {
       // relabel the size-oriented pair back to doc-id order — inter is
       // symmetric, na/nb follow their documents; the output multiset is
       // exactly the symmetric spelling's (then the same distinct)
-      .select(least(col("di"), col("dp")).as("d1"),
+      .select(kc ++ Seq(least(col("di"), col("dp")).as("d1"),
               greatest(col("di"), col("dp")).as("d2"),
               col("inter"),
               when(col("di") < col("dp"), col("na")).otherwise(col("nb"))
                 .cast("long").as("na"),
               when(col("di") < col("dp"), col("nb")).otherwise(col("na"))
-                .cast("long").as("nb"))
+                .cast("long").as("nb")): _*)
       .distinct()
   }
 
@@ -2105,69 +2117,47 @@ object Dedup {
   /** d28: shingle-size sensitivity sweep — d22 sweeps the LSH banding
     * geometry; this sweeps the other dedup design knob, the shingle
     * width k: per k ∈ {2,3,4}, the EXACT τ-join pair count (via the
-    * complete d15 prefix-filter machinery, now parameterized by k), the
-    * corpus's distinct-shingle vocabulary, and the mean set size — the
-    * table that shows WHY production picks k≈3 (k too small: hot
-    * shingles everywhere, pair count explodes with false kinship; k too
-    * large: sets shrink and near-misses vanish). Each leg pays the same
-    * honest index build as d15; results union to one ≤3-row report. The
-    * oracle recomputes every leg brute-force, so the sweep doubles as a
-    * 3-way completeness check of the prefix filter across k.
+    * complete d15 prefix-filter machinery), the corpus's distinct-shingle
+    * vocabulary, and the mean set size — the table that shows WHY
+    * production picks k≈3 (k too small: hot shingles everywhere, pair
+    * count explodes with false kinship; k too large: sets shrink and
+    * near-misses vanish). The oracle recomputes every width brute-force,
+    * so the sweep doubles as a 3-way completeness check of the prefix
+    * filter across k.
     *
-    * BENCH NOTE: this is deliberately the suite's most expensive query
-    * (3× d15's index+join work): the three SHINGLE indexes share nothing
-    * (the sets differ by construction), so the sweep's price IS three
-    * d15 runs — minus the corpus scan+tokenize, which all legs share
-    * through one cached (doc_id, tokens) frame. A production sweep would
-    * run once per corpus revision and write its 3-row table; it is not a
-    * per-query cost.
+    * One plan keyed by the width k, not one d15 plan per width (many
+    * groups in one operator plan: Kohn, Leis & Neumann, SIGMOD 2021):
+    * one read and split of the corpus emits every width's distinct
+    * shingles, tagged by k; ONE cached prefix index is keyed by (k,
+    * doc_id), its df order computed per (k, h); ONE [[d15Pairs]] run
+    * joins candidates on (k, h), so pairs never cross widths; the report
+    * is per-k aggregates left-joined to the literal k domain, so a width
+    * with no qualifying pair still reports 0. The three widths' indexes
+    * still share nothing (the sets differ by construction), so the work
+    * is three d15 builds' worth, but in one set of jobs.
     */
-  /** One sweep leg's lazy 1-row report over a per-k prefix index. */
-  private[graft] def d28Leg(idx: DataFrame, k: Int): DataFrame = {
-    // the leg's pair count IS d15's machinery over this k's index — one
-    // definition, so the sweep can never desynchronize from the query it
-    // claims to sweep
-    val pairs = d15Pairs(idx).agg(count(lit(1)).as("n_pairs"))
-    val stats = idx.agg(
-      sum(col("sz").cast("bigint")).as("sum_sz"),
-      count(lit(1)).as("n_docs"))
-    val vocab = idx.select(explode(col("tarr")).as("h")).distinct()
-      .agg(count(lit(1)).as("vocab"))
-    pairs.crossJoin(broadcast(stats)).crossJoin(broadcast(vocab))
-      .select(lit(k).as("shingle_k"), col("n_pairs"), col("vocab"),
-        expr("sum_sz * 100 div n_docs").as("mean_sz_x100"))
-  }
-
   val d28ShingleSweep: Q = (s, d) => {
-    // One tokenization for all three legs: the per-k shingle sets share
-    // nothing, but the underlying token ARRAYS are identical — cache the
-    // split corpus once instead of re-reading + re-parsing it per leg
-    // (round-6 verdict item 2; saves two full corpus scans per sweep).
-    val toks = tokenizedDocs(s, d).cache()
-    val idxs = ShingleSweep.map(k => prefixIndexOf(toks, PrefixTauPct, k))
-    // ONE lazy union materialized by ONE job, so the three legs' stages
-    // overlap across the cores — a per-leg-eager spelling (checkpoint one
-    // leg, drop its index, build the next) serializes the legs and
-    // measured ~1.3x SLOWER at sf0.1 despite its lower peak cache. All
-    // four caches release at query end — nothing outlives the query
-    // (round-6 item 3); peak held DURING it is the three per-k indexes,
-    // the same working set the one-job plan needs anyway.
-    //
-    // KNOWN-BENIGN WARNING: the one-job overlap means two legs' tasks can
-    // race to compute the same not-yet-cached `toks` (or index) partition;
-    // the loser logs "BlockManager: Block rdd_N already exists on this
-    // machine" and discards its copy. Cost = one wasted partition compute
-    // per race, bounded by the cache's partition count; correctness is
-    // unaffected (block stores are putIfAbsent). Serializing the legs to
-    // silence it is exactly the 1.3x-slower spelling rejected above —
-    // the warning is the receipt for the overlap we are buying.
-    val out = idxs.zip(ShingleSweep)
-      .map { case (idx, k) => d28Leg(idx, k) }
-      .reduce(_.unionByName(_))
+    val widths = ShingleSweep.map(k => s"named_struct('k', $k, 'sh', " +
+      s"array_distinct(${TextHash.sparkShinglesOf("tokens", k)}))")
+    val tok = tokenizedDocs(s, d)
+      .select(col("doc_id"), inline(expr(widths.mkString("array(", ", ", ")"))))
+      .select(col("k"), col("doc_id"), explode(col("sh")).as("t"))
+      .select(col("k"), col("doc_id"), expr(TextHash.sparkHash56("t")).as("h"))
+    val idx = prefixIndexOver(tok, PrefixTauPct, Seq("k"))
+    val byK = Seq(
+      d15Pairs(idx, keys = Seq("k")).groupBy("k").agg(count(lit(1)).as("n_pairs")),
+      idx.groupBy("k").agg(sum(col("sz").cast("bigint")).as("sum_sz"),
+        count(lit(1)).as("n_docs")),
+      idx.select(col("k"), explode(col("tarr")).as("h")).distinct()
+        .groupBy("k").agg(count(lit(1)).as("vocab")))
+    val domain = s.range(1).select(explode(typedLit(ShingleSweep)).as("k"))
+    val out = byK.foldLeft(domain)((acc, agg) => acc.join(broadcast(agg), Seq("k"), "left"))
+      .select(col("k").as("shingle_k"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
+        coalesce(col("vocab"), lit(0L)).as("vocab"),
+        expr("sum_sz * 100 div n_docs").as("mean_sz_x100"))
       .orderBy("shingle_k")
       .localCheckpoint()
-    idxs.foreach(_.unpersist())
-    toks.unpersist()
+    idx.unpersist()
     out
   }
 

@@ -2438,16 +2438,17 @@ object StreamOps {
   }
 
   def s46ClusterStoreAudit(spark: SparkSession, dir: String): DataFrame =
-    clusterAudit(spark, dir, Nil, Nil)
+    clusterAudit(spark, dir, "cluster", Nil, Nil)
 
   /** The cluster-store pass by doc_id — served rows (`labels`), each
     * served row's label (`label`: its count is the label's served size),
-    * hashed docs — plus the golden store's `sides` and `checks`.
+    * hashed docs — plus the golden store's `sides` and `checks`; `family`
+    * names the store whose tables the stale-run listing covers.
     */
-  private def clusterAudit(spark: SparkSession, dir: String,
+  private def clusterAudit(spark: SparkSession, dir: String, family: String,
       sides: Seq[(String, DataFrame)], checks: Seq[(String, Column)]): DataFrame = {
     val served = s43Clusters(spark, dir)
-    storeAudit(spark, dir, "cluster", "labels", Seq(
+    storeAudit(spark, dir, family, "labels", Seq(
         "labels" -> served, "label" -> served.select(col("cluster").as("doc_id")),
         "hash56" -> s32HashRows(spark, dir).select("doc_id")) ++ sides, Seq(
       "label_above_doc" -> rowsOf("labels", col("cluster") > col("doc_id")),
@@ -2471,7 +2472,7 @@ object StreamOps {
     */
   def s46GoldenStoreAudit(spark: SparkSession, dir: String): DataFrame = {
     val members = rowsOf("label")
-    clusterAudit(spark, dir, Seq("golden" -> s48Golden(spark, dir)
+    clusterAudit(spark, dir, "golden", Seq("golden" -> s48Golden(spark, dir)
         .select(col("kept_doc").as("doc_id"), col("cluster_size"))), Seq(
       "golden_label_not_served" -> when(!has("label"), rowsOf("golden")).otherwise(0L),
       "golden_size_mismatch" -> when(has("label"), size(filter(

@@ -573,18 +573,25 @@ class DedupSpec extends SparkSpec {
       s"got $stages")
   }
 
+  /** Each doc's distinct width-`shingleK` shingles, (doc_id, t). */
+  private def bruteShingles(docs: org.apache.spark.sql.DataFrame,
+                            shingleK: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    docs
+      .withColumn("tokens", split(col("text"), " "))
+      .select(col("doc_id"), explode(expr(
+        s"array_distinct(shingles(tokens, $shingleK))")).as("t"))
+  }
+
   /** Ground truth for the d15 joins: brute-force exact Jaccard ≥ τ pairs
     * (d1 < d2) over the same shingle sets.
     */
   private def bruteJaccardPairs(tauPct: Int,
-      docs: => org.apache.spark.sql.DataFrame = Tables.documents(spark, sf))
+      docs: => org.apache.spark.sql.DataFrame = Tables.documents(spark, sf),
+      shingleK: Int = graft.queries.Dedup.PrefixShingleK)
       : Set[(Long, Long)] = {
     import org.apache.spark.sql.functions._
-    import graft.queries.Dedup
-    val tok = docs
-      .withColumn("tokens", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(shingles(tokens, ${Dedup.PrefixShingleK}))")).as("t"))
+    val tok = bruteShingles(docs, shingleK)
     val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     tok.select(col("doc_id").as("d1"), col("t"))
       .join(tok.select(col("doc_id").as("d2"), col("t")), Seq("t"))
@@ -657,6 +664,51 @@ class DedupSpec extends SparkSpec {
     assert(at50 === bruteJaccardPairs(50, docs))
     assert(at30 -- at50 === Set((1L, 4L), (2L, 4L)) && at50.nonEmpty,
       s"τ = 30: $at30, τ = 50: $at50")
+  }
+
+  /** d28's rows brute-forced per width: (k, n_pairs, vocab, mean_sz_x100). */
+  private def bruteSweep(docs: org.apache.spark.sql.DataFrame)
+      : Seq[(Int, Long, Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    import graft.queries.Dedup
+    Dedup.ShingleSweep.map { k =>
+      val tok = bruteShingles(docs, k)
+      val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+        .agg(sum("sz"), count(lit(1))).head()
+      (k, bruteJaccardPairs(Dedup.PrefixTauPct, docs, k).size.toLong,
+        tok.select("t").distinct().count(), sizes.getLong(0) * 100 / sizes.getLong(1))
+    }
+  }
+
+  private def sweepRows(dir: String): Seq[(Int, Long, Long, Long)] =
+    graft.queries.Dedup.d28ShingleSweep(spark, dir).collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+
+  test("d28 sweep: every width's pairs, vocabulary and mean set size equal brute force") {
+    val got = sweepRows(sf)
+    assert(got === bruteSweep(Tables.documents(spark, sf)))
+    assert(got.exists(_._2 > 0), s"no width found a pair — the check is vacuous: $got")
+  }
+
+  test("d28 sweep: a width with no qualifying pair still reports one row with 0 pairs") {
+    // 8-token docs one word apart: Jaccard 5/9 at k = 2, 3/9 at k = 3,
+    // 1/9 at k = 4 — so τ = 30% pairs them at k = 2 and 3 but not at 4
+    val dir = docsDir(Seq("a b c d e f g h", "a b c x e f g h",
+      "p q r s t u v w"))
+    val got = sweepRows(dir)
+    assert(got.map(r => (r._1, r._2)) === Seq((2, 1L), (3, 1L), (4, 0L)))
+    assert(got === bruteSweep(spark.read.parquet(s"$dir/documents.parquet")))
+  }
+
+  // Jobs one standalone d28 run took at sf0.001 while the sweep planned
+  // one d15 index and pair join per shingle width (three of each, plus a
+  // cached token frame). The keyed single pass is held to two thirds.
+  private val D28JobsBefore = 61
+
+  test("job budget: one d28 run takes at most two thirds of its former jobs") {
+    val jobs = Explain.jobsOf(spark)(
+      graft.queries.Dedup.d28ShingleSweep(spark, sf).collect(): Unit)
+    assert(jobs <= D28JobsBefore * 2 / 3, s"d28 took $jobs jobs")
   }
 
   test("p06 refresh: statuses partition the delta, bins only on accepted, consistent with p04/t20") {

@@ -647,6 +647,26 @@ class RobustnessSpec extends SparkSpec {
     assert(auditOf(S.s46GoldenStoreAudit(spark, dir)) === GoldenUnits)
   }
 
+  test("golden fsck lists a docattrs run restored below the compaction stamp") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val S = graft.streaming.StreamOps
+    val (dir, _) = fsckStore("golden", fsckDocs.map(_._1))(
+      (d, ids, b) => S.s48UpsertGoldenBatch(d)(fsckDocs.filter(x => ids.contains(x._1))
+        .toDF("doc_id", "text", "lang", "source", "n_chars"), b),
+      (d, x, b) => S.s48DeleteGoldenBatch(d)(x, b), S.s48CompactStore(spark, _))
+    def stale() = auditOf(S.s46GoldenStoreAudit(spark, dir))
+      .toMap.apply("runs_below_compaction_stamp")
+    assert(stale() === 0L)
+    // hand-restore one docattrs run from below the stamp
+    val attrs = s"$dir/docattrs"
+    val row = spark.read.parquet(attrs).drop("batch_id").limit(1).localCheckpoint()
+    row.withColumn("batch_id", lit(0L))
+      .write.mode("append").partitionBy("batch_id").parquet(attrs)
+    spark.catalog.refreshByPath(attrs)
+    assert(stale() === 1L)
+  }
+
   test("prefix fsck counts distinct pair sides, token rows and prefix docs, within its job budget") {
     import spark.implicits._
     val S = graft.streaming.StreamOps
