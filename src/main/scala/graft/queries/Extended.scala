@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{RunScope, Tables}
+import graft.{Materialized, RunScope, Tables}
 import graft.functions.TextHash
 import Relational.{dec, decD}
 
@@ -247,7 +247,7 @@ object Extended {
     // alive, then release them — the query owns its cache lifecycle
     // (round-6 advice: x15's cum table pinned executor memory for the
     // rest of a 300-query run).
-    val out = legs.reduce(_.unionByName(_)).orderBy("accuracy").localCheckpoint()
+    val out = Materialized.of(legs.reduce(_.unionByName(_)).orderBy("accuracy")).df
     cum.unpersist(); v.unpersist()
     mine.release()
     out

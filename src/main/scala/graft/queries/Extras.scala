@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Materialized, Tables}
 import graft.operators.SkewJoin
 import Relational.{dec, decD}
 
@@ -2241,7 +2241,7 @@ object Extras {
       .agg(sum(expr(
         "cast(floor(l_extendedprice * (1 - l_discount) * 100) as bigint)"))
         .as("rev_c"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val top = revenue.agg(max("rev_c").as("max_c"))
     revenue.crossJoin(broadcast(top))
       .filter(col("rev_c") === col("max_c"))
@@ -2369,7 +2369,7 @@ object Extras {
       .join(broadcast(slice), col("ps_partkey") === col("p_partkey"))
       .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name",
         "ps_supplycost_c")
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val minc = offers.groupBy(col("p_partkey").as("mk"))
       .agg(min("ps_supplycost_c").as("min_c"))
     offers.join(broadcast(minc),
@@ -2403,7 +2403,7 @@ object Extras {
       .join(broadcast(natSupp), col("ps_suppkey") === col("s_suppkey"))
       .groupBy("ps_partkey")
       .agg(sum(col("ps_supplycost_c") * col("ps_availqty")).as("value_c"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val tot = vals.agg(sum("value_c").as("total_c"))
     vals.crossJoin(broadcast(tot))
       .filter(col("value_c") * 2000L > col("total_c"))
@@ -3304,7 +3304,7 @@ object Extras {
     val classes = base.join(modal, "user_id")
       .groupBy("first_day", "nbits", "modal_type")
       .agg(count(lit(1)).as("class_size"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     KAnonThresholds.map { k =>
       classes.agg(
         lit(k).as("k"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.{RunScope, Tables}
+import graft.{Materialized, RunScope, Tables}
 import graft.functions.TextHash
 import Relational.decD
 
@@ -1038,7 +1038,7 @@ object ScaleOps {
           col("c_acctbal") <= col("s_acctbal") + 50.0)
         .groupBy("c_custkey").agg(count(lit(1)).as("n_sup"))
         .orderBy("c_custkey")
-        .localCheckpoint(true)
+        .transform(Materialized.of(_).df)
     } finally s.conf.unset(key)
   }
 
@@ -1065,7 +1065,7 @@ object ScaleOps {
           col("s_acctbal") - 50.0 <= col("c_acctbal") + 20.0)
         .groupBy("c_custkey").agg(count(lit(1)).as("n_sup"))
         .orderBy("c_custkey")
-        .localCheckpoint(true)
+        .transform(Materialized.of(_).df)
     } finally s.conf.unset(key)
   }
 

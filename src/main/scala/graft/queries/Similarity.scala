@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{RunScope, Tables}
+import graft.{Materialized, RunScope, Tables}
 
 /** Similarity search over the `embeddings` table (SURVEY §2 Part B q33 +
   * the ANN scale path + embedding-cosine near-dup).
@@ -186,7 +186,7 @@ object Similarity {
     * call materialises its own copy; every caller calls it once.
     */
   private[queries] def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    ivfAssignedFrom(prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint())
+    ivfAssignedFrom(Materialized.of(prepared(s, d).select("vec_id", "q", "nrm")).df)
 
   /** Quantize + self-norm a raw (vec_id, embedding) frame — the public
     * seam s35's streaming maintainer shares with every batch query (an
@@ -363,7 +363,7 @@ object Similarity {
     */
   val n33CosHistogram: Q = (s, d) => {
     val v = prepareVectors(Tables.embeddings(s, d))
-      .select("vec_id", "q", "nrm").localCheckpoint()
+      .select("vec_id", "q", "nrm").transform(Materialized.of(_).df)
     val ids = v.select(col("vec_id"))
     val pairs = CosHistLags.map { l =>
         ids.select(col("vec_id").as("src"),
@@ -398,7 +398,7 @@ object Similarity {
     val goodScored = scored.join(good, Seq("vec_id"), "left_semi")
     val truth = goodScored.orderBy(col("cos").desc, col("vec_id").asc)
       .limit(TopK).select(col("vec_id").as("tid"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val pre = goodScored.orderBy(col("cos").desc, col("vec_id").asc)
       .limit(TopK).select("vec_id")
     val post = scored.orderBy(col("cos").desc, col("vec_id").asc)
@@ -417,7 +417,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(TopK).select("vec_id")
     def leg(name: String, res: DataFrame) = {
-      val hits = res.join(broadcast(truth), col("vec_id") === col("tid"))
+      val hits = res.join(truth, col("vec_id") === col("tid"))
         .agg(count(lit(1)).as("hits10"))
       res.agg(count(lit(1)).as("returned"))
         .crossJoin(broadcast(hits))
@@ -484,25 +484,25 @@ object Similarity {
     * chosen table's lineage flat.
     */
   val n16KcenterSeed: Q = (s, d) => {
-    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").transform(Materialized.of(_).df)
     var chosen = v.filter(col("vec_id") === 0)
       .select(lit(1).as("seed_rank"), col("vec_id"), col("q"), col("nrm"),
         lit(0L).as("dist2"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     for (k <- 2 to KcenterSeeds) {
       val c = chosen.select(col("vec_id").as("cid"), col("q").as("cq"),
         col("nrm").as("cnrm"))
-      val md = v.crossJoin(broadcast(c))
+      val md = v.crossJoin(c)
         .withColumn("d2", expr(s"nrm + cnrm - 2 * ${dot("q", "cq")}"))
         .groupBy("vec_id").agg(min(col("d2")).as("md"))
       val pick = md
         .agg(expr("max_by(struct(vec_id, md), struct(md, -vec_id))").as("p"))
         .select(col("p.vec_id").as("vec_id"), col("p.md").as("dist2"))
       chosen = chosen.unionByName(
-          v.join(broadcast(pick), "vec_id")
+          v.join(pick, "vec_id")
             .select(lit(k).as("seed_rank"), col("vec_id"), col("q"),
               col("nrm"), col("dist2")))
-        .localCheckpoint()
+        .transform(Materialized.of(_).df)
     }
     chosen.select("seed_rank", "vec_id", "dist2").orderBy("seed_rank")
   }
@@ -558,12 +558,12 @@ object Similarity {
     val truth = base.withColumn("cosm", expr(cosm(Dim)))
       .orderBy(col("cosm").desc, col("vec_id").asc).limit(TopK)
       .select(col("vec_id").as("tid"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     DimSweep.map { m =>
       val scored = base.withColumn("cosm", expr(cosm(m)))
       val res = scored.orderBy(col("cosm").desc, col("vec_id").asc)
         .limit(TopK).select("vec_id")
-      val hits = res.join(broadcast(truth), col("vec_id") === col("tid"))
+      val hits = res.join(truth, col("vec_id") === col("tid"))
         .agg(count(lit(1)).as("hits10"))
       scored.agg(max_by(col("vec_id"),
           struct(col("cosm"), negate(col("vec_id")))).as("top1"))
@@ -634,7 +634,7 @@ object Similarity {
     */
   val n17IvfRebalance: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").transform(Materialized.of(_).df)
     val cents = v.filter(col("vec_id") < NumCentroids)
       .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cnrm"))
     val scored = v.crossJoin(broadcast(cents))
@@ -643,7 +643,7 @@ object Similarity {
       .select("vec_id", "cid", "ccos")
     val wv = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid").asc)
     val ranked = scored.withColumn("rn", row_number().over(wv))
-      .filter(col("rn") <= 2).localCheckpoint()
+      .filter(col("rn") <= 2).transform(Materialized.of(_).df)
     val best = ranked.filter(col("rn") === 1).select("vec_id", "cid", "ccos")
     val second = ranked.filter(col("rn") === 2)
       .select(col("vec_id"), col("cid").as("cid2"))
@@ -816,7 +816,7 @@ object Similarity {
     def withNorm(c: DataFrame): DataFrame =
       c.withColumn("cnrm", expr("vec_dot(cq, cq)"))
     def assign(cents: DataFrame): DataFrame =
-      v.crossJoin(broadcast(withNorm(cents)))
+      v.crossJoin(withNorm(cents))
         .withColumn("d2", expr(s"nrm + cnrm - 2 * ${dot("q", "cq")}"))
         .groupBy("vec_id")
         // q rides inside the argmin struct (constant per vec_id) so the
@@ -839,11 +839,11 @@ object Similarity {
     }
     var cents = v.filter(col("vec_id") < NumCentroids)
       .select(col("vec_id").as("cid"), col("q").as("cq"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     var prevAssign: DataFrame = null
     val reports = scala.collection.mutable.Buffer.empty[DataFrame]
     for (r <- 1 to KmeansRounds) {
-      val a = assign(cents).localCheckpoint()
+      val a = assign(cents).transform(Materialized.of(_).df)
       val moved =
         if (prevAssign == null)
           a.agg(count(lit(1)).as("x")).select(lit(0L).as("n_moved"))
@@ -858,14 +858,14 @@ object Similarity {
         .crossJoin(broadcast(moved))
         .select(lit(r).as("round"), col("n_assigned"), col("inertia"),
           col("n_moved"))
-      cents = update(a, cents).localCheckpoint()
+      cents = update(a, cents).transform(Materialized.of(_).df)
       prevAssign = a
     }
     (cents, reports.reduce(_.unionByName(_)))
   }
 
   val n27KmeansIter: Q = (s, d) => {
-    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").transform(Materialized.of(_).df)
     kmeansLoop(v)._2.orderBy("round")
   }
 
@@ -880,7 +880,7 @@ object Similarity {
     val cents = kmeansLoop(v)._1
       .withColumn("cnrm", expr(dot("cq", "cq")))
       .select("cid", "cq", "cnrm")
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     v.unpersist()
     cents
   }
@@ -1065,14 +1065,14 @@ object Similarity {
     // Materialised once, eagerly: a cache() here is still empty when the
     // build plans its joins, so the plan's many reads of `v` each ran their
     // own scan of the embeddings (most of the build's jobs).
-    val v = prepared(s, d).select("vec_id", "q", "nrm").localCheckpoint()
+    val v = prepared(s, d).select("vec_id", "q", "nrm").transform(Materialized.of(_).df)
     val cents = v.filter(col("vec_id") < NumCentroids)
       .select(col("vec_id").as("cid"), col("q").as("cq"),
               col("nrm").as("cnrm"))
     val topk = directedTopKOf(v, cents).select("src", "dst")
     // localCheckpoint, not cache: the memo must survive the harness's
     // per-query clearCache() (Dedup.scala's cluster-memo discipline)
-    val adj = symmetrize(topk).localCheckpoint()
+    val adj = symmetrize(topk).transform(Materialized.of(_).df)
     // One materialized scoring pass doubles as the exact-truth denominator.
     val qv = v.filter(col("vec_id") === 0)
       .select(col("q").as("qa"), col("nrm").as("na"))
@@ -1081,15 +1081,15 @@ object Similarity {
       .withColumn("cos", expr(
         s"cast(${dot("qa", "q")} as double) / sqrt(cast(na as double) * cast(nrm as double))"))
       .select("vec_id", "cos")
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val truth = allsc.orderBy(col("cos").desc, col("vec_id").asc).limit(TopK)
       .select(col("vec_id").as("tid"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val partial = GraphAnnParts(adj, allsc, truth, null)
     // The hub-entry walk is part of the shared build: n22 presents it and
     // n23's side-by-side report reuses these exact rows (r09 verdict item
     // 1 — re-walking them measured ~2 s of pure duplication at sf0.1).
-    val hub = beamWalk(partial, hubSeeds(partial)).localCheckpoint()
+    val hub = beamWalk(partial, hubSeeds(partial)).transform(Materialized.of(_).df)
     partial.copy(hubReport = hub)
   }
 
@@ -1107,14 +1107,16 @@ object Similarity {
     * Every side the walk joins against the graph or the score table —
     * seeds, beam, the beam's neighbours, the scored id set — holds at most
     * BeamSeeds + BeamHops·BeamWidth·2·[[KnnJoinK]] rows whatever the corpus
-    * size, so each is broadcast: the planner cannot size the checkpointed
-    * hop state and would otherwise plan sort-merge joins that AQE only
+    * size, so each is broadcast. The scored set is a [[graft.Materialized]]
+    * frame whose exact size plans the broadcast; the seeds, beam and
+    * neighbour sides are lazy, so they carry hints: their estimates are
+    * the graph's and would otherwise plan sort-merge joins that AQE only
     * demotes after a shuffle stage.
     */
   private def beamWalk(parts: GraphAnnParts, seeds: DataFrame): DataFrame = {
     var scored = parts.allsc.join(broadcast(seeds), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("cos"), lit(0).as("first"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     for (h <- 1 to BeamHops) {
       val beam = scored.orderBy(col("cos").desc, col("vec_id").asc)
         .limit(BeamWidth).select(col("vec_id").as("src"))
@@ -1123,10 +1125,10 @@ object Similarity {
       // allsc holds each vec_id != 0 exactly once: the semi-join is the
       // distinct neighbour set, already scored
       val fresh = parts.allsc.join(broadcast(nbrs), Seq("vec_id"), "left_semi")
-        .join(broadcast(scored.select("vec_id")), Seq("vec_id"), "left_anti")
+        .join(scored.select("vec_id"), Seq("vec_id"), "left_anti")
       scored = scored
         .unionByName(fresh.select(col("vec_id"), col("cos"), lit(h).as("first")))
-        .localCheckpoint()
+        .transform(Materialized.of(_).df)
     }
     hopReports(scored, Nil, parts.truth.select(col("tid").as("vec_id")))
       .select(col("hop"), lit(BeamWidth).as("beam_width"), col("n_scored"),
@@ -1148,7 +1150,7 @@ object Similarity {
       explode(sequence(col("first"), lit(BeamHops))).as("hop"): _*)
     val hits = graft.plans.TopKPerKey(perHop, hopKeys,
         Seq(("cos", false), ("vec_id", true)), TopK)
-      .join(broadcast(truth), keys :+ "vec_id", "left_semi")
+      .join(truth, keys :+ "vec_id", "left_semi")
       .select((hopKeys :+ "vec_id").map(col) :+ lit(1).as("hit"): _*)
     perHop.join(broadcast(hits), hopKeys :+ "vec_id", "left")
       .groupBy(hopKeys.map(col): _*)
@@ -1286,7 +1288,7 @@ object Similarity {
     // difference between reading a bucketed store and re-quantizing the
     // corpus seven times.
     val v0 = prepared(s, d).select("vec_id", "q", "nrm")
-    val v = if (onDemand) v0.localCheckpoint() else v0
+    val v = if (onDemand) v0.transform(Materialized.of(_).df) else v0
     val qset = v.filter(col("vec_id") % KnnJoinStride === 0 &&
         col("vec_id") < BatchQueries * KnnJoinStride)
       .select(col("vec_id").as("query_id"), col("q").as("qa"),
@@ -1302,7 +1304,7 @@ object Similarity {
     // None in on-demand mode — the score table must not exist there, or a
     // future edit could silently re-route the serving path through it
     val scall: Option[DataFrame] =
-      if (onDemand) None else Some(fullPass.localCheckpoint())
+      if (onDemand) None else Some(fullPass.transform(Materialized.of(_).df))
     val pairKeys = Seq("query_id", "vec_id")
     /** (query_id, vec_id) pairs → (query_id, vec_id, cos), one row per
       * distinct pair with vec_id != query_id: the lookup semi-join in
@@ -1322,7 +1324,7 @@ object Similarity {
     val truthQ = graft.plans.TopKPerKey(scall.getOrElse(fullPass),
         Seq("query_id"), Seq(("cos", false), ("vec_id", true)), TopK)
       .select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     // Per-query hub seeds: global top (BeamSeeds+1) hubs by degree — one
     // id may be a query and drop out, so +1 keeps every query at exactly
     // BeamSeeds entry points; per-query selection is a bounded heap over
@@ -1334,7 +1336,7 @@ object Similarity {
           .filter(col("src") =!= col("query_id")),
         Seq("query_id"), Seq(("deg", false), ("src", true)), BeamSeeds)
       .select(col("query_id"), col("src").as("vec_id"))
-    var scored = score(seeds).withColumn("first", lit(0)).localCheckpoint()
+    var scored = score(seeds).withColumn("first", lit(0)).transform(Materialized.of(_).df)
     for (h <- 1 to BeamHops) {
       val beam = graft.plans.TopKPerKey(scored, Seq("query_id"),
           Seq(("cos", false), ("vec_id", true)), BeamWidth)
@@ -1342,9 +1344,9 @@ object Similarity {
       // THE batched hop: one equi-join advances every query's frontier
       val fresh = broadcast(beam).join(adjacency, "src")
         .select(col("query_id"), col("dst").as("vec_id"))
-        .join(broadcast(scored.select(pairKeys.map(col): _*)), pairKeys, "left_anti")
+        .join(scored.select(pairKeys.map(col): _*), pairKeys, "left_anti")
       scored = scored.unionByName(score(fresh).withColumn("first", lit(h)))
-        .localCheckpoint()
+        .transform(Materialized.of(_).df)
     }
     hopReports(scored, Seq("query_id"), truthQ).orderBy("query_id", "hop")
   }
@@ -2213,6 +2215,29 @@ object Similarity {
     }.mkString("\nUNION ALL\n")
   }
 
+  /** The n14/n25 oracle: the nprobe search over the assigned corpus (n25
+    * serves the same search from its written tables).
+    */
+  private val duckIvfNprobe: String =
+    s"""WITH $duckPrep,
+       |$duckAssigned,
+       |qv AS (SELECT q AS qa, nrm AS na FROM prepn WHERE vec_id = 0),
+       |probes AS (
+       |  SELECT cid AS pcid FROM (
+       |    SELECT c.cid,
+       |           CAST(${duckDot("qa", "c.cq")} AS DOUBLE)
+       |             / sqrt(CAST(na AS DOUBLE) * CAST(c.cnrm AS DOUBLE)) AS qcos
+       |    FROM cents c CROSS JOIN qv)
+       |  ORDER BY qcos DESC, cid ASC LIMIT $NProbe),
+       |sel AS (
+       |  SELECT a.vec_id, a.cid, ${duckDot("qa", "a.q")} AS dot,
+       |         CAST(${duckDot("qa", "a.q")} AS DOUBLE)
+       |           / sqrt(CAST(na AS DOUBLE) * CAST(a.nrm AS DOUBLE)) AS cos
+       |  FROM assigned a JOIN probes ON a.cid = pcid CROSS JOIN qv
+       |  WHERE a.vec_id <> 0)
+       |SELECT vec_id, cid, dot, cos FROM sel
+       |ORDER BY cos DESC, vec_id ASC LIMIT $TopK""".stripMargin
+
   /** The n24/n26 oracle: the n22 walk chain keyed by query_id over
     * the shared graph CTEs — one definition for both keys (n26 serves
     * from the persisted copy of the SAME graph).
@@ -2539,25 +2564,7 @@ object Similarity {
     "n28_ondemand_beam" -> duckBatchedBeam,
     // n25: the persisted round trip serves n14's search from the written
     // tables — served == built IS the pin, so the oracle is n14's text.
-    "n25_index_persist" ->
-      s"""WITH $duckPrep,
-         |$duckAssigned,
-         |qv AS (SELECT q AS qa, nrm AS na FROM prepn WHERE vec_id = 0),
-         |probes AS (
-         |  SELECT cid AS pcid FROM (
-         |    SELECT c.cid,
-         |           CAST(${duckDot("qa", "c.cq")} AS DOUBLE)
-         |             / sqrt(CAST(na AS DOUBLE) * CAST(c.cnrm AS DOUBLE)) AS qcos
-         |    FROM cents c CROSS JOIN qv)
-         |  ORDER BY qcos DESC, cid ASC LIMIT $NProbe),
-         |sel AS (
-         |  SELECT a.vec_id, a.cid, ${duckDot("qa", "a.q")} AS dot,
-         |         CAST(${duckDot("qa", "a.q")} AS DOUBLE)
-         |           / sqrt(CAST(na AS DOUBLE) * CAST(a.nrm AS DOUBLE)) AS cos
-         |  FROM assigned a JOIN probes ON a.cid = pcid CROSS JOIN qv
-         |  WHERE a.vec_id <> 0)
-         |SELECT vec_id, cid, dot, cos FROM sel
-         |ORDER BY cos DESC, vec_id ASC LIMIT $TopK""".stripMargin,
+    "n25_index_persist" -> duckIvfNprobe,
     // n23: the same scaffolding instantiated twice (CTE suffix per entry
     // mode) over ONE shared graph/scoring/truth base.
     "n23_layered_ann" ->
@@ -2832,25 +2839,7 @@ object Similarity {
          |FROM prepn JOIN good ON vec_id = doc_id CROSS JOIN qv
          |WHERE vec_id <> 0
          |ORDER BY cos DESC, vec_id ASC LIMIT $TopK""".stripMargin,
-    "n14_ivf_nprobe" ->
-      s"""WITH $duckPrep,
-         |$duckAssigned,
-         |qv AS (SELECT q AS qa, nrm AS na FROM prepn WHERE vec_id = 0),
-         |probes AS (
-         |  SELECT cid AS pcid FROM (
-         |    SELECT c.cid,
-         |           CAST(${duckDot("qa", "c.cq")} AS DOUBLE)
-         |             / sqrt(CAST(na AS DOUBLE) * CAST(c.cnrm AS DOUBLE)) AS qcos
-         |    FROM cents c CROSS JOIN qv)
-         |  ORDER BY qcos DESC, cid ASC LIMIT $NProbe),
-         |sel AS (
-         |  SELECT a.vec_id, a.cid, ${duckDot("qa", "a.q")} AS dot,
-         |         CAST(${duckDot("qa", "a.q")} AS DOUBLE)
-         |           / sqrt(CAST(na AS DOUBLE) * CAST(a.nrm AS DOUBLE)) AS cos
-         |  FROM assigned a JOIN probes ON a.cid = pcid CROSS JOIN qv
-         |  WHERE a.vec_id <> 0)
-         |SELECT vec_id, cid, dot, cos FROM sel
-         |ORDER BY cos DESC, vec_id ASC LIMIT $TopK""".stripMargin,
+    "n14_ivf_nprobe" -> duckIvfNprobe,
     // n30: the window-argmax assignment CTE (n02's oracle spelling), the
     // exact integer best-centroid dot re-derived from the centroid table,
     // then the same two metadata-scale aggregations; all divisions are

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{RunScope, Tables}
+import graft.{Materialized, RunScope, Tables}
 import graft.functions.TextHash
 import Relational.{dec, decD}
 
@@ -1822,9 +1822,9 @@ object TextOps {
       .withColumn("rate_ppm",
         expr("least(1000000L, target_tok * 1000000 div t_s)"))
       .select("source", "t_s", "n_docs", "w", "target_tok", "rate_ppm")
-      .localCheckpoint()
+      .transform(Materialized.of(_).df)
     val kept = docs
-      .join(broadcast(rates.select("source", "rate_ppm")), "source")
+      .join(rates.select("source", "rate_ppm"), "source")
       .filter(expr(
         s"${TextHash.sparkHash56("cast(doc_id as string)")} % 1000000") <
         col("rate_ppm"))

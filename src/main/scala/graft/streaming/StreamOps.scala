@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Materialized
 import graft.operators.FraudPipeline
 import graft.sources.ReadGuard
 
@@ -1109,14 +1110,13 @@ object StreamOps {
     (tables :+ ("deleted" -> (() => deadIds(spark, dir, tables.head._1, idCol))))
       .filter { case (t, _) => pathExists(spark, s"$dir/$t") }
       .flatMap { case (t, fold) =>
-        val served = fold().withColumn("batch_id", lit(base)).localCheckpoint()
+        val served = Materialized.of(fold().withColumn("batch_id", lit(base)))
         val rows =
           if (!served.isEmpty) Some(served)
           else if (t == "deleted" || FoldOnlyTables(t)) None
-          else Some(ReadGuard.readRuns(spark, s"$dir/$t")
-              .drop("batch_id").withColumn("batch_id", lit(base))
-              .localCheckpoint()).filterNot(_.isEmpty)
-        rows.foreach(_.write.mode(mode).partitionBy("batch_id").parquet(s"$dst/$t"))
+          else Some(Materialized.of(ReadGuard.readRuns(spark, s"$dir/$t")
+              .drop("batch_id").withColumn("batch_id", lit(base)))).filterNot(_.isEmpty)
+        rows.foreach(_.df.write.mode(mode).partitionBy("batch_id").parquet(s"$dst/$t"))
         rows.map(_ => t)
       }.toSet
 
@@ -1240,7 +1240,7 @@ object StreamOps {
       val Sim = graft.queries.Similarity
       val spark = cached.sparkSession
       val prep = Sim.prepareVectors(cached).select("vec_id", "q", "nrm")
-        .localCheckpoint()
+        .transform(Materialized.of(_).df)
       // Append-only fence over the LIVE view (r11 advice item 1, made
       // batch-tombstone-aware in r13): the delta fold is exact for ids
       // not currently served — re-ingesting a LIVE id with a different
@@ -1267,7 +1267,7 @@ object StreamOps {
       writeRun(prep, s"$dir/vectors", batchId)
       val cellsNew = Sim.topCells(prep,
           cents.select(col("cid"), col("cq"), col("cnrm")))
-        .select("vec_id", "cid").localCheckpoint()
+        .select("vec_id", "cid").transform(Materialized.of(_).df)
       // the stores are read back AFTER the batch's own rows landed: the
       // candidate generation below must see new-new pairs too
       writeRun(cellsNew, s"$dir/cells", batchId)
@@ -1405,11 +1405,10 @@ object StreamOps {
         .join(cells.select(col("vec_id").as("dst"), col("cid")), Seq("cid"))
         .filter(col("src") =!= col("dst"))
         .select("src", "dst").distinct()
-      val reranked = Sim.topKEdges(
+      val reranked = Materialized.of(Sim.topKEdges(
           Sim.scoreDirectedPairs(pairs, s36Vectors(spark, dir)))
-        .select("src", "dst", "cos")
-        .localCheckpoint()
-      if (!reranked.isEmpty) writeRun(reranked, s"$dir/edges", batchId)
+        .select("src", "dst", "cos"))
+      if (!reranked.isEmpty) writeRun(reranked.df, s"$dir/edges", batchId)
     }
 
   /** The serving view: symmetrized adjacency of the maintained directed
@@ -1498,20 +1497,19 @@ object StreamOps {
     s32UpsertIndexBatch(dir)(batch, batchId)
     val spark = batch.sparkSession
     if (pathExists(spark, s"$dir/bands")) {
-      val batchBands = ReadGuard.readRuns(spark, s"$dir/bands")
+      val batchBands = Materialized.of(ReadGuard.readRuns(spark, s"$dir/bands")
         .filter(col("batch_id").cast("long") === batchId)
-        .select("doc_id", "band_key")
-        .localCheckpoint()
+        .select("doc_id", "band_key"))
       if (!batchBands.isEmpty) {
         val storeBands = s32BandIndex(spark, dir)
         val fwd = storeBands.select(col("doc_id").as("d1"), col("band_key"))
-          .join(batchBands.select(col("doc_id").as("d2"), col("band_key")),
+          .join(batchBands.df.select(col("doc_id").as("d2"), col("band_key")),
             Seq("band_key"))
           .filter(col("d1") =!= col("d2"))
           .select("d1", "d2")
         val touching = fwd
           .unionByName(fwd.select(col("d2").as("d1"), col("d1").as("d2")))
-          .distinct().localCheckpoint()
+          .distinct().transform(Materialized.of(_).df)
         val live = s43Clusters(spark, dir)
         // contract doc pairs to label edges; batch docs default to self
         def lblOf(side: String) = live
@@ -1526,8 +1524,8 @@ object StreamOps {
         val mergeMap = graft.queries.Dedup
           .clusterTableOf(labelNodes, contracted)
           .select(col("doc_id").as("old_lbl"), col("cluster").as("new_lbl"))
-          .localCheckpoint()
-        val batchCur = batchBands.select("doc_id").distinct()
+          .transform(Materialized.of(_).df)
+        val batchCur = batchBands.df.select("doc_id").distinct()
           .join(live.withColumnRenamed("cluster", "cur"), Seq("doc_id"), "left")
           .select(col("doc_id"), coalesce(col("cur"), col("doc_id")).as("cluster"))
         val affected = live
@@ -1568,19 +1566,19 @@ object StreamOps {
       // affected = the partners' whole current components
       val partnerLabels = live.join(partners, Seq("doc_id"), "left_semi")
         .select("cluster").distinct()
-      val affected = live.join(partnerLabels, Seq("cluster"), "left_semi")
-        .select("doc_id").localCheckpoint()
+      val affected = Materialized.of(
+        live.join(partnerLabels, Seq("cluster"), "left_semi").select("doc_id"))
       if (!affected.isEmpty) {
         // re-derive the post-delete components from the affected docs'
         // live band pairs (pairs cannot leave a component, so the edge
         // set is complete for every affected component)
-        val affBands = liveBands.join(affected, Seq("doc_id"), "left_semi")
+        val affBands = liveBands.join(affected.df, Seq("doc_id"), "left_semi")
         val a = affBands.select(col("doc_id").as("d1"), col("band_key"))
         val b = affBands.select(col("doc_id").as("d2"), col("band_key"))
         val pairs = a.join(b, Seq("band_key"))
           .filter(col("d1") < col("d2"))
           .select("d1", "d2").distinct()
-        writeRun(graft.queries.Dedup.clusterTableOf(affected, pairs),
+        writeRun(graft.queries.Dedup.clusterTableOf(affected.df, pairs),
           s"$dir/labels", batchId)
       }
     }
@@ -1671,7 +1669,7 @@ object StreamOps {
       .select(col("doc_id"), col("cluster"),
         col("batch_id").cast("long").as("batch_id"))
     val runLabels = labelsRaw.filter(col("batch_id") === batchId)
-      .select("doc_id", "cluster").localCheckpoint()
+      .select("doc_id", "cluster").transform(Materialized.of(_).df)
     // docs whose cluster membership this batch may have changed: the
     // fold's rewritten docs plus the ids tombstoned AT this batch
     val newlyDead =
@@ -1685,17 +1683,17 @@ object StreamOps {
     // immutable run history — merges/splits retire or shrink these)
     val priorLabels = latestPerKey(labelsRaw.filter(col("batch_id") < batchId)
       .join(touched, Seq("doc_id"), "left_semi"), "doc_id").select("cluster")
-    val affected = runLabels.select("cluster").unionByName(priorLabels)
-      .distinct().localCheckpoint()
+    val affected = Materialized.of(
+      runLabels.select("cluster").unionByName(priorLabels).distinct())
     if (affected.isEmpty) return
     val served = s43Clusters(spark, dir)
-    val mem = served.join(affected, Seq("cluster"), "left_semi")
+    val mem = served.join(affected.df, Seq("cluster"), "left_semi")
       .join(s48DocAttrs(spark, dir), "doc_id")
-    val elected = graft.queries.Dedup.goldenAggOf(mem).localCheckpoint()
+    val elected = graft.queries.Dedup.goldenAggOf(mem).transform(Materialized.of(_).df)
     // retire rows: affected labels that no longer head ANY live member —
     // all-null payload (the left join against the empty election supplies
     // the exact dtypes), filtered out by the serve's size >= 2
-    val retired = affected.select(col("cluster").as("kept_doc"))
+    val retired = affected.df.select(col("cluster").as("kept_doc"))
       .join(elected.select(col("kept_doc")), Seq("kept_doc"), "left_anti")
       .join(elected.limit(0), Seq("kept_doc"), "left")
     writeRun(elected.unionByName(retired), s"$dir/golden", batchId)
@@ -2032,7 +2030,7 @@ object StreamOps {
       val idx = graft.queries.Dedup.prefixIndexUnderOrder(
           cached.select("doc_id", "text"), s51Order(spark, dir),
           tau, graft.queries.Dedup.PrefixShingleK)
-        .localCheckpoint()
+        .transform(Materialized.of(_).df)
       writeRun(idx.select("doc_id", "varr", "sz", "plen"), s"$dir/toks", batchId)
       val newPrefix = idx
         .select(col("doc_id"), col("sz"),
@@ -2066,7 +2064,7 @@ object StreamOps {
       // 100 TB the index side shards by doc bucket instead, exactly as
       // d15Pairs documents — the candidate stream itself never shuffles
       val toks = s51Toks(spark, dir)
-      val pairs = cand
+      val pairs = Materialized.of(cand
         .join(broadcast(toks.select(col("doc_id").as("d1"),
           col("varr").as("va"), col("sz").as("na"))), Seq("d1"))
         .join(broadcast(toks.select(col("doc_id").as("d2"),
@@ -2080,9 +2078,8 @@ object StreamOps {
           (col("na") + col("nb") - col("inter")) * tau)
         .select(col("d1"), col("d2"), col("inter"),
           col("na").cast("long").as("na"), col("nb").cast("long").as("nb"))
-        .distinct()
-        .localCheckpoint()
-      if (!pairs.isEmpty) writeRun(pairs, s"$dir/pairs", batchId)
+        .distinct())
+      if (!pairs.isEmpty) writeRun(pairs.df, s"$dir/pairs", batchId)
     }
 
   def s51IndexMaintain(docs: DataFrame, dir: String,
@@ -2211,7 +2208,7 @@ object StreamOps {
     val targets = stores.toSeq.sortBy(_._1)
       .map { case (family, dir) => (family, dir, storeFamily(family)) }
     val victims = ids.select(col(ids.columns.head).cast("long").as("id"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialized.of(_).df)
     val rows = targets.map { case (family, dir, fam) =>
       // the registry is the single source for the id column, the
       // served-presence fold (its head table — the one every upsert of an
@@ -2225,7 +2222,7 @@ object StreamOps {
       val chunksBefore =
         if (family == "chunk")
           Some(s34ChunkRows(spark, dir).select("h", "nb").distinct()
-            .localCheckpoint())
+            .transform(Materialized.of(_).df))
         else None
       val batch = nextBatchId(spark, dir)
       val delBatch = victims.withColumnRenamed("id", idCol)

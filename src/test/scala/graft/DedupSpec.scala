@@ -711,6 +711,19 @@ class DedupSpec extends SparkSpec {
     assert(jobs <= D28JobsBefore * 2 / 3, s"d28 took $jobs jobs")
   }
 
+  // Jobs one d05 cluster build plus collect() took at sf0.001 from a
+  // released memo while connectedComponents ran a count() after every
+  // checkpoint: 42, 43 and 44 in three runs of the same code. Counting
+  // rows inside the checkpoint's own job must save at least two.
+  private val D05JobsBefore = 42
+
+  test("job budget: one d05 cluster build runs at least two jobs fewer than with count probes") {
+    graft.queries.Dedup.clearClusterMemo()
+    val jobs = Explain.jobsOf(spark)(
+      graft.queries.Dedup.d05DedupClusters(spark, sf).collect(): Unit)
+    assert(jobs <= D05JobsBefore - 2, s"d05 took $jobs jobs")
+  }
+
   test("p06 refresh: statuses partition the delta, bins only on accepted, consistent with p04/t20") {
     import org.apache.spark.sql.functions._
     import graft.queries.{Dedup, TextOps}

@@ -87,6 +87,22 @@ class PartitioningSpec extends SparkSpec {
         s"without column stats the filter estimate must fall back to the " +
           s"raw file size and stay sort-merge (otherwise this pin proves " +
           s"nothing):\n$noStats")
+      // The same flip from a materialisation boundary: 20 rows cut from a
+      // 1M-row range. A bare checkpoint keeps the range's multi-MB
+      // estimate; Materialized carries the exact 20 rows.
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1MB")
+      val twenty = spark.range(1000000).filter(col("id") % 50000 === 0)
+        .select(col("id").as("k"))
+      val big = spark.range(2000000).select(col("id").as("k"))
+      def joinPlan(small: org.apache.spark.sql.DataFrame): String =
+        big.join(small, "k").queryExecution.executedPlan.toString
+      val exact = joinPlan(Materialized.of(twenty).df)
+      val bare = joinPlan(twenty.localCheckpoint())
+      assert(exact.contains("BroadcastHashJoin"),
+        s"a 20-row Materialized frame must broadcast with no hint:\n$exact")
+      assert(!bare.contains("BroadcastHashJoin") && bare.contains("SortMergeJoin"),
+        s"a bare checkpoint keeps its origin estimate and stays sort-merge " +
+          s"(otherwise this pin proves nothing):\n$bare")
     } finally {
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -94,6 +110,21 @@ class PartitioningSpec extends SparkSpec {
       }
       for (t <- Seq("cbo_cust_stats", "cbo_cust_plain"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
+  test("Materialized counts its rows in the jobs of a bare checkpoint") {
+    val orders = Tables.orders(spark, sf)
+    for (df <- Seq(orders.filter(col("o_totalprice") > 100000),
+                   orders.filter(col("o_totalprice") < 0),
+                   orders.filter(lit(false)))) {
+      var m: Materialized = null
+      val jobs = Explain.jobsOf(spark) { m = Materialized.of(df); m.rows: Unit }
+      val bare = Explain.jobsOf(spark)(df.localCheckpoint(): Unit)
+      val n = df.count()
+      assert(m.rows === n && m.isEmpty === (n == 0L) && m.df.count() === n)
+      assert(jobs === bare,
+        s"the observed count must ride the checkpoint's jobs ($jobs vs $bare)")
     }
   }
 
