@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 import graft.{Materialized, RunScope, Tables}
 import graft.functions.TextHash
 import Relational.{dec, decD}
@@ -181,24 +182,22 @@ object Extended {
     * values, no interpolation, so they are bit-identical across engines
     * (interpolated `percentile()` mixes `(1-f)·a + f·b` floating point,
     * which the two engines may round differently in the last ulp).
-    * The cum-sum over the grouped distinct-value table is the
-    * range-partitioned two-pass `TextOps.prefixSum`, never a
+    * The bands are four [[rankSelect]] targets over the grouped
+    * distinct-value table; with no key, the pick's running count is
+    * `TextOps.prefixSum`'s range-partitioned two-pass scan, never a
     * single-partition global window.
     */
   val x02ApproxQuantile: Q = (s, d) => {
     val v = Tables.lineitem(s, d).select(col("l_extendedprice").as("v"))
-    val g = v.groupBy("v").agg(count(lit(1)).as("c"))
-    val cum = TextOps.prefixSum(g, "v", "c", "cum", includeCurrent = true)
-    val bands = cum.crossJoin(broadcast(v.agg(count(lit(1)).as("n"))))
-      .agg(
-        min(when(col("cum") * 100 >= col("n") * 49, col("v"))).as("p49"),
-        min(when(col("cum") * 100 >= col("n") * 51, col("v"))).as("p51"),
-        min(when(col("cum") * 100 >= col("n") * 94, col("v"))).as("p94"),
-        min(when(col("cum") * 100 >= col("n") * 96, col("v"))).as("p96"))
-    v.agg(
-        expr("percentile_approx(v, 0.5, 1000)").as("p50a"),
-        expr("percentile_approx(v, 0.95, 1000)").as("p95a"))
-      .crossJoin(bands)
+    val est = v.agg(count(lit(1)).as("n"),
+      expr("percentile_approx(v, 0.5, 1000)").as("p50a"),
+      expr("percentile_approx(v, 0.95, 1000)").as("p95a"))
+    val picks = rankSelect(v.groupBy("v").agg(count(lit(1)).as("w")), Nil,
+        "v", "w") { rows =>
+      ceilRanks(rows.crossJoin(broadcast(est.select("n"))), ("p49", 49L, 100L),
+        ("p51", 51L, 100L), ("p94", 94L, 100L), ("p96", 96L, 100L))
+    }
+    est.crossJoin(byTag(picks, Nil, "v", "p49", "p51", "p94", "p96"))
       .select(
         col("p49"), col("p51"), col("p94"), col("p96"),
         (col("p50a") >= col("p49") && col("p50a") <= col("p51")).as("p50_in_band"),
@@ -208,13 +207,13 @@ object Extended {
   /** x15: approx_percentile ACCURACY sweep — x02 pins the sketch at one
     * accuracy; this sweeps the knob (10 / 100 / 10000) and checks the GK
     * guarantee AT EACH SETTING: the estimate must land within rank
-    * ±n/accuracy of the true percentile, with the band computed exactly
-    * from the same prefix-sum cumulative histogram (integer
-    * cross-multiplication — `cum·100a ≥ n·(p·a ∓ 100)`; an upper band
-    * past the max rank is open). This is the table you consult when
-    * trading sketch memory for error at 100 TB — and it keeps even the
-    * coarsest setting under the hard oracle via the x01/x02
-    * bounded-property discipline.
+    * ±n/accuracy of the true percentile. All 12 band bounds are exact
+    * rank targets of ONE [[rankSelect]] over the distinct-value table, at
+    * r = ⌈n·(p·a ∓ 100)/(100a)⌉ in integers; an upper band past the max
+    * rank picks null and is open. The six sketches and the row count
+    * share one scan. This is the table you consult when trading sketch
+    * memory for error at 100 TB — and it keeps even the coarsest setting
+    * under the hard oracle via the x01/x02 bounded-property discipline.
     */
   val x15AccuracySweep: Q = (s, d) => {
     // Private cache owner: prefixSum's internal shard cache registers
@@ -223,32 +222,34 @@ object Extended {
     // else is being built with it.
     val mine = new RunScope.Caches
     val v = Tables.lineitem(s, d).select(col("l_extendedprice").as("v"))
-    val g = v.groupBy("v").agg(count(lit(1)).as("c"))
-    val cum = TextOps.prefixSum(g, "v", "c", "cum", includeCurrent = true,
-      owner = mine)
-    v.cache(); cum.cache()
-    val n = v.agg(count(lit(1)).as("n"))
-    val legs = Seq(10, 100, 10000).map { a =>
-      val bands = cum.crossJoin(broadcast(n)).agg(
-        min(when(col("cum") * (100L * a) >= col("n") * (50L * a - 100), col("v"))).as("lo50"),
-        min(when(col("cum") * (100L * a) >= col("n") * (50L * a + 100), col("v"))).as("hi50"),
-        min(when(col("cum") * (100L * a) >= col("n") * (95L * a - 100), col("v"))).as("lo95"),
-        min(when(col("cum") * (100L * a) >= col("n") * (95L * a + 100), col("v"))).as("hi95"))
-      v.agg(expr(s"percentile_approx(v, 0.5, $a)").as("p50a"),
-            expr(s"percentile_approx(v, 0.95, $a)").as("p95a"))
-        .crossJoin(broadcast(bands))
-        .select(lit(a).as("accuracy"),
-          (col("p50a") >= col("lo50") &&
-            col("p50a") <= coalesce(col("hi50"), col("p50a"))).as("p50_in_band"),
-          (col("p95a") >= col("lo95") &&
-            col("p95a") <= coalesce(col("hi95"), col("p95a"))).as("p95_in_band"))
-    }
-    // Materialize the 3-row report while the shared value/cum caches are
-    // alive, then release them — the query owns its cache lifecycle
-    // (round-6 advice: x15's cum table pinned executor memory for the
-    // rest of a 300-query run).
-    val out = Materialized.of(legs.reduce(_.unionByName(_)).orderBy("accuracy")).df
-    cum.unpersist(); v.unpersist()
+    val accuracies = Seq(10, 100, 10000)
+    // the row count and all six sketches in one scan
+    val est = v.agg(count(lit(1)).as("n"),
+      array(accuracies.map(a => struct(
+        lit(a).as("accuracy"),
+        expr(s"percentile_approx(v, 0.5, $a)").as("p50a"),
+        expr(s"percentile_approx(v, 0.95, $a)").as("p95a"))): _*).as("e"))
+    val fracs = for (a <- accuracies; (band, p, sign) <- Seq(("lo50", 50, -1),
+        ("hi50", 50, 1), ("lo95", 95, -1), ("hi95", 95, 1)))
+      yield ((a, band), p * a + sign * 100L, 100L * a)
+    val picks = rankSelect(v.groupBy("v").agg(count(lit(1)).as("w")), Nil,
+        "v", "w", owner = mine) { rows =>
+      ceilRanks(rows.crossJoin(broadcast(est.select("n"))), fracs: _*)
+    }.select(col("tag._1").as("accuracy"), col("tag._2").as("tag"), col("v"))
+    val bands = byTag(picks, Seq("accuracy"), "v", "lo50", "hi50", "lo95", "hi95")
+    val sketches = est.select(explode(col("e")).as("e")).select("e.*")
+    val report = sketches.join(broadcast(bands), "accuracy")
+      .select(col("accuracy"),
+        (col("p50a") >= col("lo50") &&
+          col("p50a") <= coalesce(col("hi50"), col("p50a"))).as("p50_in_band"),
+        (col("p95a") >= col("lo95") &&
+          col("p95a") <= coalesce(col("hi95"), col("p95a"))).as("p95_in_band"))
+      .orderBy("accuracy")
+    // Materialize the 3-row report while prefixSum's shards are alive,
+    // then release them — the query owns its cache lifecycle (round-6
+    // advice: x15's cum table pinned executor memory for the rest of a
+    // 300-query run).
+    val out = Materialized.of(report).df
     mine.release()
     out
   }
@@ -391,67 +392,137 @@ object Extended {
       .orderBy("user_id", "event_id")
   }
 
-  /** Shared scaffold of the histogram-selection family (q80 / q117 /
-    * q121): per-key bounds + measure total (`stats`:
-    * k, lo, hi, n), the deterministic equi-width bucket assignment
-    * (`bucketed` — IDENTICAL double math in every pass, so bucket
-    * membership can never disagree between phases), and the cumulative
-    * bucket histogram (`cumHist`: k, b, c, cb — ≤ B rows per key,
-    * metadata-scale). `measure` is count(lit(1)) for rank selection,
-    * sum(weight) for weighted-rank selection (q121).
+  /** Rank select, the one exact order statistic of this file: for each
+    * target, the smallest `value` whose cumulative `weight` over the
+    * `dist` rows of its keys, in `value` order, reaches its rank r, or
+    * null when r exceeds the keys' total weight.
+    *
+    * `dist` holds (keys…, value, weight) rows with integral weights. The
+    * pick adds each row's running weight `cw`: with keys, a window per key
+    * in a RANGE frame (so a value may repeat: tied rows share the weight
+    * through their value), which also gives `n`, the key's total; with no
+    * key, [[TextOps.prefixSum]]'s range-partitioned two-pass scan (a
+    * window with no key runs on one task), which needs each value once,
+    * holds its ranged shards in `owner` and adds no total. `targetsOf`
+    * then turns every row into one row per target, adding the rank `r`
+    * and any tag or carried columns (from `n`, or from a keyless total
+    * the caller joins in), so no target table is joined back. The pick is
+    * one aggregate per target: its columns but value, weight, cw and n,
+    * plus `value` (the pick) and `below`, the keys' weight under the pick
+    * (what [[histogramSelect]] subtracts from r to rank inside a bucket).
+    *
+    * Callers pick the input by the measure's domain:
+    *   - bounded (`l_quantity`, 50 values: q117/q119): the groupBy (k, v)
+    *     distribution is keys × |domain| rows after map-side aggregation,
+    *     so it goes straight to the pick ([[quantityDist]]);
+    *   - unbounded (`l_extendedprice`, nearly one value per row:
+    *     q80/q121/q124): a distinct-value distribution would shuffle the
+    *     whole corpus, so [[histogramSelect]] first narrows each target
+    *     to one equi-width bucket.
     */
-  private def histFrame(li: DataFrame, measure: Column)
-      : (DataFrame, DataFrame => DataFrame, DataFrame) = {
+  private[graft] def rankSelect(dist: DataFrame, keys: Seq[String],
+                                value: String, weight: String,
+                                owner: RunScope.Caches = RunScope.query)(
+      targetsOf: DataFrame => DataFrame): DataFrame = {
+    val Window = org.apache.spark.sql.expressions.Window
+    val rows = dist.select((keys :+ value :+ weight).map(col): _*)
+    val cum =
+      if (keys.isEmpty)
+        TextOps.prefixSum(rows, value, weight, "cw", includeCurrent = true,
+          owner = owner)
+      else {
+        val byKey = Window.partitionBy(keys.map(col): _*)
+        rows.withColumn("cw", sum(weight).over(byKey.orderBy(value)
+            .rangeBetween(Window.unboundedPreceding, Window.currentRow)))
+          .withColumn("n", sum(weight).over(byKey))
+      }
+    val targeted = targetsOf(cum)
+    val reached = col("cw") >= col("r")
+    targeted
+      .groupBy(targeted.columns.diff(Seq(value, weight, "cw", "n")).map(col): _*)
+      .agg(min(when(reached, col(value))).as(value),
+        coalesce(max(when(!reached, col("cw"))), lit(0L)).as("below"))
+  }
+
+  /** The unbounded-domain front-end of [[rankSelect]] (q80/q121/q124):
+    * two-phase equi-width histogram selection over `li` (k, v, …), the
+    * classic distributed exact-selection algorithm. Phase 1: per-key
+    * bounds (`stats`: k, lo, hi), every row's bucket (the
+    * SAME double math in both phases, so bucket membership cannot
+    * disagree) and the ≤ [[PdBuckets]]-row-per-key bucket histogram, from
+    * which the pick finds each target's bucket and the weight below it.
+    * Phase 2 re-scans only the candidate buckets' rows (about n/B per
+    * key), each joined with its targets, and picks at rank r − below
+    * inside the bucket. Every shuffle is metadata-scale; the big table is
+    * scanned, never shuffled. At 100 TB a skewed bucket (> memory)
+    * recurses one more histogram level on the candidate rows; one level
+    * suffices here.
+    *
+    * `weight` names an integral per-row weight column (q121); without one
+    * every row weighs 1 and the histogram stays a count. `targetsOf` is
+    * [[rankSelect]]'s, applied to the histogram rows (k, n known).
+    * Returns the picks: the target columns but r, plus v.
+    */
+  private[graft] def histogramSelect(li: DataFrame, weight: Option[String])(
+      targetsOf: DataFrame => DataFrame): DataFrame = {
     val B = PdBuckets
-    val stats = li.groupBy("k")
-      .agg(min("v").as("lo"), max("v").as("hi"), measure.as("n"))
-    def bucketed(rows: DataFrame): DataFrame = rows
-      .join(broadcast(stats), "k")
+    val measure = weight.fold(count(lit(1)))(w => sum(col(w)))
+    val stats = li.groupBy("k").agg(min("v").as("lo"), max("v").as("hi"))
+    val bucketed = li.join(broadcast(stats), "k")
       .withColumn("b",
         when(col("hi") === col("lo"), lit(0)).otherwise(
           least(lit(B - 1),
             floor((col("v") - col("lo")) / (col("hi") - col("lo")) * B))
             .cast("int")))
-    val hist = bucketed(li).groupBy("k", "b").agg(measure.as("c"))
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy("b")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val cumHist = hist.withColumn("cb", coalesce(sum("c").over(wb), lit(0L)))
-    (stats, bucketed, cumHist)
+    val hist = bucketed.groupBy("k", "b").agg(measure.as("w"))
+    // a rank past the total finds the top bucket here, then picks null
+    val cand = rankSelect(hist, Seq("k"), "b", "w") { rows =>
+      targetsOf(rows).withColumnRenamed("r", "rank")
+        .withColumn("r", least(col("rank"), col("n")))
+    }.withColumn("r", col("rank") - col("below")).drop("rank", "below")
+    // one window per target over its bucket's rows, which carry its rank
+    val rows = bucketed.join(broadcast(cand), Seq("k", "b"))
+      .withColumn("_w", weight.fold(lit(1L))(col))
+    rankSelect(rows, cand.columns.toSeq, "v", "_w")(identity)
+      .drop("b", "r", "below")
   }
 
-  /** Candidate buckets for a target-rank table (k, <carry...>, r): the ONE
-    * bucket per target satisfying cb < r ≤ cb + c, annotated with the
-    * in-bucket rank rr and the carried target columns — broadcastable
-    * metadata for phase 2's re-scan.
+  /** Rank targets at r = ⌈n·num/den⌉ in exact integers: each row of
+    * `rows` becomes one row per (tag, num, den), tagged `tag`.
     */
-  private def histCand(cumHist: DataFrame, targets: DataFrame,
-                       carry: Seq[String]): DataFrame =
-    cumHist.join(targets, "k")
-      .where(col("cb") < col("r") && col("r") <= col("cb") + col("c"))
-      .select((Seq(col("k"), col("b"), (col("r") - col("cb")).as("rr")) ++
-        carry.map(col)): _*)
+  private def ceilRanks[T: TypeTag](rows: DataFrame, fracs: (T, Long, Long)*)
+      : DataFrame =
+    rows.withColumn("t", explode(typedLit(fracs.toList)))
+      .withColumn("tag", col("t._1"))
+      .withColumn("r", expr("(n * t._2 + t._3 - 1) div t._3"))
+      .drop("t")
+
+  /** A pivot of picks over declared tags: one row per `keys`, one column
+    * per tag holding `value` of that key's row with the tag.
+    */
+  private def byTag(picks: DataFrame, keys: Seq[String], value: String,
+                    tags: String*): DataFrame = {
+    val cols = tags.map(t => min(when(col("tag") === t, col(value))).as(t))
+    picks.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
+  }
+
+  /** The bounded-domain input of [[rankSelect]] (q117/q119): the (k, v, w)
+    * distribution of l_quantity per l_returnflag, one partial-agg groupBy
+    * and the only corpus-scale step.
+    */
+  private def quantityDist(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .select(col("l_returnflag").as("k"), col("l_quantity").as("v"))
+      .groupBy("k", "v").agg(count(lit(1)).as("w"))
 
   /** q80: SQL-standard `percentile_disc(q) WITHIN GROUP (ORDER BY v)` —
     * the discrete percentile is the smallest value whose cume_dist reaches
     * q, i.e. the ceil(q*n)-th order statistic per key, a DATA value (no
-    * interpolation).
-    *
-    * Shape: two-phase HISTOGRAM SELECTION (the classic distributed exact-
-    * selection algorithm). Phase 1 builds a per-(key, equi-width-bucket)
-    * count histogram — a partial-agg groupBy whose shuffle output is
-    * metadata-scale (keys × B rows, B = [[PdBuckets]]) — and locates, for
-    * each (key, quantile), the bucket containing the target rank plus the
-    * rank-within-bucket, all on broadcastable metadata. Phase 2 re-scans
-    * only the candidate-bucket rows (expected n/B per key) and picks the
-    * in-bucket order statistic with a window bounded by bucket width.
-    * Every shuffle is metadata-scale; the big table is only ever SCANNED
-    * (3 column-pruned passes), never shuffled — unlike the previous
-    * range-partitioned prefix-sum spelling, which shuffled all distinct
-    * (k, v) pairs twice and paid a cache + broadcast-join-back. At 100 TB
-    * a skewed/degenerate bucket (> memory) recurses one more histogram
-    * level on the candidate rows; one level suffices here and the window
-    * is bounded by design at n/B.
+    * interpolation), picked through [[histogramSelect]]: every shuffle is
+    * metadata-scale (keys × B rows, B = [[PdBuckets]]) and the big table
+    * is only ever SCANNED (3 column-pruned passes), never shuffled —
+    * unlike a range-partitioned prefix-sum spelling, which shuffles all
+    * distinct (k, v) pairs twice.
     *
     * SCALE NOTE: Spark's builtin `percentile_disc` is an
     * ImperativeAggregate that buffers every group value in one task —
@@ -470,27 +541,10 @@ object Extended {
     // broadcast(stats) builds are deduped by ReuseExchange.
     val li = Tables.lineitem(s, d)
       .select(col("l_returnflag").as("k"), col("l_extendedprice").as("v"))
-    val (stats, bucketed, cumHist) = histFrame(li, count(lit(1)))
-    // Quantile targets: rank r = ceil(num*n/den), spelled in exact integer
-    // arithmetic; one row per (key, quantile) — 9 rows total.
-    val targets = stats
-      .select(col("k"), col("n"),
-        explode(typedLit(Seq((25, 1, 4), (50, 1, 2), (90, 9, 10)))).as("t"))
-      .select(col("k"), col("t._1").as("qq"),
-        expr("(n * t._2 + t._3 - 1) div t._3").as("r"))
-    val cand = histCand(cumHist, targets, Seq("qq"))
-    // Phase 2: only candidate-bucket rows survive the broadcast join; the
-    // per-(k, quantile) window is bounded by bucket width (~n/B rows).
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy("k", "qq").orderBy("v")
-    val picked = bucketed(li).join(broadcast(cand), Seq("k", "b"))
-      .withColumn("rk", row_number().over(wv))
-      .where(col("rk") === col("rr"))
-    picked.groupBy("k").agg(
-        min(when(col("qq") === 25, col("v"))).as("p25"),
-        min(when(col("qq") === 50, col("v"))).as("p50"),
-        min(when(col("qq") === 90, col("v"))).as("p90"))
-      .select(col("k").as("l_returnflag"), col("p25"), col("p50"), col("p90"))
+    val picks = histogramSelect(li, None)(
+      ceilRanks(_, ("p25", 1L, 4L), ("p50", 1L, 2L), ("p90", 9L, 10L)))
+    byTag(picks, Seq("k"), "v", "p25", "p50", "p90")
+      .withColumnRenamed("k", "l_returnflag")
       .orderBy("l_returnflag")
   }
 
@@ -499,35 +553,21 @@ object Extended {
     * sharding: every row is assigned to one of 4 depth-balanced bins by
     * comparing against the per-key quartile boundaries, then audited with
     * per-bin counts and value sums. The boundaries are exact
-    * `percentile_disc` order statistics computed with the SAME two-phase
-    * histogram-selection scaffold as q80 ([[histFrame]]/[[histCand]] —
-    * metadata-scale shuffles only, the big table is scanned, never
-    * shuffled); the bin assignment pass is one broadcast join (3 doubles
-    * per key) + a map-side comparison, and the audit is one partial-agg
-    * groupBy over keys × 4 groups. Ties sit in the lower bin (strict `>`),
-    * so membership is deterministic — no row_number tie-splitting, which
-    * would force a global sort. Bin sums accumulate in DECIMAL(18,2)
-    * (order-independent) and land as double.
+    * `percentile_disc` order statistics picked through the same
+    * [[histogramSelect]] as q80 (metadata-scale shuffles only, the big
+    * table is scanned, never shuffled); the bin assignment pass is one
+    * broadcast join (3 doubles per key) + a map-side comparison, and the
+    * audit is one partial-agg groupBy over keys × 4 groups. Ties sit in
+    * the lower bin (strict `>`), so membership is deterministic — no
+    * row_number tie-splitting, which would force a global sort. Bin sums
+    * accumulate in DECIMAL(18,2) (order-independent) and land as double.
     */
   val q124EquidepthBins: Q = (s, d) => {
     val li = Tables.lineitem(s, d)
       .select(col("l_returnflag").as("k"), col("l_extendedprice").as("v"))
-    val (stats, bucketed, cumHist) = histFrame(li, count(lit(1)))
-    val targets = stats
-      .select(col("k"), col("n"),
-        explode(typedLit(Seq((25, 1, 4), (50, 1, 2), (75, 3, 4)))).as("t"))
-      .select(col("k"), col("t._1").as("qq"),
-        expr("(n * t._2 + t._3 - 1) div t._3").as("r"))
-    val cand = histCand(cumHist, targets, Seq("qq"))
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy("k", "qq").orderBy("v")
-    val bounds = bucketed(li).join(broadcast(cand), Seq("k", "b"))
-      .withColumn("rk", row_number().over(wv))
-      .where(col("rk") === col("rr"))
-      .groupBy("k").agg(
-        min(when(col("qq") === 25, col("v"))).as("b25"),
-        min(when(col("qq") === 50, col("v"))).as("b50"),
-        min(when(col("qq") === 75, col("v"))).as("b75"))
+    val picks = histogramSelect(li, None)(
+      ceilRanks(_, ("b25", 1L, 4L), ("b50", 1L, 2L), ("b75", 3L, 4L)))
+    val bounds = byTag(picks, Seq("k"), "v", "b25", "b50", "b75")
     li.join(broadcast(bounds), "k")
       .withColumn("bin",
         expr("1 + IF(v > b25, 1, 0) + IF(v > b50, 1, 0) + IF(v > b75, 1, 0)"))
@@ -553,10 +593,10 @@ object Extended {
     * percentile) — q80's other half: instead of the smallest data value at
     * rank ceil(q·n), the continuous percentile interpolates between the
     * two order statistics straddling position q·(n−1) (0-indexed):
-    * `v_lo + (v_hi − v_lo) · frac`. Same two-phase histogram-selection
-    * shape as q80 (per-key bounds → metadata-scale bucket histogram →
-    * candidate-bucket re-scan; the big table is only ever scanned, never
-    * shuffled) — each quantile just fetches TWO ranks instead of one.
+    * `v_lo + (v_hi − v_lo) · frac`. Each quantile is two rank targets of
+    * one [[rankSelect]] over the bounded l_quantity distribution
+    * ([[quantityDist]]: one corpus pass, every later step
+    * metadata-scale); the lower rank picks v_lo, the higher v_hi.
     *
     * Determinism across engines: rank and fraction are exact INTEGER
     * algebra — pos = (n−1)·num/den splits into r_lo = pos div den + 1 and
@@ -568,144 +608,72 @@ object Extended {
     * differently — two reasons it stays off this path).
     */
   val q117PercentileCont: Q = (s, d) => {
-    // DISTINCT-VALUE selection (r15 restructure — guide §1.2 step 1 "the
-    // distributed algorithm"): l_quantity is a bounded low-cardinality
-    // domain (TPC-H: 50 integral values), so the exact order statistic
-    // falls out of ONE corpus pass — groupBy (k, v) partial-aggregates to
-    // keys × |domain| rows BEFORE the exchange, and every later step is
-    // metadata-scale. Replaces three column-pruned scans + two broadcast
-    // rounds of the histogram-selection scaffold (which q80/q121/q124
-    // KEEP: l_extendedprice is ~unique per row, where a distinct-value
-    // shuffle would be corpus-scale — the scaffold's reason to exist).
-    // Equivalence: value at rank r = MIN(v) with cum_count(v) ≥ r — the
-    // oracle's ROW_NUMBER walk restated over the value distribution; the
-    // rank/fraction algebra below is the same exact-integer spelling, and
-    // the one float op (the interpolation) keeps its operand order.
-    val dist = distinctValueCum(Tables.lineitem(s, d)
-      .select(col("l_returnflag").as("k"), col("l_quantity").as("v")))
-    val targets = dist.select("k", "n").distinct()
-      .select(col("k"), col("n"),
-        explode(typedLit(Seq((25, 1, 4), (50, 1, 2), (90, 9, 10)))).as("t"))
-      .select(col("k"), col("t._1").as("qq"),
-        expr("((n - 1) * t._2) div t._3 + 1").as("rlo"),
-        expr("((n - 1) * t._2) % t._3").as("md"),
-        col("t._3").as("den"),
-        col("n"))
-      .withColumn("r2", least(col("rlo") + 1, col("n")))
-    val interp = dist.join(broadcast(targets), "k")
-      .groupBy("k", "qq")
-      .agg(min(when(col("cw") >= col("rlo"), col("v"))).as("v1"),
-        min(when(col("cw") >= col("r2"), col("v"))).as("v2"),
-        min(col("md")).as("md"), min(col("den")).as("den"))
+    val interp = rankSelect(quantityDist(s, d), Seq("k"), "v", "w") { rows =>
+      rows
+        .withColumn("t", explode(
+          typedLit(Seq(("p25c", 1, 4), ("p50c", 1, 2), ("p90c", 9, 10)))))
+        .withColumn("tag", col("t._1"))
+        .withColumn("md", expr("((n - 1) * t._2) % t._3"))
+        .withColumn("den", col("t._3"))
+        .withColumn("rlo", expr("((n - 1) * t._2) div t._3 + 1"))
+        .withColumn("r", explode(array(col("rlo"), least(col("rlo") + 1, col("n")))))
+        .drop("t", "rlo")
+    }
+      // order statistics grow with rank: the lower rank's pick is v1
+      .groupBy("k", "tag", "md", "den")
+      .agg(min("v").as("v1"), max("v").as("v2"))
       .withColumn("pv",
         col("v1") + (col("v2") - col("v1")) *
           (col("md").cast("double") / col("den").cast("double")))
-    interp.groupBy("k").agg(
-        min(when(col("qq") === 25, col("pv"))).as("p25c"),
-        min(when(col("qq") === 50, col("pv"))).as("p50c"),
-        min(when(col("qq") === 90, col("pv"))).as("p90c"))
-      .select(col("k").as("l_returnflag"), col("p25c"), col("p50c"), col("p90c"))
+    byTag(interp, Seq("k"), "pv", "p25c", "p50c", "p90c")
+      .withColumnRenamed("k", "l_returnflag")
       .orderBy("l_returnflag")
-  }
-
-  /** The per-key distinct-value cumulative distribution of a (k, v)
-    * frame: one partial-agg groupBy (k, v) — the only corpus-scale step —
-    * then a keyed running sum, yielding (k, v, c, cw, n) where cw is the
-    * count of rows with value ≤ v and n the key's row count. Exact rank
-    * selection reads straight off it: the order statistic at rank r is
-    * MIN(v) among rows with cw ≥ r (the ROW_NUMBER walk restated over the
-    * value distribution — each distinct v occupies ranks (cw−c, cw]).
-    * Only for LOW-CARDINALITY measures (q117/q119's l_quantity): the
-    * exchange carries keys × |domain| rows after map-side aggregation.
-    */
-  private def distinctValueCum(li: DataFrame): DataFrame = {
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                   org.apache.spark.sql.expressions.Window.currentRow)
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy("k")
-    li.groupBy("k", "v").agg(count(lit(1)).as("c"))
-      .withColumn("cw", sum("c").over(wk))
-      .withColumn("n", sum("c").over(wt))
   }
 
   /** q119: median absolute deviation (MAD) — the robust dispersion
     * statistic (outlier-immune, unlike stddev): per key, the median of
-    * |v − median(v)|. Two DEPENDENT exact-selection problems over the
-    * bounded l_quantity domain, both read off ONE [[distinctValueCum]]
-    * distribution (see the r15 rationale inside the body).
+    * |v − median(v)|. Two DEPENDENT exact selections over the bounded
+    * l_quantity domain, both [[rankSelect]] picks from ONE corpus pass
+    * ([[quantityDist]]): the deviation distribution is a pure function of
+    * the value distribution — |v − med| with multiplicity w(v) — so the
+    * second level needs no re-scan (values folding onto the same
+    * deviation are ties, which the pick's RANGE frame sums).
     *
     * Determinism: medians are percentile_disc(0.5) DATA values (rank
     * ceil(n/2), exact integer); |v − med| is one IEEE subtraction spelled
     * identically in the oracle.
     */
   val q119Mad: Q = (s, d) => {
-    // DISTINCT-VALUE double selection (r15 restructure, same rationale as
-    // q117): l_quantity's bounded domain makes BOTH selection levels
-    // metadata-scale after ONE corpus pass — and the second level needs
-    // no re-scan at all, because the deviation distribution is a pure
-    // function of the value distribution: |v − med| with multiplicity
-    // c(v), re-grouped (values folding onto the same deviation merge
-    // their counts — the deviation MULTISET is unchanged, which is all
-    // rank selection reads). Replaces two dependent histogram-selection
-    // levels = 6 scans + 4 broadcast rounds (~25 sequential stages, the
-    // suite's worst latency chain and the r14 verdict's #1 anti-scaling
-    // finding). The one float op (the deviation subtraction) keeps its
-    // spelling; medians stay percentile_disc DATA values at the same
-    // exact integer rank.
-    // no cache: every consumer hangs off the SAME groupBy/window subtree,
-    // so ReuseExchange materializes the corpus pass once (checked in the
-    // plan — the later consumers read ReusedExchange nodes)
-    val dist = distinctValueCum(Tables.lineitem(s, d)
-      .select(col("l_returnflag").as("k"), col("l_quantity").as("v")))
-    val med = dist.filter(col("cw") >= expr("(n + 1) div 2"))
-      .groupBy("k").agg(min("v").as("med"))
-    val devCum = {
-      val wk = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy("v")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                     org.apache.spark.sql.expressions.Window.currentRow)
-      dist.join(broadcast(med), "k")
-        .select(col("k"), abs(col("v") - col("med")).as("v"), col("c"), col("n"))
-        .groupBy("k", "v", "n").agg(sum("c").as("c"))
-        .withColumn("cw", sum("c").over(wk))
-    }
-    val mad = devCum.filter(col("cw") >= expr("(n + 1) div 2"))
-      .groupBy("k").agg(min("v").as("mad"))
-    val out = mad.join(broadcast(med), "k")
+    val dist = quantityDist(s, d)
+    def median(of: DataFrame, as: String): DataFrame =
+      rankSelect(of, Seq("k"), "v", "w")(ceilRanks(_, ("med", 1L, 2L)))
+        .select(col("k"), col("v").as(as))
+    val med = median(dist, "med")
+    val dev = dist.join(broadcast(med), "k")
+      .select(col("k"), abs(col("v") - col("med")).as("v"), col("w"))
+    median(dev, "mad").join(broadcast(med), "k")
       .select(col("k").as("l_returnflag"), col("med"), col("mad"))
       .orderBy("l_returnflag")
-    out
   }
 
   /** q121: weighted median — the smallest value whose cumulative WEIGHT
     * reaches half the total (here: unit-price median weighted by quantity,
     * i.e. "the price of the median unit sold", which differs from q80's
-    * row median whenever cheap rows carry big quantities). Third member of
-    * the histogram-selection family (q80 rank / q117 interpolated /
-    * q119 composed): the histogram simply sums WEIGHTS instead of counting
-    * rows, the target rank is ceil(W/2) in exact integers (weights are
-    * integral quantities, asserted in ExtendedSpec), and phase 2 pre-
-    * aggregates the candidate bucket per distinct value so the cumulative
-    * walk is over the value distribution — tie-safe by construction.
+    * row median whenever cheap rows carry big quantities). Picked through
+    * [[histogramSelect]] like q80, with the histogram summing WEIGHTS
+    * instead of counting rows; the target rank is ceil(W/2) in exact
+    * integers (weights are integral quantities, asserted in ExtendedSpec)
+    * and the in-bucket walk is tie-safe by the pick's RANGE frame.
     */
   val q121WeightedMedian: Q = (s, d) => {
     val li = Tables.lineitem(s, d)
       .select(col("l_returnflag").as("k"), col("l_extendedprice").as("v"),
         col("l_quantity").cast("bigint").as("wt"))
-    val (stats, bucketed, cumHist) = histFrame(li, sum(col("wt")))
-    val targets = stats.select(col("k"), expr("(n + 1) div 2").as("r"))
-    val cand = histCand(cumHist, targets, Nil)
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy("v")
-    val picked = bucketed(li).join(broadcast(cand), Seq("k", "b"))
-      .groupBy("k", "v", "rr").agg(sum("wt").as("w"))
-      .withColumn("cw", sum("w").over(wv))
-      .where(col("cw") >= col("rr"))
-      .groupBy("k").agg(min("v").as("wmedian"))
-    picked.join(broadcast(stats.select(col("k"), col("n").as("tw"))), "k")
-      .select(col("k").as("l_returnflag"), col("tw").as("total_weight"),
-        col("wmedian"))
+    // the total weight rides along as a carried target column
+    histogramSelect(li, Some("wt"))(rows =>
+        ceilRanks(rows.withColumn("total_weight", col("n")), ("wmedian", 1L, 2L)))
+      .select(col("k").as("l_returnflag"), col("total_weight"),
+        col("v").as("wmedian"))
       .orderBy("l_returnflag")
   }
 

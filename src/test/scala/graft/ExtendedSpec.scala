@@ -464,6 +464,63 @@ class ExtendedSpec extends SparkSpec {
     }
   }
 
+  test("rankSelect: both inputs pick the brute-force order statistic") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.queries.Extended.{histogramSelect, rankSelect}
+    // Key a spans [0, 1024], so each value's bucket is its floor: the tied
+    // 5.0s sit on the edge of bucket 5, and their ranks run on from bucket
+    // 4's 4.5. Key b holds one value (hi == lo puts every row in bucket 0).
+    val planted = Seq(
+      ("a", 0.0, 4L), ("a", 4.5, 2L), ("a", 5.0, 1L), ("a", 5.0, 2L),
+      ("a", 5.0, 3L), ("a", 5.5, 1L), ("a", 1024.0, 1L),
+      ("b", 7.0, 1L), ("b", 7.0, 1L), ("b", 7.0, 2L), ("b", 7.0, 3L))
+    val rows = planted.toDF("k", "v", "wt")
+    // every rank from 1 to the key's total n, and one past it (null)
+    def everyRank(rows: DataFrame): DataFrame = rows
+      .withColumn("r", explode(sequence(lit(1L), col("n") + 1)))
+      .withColumn("tag", concat(lit("r"), col("r")))
+    def brute(weighted: Boolean): Map[(String, String), (Option[Double], Long)] =
+      planted.groupBy(_._1).toSeq.flatMap { case (k, kr) =>
+        val byV = kr.map { case (_, v, wt) => (v, if (weighted) wt else 1L) }
+          .sortBy(_._1)
+        val cums = byV.scanLeft(0L)(_ + _._2).tail
+        (1L to cums.last + 1).map { r =>
+          val pick = byV.zip(cums).collectFirst { case ((v, _), c) if c >= r => v }
+          val below = byV.filter(p => pick.forall(p._1 < _)).map(_._2).sum
+          (k, s"r$r") -> (pick, below)
+        }
+      }.toMap
+    def picked(df: DataFrame, k: Option[String] = None) = df.collect().map { r =>
+      (k.getOrElse(r.getAs[String]("k")), r.getAs[String]("tag")) ->
+        Option(r.getAs[java.lang.Double]("v")).map(_.doubleValue)
+    }.toMap
+    for (weighted <- Seq(true, false)) {
+      val want = brute(weighted)
+      val dist = rows.groupBy("k", "v")
+        .agg((if (weighted) sum("wt") else count(lit(1))).as("w"))
+      val bounded = rankSelect(dist, Seq("k"), "v", "w")(everyRank)
+      val viaHist =
+        histogramSelect(rows, if (weighted) Some("wt") else None)(everyRank)
+      val distA = dist.where($"k" === "a").drop("k")
+      val keyless = rankSelect(distA, Nil, "v", "w") { rows =>
+        everyRank(rows.crossJoin(distA.agg(sum("w").as("n"))))
+      }
+      assert(picked(bounded) === want.map { case (t, (v, _)) => t -> v },
+        s"bounded input, weighted = $weighted")
+      assert(bounded.collect().map(r =>
+          (r.getAs[String]("k"), r.getAs[String]("tag")) -> r.getAs[Long]("below")).toMap
+        === want.map { case (t, (_, below)) => t -> below },
+        s"weight below the pick, weighted = $weighted")
+      assert(picked(viaHist) === want.map { case (t, (v, _)) => t -> v },
+        s"histogram input, weighted = $weighted")
+      assert(picked(keyless, Some("a")) ===
+        want.collect { case (t @ ("a", _), (v, _)) => t -> v },
+        s"keyless pick, weighted = $weighted")
+    }
+  }
+
   test("x15 owns its cache lifecycle: value/cum caches released at query end") {
     spark.catalog.clearCache()
     val rows = graft.queries.Extended.x15AccuracySweep(spark, sf).collect()
